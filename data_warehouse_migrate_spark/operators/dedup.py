@@ -520,18 +520,13 @@ def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                         n: int = 3, threshold: float = 0.8,
-                        max_shingle_freq: int | None = None,
-                        diag: dict | None = None) -> DataFrame:
+                        max_shingle_freq: int | None = None) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via inverted-index join.
 
     Returns (id_a, id_b, jaccard) for all pairs with J ≥ threshold,
     id_a < id_b. Complete: a pair with J>0 shares ≥1 shingle and is found
     by the shingle join. ``max_shingle_freq`` drops shingles occurring in
-    more than F docs (skew cap; see module docstring). ``diag`` (optional
-    dict, bench-only) eagerly records docs / distinct_shingles /
-    prefix_rows / candidate_pairs / output_pairs /
-    candidates_per_output — the volumes that pin whether a bench drift
-    is a plan regression or host noise.
+    more than F docs (skew cap; see module docstring).
 
     Duplicate-density sensitivity (measured, r7 10× stress): candidate
     volume scales with the number of TRUE near-duplicate pairs, which is
@@ -541,7 +536,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     candidates-per-OUTPUT ratio stayed ~28×. Prefix filtering bounds
     candidates relative to true results, not corpus size — on a real
     mixed corpus (duplicate rate flat in corpus size) candidates grow
-    ~linearly, but monitor ``candidates_per_output`` in production: a
+    ~linearly, but monitor candidates per output pair in production: a
     blow-up there means the threshold/shingle choice, not the data
     volume, is the problem.
     """
@@ -603,13 +598,11 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     pref_count_branch = pref.agg(
         F.lit(1).alias("tag"), F.count("*").cast("string").alias("c1"),
         F.lit(None).cast("string").alias("c2"))
-    n_sets, sets_bytes, n_pref_rows = 0, fixed, 0
+    n_sets, sets_bytes = 0, fixed
     for row in sizing.unionByName(pref_count_branch).collect():
         if row["tag"] == 0:
             n_sets = int(row["c1"])
             sets_bytes = fixed + float(row["c2"] or 0.0)
-        else:
-            n_pref_rows = int(row["c1"])
     t = F.lit(threshold)
     eps = F.lit(1e-9)
     # length filter: J ≥ t ⟹ t·|a| ≤ |b| ≤ |a|/t.  positional filter
@@ -674,19 +667,13 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                           F.col("sz_b") - F.col("pb_last") - 1) >= alpha_g)
         .select("id_a", "id_b")
     )
-    if diag is not None:
-        cand = _materialize(cand)  # the count below feeds the verify join
-        diag.update(docs=n_sets,
-                    distinct_shingles=inv.select("shingle")
-                                         .distinct().count(),
-                    prefix_rows=n_pref_rows, candidate_pairs=cand.count())
     sa = _maybe_broadcast(
         sets.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
         n_sets, sets_bytes)
     sb = _maybe_broadcast(
         sets.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")),
         n_sets, sets_bytes)
-    out = (
+    return (
         cand.join(sa, "id_a").join(sb, "id_b")
         .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn("jaccard", F.round(
@@ -698,14 +685,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
         .select(F.least("id_a", "id_b").alias("id_a"),
                 F.greatest("id_a", "id_b").alias("id_b"), "jaccard")
     )
-    if diag is not None:
-        out = _materialize(out)
-        n_out = out.count()
-        diag.update(
-            output_pairs=n_out,
-            candidates_per_output=round(
-                diag["candidate_pairs"] / max(n_out, 1), 2))
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -840,8 +819,7 @@ def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str,
 
 def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
                        max_hamming: int = 3, bands: int = 4,
-                       bits: int = SIMHASH_BITS,
-                       diag: dict | None = None) -> DataFrame:
+                       bits: int = SIMHASH_BITS) -> DataFrame:
     """Pairs with hamming(simhash) ≤ max_hamming via banded exact-match
     (pigeonhole: ≤ bands-1 differing bits leaves ≥1 identical band).
     Complete (no missed pairs) iff bands > max_hamming; a larger radius
@@ -876,7 +854,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
     # candidate-sized dedups) would trade that tiny shuffle for a
     # per-band key array carried through every collect_list struct,
     # measured net-negative at sf0.1 and neutral at scale
-    cand = _bucket_pairs(band_rows, ["id", "simhash"], diag=diag)
+    cand = _bucket_pairs(band_rows, ["id", "simhash"])
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (cand.select(
                 F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
@@ -1224,7 +1202,7 @@ def embedding_near_dups(df: DataFrame, vec_col: str, id_col: str,
     itself, and a fixed r=6 (64 buckets/band) that is fine at 2k vectors
     degenerates toward all-pairs as the corpus grows — measured 75M
     candidate pairs (37% of all possible) on a 20k-vector corpus, vs
-    bounded occupancy with auto-sizing (PLANS.md, embedding 10× stress).
+    bounded occupancy with auto-sizing (embedding 10× stress).
 
     S-curve: a plane bit agrees with probability p = 1 − θ/π (cos θ = t).
     A band matches with P ≈ Σ_{m≤probe_bits} C(r,m)·p^(r−m)(1−p)^m and a
@@ -1275,7 +1253,7 @@ def embedding_near_dups(df: DataFrame, vec_col: str, id_col: str,
         # pair recall over 4 bands is ≈0.99 at r=12 but 0.86 at r=20 and
         # 0.65 at r=27). Widen the probe only once probe-1 actually sags
         # (r>16) — earlier widening measured 5× candidate volume at r=12
-        # for no recall benefit (BENCH_DETAIL stress).
+        # for no recall benefit (10× stress corpus).
         probe_bits = 1 if r <= 16 else 2
     # materialize once: unit-normalized vectors (per-pair cosine becomes
     # a single dot) + the banded keys (candidate join scans base three
@@ -1375,8 +1353,7 @@ def embedding_exact_pairs(df: DataFrame, vec_col: str, id_col: str,
 def semantic_dedup(df: DataFrame, vec_col: str, id_col: str,
                    n_cells: int = 8, threshold: float = 0.95,
                    centroids="lowid",
-                   max_bucket_size: int = 512,
-                   diag: dict | None = None) -> DataFrame:
+                   max_bucket_size: int = 512) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540 §3): SEMANTIC
     deduplication of an embedded corpus. Vectors are coarse-quantized to
     ``n_cells`` centroid cells; within each cell, pairs with cosine ≥
@@ -1407,8 +1384,6 @@ def semantic_dedup(df: DataFrame, vec_col: str, id_col: str,
     keep is ONE LEFT ANTI join (drop list is duplicate-sized, broadcast
     at scale). Size ``n_cells`` ≈ sqrt(corpus) like any IVF quantizer so
     cells stay bounded slices.
-
-    ``diag`` (bench-only) receives cells / max_cell / pairs eagerly.
     """
     import math
 
@@ -1512,8 +1487,7 @@ def semantic_dedup(df: DataFrame, vec_col: str, id_col: str,
             hot.append((int(row["c1"]), int(row["c2"])))
     hot_pdf = pd.DataFrame(hot, columns=["band", "band_key"])
     cand = _bucket_pairs(band_rows, ["id"],
-                         max_bucket_size=max_bucket_size, diag=diag,
-                         hot_pdf=hot_pdf)
+                         max_bucket_size=max_bucket_size, hot_pdf=hot_pdf)
     # pair-exchange width from the MEASURED pair volume, not cluster
     # width (r17 verdict item 6): repartition(defaultParallelism) sized
     # the exchange by machine, so at 100 TB with heavy cells the
@@ -1545,7 +1519,4 @@ def semantic_dedup(df: DataFrame, vec_col: str, id_col: str,
              .filter(~F.isnan("cosine") & (F.col("cosine") >= threshold))
              .select(F.least("id_a", "id_b").alias("id_a"),
                      F.greatest("id_a", "id_b").alias("id_b")))
-    if diag is not None:
-        pairs = _materialize(pairs)
-        diag.update(dup_pairs=pairs.count())
     return near_dup_removal(assigned, pairs, id_col)

@@ -639,8 +639,7 @@ def lsh_topk_indexed(queries: DataFrame, index_table: str,
     touch a vanishing fraction of the key space while ``lsh_topk``
     re-projects everything. Use the index when the corpus is ≥ ~10k
     vectors AND the same corpus serves many query batches; below that,
-    call ``lsh_topk`` directly (BENCH_DETAIL.json index_contract
-    records both scales every round)."""
+    call ``lsh_topk`` directly."""
     from data_warehouse_migrate_spark.functions.vectors import band_keys_sql
     from data_warehouse_migrate_spark.operators.dedup import _probe_keys
 

@@ -446,7 +446,7 @@ FROM orders
 
 
 # ---------------------------------------------------------------------------
-# analytics (engine capability; bench headliners)
+# analytics (engine capability)
 # ---------------------------------------------------------------------------
 
 def q_pricing_summary(spark, sf_dir):
@@ -4376,78 +4376,4 @@ ORACLES: dict[str, str] = {
     "jdbc_roundtrip": O_JDBC_ROUNDTRIP,
     "sessionize_stream": O_SESSIONIZE_STREAM,
     "enrich_stream": O_ENRICH_STREAM,
-}
-
-
-# ---------------------------------------------------------------------------
-# bench diagnostics: candidate/bucket volume counters for the dedup family
-# (same operator parameters as the QUERIES entries above). bench.py records
-# these in its JSON output so a timing drift on a future run is attributable
-# from artifacts alone: volumes moved → data/plan regression; volumes
-# identical but time moved → host noise. Eager (each runs the candidate
-# stage of its operator once); bench-only, not part of the driver contract.
-# ---------------------------------------------------------------------------
-
-def _diag_dedup_ngram_jaccard(spark, sf_dir) -> dict:
-    from data_warehouse_migrate_spark.operators.dedup import ngram_jaccard_pairs
-
-    diag: dict = {}
-    ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), "text", "doc_id",
-                        n=3, threshold=0.6, diag=diag)
-    return diag
-
-
-def _diag_dedup_minhash(spark, sf_dir) -> dict:
-    from data_warehouse_migrate_spark.operators.dedup import minhash_lsh_pairs
-
-    diag: dict = {}
-    minhash_lsh_pairs(_t(spark, sf_dir, "documents"), "text", "doc_id",
-                      n=3, k=16, bands=8, threshold=0.6, diag=diag)
-    return diag
-
-
-def _diag_dedup_simhash(spark, sf_dir) -> dict:
-    from data_warehouse_migrate_spark.operators.dedup import simhash_near_pairs
-
-    diag: dict = {}
-    simhash_near_pairs(_t(spark, sf_dir, "documents"), "text", "doc_id",
-                       max_hamming=3, bands=4, diag=diag)
-    return diag
-
-
-def _diag_embedding_near_dup(spark, sf_dir) -> dict:
-    """RECALL-PINNING configuration: t=0.4 with a deliberately small fixed
-    key space (r=6 → 64 buckets/band). At that loose threshold nearly
-    every pair is a true near-dup, so candidate volume approaching n²/2
-    is the CORRECT behavior for this regime — the entry exists to pin
-    recall, not to showcase occupancy (see the _auto twin)."""
-    from data_warehouse_migrate_spark.operators.dedup import embedding_near_dups
-
-    diag: dict = {}
-    embedding_near_dups(_t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
-                        threshold=0.4, n_planes=24, bands=4, probe_bits=2,
-                        diag=diag)
-    return diag
-
-
-def _diag_embedding_near_dup_auto(spark, sf_dir) -> dict:
-    """PRODUCTION configuration: operator defaults — auto-sized key space
-    (r = ceil(log2(n/8)) bits/band) at the 0.95 near-dup threshold. This
-    is the regime the 100 TB design claim is made for; its counters
-    (n_planes picked, bucket occupancy, candidate_pairs ≪ n²/2) make the
-    bounded-occupancy behavior visible in BENCH artifacts each round."""
-    from data_warehouse_migrate_spark.operators.dedup import embedding_near_dups
-
-    diag: dict = {}
-    embedding_near_dups(_t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
-                        diag=diag)
-    return diag
-
-
-DIAGNOSTICS: dict[str, Callable[[SparkSession, str], dict]] = {
-    "dedup_ngram_jaccard": _diag_dedup_ngram_jaccard,
-    "dedup_minhash": _diag_dedup_minhash,
-    "dedup_simhash": _diag_dedup_simhash,
-    "embedding_near_dup": _diag_embedding_near_dup,
-    "embedding_near_dup_auto": _diag_embedding_near_dup_auto,
 }

@@ -73,9 +73,10 @@ def get_spark(app_name: str = "data-warehouse-migrate-spark",
         builder = builder.master(f"local[{cpus}]")
     conf = dict(_DEFAULTS)
     # local[N] runs the whole engine in the driver JVM. 8g measured FASTER
-    # and steadier than 24g at sf0.1 (24g degraded the bench 3-5× — large
-    # G1 heaps accumulate garbage and stall all 32 task threads in long
-    # mixed collections); keep the heap small enough for short GC cycles.
+    # and steadier than 24g at sf0.1 (24g ran the query registry 3-5×
+    # slower — large G1 heaps accumulate garbage and stall all 32 task
+    # threads in long mixed collections); keep the heap small enough for
+    # short GC cycles.
     conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
                                                  "8g")
     conf["spark.sql.shuffle.partitions"] = cpus

@@ -297,7 +297,7 @@ def snapshot_memory_sink(spark: SparkSession, sink: str) -> DataFrame:
     DataFrame and DROP the view (r15 review). ``spark.table(sink)`` is
     lazy, so returning it directly (the runners' old shape) (a) pinned
     every invocation's full result set in driver memory for the
-    session's lifetime — the bench drives these runners each round —
+    session's lifetime — a long session calls these runners repeatedly —
     and (b) was not the snapshot its name promised: anything reusing
     the view name later silently swaps the data under the returned
     frame. The memory sink already holds all rows in the driver, so
@@ -348,10 +348,7 @@ def run_sessionize_stream(spark: SparkSession, source_path: str,
 
     ``max_files_per_trigger`` caps files per micro-batch (availableNow
     honors source rate limits, so a multi-file source splits into
-    multiple batches). The bench points this at a two-file copy of the
-    events table to MEASURE the amortization claim: batch 1 pays the
-    state-store + Arrow-worker init, batch 2 is the steady-state cost —
-    ``LAST_STREAM_STATE['batch_exec_ms_series']`` carries both.
+    multiple batches).
     """
     import os
     import time as _time
@@ -403,12 +400,6 @@ def run_sessionize_stream(spark: SparkSession, source_path: str,
               .outputMode("append").trigger(availableNow=True))
     if ckpt_dir:
         writer = writer.option("checkpointLocation", ckpt_dir)
-    # lifecycle decomposition (r7 verdict item 5): the one-shot drain's
-    # wall time = start (plan + state-store init) + drain (micro-batch
-    # execution + poll latency) + stop (query shutdown). Recorded into
-    # LAST_STREAM_STATE so BENCH_DETAIL can show which part is the fixed
-    # per-query floor that a long-running stream amortizes away.
-    t0 = _time.time()
     if state_partitions:
         # the capture/set/start/restore of the SESSION-shared shuffle-
         # partition conf must be atomic across threads (r16): two
@@ -428,8 +419,6 @@ def run_sessionize_stream(spark: SparkSession, source_path: str,
                 spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     else:
         q = writer.start()
-    t_started = _time.time()
-    t_drained = None
     # recentProgress is a RING BUFFER (default cap 100 entries): a drain
     # with more micro-batches than the cap would evict early entries and
     # a plain sum could never reach `expected`, timing out a fully
@@ -450,7 +439,6 @@ def run_sessionize_stream(spark: SparkSession, source_path: str,
             if processed >= expected:
                 break
             if q.exception() is not None:  # crashed — don't wait the clock
-                LAST_STREAM_STATE.clear()
                 failure = q.exception()
                 q.stop()
                 raise failure
@@ -464,12 +452,9 @@ def run_sessionize_stream(spark: SparkSession, source_path: str,
             # returning the memory sink would silently hand back PARTIAL
             # results (only the sessions emitted so far). A CRASHED query
             # also presents as stalled progress, so surface its real
-            # exception instead of misdiagnosing it as a timeout; stale
-            # metrics from a previous run are cleared on every failure
-            # path.
+            # exception instead of misdiagnosing it as a timeout.
             processed = _processed()
             if processed < expected:
-                LAST_STREAM_STATE.clear()
                 failure = q.exception()
                 q.stop()
                 if failure is not None:
@@ -479,118 +464,20 @@ def run_sessionize_stream(spark: SparkSession, source_path: str,
                     f"input rows within wait_sec={wait_sec}s; raise "
                     f"wait_sec — returning the partial sink would "
                     f"silently drop sessions")
-        # capture state-store metrics before stopping (observability the
-        # bench records to BENCH_DETAIL: state rows/bytes are the
-        # quantities that grow with key cardinality at 100 TB, not with
-        # event volume)
-        t_drained = _time.time()
-        try:
-            _capture_stream_metrics(q.recentProgress or [])
-        except Exception:  # metrics are best-effort, never fail the query
-            LAST_STREAM_STATE.clear()
         # stop() interrupts whatever timer-scheduled (empty) micro-batch
         # is in flight; that interrupt costs 0-1s depending on where the
-        # batch is in its commit (stop_ms in LAST_STREAM_STATE makes the
-        # draw visible per run). Waiting for a trigger GAP was measured
+        # batch is in its commit. Waiting for a trigger GAP was measured
         # r8 and rejected: the registered processing-time timers fire
         # batches back-to-back, so the gap never opens and the wait is
         # pure added latency.
         q.stop()
         q.awaitTermination(60)
-        t_stopped = _time.time()
-        LAST_STREAM_STATE.update({
-            "start_ms": int((t_started - t0) * 1000),
-            "drain_ms": int((t_drained - t_started) * 1000),
-            "stop_ms": int((t_stopped - t_drained) * 1000),
-        })
     finally:
         if ckpt_dir:
             import shutil
 
             shutil.rmtree(ckpt_dir, ignore_errors=True)
     return snapshot_memory_sink(spark, sink)
-
-
-def _capture_stream_metrics(progress) -> None:
-    """Fill LAST_STREAM_STATE from a query's recentProgress entries.
-
-    Per-batch ``triggerExecution`` is recorded in batch order whenever ANY
-    progress exists: batch 1 carries the fixed init (state-store instances
-    + Arrow worker spin-up); later batches are the amortized steady-state
-    cost a long-running stream actually pays. A drained run whose progress
-    lacks ``stateOperators`` must still report the batch-execution
-    component the lifecycle decomposition exists to capture (ADVICE r8) —
-    the state block is filled only when state operators are present.
-
-    ``numRowsTotal`` / ``memoryUsedBytes`` are cumulative GAUGES (each
-    batch reports the whole store), so they are taken from the LAST batch
-    that carried state operators; only ``numRowsUpdated`` is a per-batch
-    delta and is summed across batches (ADVICE r9 — summing the gauges
-    double-counted state on every multi-batch run).
-
-    Per-batch SERIES (r10 verdict item 3): ``triggerExecution`` alone
-    cannot arbitrate a multi-batch wall-time wobble between host noise
-    and a state-path regression, so each batch that carries state
-    operators also records its ``allUpdatesTimeMs``/``commitTimeMs``
-    (state-path time components) and ``numRowsUpdated`` (deterministic
-    for fixed input splits — the counter an attribution can anchor on)
-    in batch order.
-    """
-    import json as _json
-
-    last_ops: list = []
-    last_ops_bid = -1
-    rows_updated = 0
-    batch_series: list = []
-    state_series: list = []
-    for p in progress:
-        pj = _json.loads(p.json)
-        bid = int(pj.get("batchId", len(batch_series)))
-        sops = pj.get("stateOperators") or []
-        rows_updated += sum(int(o.get("numRowsUpdated", 0)) for o in sops)
-        if sops and bid >= last_ops_bid:
-            last_ops_bid = bid
-            last_ops = sops
-        if sops:
-            state_series.append(
-                (bid,
-                 sum(int(o.get("allUpdatesTimeMs", 0)) for o in sops),
-                 sum(int(o.get("commitTimeMs", 0)) for o in sops),
-                 sum(int(o.get("numRowsUpdated", 0)) for o in sops)))
-        batch_series.append(
-            (bid,
-             int((pj.get("durationMs") or {})
-                 .get("triggerExecution", 0))))
-    batch_series.sort()
-    state_series.sort()
-    LAST_STREAM_STATE.clear()
-    if batch_series:
-        LAST_STREAM_STATE.update({
-            "batch_exec_ms": sum(ms for _, ms in batch_series),
-            "batch_exec_ms_series": [ms for _, ms in batch_series],
-        })
-    if last_ops:
-        LAST_STREAM_STATE.update({
-            "state_rows": sum(int(o.get("numRowsTotal", 0))
-                              for o in last_ops),
-            "state_bytes": sum(int(o.get("memoryUsedBytes", 0))
-                               for o in last_ops),
-            "rows_updated": rows_updated,
-        })
-    if state_series:
-        LAST_STREAM_STATE.update({
-            "state_update_ms_series": [u for _, u, _c, _n in state_series],
-            "commit_ms_series": [c for _, _u, c, _n in state_series],
-            "rows_updated_series": [n for _, _u, _c, n in state_series],
-        })
-
-
-#: lifecycle metrics of the most recent STREAMING RUNNER call in this
-#: process — run_sessionize_stream or run_windowed_counts_stream both
-#: fill (and clear) it (ADVICE r10; filled best-effort, see capture
-#: above). Concurrent runner calls are last-writer-wins here by design:
-#: the dict is bench diagnostics, never part of a returned result.
-LAST_STREAM_STATE: dict = {}
 
 
 def run_windowed_counts_stream(spark: SparkSession, source_path: str,
@@ -645,14 +532,6 @@ def run_windowed_counts_stream(spark: SparkSession, source_path: str,
     q = (agg.writeStream.format("memory").queryName(sink)
          .outputMode("complete").trigger(availableNow=True).start())
     q.awaitTermination()
-    # state-store + per-batch lifecycle metrics, same capture as the
-    # sessionize runner (r10: extends the streaming-state evidence to
-    # the windowed-agg operator — its state_rows = live windows x
-    # groups, the quantity a 100 TB stream's watermark bounds)
-    try:
-        _capture_stream_metrics(q.recentProgress or [])
-    except Exception:  # metrics are best-effort, never fail the query
-        LAST_STREAM_STATE.clear()
     return snapshot_memory_sink(spark, sink)
 
 

@@ -110,7 +110,7 @@ def test_embedding_lsh_recall_vs_exact(spark, sf_dir):
 def test_embedding_near_dups_autosized_key_space(spark, sf_dir):
     # n_planes=None sizes r from the corpus so bucket occupancy stays
     # bounded as it grows (fixed r=6 measured 37%-of-all-pairs candidates
-    # on a 20k corpus — PLANS.md); planted exact copies must still be
+    # on a 20k corpus); planted exact copies must still be
     # found (identical vectors collide in every band at any r)
     import pyspark.sql.functions as F
 

@@ -60,8 +60,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 def _kind(s: pd.Series) -> str:
     """Coarse dtype kind, PRE-canon — the axis the driver's type-sensitive
-    value hash is sensitive to (int vs float vs Decimal/object), same
-    classifier as scripts/driver_check.py."""
+    value hash is sensitive to (int vs float vs Decimal/object)."""
     if pd.api.types.is_datetime64_any_dtype(s):
         return "datetime"
     if pd.api.types.is_float_dtype(s):

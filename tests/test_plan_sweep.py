@@ -47,7 +47,7 @@ def test_no_plan_antipatterns_across_registry(spark, sf_dir):
 
 
 def test_scan_family_plan_contracts(spark, sf_dir):
-    """Registry-level pins of the properties PLANS.md promises for the
+    """Registry-level pins of the plan properties promised for the
     scan family: predicate pushdown reaches the parquet scan, projection
     prunes ReadSchema, and the whole pipeline stays exchange-free."""
     from data_warehouse_migrate_spark.plans.dryrun import plan_report

@@ -607,112 +607,6 @@ def test_sessionize_stream_very_late_events(spark, tmp_path):
     assert len(got) == 1
 
 
-# --- lifecycle metrics capture (ADVICE r8: batch_exec recorded sans state) ---
-
-class _FakeProgress:
-    def __init__(self, json_str):
-        self.json = json_str
-
-
-def test_capture_stream_metrics_stateful():
-    from data_warehouse_migrate_spark.streaming import windows as W
-
-    W._capture_stream_metrics([
-        _FakeProgress('{"batchId": 1, "durationMs": {"triggerExecution": 40},'
-                      ' "stateOperators": [{"numRowsTotal": 3,'
-                      ' "memoryUsedBytes": 128, "numRowsUpdated": 2}]}'),
-        _FakeProgress('{"batchId": 0, "durationMs": {"triggerExecution": 100},'
-                      ' "stateOperators": [{"numRowsTotal": 2,'
-                      ' "memoryUsedBytes": 64, "numRowsUpdated": 2}]}'),
-    ])
-    # batch order restored by batchId regardless of progress-list order
-    assert W.LAST_STREAM_STATE["batch_exec_ms_series"] == [100, 40]
-    assert W.LAST_STREAM_STATE["batch_exec_ms"] == 140
-    # numRowsTotal/memoryUsedBytes are cumulative gauges — the LAST batch
-    # (batchId 1) wins, even though it appears first in the progress list;
-    # numRowsUpdated is a per-batch delta and sums across batches
-    # (ADVICE r9: summing the gauges double-counted multi-batch state)
-    assert W.LAST_STREAM_STATE["state_rows"] == 3
-    assert W.LAST_STREAM_STATE["state_bytes"] == 128
-    assert W.LAST_STREAM_STATE["rows_updated"] == 4
-
-
-def test_capture_stream_metrics_gauge_from_last_stateful_batch():
-    """A trailing empty (stateless) drain batch must not erase the state
-    gauges: they come from the last batch that CARRIED state operators."""
-    from data_warehouse_migrate_spark.streaming import windows as W
-
-    W._capture_stream_metrics([
-        _FakeProgress('{"batchId": 0, "durationMs": {"triggerExecution": 90},'
-                      ' "stateOperators": [{"numRowsTotal": 4,'
-                      ' "memoryUsedBytes": 200, "numRowsUpdated": 4}]}'),
-        _FakeProgress('{"batchId": 1, "durationMs": {"triggerExecution": 30},'
-                      ' "stateOperators": [{"numRowsTotal": 6,'
-                      ' "memoryUsedBytes": 260, "numRowsUpdated": 2}]}'),
-        _FakeProgress('{"batchId": 2, "durationMs": {"triggerExecution": 5},'
-                      ' "stateOperators": []}'),
-    ])
-    assert W.LAST_STREAM_STATE["state_rows"] == 6
-    assert W.LAST_STREAM_STATE["state_bytes"] == 260
-    assert W.LAST_STREAM_STATE["rows_updated"] == 6
-    assert W.LAST_STREAM_STATE["batch_exec_ms_series"] == [90, 30, 5]
-
-
-def test_capture_stream_metrics_per_batch_state_series():
-    """r10 verdict item 3: batches carrying state operators record their
-    allUpdatesTimeMs/commitTimeMs/numRowsUpdated as batch-ordered series
-    (summed across operators within a batch; stateless drain batches are
-    excluded), so a multi-batch wall wobble is attributable — rows_updated
-    is deterministic for fixed input splits, the time components localize
-    WHICH batch moved."""
-    from data_warehouse_migrate_spark.streaming import windows as W
-
-    W._capture_stream_metrics([
-        _FakeProgress('{"batchId": 1, "durationMs": {"triggerExecution": 40},'
-                      ' "stateOperators": [{"numRowsTotal": 3,'
-                      ' "memoryUsedBytes": 128, "numRowsUpdated": 2,'
-                      ' "allUpdatesTimeMs": 12, "commitTimeMs": 7},'
-                      ' {"numRowsTotal": 1, "memoryUsedBytes": 8,'
-                      ' "numRowsUpdated": 1, "allUpdatesTimeMs": 3,'
-                      ' "commitTimeMs": 2}]}'),
-        _FakeProgress('{"batchId": 0, "durationMs": {"triggerExecution": 90},'
-                      ' "stateOperators": [{"numRowsTotal": 2,'
-                      ' "memoryUsedBytes": 64, "numRowsUpdated": 5,'
-                      ' "allUpdatesTimeMs": 20, "commitTimeMs": 9}]}'),
-        _FakeProgress('{"batchId": 2, "durationMs": {"triggerExecution": 5},'
-                      ' "stateOperators": []}'),
-    ])
-    assert W.LAST_STREAM_STATE["state_update_ms_series"] == [20, 15]
-    assert W.LAST_STREAM_STATE["commit_ms_series"] == [9, 9]
-    assert W.LAST_STREAM_STATE["rows_updated_series"] == [5, 3]
-    # series sums agree with the scalar delta total
-    assert W.LAST_STREAM_STATE["rows_updated"] == 8
-    # the stateless drain batch still shows in the exec series only
-    assert W.LAST_STREAM_STATE["batch_exec_ms_series"] == [90, 40, 5]
-
-
-def test_capture_stream_metrics_stateless_keeps_batch_exec():
-    """ADVICE r8: progress without stateOperators still records the
-    batch-execution component; only the state block is omitted."""
-    from data_warehouse_migrate_spark.streaming import windows as W
-
-    W._capture_stream_metrics([
-        _FakeProgress('{"batchId": 0, "durationMs": {"triggerExecution": 75},'
-                      ' "stateOperators": []}'),
-    ])
-    assert W.LAST_STREAM_STATE["batch_exec_ms"] == 75
-    assert W.LAST_STREAM_STATE["batch_exec_ms_series"] == [75]
-    assert "state_rows" not in W.LAST_STREAM_STATE
-
-
-def test_capture_stream_metrics_empty_progress_clears():
-    from data_warehouse_migrate_spark.streaming import windows as W
-
-    W.LAST_STREAM_STATE["stale"] = 1
-    W._capture_stream_metrics([])
-    assert W.LAST_STREAM_STATE == {}
-
-
 def test_sessionize_stream_drops_null_timestamps(spark, tmp_path):
     """r15 review: a NULL event time must not enter session state — a
     NaT converts to the int64-min sentinel inside the stateful fn,
