@@ -36,6 +36,7 @@ from data_warehouse_migrate_spark.plans.dryrun import explain_plan
 from data_warehouse_migrate_spark.schema import ColumnSpec, dedup_columns, specs_from_dataframe
 from data_warehouse_migrate_spark.sources.readers import (
     latest_partition_filter,
+    open_file_stream,
     read_table,
     validate_table_access,
 )
@@ -192,6 +193,10 @@ class MigrationJob:
     # data and repartitions so output files land near this size instead
     # of one-file-per-task (the anti-small-files knob)
     target_file_mb: int = 0
+    # the source plan the last run()/run_incremental()/run_scd2() built
+    # and wrote; verify() checksums it instead of rebuilding the plan
+    _plan: DataFrame | None = field(default=None, init=False, repr=False,
+                                    compare=False)
 
     # ------------------------------------------------------------------
     def _mapping(self) -> Mapping | None:
@@ -199,6 +204,54 @@ class MigrationJob:
             return None
         return (self.mapping if isinstance(self.mapping, Mapping)
                 else Mapping.from_dict(self.mapping))
+
+    def _column_types(self) -> str | None:
+        """The JDBC writer's ``createTableColumnTypes`` from the mapping's
+        type overrides (None without any)."""
+        mapping = self._mapping()
+        if not (mapping and mapping.type_override):
+            return None
+        return ", ".join(f"{c} {t}" for c, t in mapping.type_override.items())
+
+    def _source_plan(self, spark: SparkSession) -> DataFrame:
+        """Build the run's source plan and keep it for :meth:`verify`."""
+        self._plan = self.build_plan(spark)
+        return self._plan
+
+    def _read_destination(self, spark: SparkSession) -> DataFrame | None:
+        """The destination as it stands, or None when it does not exist
+        yet: the first-run signal of :meth:`run_incremental` and
+        :meth:`_scd2_sync`. ONLY a missing table counts as absent — any
+        other failure (auth, network, corrupt files, dialect quirk)
+        PROPAGATES: classifying a live destination as a first run would
+        append-duplicate or full-overwrite it. JDBC destinations are
+        checked with a zero-row probe classified by
+        :func:`_jdbc_table_missing`; file and catalog destinations by
+        ``AnalysisException`` or an empty schema."""
+        from pyspark.errors import AnalysisException
+
+        if self.destination_format == "jdbc":
+            from data_warehouse_migrate_spark.sources.readers import (
+                introspect_jdbc_schema_generic,
+            )
+
+            jdbc = self.destination_jdbc or {}
+            try:
+                introspect_jdbc_schema_generic(spark, jdbc,
+                                               self.destination_path)
+                return read_table(spark, self.destination_path, fmt="jdbc",
+                                  jdbc_options=self.destination_jdbc)
+            except Exception as e:
+                if not _jdbc_table_missing(e, spark, jdbc,
+                                           self.destination_path):
+                    raise
+                return None
+        try:
+            dest = read_table(spark, self.destination_path,
+                              fmt=self.destination_format)
+        except AnalysisException:
+            return None
+        return dest if dest.columns else None
 
     # ------------------------------------------------------------------
     def build_plan(self, spark: SparkSession, plan_only: bool = False) -> DataFrame:
@@ -268,16 +321,16 @@ class MigrationJob:
         a metadata-cheap read (on JDBC it would be a full table scan, and in
         append mode it includes pre-existing rows — reported as None there).
         """
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
         mode = MigrationMode.parse(self.mode)
-        plan = self.build_plan(spark)
+        return self._write(spark, self._source_plan(spark), mode)
+
+    def _write(self, spark: SparkSession, plan: DataFrame,
+               mode: MigrationMode) -> dict[str, Any]:
+        """Write ``plan`` to the destination; :meth:`run`'s summary."""
+        from pyspark.sql import Observation
+
         obs = Observation()
         plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
-        mapping = self._mapping()
-        ctypes = (", ".join(f"{c} {t}" for c, t in mapping.type_override.items())
-                  if mapping and mapping.type_override else None)
         if self.target_file_mb and self.destination_format != "jdbc":
             from data_warehouse_migrate_spark.sources.sinks import (
                 write_sized,
@@ -291,7 +344,7 @@ class MigrationJob:
             write_table(plan, self.destination_path,
                         fmt=self.destination_format,
                         mode=mode, jdbc_options=self.destination_jdbc,
-                        create_table_column_types=ctypes,
+                        create_table_column_types=self._column_types(),
                         partition_by=self.write_partition_by or None)
         rows_written = int(obs.get["n"])
         if self.destination_format == "jdbc":
@@ -311,10 +364,10 @@ class MigrationJob:
     # ------------------------------------------------------------------
     def verify(self, spark: SparkSession) -> dict[str, Any]:
         """Post-migration content verification (beyond-reference — the
-        reference stops at row counts, ``migrator.py:334-338``): recompute
-        the transformed source and compare it to the destination by row
-        count AND an order-independent checksum (sum of 60-bit row hashes
-        mod 2^60 — multiset-safe where XOR would cancel duplicate pairs)
+        reference stops at row counts, ``migrator.py:334-338``): compare
+        the transformed source with the destination by row count AND an
+        order-independent checksum (sum of 60-bit row hashes mod 2^60 —
+        multiset-safe where XOR would cancel duplicate pairs)
         (``operators.validate.group_checksum``) over every column whose
         string rendering is engine/layout-stable (integer, string, date,
         boolean, decimal). Float/timestamp columns are EXCLUDED and
@@ -322,9 +375,15 @@ class MigrationJob:
         engines, so a checksum over them would alarm on noise; the row
         count still covers their presence.
 
-        Two aggregate jobs (one per side), no row transfer, no sort —
-        safe at any scale. Returns a dict with ``verified`` True iff
-        counts and checksums both match.
+        The source side is the plan the last :meth:`run`,
+        :meth:`run_incremental` or :meth:`run_scd2` of this job built and
+        wrote: its file listing, resolved latest partition and null-policy
+        check are reused, not redone, so the checksum covers the rows
+        that run wrote even if a newer partition has landed since. A job
+        that has not run yet builds the plan here. Either way the cost
+        is two aggregate jobs (one per side) plus the destination read —
+        no row transfer, no sort, safe at any scale. Returns a dict with
+        ``verified`` True iff counts and checksums both match.
 
         Snapshot semantics only: in APPEND mode the destination may hold
         rows from earlier runs, so whole-table equality against one
@@ -353,7 +412,7 @@ class MigrationJob:
             group_checksum,
         )
 
-        plan = self.build_plan(spark)
+        plan = self._plan if self._plan is not None else self.build_plan(spark)
         dest = read_table(spark, self.destination_path,
                           fmt=self.destination_format,
                           jdbc_options=self.destination_jdbc)
@@ -376,17 +435,12 @@ class MigrationJob:
         d = group_checksum(dest, [], cols).first()
         counts_ok = s["n_rows"] == d["n_rows"]
         sums_ok = s["checksum"] == d["checksum"]
-        out = {"verified": counts_ok and sums_ok,
-               "source_rows": s["n_rows"],
-               "destination_rows": d["n_rows"],
-               "checksum_match": sums_ok,
-               "columns_checked": cols,
-               "skipped_columns": skipped}
-        if self.partition_columns:
-            out["caveat"] = ("latest-partition pruning re-resolves at "
-                            "verify time — a partition that landed after "
-                            "the run makes this comparison stale")
-        return out
+        return {"verified": counts_ok and sums_ok,
+                "source_rows": s["n_rows"],
+                "destination_rows": d["n_rows"],
+                "checksum_match": sums_ok,
+                "columns_checked": cols,
+                "skipped_columns": skipped}
 
     # ------------------------------------------------------------------
     def run_incremental(self, spark: SparkSession,
@@ -398,8 +452,8 @@ class MigrationJob:
         destination's current rows on the business key
         (``operators.delta.snapshot_delta``) and apply only the delta.
 
-        First run (destination absent/empty) falls back to a full
-        :meth:`run`. File-format destinations materialize the next
+        First run (destination absent/empty) writes the source plan as a
+        full :meth:`run` would. File-format destinations materialize the next
         snapshot — current rows minus deleted/updated keys, plus
         insert/update rows — and overwrite; the plan is localCheckpointed
         first to break the read-then-overwrite cycle on the same path
@@ -413,9 +467,7 @@ class MigrationJob:
         MERGE) reconciles the destination where it lives — no snapshot
         rewrite, no rows pulled through the driver
         (``operators.delta.apply_delta_jdbc``). First-run detection for
-        JDBC probes the destination table; an unreachable endpoint also
-        classifies as first-run, where the immediate full :meth:`run`
-        surfaces the real connection error instead.
+        JDBC probes the destination table (see :meth:`_read_destination`).
 
         ``reconcile_drift=True`` projects the transformed source onto the
         destination's CURRENT schema first
@@ -432,7 +484,6 @@ class MigrationJob:
             delta_counts,
             snapshot_delta,
         )
-        from pyspark.errors import AnalysisException
 
         # a limited or latest-partition-pruned source is a SUBSET of the
         # logical table: every destination key outside it would classify
@@ -444,49 +495,12 @@ class MigrationJob:
                 "limit/partition_columns the diff would mark every "
                 "destination row outside the pruned subset as a delete "
                 "and destroy it; drop those options for incremental sync")
-        src = self.build_plan(spark)
-        if self.destination_format == "jdbc":
-            from data_warehouse_migrate_spark.sources.readers import (
-                introspect_jdbc_schema_generic,
-            )
-
-            try:
-                # zero-row probe: cheap existence + schema check. ONLY a
-                # table-not-found error is the first-run signal — any
-                # other probe failure (auth, network, dialect quirk)
-                # PROPAGATES: falling through to self.run() in append
-                # mode against a table that actually exists would
-                # silently duplicate every row (the same hazard the
-                # file-sink branch below guards with AnalysisException).
-                introspect_jdbc_schema_generic(
-                    spark, self.destination_jdbc or {},
-                    self.destination_path)
-                dest = read_table(spark, self.destination_path,
-                                  fmt="jdbc",
-                                  jdbc_options=self.destination_jdbc)
-            except Exception as e:
-                if not _jdbc_table_missing(e, spark,
-                                           self.destination_jdbc or {},
-                                           self.destination_path):
-                    raise
-                out = self.run(spark)
-                out["incremental"] = False
-                return out
-        else:
-            try:
-                dest = read_table(spark, self.destination_path,
-                                  fmt=self.destination_format)
-                if not dest.columns:
-                    raise AnalysisException("empty destination")
-            except AnalysisException:
-                # destination absent / schema-less — the genuine
-                # first-run signal. Anything else (corrupt files, auth,
-                # IO) PROPAGATES: a bare except here would silently
-                # reclassify a broken destination as "first run" and
-                # full-overwrite it.
-                out = self.run(spark)
-                out["incremental"] = False
-                return out
+        src = self._source_plan(spark)
+        dest = self._read_destination(spark)
+        if dest is None:
+            out = self._write(spark, src, MigrationMode.parse(self.mode))
+            out["incremental"] = False
+            return out
 
         if reconcile_drift:
             from data_warehouse_migrate_spark.functions.casts import (
@@ -581,7 +595,7 @@ class MigrationJob:
 
             batch_date = _dt.datetime.now(_dt.timezone.utc).date().isoformat()
 
-        src = self.build_plan(spark)
+        src = self._source_plan(spark)
         return self._scd2_sync(spark, src, key_cols, tracked_cols,
                                batch_date, from_col, to_col, cur_col,
                                close_deleted)
@@ -600,7 +614,6 @@ class MigrationJob:
             scd2_apply,
             snapshot_delta,
         )
-        from pyspark.errors import AnalysisException
 
         scd_cols = (from_col, to_col, cur_col)
         clash = [c for c in src.columns if c in scd_cols]
@@ -618,35 +631,7 @@ class MigrationJob:
                     .withColumn(to_col, F.lit(None).cast("date"))
                     .withColumn(cur_col, F.lit(True)))
 
-        hist = None
-        if self.destination_format == "jdbc":
-            from data_warehouse_migrate_spark.sources.readers import (
-                introspect_jdbc_schema_generic,
-            )
-
-            try:
-                # zero-row probe; ONLY table-not-found means first run
-                # (see run_incremental — same append-duplication hazard)
-                introspect_jdbc_schema_generic(
-                    spark, self.destination_jdbc or {},
-                    self.destination_path)
-                hist = read_table(spark, self.destination_path,
-                                  fmt="jdbc",
-                                  jdbc_options=self.destination_jdbc)
-            except Exception as e:
-                if not _jdbc_table_missing(e, spark,
-                                           self.destination_jdbc or {},
-                                           self.destination_path):
-                    raise
-        else:
-            try:
-                hist = read_table(spark, self.destination_path,
-                                  fmt=self.destination_format)
-                if not hist.columns:
-                    raise AnalysisException("empty destination")
-            except AnalysisException:
-                hist = None  # genuine first run; anything else raised
-
+        hist = self._read_destination(spark)
         if hist is None:
             h0 = initial_history()
             n = h0.count()
@@ -734,19 +719,8 @@ class MigrationJob:
         no-op by SCD2 semantics — replays cannot duplicate versions
         unless the batch date ALSO changed across the retry).
         """
-        import os
-
-        batch_src = read_table(spark, self.source_path,
-                               fmt=self.source_format)
-        reader = (spark.readStream.format(self.source_format)
-                  .schema(batch_src.schema)
-                  .options(**({"header": "true"}
-                              if self.source_format == "csv" else {})))
-        if os.path.isdir(self.source_path) or "://" in self.source_path:
-            stream = reader.load(self.source_path)
-        else:
-            base, fname = os.path.split(self.source_path.rstrip("/"))
-            stream = reader.option("pathGlobFilter", fname).load(base)
+        stream = open_file_stream(spark, self.source_path,
+                                  fmt=self.source_format)
 
         totals = {"batches": 0, "versions_opened": 0,
                   "versions_closed": 0}
@@ -829,29 +803,14 @@ class MigrationJob:
                 "stream's checkpoint already scopes work to NEW files")
 
         mode = MigrationMode.parse(self.mode)
-        mapping = self._mapping()
-        ctypes = (", ".join(f"{c} {t}" for c, t in mapping.type_override.items())
-                  if mapping and mapping.type_override else None)
-        # schema inference needs a batch read (file streams require an
-        # explicit schema); also validates the source exists up front
-        import os
-
-        batch_src = read_table(spark, self.source_path, fmt=self.source_format)
-        reader = (spark.readStream.format(self.source_format)
-                  .schema(batch_src.schema)
-                  .options(**({"header": "true"}
-                              if self.source_format == "csv" else {})))
-        if os.path.isdir(self.source_path) or "://" in self.source_path:
-            stream = reader.load(self.source_path)
-        else:  # single local file: file sources need a directory + glob
-            base, fname = os.path.split(self.source_path.rstrip("/"))
-            stream = reader.option("pathGlobFilter", fname).load(base)
+        ctypes = self._column_types()
+        stream = open_file_stream(spark, self.source_path,
+                                  fmt=self.source_format)
 
         totals = {"rows_written": 0, "batches": 0}
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
             from pyspark.sql import Observation
-            from pyspark.sql import functions as F
 
             # null_policy='fail' runs its eager count inside _transform
             # and raises BEFORE the write, aborting the stream

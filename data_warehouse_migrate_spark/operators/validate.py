@@ -22,7 +22,7 @@ both beyond-reference:
 100 TB shape: both are single hash aggregates (profile additionally
 pays Spark's expand for multi-column DISTINCT — #cols × rows map-side,
 still one shuffle at distinct-value volume). Checksums shuffle only
-(group, partial-xor) rows. No UDFs, no driver data paths.
+(group, partial-sum) rows. No UDFs, no driver data paths.
 
 Rendering contract: each value renders as ``N`` when NULL, else
 ``V<len>:<cast AS string>`` (length-prefixed), and the fields join with

@@ -124,23 +124,34 @@ def latest_partition_filter(df: DataFrame, partition_cols: list[str],
     return out
 
 
-def open_file_stream(spark: SparkSession, source_path: str) -> DataFrame:
-    """Open a parquet path (file OR directory) as a streaming DataFrame
-    with the batch-inferred schema. File stream sources require a
-    directory, so a single file streams via its parent plus a
-    ``pathGlobFilter`` on the (glob-escaped) file name — the shared logic
-    behind every ``run_*_stream`` runner."""
+def open_file_stream(spark: SparkSession, source_path: str,
+                     fmt: str = "parquet", **options) -> DataFrame:
+    """Open a file-format path (file OR directory) as a streaming
+    DataFrame with the batch-inferred schema (file streams require an
+    explicit one; the batch read also validates the source up front).
+    ``options`` go to the stream reader (e.g. ``maxFilesPerTrigger``);
+    CSV defaults to a header row, as in :func:`read_table`. File stream
+    sources require a directory, so a single file streams via its parent
+    plus a ``pathGlobFilter`` on the glob-escaped file name; a
+    ``scheme://`` path is taken as a directory. A relative local path
+    resolves against this process's working directory — the one the
+    file-or-directory check sees — not the JVM's launch directory. The
+    shared logic behind every ``run_*_stream`` runner."""
     import os as _os
+    from urllib.parse import urlparse
 
-    schema = spark.read.parquet(source_path).schema
-    if _os.path.isdir(source_path):
-        return spark.readStream.schema(schema).parquet(source_path)
+    if not urlparse(source_path).scheme:
+        source_path = _os.path.abspath(source_path)
+    schema = read_table(spark, source_path, fmt=fmt).schema
+    if fmt == "csv":
+        options.setdefault("header", "true")
+    reader = spark.readStream.format(fmt).schema(schema).options(**options)
+    if _os.path.isdir(source_path) or "://" in source_path:
+        return reader.load(source_path)
     base, fname = _os.path.split(source_path.rstrip("/"))
-    base = base or "."
     for ch in "\\*?[]{}":
         fname = fname.replace(ch, "\\" + ch)
-    return (spark.readStream.schema(schema)
-            .option("pathGlobFilter", fname).parquet(base))
+    return reader.option("pathGlobFilter", fname).load(base)
 
 
 def validate_table_access(df: DataFrame) -> bool:

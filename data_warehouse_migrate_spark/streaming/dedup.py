@@ -79,26 +79,11 @@ def run_dedup_exact_stream(spark: SparkSession, source_path: str,
     ``prepare``: optional DataFrame→DataFrame transform applied to the
     stream before dedup (e.g. deriving an event-time column when the
     source has none)."""
-    import os
+    from data_warehouse_migrate_spark.sources.readers import open_file_stream
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(source_path).schema
-    if os.path.isdir(source_path):
-        # a parquet DIRECTORY is a valid file-stream source as-is
-        stream = spark.readStream.schema(schema).parquet(source_path)
-    else:
-        # file stream sources require a directory; point at the parent
-        # and glob-filter down to the one file. The name is a Hadoop GLOB:
-        # escape metacharacters (a file literally named part[1].parquet
-        # would otherwise silently match nothing), and a bare filename's
-        # empty parent means cwd
-        base, fname = os.path.split(source_path.rstrip("/"))
-        base = base or "."
-        for ch in "\\*?[]{}":
-            fname = fname.replace(ch, "\\" + ch)
-        stream = (spark.readStream.schema(schema)
-                  .option("pathGlobFilter", fname).parquet(base))
+    stream = open_file_stream(spark, source_path)
     if prepare is not None:
         stream = prepare(stream)
     deduped = dedup_exact_stream(stream, text_col, ts_col, watermark)

@@ -356,33 +356,23 @@ def run_sessionize_stream(spark: SparkSession, source_path: str,
 
     from data_warehouse_migrate_spark.sources.readers import (
         normalize_nano_timestamps,
+        open_file_stream,
+        parquet_footer_stats,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(source_path).schema
+    stream = open_file_stream(
+        spark, source_path,
+        **({"maxFilesPerTrigger": str(max_files_per_trigger)}
+           if max_files_per_trigger else {}))
     # expected-row target from parquet FOOTERS (driver-side metadata, no
     # Spark job); fall back to a count for non-local / non-stat paths
     try:
-        from data_warehouse_migrate_spark.sources.readers import (
-            parquet_footer_stats,
-        )
-
         expected = int(parquet_footer_stats(source_path)["n_rows"])
     except Exception:
-        expected = spark.read.schema(schema).parquet(source_path).count()
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    if os.path.isdir(source_path):
-        stream = reader.parquet(source_path)
-    else:
-        base, fname = os.path.split(source_path.rstrip("/"))
-        base = base or "."
-        for ch in "\\*?[]{}":
-            fname = fname.replace(ch, "\\" + ch)
-        stream = reader.option("pathGlobFilter", fname).parquet(base)
+        expected = spark.read.schema(stream.schema).parquet(
+            source_path).count()
     stream = normalize_nano_timestamps(stream, [ts_col])
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     out = sessionize_stream(stream, user_col, ts_col, gap_minutes)
@@ -493,29 +483,16 @@ def run_windowed_counts_stream(spark: SparkSession, source_path: str,
     Complete mode emits every window, so the result equals the batch
     tumbling-window aggregation — which is what the DuckDB oracle checks.
     Decimal sums keep the float aggregation order-independent."""
-    from data_warehouse_migrate_spark.sources.readers import normalize_nano_timestamps
+    from data_warehouse_migrate_spark.sources.readers import (
+        normalize_nano_timestamps,
+        open_file_stream,
+    )
 
     # defensive: see queries._t — the caller's session may lack these
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(source_path).schema
-    import os
-    if os.path.isdir(source_path):
-        # directories stream directly — the glob trick below matches leaf
-        # FILE names, so pointing it at a directory name would silently
-        # match zero files and return an empty result
-        stream = spark.readStream.schema(schema).parquet(source_path)
-    else:
-        # file stream sources require a DIRECTORY; point at the parent
-        # and glob-filter down to the requested file (name escaped — it
-        # is a Hadoop glob; bare filenames mean cwd)
-        base, fname = os.path.split(source_path.rstrip("/"))
-        base = base or "."
-        for ch in "\\*?[]{}":
-            fname = fname.replace(ch, "\\" + ch)
-        stream = (spark.readStream.schema(schema)
-                  .option("pathGlobFilter", fname).parquet(base))
-    stream = normalize_nano_timestamps(stream, [ts_col])
+    stream = normalize_nano_timestamps(open_file_stream(spark, source_path),
+                                       [ts_col])
     agg = (stream.groupBy(F.window(F.col(ts_col), window).alias("w"), group_col)
            .agg(F.count("*").alias("n_events"),
                 F.sum(F.col(value_col).cast("decimal(18,4)")).alias("sum_dec"))

@@ -499,3 +499,138 @@ def test_verify_append_mode_is_not_verifiable(spark, orders_path, tmp_path):
     rep = job.verify(spark)
     assert rep["verified"] is None
     assert "append" in rep["reason"]
+
+
+def test_run_stream_relative_single_file(spark, tmp_path, monkeypatch):
+    """A bare file name streams from the caller's working directory: the
+    single-file glob falls back to the file's own directory instead of an
+    empty load path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"k": list(range(20)),
+                             "s": [f"v{i}" for i in range(20)]}),
+                   tmp_path / "one.parquet")
+    pq.write_table(pa.table({"k": [99], "s": ["other"]}),
+                   tmp_path / "two.parquet")
+    monkeypatch.chdir(tmp_path)
+    dest = str(tmp_path / "rel_dest")
+    job = MigrationJob(source_path="one.parquet", destination_path=dest,
+                       mode="overwrite")
+    out = job.run_stream(spark, str(tmp_path / "rel_ckpt"))
+    assert out["rows_written"] == 20  # one.parquet only, not two.parquet
+    assert sorted(r.k for r in spark.read.parquet(dest).collect()) == \
+        list(range(20))
+
+
+def test_verify_checks_what_run_wrote(spark, tmp_path):
+    """verify() checksums the plan run() wrote: a newer partition that
+    lands in between neither changes the compared source rows nor needs
+    a staleness caveat."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "pt_src"
+    for pt, ids in (("p1", range(0, 5)), ("p2", range(5, 12))):
+        (src / f"pt={pt}").mkdir(parents=True)
+        pq.write_table(pa.table({"id": list(ids)}),
+                       src / f"pt={pt}" / "part-00000.parquet")
+    job = MigrationJob(source_path=str(src),
+                       destination_path=str(tmp_path / "pt_dest"),
+                       mode="overwrite", partition_columns=["pt"])
+    assert job.run(spark)["rows_written"] == 7
+    (src / "pt=p3").mkdir()
+    pq.write_table(pa.table({"id": list(range(100, 130))}),
+                   src / "pt=p3" / "part-00000.parquet")
+    rep = job.verify(spark)
+    assert rep["verified"] is True
+    assert rep["source_rows"] == rep["destination_rows"] == 7
+    assert "caveat" not in rep
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs it submitted), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dwms-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_and_verify_spark_job_counts(spark, tmp_path):
+    """Pinned Spark job counts on the nightly latest-partition shape: 40
+    ``dt=`` partitions (over Spark's 32-path parallel-listing threshold),
+    declared source types, a mapping, destination defaults, the 'fail'
+    null policy and the sized sink. run() lists, probes MAX(dt), counts
+    nulls, sizes and writes; verify() reuses that plan, so it submits only
+    the destination's schema read and one AQE shuffle + result job per
+    checksum — not the listing, probe and null count again."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_warehouse_migrate_spark.schema import ColumnSpec
+
+    src = tmp_path / "daily_src"
+    for d in range(40):
+        part = src / f"dt={dt.date(2024, 3, 1) + dt.timedelta(days=d)}"
+        part.mkdir(parents=True)
+        ids = list(range(d * 20, (d + 1) * 20))
+        pq.write_table(pa.table({"id": ids,
+                                 "cat": [f"c{j % 3}" for j in ids],
+                                 "qty": [str(j) for j in ids]}),
+                       part / "part-00000.parquet")
+    job = MigrationJob(
+        source_path=str(src), destination_path=str(tmp_path / "daily_dest"),
+        mode="overwrite",
+        source_schema=[ColumnSpec("id", "bigint"), ColumnSpec("cat", "string"),
+                       ColumnSpec("qty", "bigint")],
+        mapping={"rename": {"qty": "quantity"},
+                 "computed": {"sku": "concat(cat, '-', id)"}},
+        dest_schema=[
+            {"name": "id", "type": "bigint", "is_nullable": False,
+             "default": None},
+            {"name": "sku", "type": "varchar(32)", "is_nullable": False,
+             "default": None},
+            {"name": "quantity", "type": "bigint", "is_nullable": False,
+             "default": "0"},
+            {"name": "note", "type": "varchar(32)", "is_nullable": True,
+             "default": "n/a"}],
+        non_nullable=["id", "sku", "quantity"], null_policy="fail",
+        partition_columns=["dt"], target_file_mb=1)
+    out, run_jobs = _spark_jobs(spark, lambda: job.run(spark))
+    assert out["rows_written"] == 20
+    rep, verify_jobs = _spark_jobs(spark, lambda: job.verify(spark))
+    assert rep["verified"] is True and rep["source_rows"] == 20
+    assert (run_jobs, verify_jobs) == (13, 5)
+
+
+def test_run_incremental_first_run_builds_plan_once(spark, tmp_path,
+                                                   monkeypatch):
+    """A first run_incremental writes the plan it built for the diff
+    instead of handing over to run(), which would read the source again."""
+    src = str(tmp_path / "inc_src")
+    spark.createDataFrame([(i, f"v{i}") for i in range(30)],
+                          "k long, s string").write.parquet(src)
+    builds = []
+    build_plan = MigrationJob.build_plan
+
+    def counting_build_plan(self, *args, **kwargs):
+        builds.append(args)
+        return build_plan(self, *args, **kwargs)
+
+    monkeypatch.setattr(MigrationJob, "build_plan", counting_build_plan)
+    job = MigrationJob(source_path=src,
+                       destination_path=str(tmp_path / "inc_dest"),
+                       mode="overwrite")
+    out = job.run_incremental(spark, ["k"])
+    assert out["incremental"] is False and out["rows_written"] == 30
+    assert len(builds) == 1
+    rep = job.verify(spark)  # reuses the same plan
+    assert rep["verified"] is True and len(builds) == 1
