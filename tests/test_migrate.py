@@ -634,3 +634,60 @@ def test_run_incremental_first_run_builds_plan_once(spark, tmp_path,
     assert len(builds) == 1
     rep = job.verify(spark)  # reuses the same plan
     assert rep["verified"] is True and len(builds) == 1
+
+
+def _tree_bytes(root):
+    """{relative path: bytes} of every file under ``root`` ({} if absent)."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+_RUNNERS = {
+    "run": lambda job, spark, ckpt: job.run(spark),
+    "run_incremental": lambda job, spark, ckpt: job.run_incremental(
+        spark, ["v"]),
+    "run_scd2": lambda job, spark, ckpt: job.run_scd2(
+        spark, ["v"], batch_date="2024-01-01"),
+    "run_stream": lambda job, spark, ckpt: job.run_stream(spark, ckpt),
+}
+
+
+@pytest.mark.parametrize("runner", sorted(_RUNNERS))
+def test_fail_policy_raises_before_any_write(spark, tmp_path, runner):
+    """null_policy='fail' with a sized sink: a NULL in a non-nullable
+    column raises NullPolicyViolation before the runner writes anything,
+    so the destination an earlier run left stays byte-identical."""
+    from data_warehouse_migrate_spark.operators.constraints import (
+        NullPolicyViolation,
+    )
+
+    good, bad = str(tmp_path / "good_src"), str(tmp_path / "bad_src")
+    dest = str(tmp_path / "dest")
+    spark.createDataFrame([(1, "a"), (2, "b")],
+                          "id long, v string").write.parquet(good)
+    spark.createDataFrame([(3, "c"), (None, "d")],
+                          "id long, v string").write.parquet(bad)
+
+    def job(src):
+        return MigrationJob(source_path=src, destination_path=dest,
+                            mode="overwrite", non_nullable=["id"],
+                            null_policy="fail", target_file_mb=1)
+
+    call = _RUNNERS[runner]
+    call(job(good), spark, str(tmp_path / "ckpt_good"))
+    before = _tree_bytes(dest)
+    assert before
+    with pytest.raises(Exception) as e:
+        call(job(bad), spark, str(tmp_path / "ckpt_bad"))
+    assert "non-nullable constraint violated: id=1 nulls" in str(e.value)
+    if runner != "run_stream":  # a stream re-raises it as a query failure
+        assert isinstance(e.value, NullPolicyViolation)
+        assert e.value.null_counts == {"id": 1}
+    assert _tree_bytes(dest) == before
