@@ -58,8 +58,23 @@ def count_and_row_bytes(df: DataFrame) -> tuple[int, float]:
     """(row count, avg in-memory bytes/row) from ONE full aggregate —
     unbiased (no head sample); use where a count job is affordable or
     already being paid."""
+    n_rows, row_bytes, _ = count_bytes_and_nulls(df, [])
+    return n_rows, row_bytes
+
+
+def count_bytes_and_nulls(df: DataFrame, null_columns: list[str]
+                          ) -> tuple[int, float, dict[str, int]]:
+    """:func:`count_and_row_bytes` plus the NULL count of each of
+    ``null_columns`` (matched case-insensitively, keyed by ``df``'s
+    names), still ONE aggregate: a sized write and a 'fail' null check
+    share its pass."""
+    low = {c.lower(): c for c in df.columns}
+    cols = [low[c.lower()] for c in null_columns if c.lower() in low]
     fixed, var = row_bytes_expr(df.schema)
-    if var is None:
-        return df.count(), fixed
-    row = df.agg(F.count("*").alias("n"), F.avg(var).alias("w")).first()
-    return int(row["n"]), fixed + float(row["w"] or 0.0)
+    aggs = [F.count("*").alias("n"),
+            F.avg(var if var is not None else F.lit(0.0)).alias("w")]
+    aggs += [F.sum(F.col(c).isNull().cast("long")).alias(f"null_{i}")
+             for i, c in enumerate(cols)]
+    row = df.agg(*aggs).first()
+    return (int(row["n"]), fixed + float(row["w"] or 0.0),
+            {c: int(row[f"null_{i}"] or 0) for i, c in enumerate(cols)})

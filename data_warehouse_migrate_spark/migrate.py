@@ -10,6 +10,11 @@ Stage order matches the reference contract (``README.md:218``):
   type application (T3) → mapping transform (P1-P4, F1-F6, F13) →
   destination projection (P5) → default backfill (C2) → null policy (C1) →
   sink write (S9/S10).
+
+The eager steps of a run live in two places: ``build_plan`` resolves the
+latest partition, and ``_pre_write_gate`` — called by every runner right
+before it writes — runs the 'fail' null check, fused with the sized
+sink's row count and bytes per row into one aggregate.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.exceptions import ConfigurationError
 from data_warehouse_migrate_spark.functions.casts import apply_source_schema
+from data_warehouse_migrate_spark.functions.sizing import count_bytes_and_nulls
 from data_warehouse_migrate_spark.operators.constraints import (
     apply_defaults_backfill,
     apply_null_policy,
@@ -189,9 +195,10 @@ class MigrationJob:
     destination_jdbc: dict[str, str] | None = None
     write_partition_by: list[str] = field(default_factory=list)
     # target output file size in MB for file-format sinks (0 = off): the
-    # write goes through sources.sinks.write_sized, which measures the
-    # data and repartitions so output files land near this size instead
-    # of one-file-per-task (the anti-small-files knob)
+    # write goes through sources.sinks.write_sized, which repartitions by
+    # the row count and bytes per row the pre-write gate measured so
+    # output files land near this size instead of one-file-per-task (the
+    # anti-small-files knob)
     target_file_mb: int = 0
     # the source plan the last run()/run_incremental()/run_scd2() built
     # and wrote; verify() checksums it instead of rebuilding the plan
@@ -212,6 +219,10 @@ class MigrationJob:
         if not (mapping and mapping.type_override):
             return None
         return ", ".join(f"{c} {t}" for c, t in mapping.type_override.items())
+
+    def _read_source(self, spark: SparkSession) -> DataFrame:
+        return read_table(spark, self.source_path, fmt=self.source_format,
+                          jdbc_options=self.source_jdbc)
 
     def _source_plan(self, spark: SparkSession) -> DataFrame:
         """Build the run's source plan and keep it for :meth:`verify`."""
@@ -254,29 +265,34 @@ class MigrationJob:
         return dest if dest.columns else None
 
     # ------------------------------------------------------------------
-    def build_plan(self, spark: SparkSession, plan_only: bool = False) -> DataFrame:
-        """Construct the full lazy plan. With ``plan_only`` (the dry-run
-        path) NOTHING is executed: the latest-partition maxima (a full-scan
-        aggregate) are not resolved and the null-policy 'fail' count is not
-        run — both are reported as planned checks instead, so a dry run
-        touches no data beyond the LIMIT-1 access probe."""
-        df = read_table(spark, self.source_path, fmt=self.source_format,
-                        jdbc_options=self.source_jdbc)
+    def build_plan(self, spark: SparkSession) -> DataFrame:
+        """Construct the full lazy plan. Resolving the latest partition is
+        its one eager step (a LIMIT-1 probe on a hive-partitioned file
+        source, an ``agg(max)`` elsewhere). The null-policy 'fail' check
+        is not part of the plan: every runner runs it in
+        :meth:`_pre_write_gate`."""
+        return self._plan_from(self._read_source(spark))
 
+    def _plan_from(self, df: DataFrame, plan_only: bool = False) -> DataFrame:
+        """:meth:`build_plan` on an already-read source frame. With
+        ``plan_only`` (the dry-run path) the latest partition is not
+        resolved — :meth:`dry_run` reports it as a planned check — so
+        NOTHING is executed."""
         # partition pruning / full-scan guard (S2/P6)
         if self.partition_columns and not plan_only:
             df = latest_partition_filter(df, self.partition_columns)
         if self.limit:
             df = df.limit(self.limit)
-        return self._transform(df, plan_only=plan_only)
+        return self._transform(df)
 
     # ------------------------------------------------------------------
-    def _transform(self, df: DataFrame, plan_only: bool = False) -> DataFrame:
+    def _transform(self, df: DataFrame) -> DataFrame:
         """The cast → map → project → backfill → constrain chain on an
         already-read DataFrame — shared verbatim by the batch plan and the
-        per-micro-batch path of ``run_stream`` (where ``df`` is the batch
-        DataFrame ``foreachBatch`` hands over, so even the eager
-        null-policy 'fail' count works unchanged)."""
+        per-micro-batch paths of ``run_stream`` and ``run_scd2_stream``
+        (where ``df`` is the batch DataFrame ``foreachBatch`` hands over).
+        Lazy throughout: 'fill' and 'skip' are narrow transforms, and
+        'fail' is left to :meth:`_pre_write_gate`."""
         # T3: declared-source-type casting
         schema = self.source_schema or specs_from_dataframe(df)
         schema = dedup_columns(schema)
@@ -299,15 +315,32 @@ class MigrationJob:
         if self.dest_schema:
             df = project_to_destination(df, [c["name"] for c in self.dest_schema])
             df = apply_defaults_backfill(df, self.dest_schema)
-        if self.non_nullable and not (plan_only and self.null_policy == "fail"):
-            # 'fail' executes a full null-count aggregate (and can raise) —
-            # deferred to run() when planning only
+        if self.non_nullable and self.null_policy != "fail":
             dest_types = {c["name"]: str(c.get("type", ""))
                           for c in (self.dest_schema or [])}
             df = apply_null_policy(df, self.non_nullable, policy=self.null_policy,
                                    sentinel=self.null_fill_sentinel,
                                    dest_types=dest_types or None)
         return df
+
+    def _pre_write_gate(self, plan: DataFrame,
+                        sized: bool = False) -> tuple[int, float] | None:
+        """The eager check every runner makes on its transformed rows
+        right before it writes: under null_policy='fail' a NULL in a
+        non-nullable column raises ``NullPolicyViolation`` here, so
+        nothing is written. For a ``sized`` sink the same single
+        aggregate also counts the rows and measures their average bytes,
+        returned as the (rows, bytes/row) figures ``write_sized`` takes;
+        otherwise returns None (and without 'fail' runs nothing)."""
+        fail = self.non_nullable if self.null_policy == "fail" else []
+        if not sized:
+            if fail:
+                apply_null_policy(plan, fail, policy="fail")
+            return None
+        n_rows, row_bytes, nulls = count_bytes_and_nulls(plan, fail)
+        if fail:
+            apply_null_policy(plan, fail, policy="fail", counts=nulls)
+        return n_rows, row_bytes
 
     # ------------------------------------------------------------------
     def run(self, spark: SparkSession) -> dict[str, Any]:
@@ -317,9 +350,10 @@ class MigrationJob:
         ``rows_written`` is measured ON the write via an Observation (zero
         extra pass — the reference reports rows migrated,
         ``migrator.py:334-338``); ``destination_rows`` is the post-write
-        destination total, counted only for columnar file sinks where it is
-        a metadata-cheap read (on JDBC it would be a full table scan, and in
-        append mode it includes pre-existing rows — reported as None there).
+        destination total, counted only for file sinks, by reading the
+        files back with the schema just written (on JDBC it would be a
+        full table scan — reported as None there). In append mode it
+        includes pre-existing rows.
         """
         mode = MigrationMode.parse(self.mode)
         return self._write(spark, self._source_plan(spark), mode)
@@ -329,9 +363,11 @@ class MigrationJob:
         """Write ``plan`` to the destination; :meth:`run`'s summary."""
         from pyspark.sql import Observation
 
+        sized = bool(self.target_file_mb) and self.destination_format != "jdbc"
+        figures = self._pre_write_gate(plan, sized)
         obs = Observation()
         plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
-        if self.target_file_mb and self.destination_format != "jdbc":
+        if sized:
             from data_warehouse_migrate_spark.sources.sinks import (
                 write_sized,
             )
@@ -339,7 +375,8 @@ class MigrationJob:
             write_sized(plan, self.destination_path,
                         fmt=self.destination_format, mode=mode,
                         target_file_bytes=self.target_file_mb * 1024 * 1024,
-                        partition_by=self.write_partition_by or None)
+                        partition_by=self.write_partition_by or None,
+                        figures=figures)
         else:
             write_table(plan, self.destination_path,
                         fmt=self.destination_format,
@@ -350,9 +387,11 @@ class MigrationJob:
         if self.destination_format == "jdbc":
             destination_rows = None
         else:
+            # a real count of what is on disk; the schema just written
+            # saves the read its inference job
             destination_rows = read_table(
-                spark, self.destination_path,
-                fmt=self.destination_format).count()
+                spark, self.destination_path, fmt=self.destination_format,
+                schema=plan.schema).count()
         return {
             "status": "success",
             "destination": self.destination_path,
@@ -502,6 +541,7 @@ class MigrationJob:
             out["incremental"] = False
             return out
 
+        self._pre_write_gate(src)
         if reconcile_drift:
             from data_warehouse_migrate_spark.functions.casts import (
                 reconcile_to_schema,
@@ -621,6 +661,7 @@ class MigrationJob:
             raise ConfigurationError(
                 f"source columns {clash} collide with SCD2 bookkeeping "
                 f"columns {list(scd_cols)}; rename them in the mapping")
+        self._pre_write_gate(src)
         tracked = tracked_cols or [c for c in src.columns
                                    if c not in set(key_cols)]
 
@@ -812,9 +853,10 @@ class MigrationJob:
         def handle(batch_df: DataFrame, batch_id: int) -> None:
             from pyspark.sql import Observation
 
-            # null_policy='fail' runs its eager count inside _transform
-            # and raises BEFORE the write, aborting the stream
+            # null_policy='fail' raises here, BEFORE the write, aborting
+            # the stream
             out = self._transform(batch_df)
+            self._pre_write_gate(out)
             obs = Observation()
             out = out.observe(obs, F.count(F.lit(1)).alias("n"))
             batch_mode = (mode if totals["batches"] == 0 and batch_id == 0
@@ -864,9 +906,7 @@ class MigrationJob:
         and catalog destinations resolve their filesystem/identifier (a
         not-yet-existing path is fine — the writer creates it)."""
         try:
-            src = read_table(spark, self.source_path, fmt=self.source_format,
-                             jdbc_options=self.source_jdbc)
-            source_ok = validate_table_access(src)
+            source_ok = validate_table_access(self._read_source(spark))
         except Exception as e:  # probe, never raises
             logger.warning("source connection probe failed: %s", e)
             source_ok = False
@@ -900,11 +940,11 @@ class MigrationJob:
     def dry_run(self, spark: SparkSession) -> dict[str, Any]:
         """Plan-only validation (reference ``cli.py:332-412``): access probe,
         schema preview, mapping summary, physical plan — no data moved
-        beyond a LIMIT-1 probe."""
-        src = read_table(spark, self.source_path, fmt=self.source_format,
-                         jdbc_options=self.source_jdbc)
+        beyond a LIMIT-1 probe. The source is read (listed, its schema
+        inferred) once, for both the probe and the plan."""
+        src = self._read_source(spark)
         accessible = validate_table_access(src)
-        plan = self.build_plan(spark, plan_only=True)
+        plan = self._plan_from(src, plan_only=True)
         mapping = self._mapping()
         return {
             "planned_checks": {

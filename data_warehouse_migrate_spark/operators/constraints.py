@@ -58,13 +58,16 @@ def null_counts(df: DataFrame, columns: list[str]) -> dict[str, int]:
 def apply_null_policy(df: DataFrame, non_nullable: list[str],
                       policy: str = "fail",
                       sentinel: str = "",
-                      dest_types: dict[str, str] | None = None) -> DataFrame:
+                      dest_types: dict[str, str] | None = None,
+                      counts: dict[str, int] | None = None) -> DataFrame:
     """Enforce non-nullable columns per policy (C1).
 
     ``dest_types`` maps column → destination type string; under ``fill``
     only _FILLABLE_RE-matching types get the sentinel (reference
     ``migrator.py:649-657``). Unknown types are treated as fillable when no
-    dest_types is provided.
+    dest_types is provided. ``counts`` are per-column null counts the
+    caller already measured on ``df`` (keyed by its column names); with
+    them ``fail`` runs no aggregate of its own.
     """
     if policy not in NULL_POLICIES:
         raise ValueError(f"unknown null policy {policy!r}; expected one of {NULL_POLICIES}")
@@ -74,9 +77,11 @@ def apply_null_policy(df: DataFrame, non_nullable: list[str],
         return df
 
     if policy == "fail":
-        counts = {c: n for c, n in null_counts(df, cols).items() if n > 0}
-        if counts:
-            raise NullPolicyViolation(counts)
+        if counts is None:
+            counts = null_counts(df, cols)
+        violations = {c: counts[c] for c in cols if counts.get(c)}
+        if violations:
+            raise NullPolicyViolation(violations)
         return df
 
     if policy == "skip":

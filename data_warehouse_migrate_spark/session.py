@@ -41,6 +41,12 @@ _DEFAULTS = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.files.maxPartitionBytes": "128m",
+    # list up to 1024 partition directories on the driver instead of in a
+    # Spark job with one task per directory (default threshold 32): a
+    # read_table of 48 dt= directories took 0.37-0.49 s median → 0.10-0.11 s,
+    # of 730 (two years of days) 2.6-3.2 s → 0.13-0.14 s, local[4] on a
+    # 4-core host, 8 reads per setting, two interleaved rounds
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
     "spark.sql.caseSensitive": "false",
     # parquet TIMESTAMP(NANOS) (e.g. pandas-written event tables) has no
     # Spark timestamp equivalent — read as long nanos, convert explicitly

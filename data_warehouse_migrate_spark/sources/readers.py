@@ -7,19 +7,25 @@ as DataFrame filters, which Catalyst pushes into the scan (PushedFilters /
 partition pruning — free at any scale, verified in tests via the query plan).
 
 Scale notes:
-  * latest-partition discovery is an ``agg(max)`` — on partitioned file
-    sources this is metadata-only after partition pruning; on parquet the
-    aggregate pushes down to footer stats (spark.sql.parquet.aggregatePushdown).
+  * latest-partition discovery on a hive-partitioned file source reads the
+    candidate values off the file index's listing and confirms the newest
+    with one LIMIT-1 probe (one task on one partition). Every other source
+    pays an ``agg(max)``: two Spark jobs (AQE) that read every file.
   * the reference's sequential batch loop (S3) does not exist: Spark's
     split planning (``maxPartitionBytes``) parallelizes the scan.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import logging
+import re
+from decimal import Decimal
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 logger = logging.getLogger(__name__)
 
@@ -79,17 +85,101 @@ def normalize_nano_timestamps(df: DataFrame, columns: list[str]) -> DataFrame:
     return df
 
 
+# Spark's name for the directory of a NULL partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_PATH_ESCAPE = re.compile(r"%([0-9A-Fa-f]{2})")
+# partition types whose directory names parse exactly into the Python value
+# a collected row holds; other types (timestamp, double ...) take the
+# aggregate
+_PATH_VALUE_PARSERS = (
+    ((T.StringType,), str),
+    ((T.ByteType, T.ShortType, T.IntegerType, T.LongType), int),
+    ((T.DecimalType,), Decimal),
+    ((T.DateType,), _dt.date.fromisoformat),
+)
+
+
+def _unescape(path_name: str) -> str:
+    """Spark's ``unescapePathName``: decode each ``%XX``."""
+    return _PATH_ESCAPE.sub(lambda m: chr(int(m.group(1), 16)), path_name)
+
+
+def _directory_partition_types(df: DataFrame,
+                               cols: list[str]) -> dict[str, T.DataType] | None:
+    """{requested column: Spark type} when ``df`` is a bare file-source
+    read and every column in ``cols`` is one of its ``name=value``
+    directory partition columns; None otherwise."""
+    plan = df._jdf.queryExecution().analyzed()
+    if (plan.getClass().getSimpleName() != "LogicalRelation"
+            or plan.relation().getClass().getSimpleName()
+            != "HadoopFsRelation"):
+        return None
+    partition_names = {n.lower()
+                       for n in plan.relation().partitionSchema().fieldNames()}
+    types = {f.name.lower(): f.dataType for f in df.schema.fields}
+    if not all(c.lower() in partition_names for c in cols):
+        return None
+    return {c: types[c.lower()] for c in cols}
+
+
+def _listed_partition_values(df: DataFrame, col: str,
+                             dtype: T.DataType) -> set | None:
+    """The non-NULL values of directory partition ``col`` over the files
+    the index listed, typed as Spark typed the column (so ``hour=10``
+    sorts after ``hour=9``); None when some value does not parse."""
+    parse = next((p for types, p in _PATH_VALUE_PARSERS
+                  if isinstance(dtype, types)), None)
+    if parse is None:
+        return None
+    values = set()
+    for uri in df.inputFiles():
+        # the URI escapes what Spark already escaped in the directory
+        # name: undo the URI layer here, Spark's own %XX layer below
+        dirs = unquote(urlparse(uri).path).split("/")[:-1]
+        raw = next((value for name, eq, value
+                    in (seg.partition("=") for seg in reversed(dirs))
+                    if eq and _unescape(name).lower() == col.lower()), None)
+        if raw is None:
+            return None
+        if raw == _NULL_PARTITION:
+            continue
+        try:
+            values.add(parse(_unescape(raw)))
+        except (ValueError, ArithmeticError):  # decimal.InvalidOperation
+            return None
+    return values
+
+
 def latest_partition_values(df: DataFrame, partition_cols: list[str]) -> dict[str, object]:
-    """A1/A2: latest value per partition column, one aggregate
-    (reference ``maxcompute_client.py:241-252,279-297``). Returns {} when
-    the table is empty or all partition values are NULL (A3 existence probe
-    folded in)."""
+    """A1/A2: latest value per partition column — the reference's MAX over
+    the rows, taken for each column on its own (reference
+    ``maxcompute_client.py:241-252,279-297``). Returns {} when the table
+    is empty or all partition values are NULL (A3 existence probe folded
+    in).
+
+    When ``df`` is a bare read of a hive-partitioned file source and every
+    column is a directory partition column, the candidates come from the
+    file index's listing (no job); the newest is confirmed by a LIMIT-1
+    probe, stepping down past partitions whose files hold no rows.
+    Otherwise — in-memory frames, JDBC and catalog tables, data columns —
+    one ``agg(max)`` over the rows."""
     if not partition_cols:
         return {}
-    row = df.agg(*[F.max(F.col(c)).alias(c) for c in partition_cols]).first()
-    if row is None:
-        return {}
-    vals = {c: row[c] for c in partition_cols if row[c] is not None}
+    types = _directory_partition_types(df, partition_cols)
+    listed = types and {c: _listed_partition_values(df, c, t)
+                        for c, t in types.items()}
+    if not listed or any(v is None for v in listed.values()):
+        row = df.agg(*[F.max(F.col(c)).alias(c)
+                       for c in partition_cols]).first()
+        if row is None:
+            return {}
+        return {c: row[c] for c in partition_cols if row[c] is not None}
+    vals = {}
+    for c, candidates in listed.items():
+        for v in sorted(candidates, reverse=True):
+            if not df.filter(F.col(c) == F.lit(v)).isEmpty():
+                vals[c] = v
+                break
     return vals
 
 
@@ -138,7 +228,6 @@ def open_file_stream(spark: SparkSession, source_path: str,
     file-or-directory check sees — not the JVM's launch directory. The
     shared logic behind every ``run_*_stream`` runner."""
     import os as _os
-    from urllib.parse import urlparse
 
     if not urlparse(source_path).scheme:
         source_path = _os.path.abspath(source_path)

@@ -80,17 +80,26 @@ def write_sized(df: DataFrame, path: str,
                 target_file_bytes: int = 128 * 1024 * 1024,
                 compression_ratio: float = 0.35,
                 partition_by: list[str] | None = None,
+                figures: tuple[int, float] | None = None,
                 **options) -> int:
     """Write with a TARGET OUTPUT FILE SIZE — the anti-small-files
     operator. A 100 TB pipeline that writes one file per task from a
     4,000-partition shuffle produces 4,000 tiny files per run; readers
     then pay per-file open/footer costs and the namenode holds millions
-    of entries. This writer measures the data (one count+avg-bytes
-    aggregate via ``functions.sizing``), converts the in-memory estimate
+    of entries. This writer measures the data (row count and average
+    in-memory bytes per row), converts the in-memory estimate
     to on-disk bytes with ``compression_ratio`` (parquet+snappy on mixed
     columns lands around 0.2-0.5; the assumption is a visible knob, not
     a hidden constant), and repartitions to
     ceil(total_disk_bytes / target_file_bytes) before writing.
+
+    ``figures`` is that (row count, bytes/row) pair when the caller has
+    already measured it: ``MigrationJob``'s pre-write gate computes it in
+    the same aggregate as its 'fail' null check
+    (``functions.sizing.count_bytes_and_nulls``), so a sized migration
+    reads its plan once before the write, not twice. Without ``figures``
+    the writer runs that aggregate itself
+    (``functions.sizing.count_and_row_bytes``).
 
     Returns the partition (≈ file) count it chose. ``maxRecordsPerFile``
     is set as a belt-and-braces cap so a skewed partition still splits.
@@ -113,7 +122,7 @@ def write_sized(df: DataFrame, path: str,
     if target_file_bytes <= 0 or not 0.0 < compression_ratio <= 1.0:
         raise ValueError("target_file_bytes must be > 0 and "
                          "compression_ratio in (0, 1]")
-    n_rows, row_bytes = count_and_row_bytes(df)
+    n_rows, row_bytes = figures or count_and_row_bytes(df)
     disk_bytes = n_rows * row_bytes * compression_ratio
     n_files = max(1, math.ceil(disk_bytes / target_file_bytes))
     rows_per_file = max(1, math.ceil(n_rows / n_files)) if n_rows else 1

@@ -120,7 +120,10 @@ def test_dry_run_defers_eager_checks(spark, tmp_path):
     job = MigrationJob(source_path=src, destination_path=str(tmp_path / "out"),
                        mode="overwrite", non_nullable=["id"],
                        null_policy="fail", partition_columns=["pt"])
-    report = job.dry_run(spark)  # must not raise NullPolicyViolation
+    # must not raise NullPolicyViolation; one schema inference (the probe
+    # and the plan share the read) + the LIMIT-1 probe
+    report, jobs, _ = _spark_jobs(spark, lambda: job.dry_run(spark))
+    assert jobs == 2
     assert report["planned_checks"]["null_policy"] == {
         "policy": "fail", "columns": ["id"]}
     assert report["planned_checks"]["partition_filter"] == "latest of ['pt']"
@@ -549,7 +552,8 @@ def test_verify_checks_what_run_wrote(spark, tmp_path):
 
 
 def _spark_jobs(spark, fn):
-    """(fn(), number of Spark jobs it submitted), counted by job group."""
+    """(fn(), Spark jobs it submitted, tasks those jobs ran), counted by
+    job group."""
     import uuid
 
     sc = spark.sparkContext
@@ -559,17 +563,28 @@ def _spark_jobs(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    # the status store is fed asynchronously: let it see every job end
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(tracker.getStageInfo(s).numCompletedTasks
+                for j in jobs for s in tracker.getJobInfo(j).stageIds
+                if tracker.getStageInfo(s) is not None)
+    return out, len(jobs), tasks
 
 
 def test_run_and_verify_spark_job_counts(spark, tmp_path):
-    """Pinned Spark job counts on the nightly latest-partition shape: 40
-    ``dt=`` partitions (over Spark's 32-path parallel-listing threshold),
-    declared source types, a mapping, destination defaults, the 'fail'
-    null policy and the sized sink. run() lists, probes MAX(dt), counts
-    nulls, sizes and writes; verify() reuses that plan, so it submits only
-    the destination's schema read and one AQE shuffle + result job per
-    checksum — not the listing, probe and null count again."""
+    """Pinned Spark job and task counts on the nightly latest-partition
+    shape: 40 ``dt=`` partitions (over Spark's default 32-path
+    parallel-listing threshold), declared source types, a mapping,
+    destination defaults, the 'fail' null policy and the sized sink.
+    run() submits 8 jobs: the source's schema inference (the listing
+    stays on the driver), the LIMIT-1 probe of the newest ``dt=``, one
+    AQE shuffle + result pair each for the pre-write gate (null check and
+    sizing in one aggregate), the sized write and the destination count.
+    Its task total shows that no job fans out over the 40 directories.
+    verify() reuses that plan, so it submits only the destination's
+    schema read and one shuffle + result job per checksum."""
     import datetime as dt
 
     import pyarrow as pa
@@ -604,11 +619,11 @@ def test_run_and_verify_spark_job_counts(spark, tmp_path):
              "default": "n/a"}],
         non_nullable=["id", "sku", "quantity"], null_policy="fail",
         partition_columns=["dt"], target_file_mb=1)
-    out, run_jobs = _spark_jobs(spark, lambda: job.run(spark))
+    out, run_jobs, run_tasks = _spark_jobs(spark, lambda: job.run(spark))
     assert out["rows_written"] == 20
-    rep, verify_jobs = _spark_jobs(spark, lambda: job.verify(spark))
+    rep, verify_jobs, _ = _spark_jobs(spark, lambda: job.verify(spark))
     assert rep["verified"] is True and rep["source_rows"] == 20
-    assert (run_jobs, verify_jobs) == (13, 5)
+    assert (run_jobs, run_tasks, verify_jobs) == (8, 8, 5)
 
 
 def test_run_incremental_first_run_builds_plan_once(spark, tmp_path,
