@@ -706,3 +706,63 @@ def test_fail_policy_raises_before_any_write(spark, tmp_path, runner):
         assert isinstance(e.value, NullPolicyViolation)
         assert e.value.null_counts == {"id": 1}
     assert _tree_bytes(dest) == before
+
+
+def _snapshot(spark, path):
+    """(sorted rows, [(name, type)]) of a file destination."""
+    df = spark.read.parquet(path)
+    return (sorted(map(tuple, df.collect()), key=repr),
+            [(f.name, f.dataType.simpleString()) for f in df.schema.fields])
+
+
+def test_run_incremental_matches_apply_delta(spark, tmp_path):
+    """A file destination after run_incremental holds exactly what the
+    delta formula apply_delta(dest, snapshot_delta(src, dest, keys), keys)
+    builds: the same row multiset and the same column names, order and
+    types. The fixture has inserts, updates, deletes, a NULL-key row, a
+    source column narrower than the destination's (int vs bigint), a
+    source column order unlike the destination's and write_partition_by."""
+    from data_warehouse_migrate_spark.operators.delta import (
+        apply_delta,
+        delta_counts,
+        snapshot_delta,
+    )
+
+    src1, src2 = str(tmp_path / "eq_src1"), str(tmp_path / "eq_src2")
+    dst = str(tmp_path / "eq_dst")
+    spark.createDataFrame(
+        [(1, 10, "a", "x"), (2, 20, "b", "x"), (3, 30, "c", "y"),
+         (4, 40, "d", "y"), (None, 50, "n", "x")],
+        "k bigint, v bigint, s string, p string").write.parquet(src1)
+    # key 1 unchanged, 2 and the NULL key updated, 3 deleted, 4 moves
+    # partition, 5 and 6 inserted
+    spark.createDataFrame(
+        [("a", "x", 1, 10), ("B", "x", 2, 20), ("d", "x", 4, 40),
+         ("e", "y", 5, 50), ("f", "x", 6, None), ("n", "x", None, 51)],
+        "s string, p string, k bigint, v int").write.parquet(src2)
+
+    def job(src):
+        return MigrationJob(source_path=src, destination_path=dst,
+                            mode="overwrite", write_partition_by=["p"])
+
+    assert job(src1).run_incremental(spark, ["k"])["incremental"] is False
+    j2 = job(src2)
+    src, dest = j2.build_plan(spark), spark.read.parquet(dst)
+    delta = snapshot_delta(src, dest, ["k"])
+    want_counts = {r.change_type: r.n_rows
+                   for r in delta_counts(delta).collect()}
+    want_rows = sorted(map(tuple, apply_delta(dest, delta, ["k"]).collect()),
+                       key=repr)
+    want_schema = [(f.name, f.dataType.simpleString())
+                   for f in apply_delta(dest, delta, ["k"]).schema.fields]
+    assert want_counts == {"unchanged": 1, "update": 3, "insert": 2,
+                           "delete": 1}
+    assert want_schema == [("k", "bigint"), ("v", "bigint"), ("s", "string"),
+                           ("p", "string")]
+
+    out = j2.run_incremental(spark, ["k"])
+    assert out["delta_counts"] == want_counts
+    assert out["rows_applied"] == 6
+    assert _snapshot(spark, dst) == (want_rows, want_schema)
+    assert sorted(p.name for p in (tmp_path / "eq_dst").iterdir()
+                  if p.is_dir()) == ["p=x", "p=y"]
