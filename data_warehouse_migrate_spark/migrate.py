@@ -23,7 +23,7 @@ import logging
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.exceptions import ConfigurationError
@@ -78,6 +78,14 @@ _JDBC_MISSING_TABLE_MARKS = (
     "no such table", "table or view not found",
     "table_or_view_not_found", "table not found",
 )
+
+
+def _count_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an Observation of its row count, which the action that
+    writes it fills in (``obs.get["n"]`` after the write): the rows are
+    counted on the write pass itself, not by a second one."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def _java_throwable_chain(err: Exception):
@@ -361,12 +369,9 @@ class MigrationJob:
     def _write(self, spark: SparkSession, plan: DataFrame,
                mode: MigrationMode) -> dict[str, Any]:
         """Write ``plan`` to the destination; :meth:`run`'s summary."""
-        from pyspark.sql import Observation
-
         sized = bool(self.target_file_mb) and self.destination_format != "jdbc"
         figures = self._pre_write_gate(plan, sized)
-        obs = Observation()
-        plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
+        plan, obs = _count_rows(plan)
         if sized:
             from data_warehouse_migrate_spark.sources.sinks import (
                 write_sized,
@@ -492,13 +497,19 @@ class MigrationJob:
         (``operators.delta.snapshot_delta``) and apply only the delta.
 
         First run (destination absent/empty) writes the source plan as a
-        full :meth:`run` would. File-format destinations materialize the next
+        full :meth:`run` would. A file-format destination has no in-place
+        update, so when anything changed it is overwritten with the next
         snapshot — current rows minus deleted/updated keys, plus
-        insert/update rows — and overwrite; the plan is localCheckpointed
-        first to break the read-then-overwrite cycle on the same path
-        (the delta JOIN, not the rewrite, is the expensive part this
-        method saves — and the summary tells operators how much churn a
-        true in-place sink would see). A JDBC destination applies the
+        insert/update rows. With unique keys that snapshot is the source
+        itself cast to the destination's schema
+        (``operators.delta.snapshot_from_source``), so the delta JOIN
+        only counts the changes and the rewrite reads the source alone:
+        no cached delta, no destination re-scan, and no read-then-
+        overwrite cycle on the same path. The one visible difference
+        from applying the delta: a value equal under ``<=>`` but not
+        identical (``0.0`` vs ``-0.0``) counts as unchanged, yet a
+        rewrite carries the source's value. A converged run writes
+        nothing. A JDBC destination applies the
         same delta IN PLACE: the changed rows are bulk-staged to a temp
         table and one server-side MERGE (``jdbc_merge=True``, the
         default — live-tested against embedded Derby) or a
@@ -518,15 +529,15 @@ class MigrationJob:
         Returns per-change-type counts plus the applied row total.
         """
         from data_warehouse_migrate_spark.operators.delta import (
-            apply_delta,
             apply_delta_jdbc,
             delta_counts,
             snapshot_delta,
+            snapshot_from_source,
         )
 
         # a limited or latest-partition-pruned source is a SUBSET of the
         # logical table: every destination key outside it would classify
-        # as 'delete' and be destroyed by apply_delta — refuse, as
+        # as 'delete' and be destroyed by the sync — refuse, as
         # run_stream does for its own incompatible options
         if self.limit or self.partition_columns:
             raise ConfigurationError(
@@ -549,40 +560,42 @@ class MigrationJob:
 
             src = reconcile_to_schema(src, dest.schema)
         delta = snapshot_delta(src, dest, key_cols)
-        # one pass over the join for the counts; the changed subset then
+
+        def summary(delta: DataFrame) -> dict[str, Any]:
+            counts = {r.change_type: int(r.n_rows)
+                      for r in delta_counts(delta).collect()}
+            return {"status": "success", "incremental": True,
+                    "destination": self.destination_path,
+                    "delta_counts": counts,
+                    "rows_applied": sum(v for k, v in counts.items()
+                                        if k != "unchanged")}
+
+        if self.destination_format != "jdbc":
+            # its schema resolves before the count: a schema mismatch
+            # raises here, before the join runs and before any write
+            nxt = snapshot_from_source(src, dest, delta)
+            out = summary(delta)
+            if out["rows_applied"]:
+                write_table(nxt, self.destination_path,
+                            fmt=self.destination_format,
+                            mode=MigrationMode.OVERWRITE,
+                            partition_by=self.write_partition_by or None)
+            return out
+
+        # one pass over the join for the counts; the staged apply then
         # reuses the cached delta instead of re-running the join
         from pyspark import StorageLevel
 
         delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            counts = {r.change_type: int(r.n_rows)
-                      for r in delta_counts(delta).collect()}
-            changed = delta.filter(F.col("change_type") != "unchanged")
-            n_changed = sum(v for k, v in counts.items()
-                            if k != "unchanged")
-            out: dict[str, Any] = {
-                "status": "success",
-                "incremental": True,
-                "destination": self.destination_path,
-                "delta_counts": counts,
-                "rows_applied": n_changed,
-            }
-            if n_changed:
-                if self.destination_format == "jdbc":
-                    # in-place server-side apply: stage + MERGE (or the
-                    # DELETE+INSERT fallback) — no snapshot rewrite
-                    out["jdbc_apply"] = apply_delta_jdbc(
-                        delta, key_cols, self.destination_jdbc or {},
-                        self.destination_path, use_merge=jdbc_merge,
-                        n_changed=n_changed)
-                else:
-                    nxt = apply_delta(
-                        dest, changed, key_cols).localCheckpoint()
-                    write_table(nxt, self.destination_path,
-                                fmt=self.destination_format,
-                                mode=MigrationMode.OVERWRITE,
-                                partition_by=self.write_partition_by
-                                or None)
+            out = summary(delta)
+            if out["rows_applied"]:
+                # in-place server-side apply: stage + MERGE (or the
+                # DELETE+INSERT fallback) — no snapshot rewrite
+                out["jdbc_apply"] = apply_delta_jdbc(
+                    delta, key_cols, self.destination_jdbc or {},
+                    self.destination_path, use_merge=jdbc_merge,
+                    n_changed=out["rows_applied"])
         finally:
             # a failing apply must not leave the delta cached (run_scd2
             # holds the same contract)
@@ -665,22 +678,18 @@ class MigrationJob:
         tracked = tracked_cols or [c for c in src.columns
                                    if c not in set(key_cols)]
 
-        def initial_history() -> DataFrame:
-            return (src
-                    .withColumn(from_col,
-                                F.lit(batch_date).cast("date"))
-                    .withColumn(to_col, F.lit(None).cast("date"))
-                    .withColumn(cur_col, F.lit(True)))
-
         hist = self._read_destination(spark)
         if hist is None:
-            h0 = initial_history()
-            n = h0.count()
+            h0, obs = _count_rows(
+                src.withColumn(from_col, F.lit(batch_date).cast("date"))
+                .withColumn(to_col, F.lit(None).cast("date"))
+                .withColumn(cur_col, F.lit(True)))
             write_table(h0, self.destination_path,
                         fmt=self.destination_format,
                         mode=MigrationMode.OVERWRITE,
                         jdbc_options=self.destination_jdbc,
                         partition_by=self.write_partition_by or None)
+            n = int(obs.get["n"])
             return {"status": "success", "scd2": True, "first_run": True,
                     "destination": self.destination_path,
                     "batch_date": batch_date,
@@ -851,14 +860,11 @@ class MigrationJob:
         totals = {"rows_written": 0, "batches": 0}
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
-            from pyspark.sql import Observation
-
             # null_policy='fail' raises here, BEFORE the write, aborting
             # the stream
             out = self._transform(batch_df)
             self._pre_write_gate(out)
-            obs = Observation()
-            out = out.observe(obs, F.count(F.lit(1)).alias("n"))
+            out, obs = _count_rows(out)
             batch_mode = (mode if totals["batches"] == 0 and batch_id == 0
                           else MigrationMode.APPEND)
             write_table(out, self.destination_path,

@@ -14,8 +14,11 @@ both sides shuffle once on the key; with both snapshots bucketed on the
 key (``sources.sinks.write_bucketed``) the exchange disappears entirely.
 Change detection is a null-safe struct comparison (JVM expression, no
 UDF), so the join output is filtered map-side before anything else moves.
-The delta is typically a small fraction of the corpus — downstream
-stages (sink writes) see delta-sized, not corpus-sized, inputs.
+The delta is typically a small fraction of the corpus: a JDBC sink
+(``apply_delta_jdbc``) is sent the insert/update/delete rows only, never
+the corpus. A file sink has no in-place update, so its next snapshot is
+a full rewrite; ``snapshot_from_source`` builds it from the source alone,
+and the join only counts the changes.
 """
 
 from __future__ import annotations
@@ -110,8 +113,9 @@ def apply_delta(dest: DataFrame, delta: DataFrame,
                 key_cols: list[str]) -> DataFrame:
     """Materialize the next destination snapshot from the current one
     plus a delta: drop deleted/updated keys, append inserts/updates.
-    (For JDBC sinks the same delta drives MERGE/DELETE statements; this
-    DataFrame form is the file-sink / snapshot-table path.)
+    (For JDBC sinks the same delta drives MERGE/DELETE statements;
+    ``MigrationJob.run_incremental`` rewrites a file sink from the source
+    instead, see :func:`snapshot_from_source`.)
 
     One shuffle: the anti-join on the key; the union is free. The anti
     join is NULL-SAFE on the key columns — a column-list join uses
@@ -126,9 +130,36 @@ def apply_delta(dest: DataFrame, delta: DataFrame,
         eq = F.col(f"dd.{k}").eqNullSafe(F.col(f"mm.{k}"))
         cond = eq if cond is None else cond & eq
     keep = dd.join(mm, cond, "left_anti")
-    add = (delta.filter(F.col("change_type").isin("insert", "update"))
-           .select(*dest.columns))
-    return keep.unionByName(add)
+    return keep.unionByName(_upserts(dest, delta))
+
+
+def _upserts(dest: DataFrame, delta: DataFrame) -> DataFrame:
+    """The insert/update rows of ``delta`` in ``dest``'s columns."""
+    return (delta.filter(F.col("change_type").isin("insert", "update"))
+            .select(*dest.columns))
+
+
+def snapshot_from_source(source: DataFrame, dest: DataFrame,
+                         delta: DataFrame) -> DataFrame:
+    """The snapshot ``apply_delta(dest, delta, key_cols)`` builds, read
+    from the source alone, for ``delta = snapshot_delta(source, dest,
+    key_cols)``.
+
+    With unique keys (``snapshot_delta``'s contract) that snapshot holds
+    exactly the source's keys, and each unchanged key's destination row
+    equals its source row under null-safe ``<=>``. So it is the source
+    cast to apply_delta's schema: the destination's column order and
+    ``unionByName``'s types. The plan reads neither the destination nor
+    the delta, so it can overwrite the destination's own path. The one
+    difference: a value ``<=>``-equal to the destination's but not
+    identical (``0.0`` vs ``-0.0``) comes out as the source has it.
+
+    Resolving the schema runs no job; a destination column the source
+    lacks raises ``AnalysisException`` here, as apply_delta would.
+    """
+    schema = dest.unionByName(_upserts(dest, delta)).schema
+    return source.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                           for f in schema.fields])
 
 
 def apply_delta_jdbc(delta: DataFrame, key_cols: list[str],

@@ -350,11 +350,11 @@ def test_run_incremental_sync(spark, tmp_path):
 
 
 def test_run_incremental_unpersists_on_failing_apply(spark, tmp_path):
-    """r15 verdict item 4: a failing apply must not leave the persisted
-    delta cached (try/finally around the delta lifecycle). Failure
-    injection: the evolved source DROPPED a destination column, so
-    apply_delta's dest-schema projection raises after the delta was
-    persisted and counted."""
+    """A failing sync must not leave anything cached. Failure injection:
+    the evolved source DROPPED a destination column, so resolving the
+    next snapshot's schema (the destination's columns) raises at
+    analysis, before any job runs and before anything could be cached;
+    only a JDBC destination persists its delta, inside a try/finally."""
     import pytest as _pytest
 
     src1 = str(tmp_path / "unp_src1")
@@ -751,10 +751,10 @@ def test_run_incremental_matches_apply_delta(spark, tmp_path):
     delta = snapshot_delta(src, dest, ["k"])
     want_counts = {r.change_type: r.n_rows
                    for r in delta_counts(delta).collect()}
-    want_rows = sorted(map(tuple, apply_delta(dest, delta, ["k"]).collect()),
-                       key=repr)
+    nxt = apply_delta(dest, delta, ["k"])
+    want_rows = sorted(map(tuple, nxt.collect()), key=repr)
     want_schema = [(f.name, f.dataType.simpleString())
-                   for f in apply_delta(dest, delta, ["k"]).schema.fields]
+                   for f in nxt.schema.fields]
     assert want_counts == {"unchanged": 1, "update": 3, "insert": 2,
                            "delete": 1}
     assert want_schema == [("k", "bigint"), ("v", "bigint"), ("s", "string"),
@@ -766,3 +766,100 @@ def test_run_incremental_matches_apply_delta(spark, tmp_path):
     assert _snapshot(spark, dst) == (want_rows, want_schema)
     assert sorted(p.name for p in (tmp_path / "eq_dst").iterdir()
                   if p.is_dir()) == ["p=x", "p=y"]
+
+
+def test_run_incremental_null_safe_equal_and_converged(spark, tmp_path):
+    """The one documented difference from applying the delta: a value
+    equal to the destination's under ``<=>`` but not identical (-0.0 vs
+    0.0) counts as unchanged, and when other keys force a rewrite the
+    destination takes the source's value. A converged sync writes
+    nothing: the destination stays byte-identical."""
+    import math
+
+    srcs = [str(tmp_path / f"nz_src{i}") for i in range(3)]
+    dst = str(tmp_path / "nz_dst")
+    for path, rows in zip(srcs, ([(1, -0.0), (2, 2.0)],
+                                 [(1, 0.0), (2, 2.0)],
+                                 [(1, 0.0), (2, 2.0), (3, 3.0)])):
+        spark.createDataFrame(rows, "k long, v double").write.parquet(path)
+
+    def sync(src):
+        return MigrationJob(source_path=src, destination_path=dst,
+                            mode="overwrite").run_incremental(spark, ["k"])
+
+    def values():
+        return {r.k: r.v for r in spark.read.parquet(dst).collect()}
+
+    sync(srcs[0])
+    before = _tree_bytes(dst)
+    out = sync(srcs[1])
+    assert out["delta_counts"] == {"unchanged": 2}
+    assert out["rows_applied"] == 0
+    assert _tree_bytes(dst) == before
+    assert math.copysign(1.0, values()[1]) == -1.0
+
+    out = sync(srcs[2])
+    assert out["delta_counts"] == {"unchanged": 2, "insert": 1}
+    assert values() == {1: 0.0, 2: 2.0, 3: 3.0}
+    assert math.copysign(1.0, values()[1]) == 1.0
+
+
+def test_run_incremental_spark_job_counts(spark, tmp_path):
+    """Pinned Spark jobs and tasks of a second-run run_incremental into a
+    file destination: the source's and the destination's schema
+    inference, four for the delta join's counting aggregate (a shuffle
+    job per join side, one for the grouping and a result job) and the
+    rewrite, whose plan reads the source alone. Nothing is cached or checkpointed, and the destination is
+    neither re-scanned nor anti-joined."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_warehouse_migrate_spark.schema import ColumnSpec
+
+    src, dst = tmp_path / "jc_src", tmp_path / "jc_dst"
+    src.mkdir()
+    ids = list(range(200))
+    pq.write_table(pa.table({"id": [str(i) for i in ids],
+                             "name": [f"n{i}" for i in ids],
+                             "amount": [str(i / 4) for i in ids]}),
+                   src / "part-00000.parquet")
+
+    def job():
+        return MigrationJob(
+            source_path=str(src), destination_path=str(dst),
+            mode="overwrite",
+            source_schema=[ColumnSpec("id", "bigint"),
+                           ColumnSpec("name", "string"),
+                           ColumnSpec("amount", "double")])
+
+    job().run_incremental(spark, ["id"])
+    # 190 unchanged, 5 updated, 5 deleted, 5 inserted
+    ids = list(range(5, 200)) + list(range(1000, 1005))
+    pq.write_table(pa.table({"id": [str(i) for i in ids],
+                             "name": [f"n{i}" if i % 39 else "changed"
+                                      for i in ids],
+                             "amount": [str(i / 4) for i in ids]}),
+                   src / "part-00000.parquet")
+    out, jobs, tasks = _spark_jobs(
+        spark, lambda: job().run_incremental(spark, ["id"]))
+    assert out["delta_counts"] == {"unchanged": 190, "update": 5,
+                                   "delete": 5, "insert": 5}
+    assert spark.read.parquet(str(dst)).count() == 200
+    assert (jobs, tasks) == (7, 7)
+
+
+def test_run_scd2_first_run_counts_on_the_write(spark, tmp_path):
+    """A first run_scd2 counts the history it initializes on the write
+    pass (an Observation), not with a count job before it: the source's
+    schema inference and the write are its only Spark jobs."""
+    src = str(tmp_path / "scd_src")
+    spark.createDataFrame([(i, f"v{i}") for i in range(50)],
+                          "k long, v string").coalesce(1).write.parquet(src)
+    job = MigrationJob(source_path=src,
+                       destination_path=str(tmp_path / "scd_hist"),
+                       mode="overwrite")
+    out, jobs, tasks = _spark_jobs(
+        spark, lambda: job.run_scd2(spark, ["k"], batch_date="2024-01-01"))
+    assert out["first_run"] is True
+    assert out["history_rows"] == out["versions_opened"] == 50
+    assert (jobs, tasks) == (2, 2)
