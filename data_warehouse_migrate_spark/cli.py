@@ -74,8 +74,11 @@ def build_parser() -> argparse.ArgumentParser:
                         "reproducible pipelines")
     p.add_argument("--target-file-mb", dest="target_file_mb", type=int,
                    help="size output files near this many MB (file sinks: "
-                        "measures the data and repartitions before the "
-                        "write — the anti-small-files knob)")
+                        "every write of the job — run, the incremental "
+                        "rewrite, both SCD2 writes, each stream batch — "
+                        "measures the data in one aggregate and "
+                        "repartitions before writing; the anti-small-files "
+                        "knob)")
     p.add_argument("--verify", dest="verify", action="store_const",
                    const=True,
                    help="after the migration, recompute the transformed "

@@ -116,24 +116,6 @@ def hyperplane_projections(vec: Column, n_planes: int) -> Column:
     )
 
 
-def _pack_bits(bits: Column) -> Column:
-    """Little-endian pack an array<long> of 0/1 into one long: positional
-    (sum, place-value) accumulator — sum += bit·mult; mult ·= 2."""
-    packed = F.aggregate(
-        bits,
-        F.struct(F.lit(0).cast("long").alias("s"), F.lit(1).cast("long").alias("m")),
-        lambda acc, bit: F.struct((acc["s"] + bit * acc["m"]).alias("s"),
-                                  (acc["m"] * 2).alias("m")),
-    )
-    return packed["s"]
-
-
-def signature_from_projections(proj: Column) -> Column:
-    """Pack projection signs into one long bucket id (bit j = proj[j] > 0)."""
-    return _pack_bits(F.transform(proj, lambda p: F.when(p > 0, F.lit(1))
-                                  .otherwise(F.lit(0)).cast("long")))
-
-
 def band_keys_from_projections(proj: Column, bands: int,
                                rows_per_band: int) -> Column:
     """``array<long>[bands]``: band b's key packs the sign bits of planes
@@ -201,15 +183,6 @@ def band_keys_sql(vec_name: str, n_planes: int, bands: int,
             f"ELSE key END) AS ks, "
             f"acc.i + 1 AS i)).ks")
     return F.expr(keys)
-
-
-def hyperplane_signature(vec: Column, n_planes: int = 8) -> Column:
-    """Deterministic random-hyperplane LSH signature (int bucket id).
-    Vectors with the same signature land in the same ANN bucket; key space
-    is 2^n_planes, so size n_planes ≈ log2(corpus_size / target_bucket_size)
-    — 8 planes suits ~10^4 vectors, a 10^9-vector corpus wants 20+.
-    """
-    return signature_from_projections(hyperplane_projections(vec, n_planes))
 
 
 def quantize_int8(vec: Column) -> Column:

@@ -15,6 +15,10 @@ The eager steps of a run live in two places: ``build_plan`` resolves the
 latest partition, and ``_pre_write_gate`` — called by every runner right
 before it writes — runs the 'fail' null check, fused with the sized
 sink's row count and bytes per row into one aggregate.
+
+Every runner writes through ``MigrationJob._write``, so the sizing, the
+JDBC options and column types and ``write_partition_by`` reach every
+write alike; both streaming runners share ``_drive_stream``.
 """
 
 from __future__ import annotations
@@ -202,11 +206,14 @@ class MigrationJob:
     source_jdbc: dict[str, str] | None = None
     destination_jdbc: dict[str, str] | None = None
     write_partition_by: list[str] = field(default_factory=list)
-    # target output file size in MB for file-format sinks (0 = off): the
-    # write goes through sources.sinks.write_sized, which repartitions by
-    # the row count and bytes per row the pre-write gate measured so
-    # output files land near this size instead of one-file-per-task (the
-    # anti-small-files knob)
+    # target output file size in MB for file-format sinks (0 = off): every
+    # file write of the job (run, the run_incremental rewrite, both
+    # run_scd2 writes, each run_stream batch) goes through
+    # sources.sinks.write_sized, which repartitions by the row count and
+    # bytes per row so output files land near this size instead of
+    # one-file-per-task (the anti-small-files knob). Each sized write
+    # pays one sizing aggregate (fused with the 'fail' null check where
+    # the gate runs on the written frame) plus the repartition shuffle.
     target_file_mb: int = 0
     # the source plan the last run()/run_incremental()/run_scd2() built
     # and wrote; verify() checksums it instead of rebuilding the plan
@@ -244,24 +251,19 @@ class MigrationJob:
         other failure (auth, network, corrupt files, dialect quirk)
         PROPAGATES: classifying a live destination as a first run would
         append-duplicate or full-overwrite it. JDBC destinations are
-        checked with a zero-row probe classified by
-        :func:`_jdbc_table_missing`; file and catalog destinations by
-        ``AnalysisException`` or an empty schema."""
+        checked by the read itself — a JDBC ``load()`` resolves the
+        schema with a zero-row query and raises on a missing table — its
+        error classified by :func:`_jdbc_table_missing`; file and catalog
+        destinations by ``AnalysisException`` or an empty schema."""
         from pyspark.errors import AnalysisException
 
         if self.destination_format == "jdbc":
-            from data_warehouse_migrate_spark.sources.readers import (
-                introspect_jdbc_schema_generic,
-            )
-
-            jdbc = self.destination_jdbc or {}
             try:
-                introspect_jdbc_schema_generic(spark, jdbc,
-                                               self.destination_path)
                 return read_table(spark, self.destination_path, fmt="jdbc",
                                   jdbc_options=self.destination_jdbc)
             except Exception as e:
-                if not _jdbc_table_missing(e, spark, jdbc,
+                if not _jdbc_table_missing(e, spark,
+                                           self.destination_jdbc or {},
                                            self.destination_path):
                     raise
                 return None
@@ -364,31 +366,17 @@ class MigrationJob:
         includes pre-existing rows.
         """
         mode = MigrationMode.parse(self.mode)
-        return self._write(spark, self._source_plan(spark), mode)
+        return self._migrate(spark, self._source_plan(spark), mode)
 
-    def _write(self, spark: SparkSession, plan: DataFrame,
-               mode: MigrationMode) -> dict[str, Any]:
-        """Write ``plan`` to the destination; :meth:`run`'s summary."""
-        sized = bool(self.target_file_mb) and self.destination_format != "jdbc"
-        figures = self._pre_write_gate(plan, sized)
-        plan, obs = _count_rows(plan)
-        if sized:
-            from data_warehouse_migrate_spark.sources.sinks import (
-                write_sized,
-            )
+    @property
+    def _sized(self) -> bool:  # a JDBC table has no files to size
+        return bool(self.target_file_mb) and self.destination_format != "jdbc"
 
-            write_sized(plan, self.destination_path,
-                        fmt=self.destination_format, mode=mode,
-                        target_file_bytes=self.target_file_mb * 1024 * 1024,
-                        partition_by=self.write_partition_by or None,
-                        figures=figures)
-        else:
-            write_table(plan, self.destination_path,
-                        fmt=self.destination_format,
-                        mode=mode, jdbc_options=self.destination_jdbc,
-                        create_table_column_types=self._column_types(),
-                        partition_by=self.write_partition_by or None)
-        rows_written = int(obs.get["n"])
+    def _migrate(self, spark: SparkSession, plan: DataFrame,
+                 mode: MigrationMode) -> dict[str, Any]:
+        """Gate, write and read back ``plan``: :meth:`run`'s summary."""
+        rows_written = self._write(plan, mode,
+                                   self._pre_write_gate(plan, self._sized))
         if self.destination_format == "jdbc":
             destination_rows = None
         else:
@@ -404,6 +392,28 @@ class MigrationJob:
             "rows_written": rows_written,
             "destination_rows": destination_rows,
         }
+
+    def _write(self, df: DataFrame, mode: MigrationMode,
+               figures: tuple[int, float] | None = None) -> int:
+        """Write ``df`` and return the rows written, counted on the write.
+        A sized write takes the gate's (rows, bytes/row) ``figures`` if
+        it measured ``df``; otherwise ``write_sized`` measures it."""
+        df, obs = _count_rows(df)
+        sink = dict(fmt=self.destination_format, mode=mode,
+                    jdbc_options=self.destination_jdbc,
+                    create_table_column_types=self._column_types(),
+                    partition_by=self.write_partition_by or None)
+        if self._sized:
+            # looked up at call time: a wrapper on the module sees the call
+            from data_warehouse_migrate_spark.sources import sinks
+
+            sinks.write_sized(
+                df, self.destination_path,
+                target_file_bytes=self.target_file_mb * 1024 * 1024,
+                figures=figures, **sink)
+        else:
+            write_table(df, self.destination_path, **sink)
+        return int(obs.get["n"])
 
     # ------------------------------------------------------------------
     def verify(self, spark: SparkSession) -> dict[str, Any]:
@@ -548,7 +558,7 @@ class MigrationJob:
         src = self._source_plan(spark)
         dest = self._read_destination(spark)
         if dest is None:
-            out = self._write(spark, src, MigrationMode.parse(self.mode))
+            out = self._migrate(spark, src, MigrationMode.parse(self.mode))
             out["incremental"] = False
             return out
 
@@ -576,10 +586,7 @@ class MigrationJob:
             nxt = snapshot_from_source(src, dest, delta)
             out = summary(delta)
             if out["rows_applied"]:
-                write_table(nxt, self.destination_path,
-                            fmt=self.destination_format,
-                            mode=MigrationMode.OVERWRITE,
-                            partition_by=self.write_partition_by or None)
+                self._write(nxt, MigrationMode.OVERWRITE)
             return out
 
         # one pass over the join for the counts; the staged apply then
@@ -618,7 +625,10 @@ class MigrationJob:
         are never rewritten.
 
         First run (destination absent) initializes the history: every
-        source row becomes version 1, valid from ``batch_date``.
+        source row becomes version 1, valid from ``batch_date``. Like
+        every write of the job it goes through :meth:`_write`: sized by
+        ``target_file_mb`` on a file sink, and a JDBC table it creates
+        takes the mapping's ``type_override`` column types.
         ``batch_date`` defaults to today (UTC date) — pass it explicitly
         for reproducible pipelines. ``tracked_cols`` defaults to every
         non-key source column. ``close_deleted=True`` treats the source
@@ -631,9 +641,9 @@ class MigrationJob:
         against the current one on that compound key — the changed
         subset is only closed versions (updates) + new versions
         (inserts), never deletes. File sinks rewrite the snapshot
-        (localCheckpointed first to break the read-then-overwrite
-        cycle); JDBC destinations apply IN PLACE through the same
-        staged server-side MERGE as :meth:`run_incremental`
+        through :meth:`_write` (localCheckpointed first to break the
+        read-then-overwrite cycle); JDBC destinations apply IN PLACE
+        through the same staged server-side MERGE as :meth:`run_incremental`
         (``operators.delta.apply_delta_jdbc``) — delta-sized traffic,
         no history rewrite, no rows through the driver.
         """
@@ -680,16 +690,11 @@ class MigrationJob:
 
         hist = self._read_destination(spark)
         if hist is None:
-            h0, obs = _count_rows(
+            n = self._write(
                 src.withColumn(from_col, F.lit(batch_date).cast("date"))
                 .withColumn(to_col, F.lit(None).cast("date"))
-                .withColumn(cur_col, F.lit(True)))
-            write_table(h0, self.destination_path,
-                        fmt=self.destination_format,
-                        mode=MigrationMode.OVERWRITE,
-                        jdbc_options=self.destination_jdbc,
-                        partition_by=self.write_partition_by or None)
-            n = int(obs.get["n"])
+                .withColumn(cur_col, F.lit(True)),
+                MigrationMode.OVERWRITE)
             return {"status": "success", "scd2": True, "first_run": True,
                     "destination": self.destination_path,
                     "batch_date": batch_date,
@@ -733,17 +738,31 @@ class MigrationJob:
                         self.destination_path,
                         n_changed=opened + closed)
                 else:
-                    write_table(nxt.localCheckpoint(),
-                                self.destination_path,
-                                fmt=self.destination_format,
-                                mode=MigrationMode.OVERWRITE,
-                                partition_by=self.write_partition_by
-                                or None)
+                    self._write(nxt.localCheckpoint(),
+                                MigrationMode.OVERWRITE)
         finally:
             delta.unpersist()
         return out
 
     # ------------------------------------------------------------------
+    def _drive_stream(self, spark: SparkSession, checkpoint_dir: str,
+                      handle, available_now: bool,
+                      processing_time: str | None = None):
+        """Run ``handle`` on each micro-batch of the source file stream:
+        drain it and return the ended query with ``available_now``, else
+        return it running (every ``processing_time`` when given)."""
+        writer = (open_file_stream(spark, self.source_path,
+                                   fmt=self.source_format)
+                  .writeStream.foreachBatch(handle)
+                  .option("checkpointLocation", checkpoint_dir))
+        if available_now:
+            q = writer.trigger(availableNow=True).start()
+            q.awaitTermination()
+            return q
+        if processing_time:
+            writer = writer.trigger(processingTime=processing_time)
+        return writer.start()
+
     def run_scd2_stream(self, spark: SparkSession, checkpoint_dir: str,
                         key_cols: list[str],
                         tracked_cols: list[str] | None = None,
@@ -769,9 +788,6 @@ class MigrationJob:
         no-op by SCD2 semantics — replays cannot duplicate versions
         unless the batch date ALSO changed across the retry).
         """
-        stream = open_file_stream(spark, self.source_path,
-                                  fmt=self.source_format)
-
         totals = {"batches": 0, "versions_opened": 0,
                   "versions_closed": 0}
 
@@ -790,12 +806,8 @@ class MigrationJob:
             totals["versions_opened"] += out["versions_opened"]
             totals["versions_closed"] += out["versions_closed"]
 
-        writer = (stream.writeStream.foreachBatch(handle)
-                  .option("checkpointLocation", checkpoint_dir))
-        q = writer.trigger(availableNow=True).start() if available_now \
-            else writer.start()
+        q = self._drive_stream(spark, checkpoint_dir, handle, available_now)
         if available_now:
-            q.awaitTermination()
             return {"status": "success", "scd2": True,
                     "destination": self.destination_path,
                     "checkpoint": checkpoint_dir, **totals}
@@ -853,34 +865,22 @@ class MigrationJob:
                 "stream's checkpoint already scopes work to NEW files")
 
         mode = MigrationMode.parse(self.mode)
-        ctypes = self._column_types()
-        stream = open_file_stream(spark, self.source_path,
-                                  fmt=self.source_format)
-
         totals = {"rows_written": 0, "batches": 0}
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
             # null_policy='fail' raises here, BEFORE the write, aborting
             # the stream
             out = self._transform(batch_df)
-            self._pre_write_gate(out)
-            out, obs = _count_rows(out)
+            figures = self._pre_write_gate(out, self._sized)
             batch_mode = (mode if totals["batches"] == 0 and batch_id == 0
                           else MigrationMode.APPEND)
-            write_table(out, self.destination_path,
-                        fmt=self.destination_format, mode=batch_mode,
-                        jdbc_options=self.destination_jdbc,
-                        create_table_column_types=ctypes,
-                        partition_by=self.write_partition_by or None)
-            totals["rows_written"] += int(obs.get["n"])
+            totals["rows_written"] += self._write(out, batch_mode, figures)
             totals["batches"] += 1
 
-        writer = (stream.writeStream.foreachBatch(handle)
-                  .option("checkpointLocation", checkpoint_dir))
+        q = self._drive_stream(spark, checkpoint_dir, handle, available_now,
+                               processing_time)
         if available_now:
-            # catch-up mode: drain, terminate, report what moved
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
+            # catch-up mode: drained and terminated; report what moved
             return {
                 "status": "success",
                 "destination": self.destination_path,
@@ -893,7 +893,6 @@ class MigrationJob:
         # return a summary: hand back the live StreamingQuery (stop/await
         # belong to the caller) plus the totals dict, which the foreachBatch
         # closure keeps updating in place as batches commit
-        q = writer.trigger(processingTime=processing_time).start()
         return {
             "status": "running",
             "destination": self.destination_path,

@@ -81,7 +81,6 @@ def _materialize(df: DataFrame) -> DataFrame:
 # sizes where the guard matters. 512 MB keeps the broadcast comfortably
 # inside executor memory at 1000-executor scale.
 _BROADCAST_MAX_BYTES = 512 * 1024 * 1024
-_BROADCAST_SAMPLE_ROWS = 2048
 
 # Hot-bucket keys are resolved eagerly on the driver (see _bucket_pairs):
 # the list is bounded by band_rows/max_bucket_size and was headed into a
@@ -100,39 +99,17 @@ _HOT_KEYS_DRIVER_MAX = 100_000
 _MAX_BUCKET_SIZE = 512
 
 
-def _avg_row_bytes(df: DataFrame, n_rows: int) -> float:
-    """Estimated in-memory bytes per row of ``df``.
-
-    Fixed-width columns are priced from the schema alone (no job);
-    variable-width columns (string/binary/array) are priced by averaging
-    octet/element counts over the first ``_BROADCAST_SAMPLE_ROWS`` rows —
-    one tiny aggregate on an already-cached subtree. A head sample is an
-    estimate, not a census; the 512 MB cutoff leaves a wide margin below
-    the 8 GB broadcast cap to absorb sampling bias.
-    """
-    from data_warehouse_migrate_spark.functions.sizing import row_bytes_expr
-
-    fixed, total = row_bytes_expr(df.schema)
-    if total is None:
-        return fixed
-    row = (df.limit(min(n_rows, _BROADCAST_SAMPLE_ROWS) or 1)
-           .agg(F.avg(total)).first())
-    return fixed + float(row[0] or 0.0)
-
-
 def _maybe_broadcast(df: DataFrame, n_rows: int,
-                     avg_row_bytes: float | None = None) -> DataFrame:
+                     avg_row_bytes: float) -> DataFrame:
     """Broadcast iff ``n_rows × avg_row_bytes`` fits ``_BROADCAST_MAX_BYTES``.
 
     Callers joining the same base frame twice (id_a/id_b verification
-    joins) should compute ``avg_row_bytes`` once — via the shared
-    ``sizing.count_and_row_bytes`` folded into their existing count job,
-    or :func:`_avg_row_bytes` — and pass it to both calls. Returns ``df``
-    unchanged (same object) when the broadcast is declined, so the join
-    falls back to a shuffle hash/sort-merge join.
+    joins) compute ``avg_row_bytes`` once — via the shared
+    ``sizing.count_and_row_bytes`` folded into their existing count job
+    — and pass it to both calls. Returns ``df`` unchanged (same object)
+    when the broadcast is declined, so the join falls back to a shuffle
+    hash/sort-merge join.
     """
-    if avg_row_bytes is None:
-        avg_row_bytes = _avg_row_bytes(df, n_rows)
     return (F.broadcast(df) if n_rows * avg_row_bytes <= _BROADCAST_MAX_BYTES
             else df)
 

@@ -216,13 +216,14 @@ def test_broadcast_guard_is_byte_aware(spark):
     """_maybe_broadcast declines wide payloads whose estimated bytes exceed
     the 512 MB cap even when the row COUNT is tiny — the round-3 guard was
     row-count-based and would have broadcast multi-GB shingle/vector sides."""
-    from data_warehouse_migrate_spark.operators.dedup import (
-        _avg_row_bytes, _maybe_broadcast)
+    from data_warehouse_migrate_spark.functions.sizing import (
+        count_and_row_bytes)
+    from data_warehouse_migrate_spark.operators.dedup import _maybe_broadcast
 
     # narrow side: 1k rows of (long, long) — a few KB, must broadcast
     narrow = spark.range(1000).select(
         F.col("id"), (F.col("id") * 2).alias("v"))
-    est_n = _avg_row_bytes(narrow, 1000)
+    _, est_n = count_and_row_bytes(narrow)
     assert est_n < 100
     assert _maybe_broadcast(narrow, 1000, est_n) is not narrow  # hinted
 
@@ -233,7 +234,7 @@ def test_broadcast_guard_is_byte_aware(spark):
     wide = spark.range(1000).select(
         F.col("id"), F.array_repeat(F.col("id").cast("double"),
                                     131_072).alias("payload"))
-    est_w = _avg_row_bytes(wide.limit(8), 8)
+    _, est_w = count_and_row_bytes(wide.limit(8))
     assert est_w > 1_000_000  # ~1 MB/row measured from the sample
     assert _maybe_broadcast(wide, 1000, est_w) is wide  # declined: same obj
 

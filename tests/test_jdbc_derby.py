@@ -21,6 +21,7 @@ Everything else is the real write/read path with zero mocks.
 
 from __future__ import annotations
 
+import datetime
 import glob
 import os
 import tempfile
@@ -109,6 +110,29 @@ def test_create_table_column_types_enforced_on_create(spark, derby_opts):
         write_table(df, "t_ddl", fmt="jdbc", mode="append",
                     jdbc_options=derby_opts,
                     create_table_column_types="status VARCHAR(4)")
+
+
+def test_type_override_reaches_scd2_first_run_create(spark, derby_opts,
+                                                     tmp_path):
+    """A first-run run_scd2 into a missing JDBC table creates it with the
+    mapping's type_override column types: the VARCHAR(4) DDL accepts the
+    history's values and then rejects a longer one."""
+    src = str(tmp_path / "scd_ddl_src.parquet")
+    spark.createDataFrame([(1, "abcd"), (2, "ab")],
+                          "k long, status string").write.parquet(src)
+    job = MigrationJob(source_path=src, destination_path="t_scd2_ddl",
+                       destination_format="jdbc", destination_jdbc=derby_opts,
+                       mode="append",
+                       mapping={"type_override": {"status": "VARCHAR(4)"}})
+    out = job.run_scd2(spark, key_cols=["k"], batch_date="2026-01-01")
+    assert out["first_run"] is True and out["history_rows"] == 2
+    longer = spark.createDataFrame(
+        [(3, "abcde", datetime.date(2026, 1, 1), None, True)],
+        "k long, status string, valid_from date, valid_to date, "
+        "is_current boolean")
+    with pytest.raises(Exception, match="(?i)truncat|22001"):
+        write_table(longer, "t_scd2_ddl", fmt="jdbc", mode="append",
+                    jdbc_options=derby_opts)
 
 
 def test_migration_job_parquet_to_jdbc(spark, sf_dir, derby_opts):
@@ -308,6 +332,25 @@ def test_table_missing_classification_by_sqlstate(spark, derby_opts):
     assert _missing_by_sqlstate(missing_schema) is False
     assert _jdbc_table_missing(missing_schema, spark, derby_opts,
                                "nosuchschema.t_cls") is False
+
+
+def test_read_destination_classifies_its_one_read(spark, derby_opts):
+    """MigrationJob._read_destination reads a JDBC destination once and
+    classifies that read's error: a missing table is a first run (None),
+    a missing schema propagates."""
+    write_table(spark.createDataFrame([(1,)], "k long"), "t_rd",
+                fmt="jdbc", mode="append", jdbc_options=derby_opts)
+
+    def read(table):
+        return MigrationJob(source_path="unused", destination_path=table,
+                            destination_format="jdbc",
+                            destination_jdbc=derby_opts
+                            )._read_destination(spark)
+
+    assert read("t_rd").count() == 1
+    assert read("t_rd_nope") is None
+    with pytest.raises(Exception, match="(?i)not exist"):
+        read("nosuchschema.t_rd")
 
 
 def test_jdbc_table_exists_metadata_probe(spark, derby_opts):

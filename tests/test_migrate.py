@@ -863,3 +863,53 @@ def test_run_scd2_first_run_counts_on_the_write(spark, tmp_path):
     assert out["first_run"] is True
     assert out["history_rows"] == out["versions_opened"] == 50
     assert (jobs, tasks) == (2, 2)
+
+
+def test_target_file_mb_sizes_every_runner_write(spark, tmp_path):
+    """target_file_mb sizes every file write of a MigrationJob, not only
+    run()'s: the run_incremental rewrite, the first-run and the rewrite
+    writes of run_scd2 and a run_stream batch each leave as many files as
+    run() writes for the same source. The source is eight small files, so
+    an unsized write leaves one file per read task; every sized write
+    here compacts to what run() writes."""
+    import glob
+
+    def source(name, changed):
+        path = str(tmp_path / name)
+        spark.range(0, 8000, 1, 8).select(
+            F.col("id").alias("k"),
+            F.when(F.col("id") == changed, F.lit("changed"))
+            .otherwise(F.sha2(F.col("id").cast("string"), 256))
+            .alias("v")).write.parquet(path)
+        return path
+
+    src1, src2 = source("tf_src1", -1), source("tf_src2", 5)
+
+    def job(src, dest):
+        return MigrationJob(source_path=src,
+                            destination_path=str(tmp_path / dest),
+                            mode="overwrite", target_file_mb=1)
+
+    def files(dest):
+        return len(glob.glob(str(tmp_path / dest / "part-*")))
+
+    assert job(src1, "tf_run").run(spark)["rows_written"] == 8000
+    want = files("tf_run")
+    assert want == 1
+
+    job(src1, "tf_inc").run_incremental(spark, ["k"])
+    out = job(src2, "tf_inc").run_incremental(spark, ["k"])
+    assert out["rows_applied"] == 1
+    assert files("tf_inc") == want
+
+    out = job(src1, "tf_scd").run_scd2(spark, ["k"], batch_date="2024-01-01")
+    assert out["first_run"] is True
+    assert files("tf_scd") == want
+    out = job(src2, "tf_scd").run_scd2(spark, ["k"], batch_date="2024-02-01")
+    assert (out["versions_opened"], out["versions_closed"]) == (1, 1)
+    assert files("tf_scd") == want
+
+    out = job(src1, "tf_stream").run_stream(spark, str(tmp_path / "tf_ckpt"))
+    assert (out["rows_written"], out["batches"]) == (8000, 1)
+    assert files("tf_stream") == want
+
