@@ -83,6 +83,10 @@ _JDBC_MISSING_TABLE_MARKS = (
     "table_or_view_not_found", "table not found",
 )
 
+# the bookkeeping columns of a run_scd2 history: each version is valid
+# from the first date until the second, and the flag marks the current one
+_SCD2_COLS = ("valid_from", "valid_to", "is_current")
+
 
 def _count_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     """``df`` with an Observation of its row count, which the action that
@@ -131,25 +135,15 @@ def _missing_by_sqlstate(err: Exception) -> bool | None:
 
 def _jdbc_table_exists(spark: SparkSession, jdbc_options: dict[str, str],
                        table: str) -> bool | None:
-    """DatabaseMetaData.getTables existence probe over the same driver
-    connection style ``apply_delta_jdbc`` uses. Case-insensitive on the
+    """DatabaseMetaData.getTables existence probe over the driver
+    connection ``apply_delta_jdbc`` opens too. Case-insensitive on the
     unqualified name (unquoted identifiers case-fold per dialect).
     Returns None when the probe itself fails — the caller falls back to
     prose matching rather than trusting a broken probe."""
-    try:
-        jvm = spark._jvm
-        if jdbc_options.get("driver"):
-            jvm.java.lang.Class.forName(jdbc_options["driver"])
-        from data_warehouse_migrate_spark.operators.delta import (
-            _SPARK_ONLY_JDBC_KEYS,
-        )
+    from data_warehouse_migrate_spark.operators.delta import _jdbc_connection
 
-        props = jvm.java.util.Properties()
-        for k, v in jdbc_options.items():
-            if k.lower() not in _SPARK_ONLY_JDBC_KEYS:
-                props.setProperty(k, v)
-        conn = jvm.java.sql.DriverManager.getConnection(
-            jdbc_options["url"], props)
+    try:
+        conn = _jdbc_connection(spark, jdbc_options)
         try:
             name = table.rsplit(".", 1)[-1]
             for pat in (name, name.upper(), name.lower()):
@@ -212,8 +206,8 @@ class MigrationJob:
     # sources.sinks.write_sized, which repartitions by the row count and
     # bytes per row so output files land near this size instead of
     # one-file-per-task (the anti-small-files knob). Each sized write
-    # pays one sizing aggregate (fused with the 'fail' null check where
-    # the gate runs on the written frame) plus the repartition shuffle.
+    # pays the repartition plus one sizing aggregate: under 'fail' the
+    # gate's own null-check aggregate wherever the gate sees its rows.
     target_file_mb: int = 0
     # the source plan the last run()/run_incremental()/run_scd2() built
     # and wrote; verify() checksums it instead of rebuilding the plan
@@ -340,16 +334,16 @@ class MigrationJob:
         non-nullable column raises ``NullPolicyViolation`` here, so
         nothing is written. For a ``sized`` sink the same single
         aggregate also counts the rows and measures their average bytes,
-        returned as the (rows, bytes/row) figures ``write_sized`` takes;
-        otherwise returns None (and without 'fail' runs nothing)."""
+        returned as the (rows, bytes/row) figures ``write_sized`` takes.
+        Without 'fail' it runs nothing: a sized write measures itself."""
         fail = self.non_nullable if self.null_policy == "fail" else []
+        if not fail:
+            return None
         if not sized:
-            if fail:
-                apply_null_policy(plan, fail, policy="fail")
+            apply_null_policy(plan, fail, policy="fail")
             return None
         n_rows, row_bytes, nulls = count_bytes_and_nulls(plan, fail)
-        if fail:
-            apply_null_policy(plan, fail, policy="fail", counts=nulls)
+        apply_null_policy(plan, fail, policy="fail", counts=nulls)
         return n_rows, row_bytes
 
     # ------------------------------------------------------------------
@@ -538,12 +532,7 @@ class MigrationJob:
 
         Returns per-change-type counts plus the applied row total.
         """
-        from data_warehouse_migrate_spark.operators.delta import (
-            apply_delta_jdbc,
-            delta_counts,
-            snapshot_delta,
-            snapshot_from_source,
-        )
+        from data_warehouse_migrate_spark.operators import delta as ops
 
         # a limited or latest-partition-pruned source is a SUBSET of the
         # logical table: every destination key outside it would classify
@@ -562,59 +551,72 @@ class MigrationJob:
             out["incremental"] = False
             return out
 
-        self._pre_write_gate(src)
+        figures = self._pre_write_gate(src, self._sized)
         if reconcile_drift:
             from data_warehouse_migrate_spark.functions.casts import (
                 reconcile_to_schema,
             )
 
             src = reconcile_to_schema(src, dest.schema)
-        delta = snapshot_delta(src, dest, key_cols)
+        delta = ops.snapshot_delta(src, dest, key_cols)
+        # its schema resolves before the count: a schema mismatch raises
+        # here, before the join runs and before any write
+        nxt = (ops.snapshot_from_source(src, dest, delta)
+               if self.destination_format != "jdbc" else None)
+        counts, jdbc_apply = self._apply_changes(
+            delta, key_cols, lambda: nxt, figures, use_merge=jdbc_merge)
+        out = {"status": "success", "incremental": True,
+               "destination": self.destination_path,
+               "delta_counts": counts,
+               "rows_applied": sum(n for t, n in counts.items()
+                                   if t != "unchanged")}
+        if jdbc_apply is not None:
+            out["jdbc_apply"] = jdbc_apply
+        return out
 
-        def summary(delta: DataFrame) -> dict[str, Any]:
-            counts = {r.change_type: int(r.n_rows)
-                      for r in delta_counts(delta).collect()}
-            return {"status": "success", "incremental": True,
-                    "destination": self.destination_path,
-                    "delta_counts": counts,
-                    "rows_applied": sum(v for k, v in counts.items()
-                                        if k != "unchanged")}
-
-        if self.destination_format != "jdbc":
-            # its schema resolves before the count: a schema mismatch
-            # raises here, before the join runs and before any write
-            nxt = snapshot_from_source(src, dest, delta)
-            out = summary(delta)
-            if out["rows_applied"]:
-                self._write(nxt, MigrationMode.OVERWRITE)
-            return out
-
-        # one pass over the join for the counts; the staged apply then
-        # reuses the cached delta instead of re-running the join
+    def _apply_changes(self, delta: DataFrame, keys: list[str], rewrite,
+                       figures: tuple[int, float] | None = None,
+                       use_merge: bool = True
+                       ) -> tuple[dict[str, int], dict | None]:
+        """The one apply step of both sync runners: count the
+        ``change_type``-marked ``delta`` and, if anything changed,
+        overwrite a file destination with ``rewrite()`` through
+        :meth:`_write`, or apply the delta keyed by ``keys`` to a JDBC
+        destination IN PLACE (``operators.delta.apply_delta_jdbc``),
+        persisting it for the count and the staged apply and
+        unpersisting it even when either fails. Returns the counts per
+        change type and the JDBC apply's figures (else None)."""
         from pyspark import StorageLevel
 
+        from data_warehouse_migrate_spark.operators import delta as ops
+
+        def count(d: DataFrame) -> tuple[dict[str, int], int]:
+            counts = {r.change_type: int(r.n_rows)
+                      for r in ops.delta_counts(d).collect()}
+            return counts, sum(n for t, n in counts.items()
+                               if t != "unchanged")
+
+        if self.destination_format != "jdbc":
+            counts, changed = count(delta)
+            if changed:
+                self._write(rewrite(), MigrationMode.OVERWRITE, figures)
+            return counts, None
         delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            out = summary(delta)
-            if out["rows_applied"]:
-                # in-place server-side apply: stage + MERGE (or the
-                # DELETE+INSERT fallback) — no snapshot rewrite
-                out["jdbc_apply"] = apply_delta_jdbc(
-                    delta, key_cols, self.destination_jdbc or {},
-                    self.destination_path, use_merge=jdbc_merge,
-                    n_changed=out["rows_applied"])
+            counts, changed = count(delta)
+            if not changed:
+                return counts, None
+            return counts, ops.apply_delta_jdbc(
+                delta, keys, self.destination_jdbc or {},
+                self.destination_path, use_merge=use_merge,
+                n_changed=changed)
         finally:
-            # a failing apply must not leave the delta cached (run_scd2
-            # holds the same contract)
             delta.unpersist()
-        return out
 
     # ------------------------------------------------------------------
     def run_scd2(self, spark: SparkSession, key_cols: list[str],
                  tracked_cols: list[str] | None = None,
                  batch_date: str | None = None,
-                 from_col: str = "valid_from", to_col: str = "valid_to",
-                 cur_col: str = "is_current",
                  close_deleted: bool = False) -> dict[str, Any]:
         """Type-2 slowly-changing-dimension sync (beyond-reference): the
         destination holds a VERSIONED history (``key_cols`` +
@@ -636,14 +638,16 @@ class MigrationJob:
         refused under limit/partition pruning, where the source is a
         subset and every unseen key would be wrongly closed.
 
-        Apply strategy: history versions are uniquely keyed by
-        (business key, ``valid_from``), so the next history diffs
-        against the current one on that compound key — the changed
-        subset is only closed versions (updates) + new versions
-        (inserts), never deletes. File sinks rewrite the snapshot
-        through :meth:`_write` (localCheckpointed first to break the
-        read-then-overwrite cycle); JDBC destinations apply IN PLACE
-        through the same staged server-side MERGE as :meth:`run_incremental`
+        Apply strategy: the fold marks its changes. Each version of the
+        next history, keyed by (business key, ``valid_from``), comes out
+        of it as closed this batch ('update'), opened this batch
+        ('insert') or untouched — never a delete — and that marked
+        history goes through the same apply step as
+        :meth:`run_incremental` (:meth:`_apply_changes`), with no second
+        diff of the next history against the current one. File sinks
+        rewrite the history through :meth:`_write` (localCheckpointed
+        first to break the read-then-overwrite cycle); JDBC destinations
+        apply IN PLACE through the staged server-side MERGE
         (``operators.delta.apply_delta_jdbc``) — delta-sized traffic,
         no history rewrite, no rows through the driver.
         """
@@ -660,88 +664,53 @@ class MigrationJob:
 
         src = self._source_plan(spark)
         return self._scd2_sync(spark, src, key_cols, tracked_cols,
-                               batch_date, from_col, to_col, cur_col,
-                               close_deleted)
+                               batch_date, close_deleted)
 
     def _scd2_sync(self, spark: SparkSession, src: DataFrame,
                    key_cols: list[str], tracked_cols: list[str] | None,
-                   batch_date: str, from_col: str, to_col: str,
-                   cur_col: str, close_deleted: bool) -> dict[str, Any]:
+                   batch_date: str, close_deleted: bool) -> dict[str, Any]:
         """The SCD2 fold core shared by :meth:`run_scd2` (batch) and
         :meth:`run_scd2_stream` (per micro-batch): read the destination
-        history (absent → first-run initialize), fold ``src`` in via
-        ``scd2_apply``, diff on (key, valid_from), apply delta-sized
-        changes."""
-        from data_warehouse_migrate_spark.operators.delta import (
-            apply_delta_jdbc,
-            scd2_apply,
-            snapshot_delta,
-        )
+        history (absent → first-run initialize), fold ``src`` in with
+        the fold marking the versions it closes and opens, and apply
+        those through :meth:`_apply_changes`."""
+        from data_warehouse_migrate_spark.operators.delta import _scd2_marked
 
-        scd_cols = (from_col, to_col, cur_col)
-        clash = [c for c in src.columns if c in scd_cols]
+        from_col, to_col, cur_col = _SCD2_COLS
+        clash = [c for c in src.columns if c in _SCD2_COLS]
         if clash:
             raise ConfigurationError(
                 f"source columns {clash} collide with SCD2 bookkeeping "
-                f"columns {list(scd_cols)}; rename them in the mapping")
-        self._pre_write_gate(src)
-        tracked = tracked_cols or [c for c in src.columns
-                                   if c not in set(key_cols)]
-
+                f"columns {list(_SCD2_COLS)}; rename them in the mapping")
         hist = self._read_destination(spark)
+        # only the first run writes the gated rows, so only it takes the
+        # gate's figures; a rewrite sizes the history it writes
+        figures = self._pre_write_gate(src, self._sized and hist is None)
+        out: dict[str, Any] = {"status": "success", "scd2": True,
+                               "first_run": hist is None,
+                               "destination": self.destination_path,
+                               "batch_date": batch_date}
         if hist is None:
             n = self._write(
                 src.withColumn(from_col, F.lit(batch_date).cast("date"))
                 .withColumn(to_col, F.lit(None).cast("date"))
                 .withColumn(cur_col, F.lit(True)),
-                MigrationMode.OVERWRITE)
-            return {"status": "success", "scd2": True, "first_run": True,
-                    "destination": self.destination_path,
-                    "batch_date": batch_date,
-                    "history_rows": n, "versions_opened": n,
+                MigrationMode.OVERWRITE, figures)
+            return {**out, "history_rows": n, "versions_opened": n,
                     "versions_closed": 0}
 
-        nxt = scd2_apply(hist, src, key_cols, tracked, batch_date,
-                         from_col=from_col, to_col=to_col,
-                         cur_col=cur_col, close_deleted=close_deleted)
-        # versions are uniquely keyed by (business key, valid_from):
-        # diff next vs current history on that compound key — changes
-        # are closed versions (update) + new versions (insert) only
-        from pyspark import StorageLevel
-
-        version_keys = [*key_cols, from_col]
-        delta = snapshot_delta(nxt, hist, version_keys).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        try:
-            # the counting job sits INSIDE the try (same contract as
-            # run_incremental, r16): a failure materializing the delta
-            # must not leave it cached either
-            counts = {r.change_type: int(r.n_rows) for r in
-                      (delta.groupBy("change_type").agg(
-                          F.count("*").alias("n_rows")).collect())}
-            opened = counts.get("insert", 0)
-            closed = counts.get("update", 0)
-            out: dict[str, Any] = {
-                "status": "success", "scd2": True, "first_run": False,
-                "destination": self.destination_path,
-                "batch_date": batch_date,
-                "versions_opened": opened, "versions_closed": closed,
-                "history_rows": sum(counts.values()),
-            }
-            if opened or closed:
-                if self.destination_format == "jdbc":
-                    changed = delta.filter(
-                        F.col("change_type").isin("insert", "update"))
-                    out["jdbc_apply"] = apply_delta_jdbc(
-                        changed, version_keys,
-                        self.destination_jdbc or {},
-                        self.destination_path,
-                        n_changed=opened + closed)
-                else:
-                    self._write(nxt.localCheckpoint(),
-                                MigrationMode.OVERWRITE)
-        finally:
-            delta.unpersist()
+        tracked = tracked_cols or [c for c in src.columns
+                                   if c not in set(key_cols)]
+        marked = _scd2_marked(hist, src, key_cols, tracked, batch_date,
+                              *_SCD2_COLS, close_deleted)
+        counts, jdbc_apply = self._apply_changes(
+            marked, [*key_cols, from_col],
+            lambda: marked.drop("change_type").localCheckpoint())
+        out.update(versions_opened=counts.get("insert", 0),
+                   versions_closed=counts.get("update", 0),
+                   history_rows=sum(counts.values()))
+        if jdbc_apply is not None:
+            out["jdbc_apply"] = jdbc_apply
         return out
 
     # ------------------------------------------------------------------
@@ -800,7 +769,6 @@ class MigrationJob:
                 _dt.timezone.utc).date().isoformat()
             out = self._scd2_sync(spark, self._transform(batch_df),
                                   key_cols, tracked_cols, bd,
-                                  "valid_from", "valid_to", "is_current",
                                   close_deleted=False)
             totals["batches"] += 1
             totals["versions_opened"] += out["versions_opened"]

@@ -18,12 +18,14 @@ The delta is typically a small fraction of the corpus: a JDBC sink
 (``apply_delta_jdbc``) is sent the insert/update/delete rows only, never
 the corpus. A file sink has no in-place update, so its next snapshot is
 a full rewrite; ``snapshot_from_source`` builds it from the source alone,
-and the join only counts the changes.
+and the join only counts the changes. The SCD2 fold (``scd2_apply``)
+marks the versions it closes and opens as it builds the next history,
+so a sync applies its changes without diffing that history again.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Spark JDBC reader/writer options that are NOT driver connection
@@ -162,6 +164,20 @@ def snapshot_from_source(source: DataFrame, dest: DataFrame,
                            for f in schema.fields])
 
 
+def _jdbc_connection(spark: SparkSession, jdbc_options: dict[str, str]):
+    """A ``java.sql`` connection in the driver JVM, which the caller
+    closes. Only connection properties are forwarded: strict drivers
+    reject Spark's reader/writer options at ``getConnection`` time."""
+    jvm = spark._jvm
+    if jdbc_options.get("driver"):
+        jvm.java.lang.Class.forName(jdbc_options["driver"])
+    props = jvm.java.util.Properties()
+    for k, v in jdbc_options.items():
+        if k.lower() not in _SPARK_ONLY_JDBC_KEYS:
+            props.setProperty(k, v)
+    return jvm.java.sql.DriverManager.getConnection(jdbc_options["url"], props)
+
+
 def apply_delta_jdbc(delta: DataFrame, key_cols: list[str],
                      jdbc_options: dict[str, str], table: str,
                      use_merge: bool = True,
@@ -177,10 +193,15 @@ def apply_delta_jdbc(delta: DataFrame, key_cols: list[str],
     harness — MySQL 8 via its MERGE-less path below, Postgres 15+,
     Oracle, BigQuery all speak a dialect of it):
 
-      MERGE INTO target t USING stage s ON <null-safe key equality>
+      MERGE INTO target t USING stage s
+        ON <null-safe key equality> AND s.change_type <> 'insert'
       WHEN MATCHED AND s.change_type = 'delete' THEN DELETE
       WHEN MATCHED AND s.change_type = 'update' THEN UPDATE SET ...
       WHEN NOT MATCHED AND s.change_type = 'insert' THEN INSERT ...
+
+    An insert row never matches, so it always inserts: an SCD2 re-run
+    on the same batch date opens a version whose key (business key,
+    ``valid_from``) equals that of the version it closes.
 
     ``use_merge=False`` is the two-statement fallback for dialects
     without MERGE: DELETE every staged delete/update key, then INSERT
@@ -253,7 +274,8 @@ def apply_delta_jdbc(delta: DataFrame, key_cols: list[str],
         upd = (f"WHEN MATCHED AND s.{q('change_type')} = 'update' "
                f"THEN UPDATE SET {sets} " if payload_cols else "")
         stmts = [
-            f"MERGE INTO {table} t USING {stage} s ON {on} "
+            f"MERGE INTO {table} t USING {stage} s "
+            f"ON {on} AND s.{q('change_type')} <> 'insert' "
             f"WHEN MATCHED AND s.{q('change_type')} = 'delete' THEN DELETE "
             + upd +
             f"WHEN NOT MATCHED AND s.{q('change_type')} = 'insert' "
@@ -268,17 +290,7 @@ def apply_delta_jdbc(delta: DataFrame, key_cols: list[str],
             f"WHERE {q('change_type')} IN ('insert', 'update')"]
 
     applied = 0
-    jvm = spark._jvm
-    if jdbc_options.get("driver"):
-        jvm.java.lang.Class.forName(jdbc_options["driver"])
-    props = jvm.java.util.Properties()
-    for k, v in jdbc_options.items():
-        # forward only CONNECTION properties: Spark-side writer/reader
-        # options are not JDBC driver properties, and strict drivers
-        # reject unknown keys at getConnection time
-        if k.lower() not in _SPARK_ONLY_JDBC_KEYS:
-            props.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(jdbc_options["url"], props)
+    conn = _jdbc_connection(spark, jdbc_options)
     try:
         st = conn.createStatement()
         try:
@@ -343,6 +355,19 @@ def scd2_apply(history: DataFrame, updates: DataFrame,
     bucketed on the key both exchanges vanish. History rows stay one
     pass; only delta-sized data moves twice.
     """
+    return _scd2_marked(history, updates, key_cols, tracked_cols,
+                        batch_date, from_col, to_col, cur_col,
+                        close_deleted).drop("change_type")
+
+
+def _scd2_marked(history: DataFrame, updates: DataFrame,
+                 key_cols: list[str], tracked_cols: list[str],
+                 batch_date: str, from_col: str, to_col: str, cur_col: str,
+                 close_deleted: bool) -> DataFrame:
+    """:func:`scd2_apply`'s next history plus the ``change_type`` of
+    each version, keyed by (key, ``from_col``): 'update' if this batch
+    closes it, 'insert' if it opens it, else 'unchanged' — a delta
+    ``apply_delta_jdbc`` applies as it stands."""
     # untracked payload columns ride along on new versions (sourced from
     # updates); change detection stays on tracked_cols only
     bookkeeping = {from_col, to_col, cur_col}
@@ -384,11 +409,14 @@ def scd2_apply(history: DataFrame, updates: DataFrame,
                     F.when(closing, batch).otherwise(F.col(f"h.{to_col}"))
                     .alias(to_col),
                     F.when(closing, F.lit(False))
-                    .otherwise(F.col(f"h.{cur_col}")).alias(cur_col)))
+                    .otherwise(F.col(f"h.{cur_col}")).alias(cur_col),
+                    F.when(closing, F.lit("update"))
+                    .otherwise(F.lit("unchanged")).alias("change_type")))
 
     opened = (delta.filter(F.col("change_type").isin("insert", "update"))
               .select(*key_cols, *tracked_cols, *extra)
               .withColumn(from_col, batch)
               .withColumn(to_col, F.lit(None).cast(dict(history.dtypes)[to_col]))
-              .withColumn(cur_col, F.lit(True)))
-    return kept.unionByName(opened.select(*history.columns))
+              .withColumn(cur_col, F.lit(True))
+              .withColumn("change_type", F.lit("insert")))
+    return kept.unionByName(opened.select(*history.columns, "change_type"))

@@ -426,3 +426,71 @@ def test_scd2_jdbc_end_to_end(spark, derby_opts, tmp_path):
     out3 = job.run_scd2(spark, key_cols=["k"], batch_date="2026-07-01")
     assert (out3["versions_opened"], out3["versions_closed"]) == (0, 0)
     assert _read(spark, derby_opts, "t_scd2").count() == 4
+
+
+@pytest.mark.parametrize("runner", ["run_incremental", "run_scd2"])
+def test_failing_jdbc_apply_leaves_nothing_cached(spark, derby_opts,
+                                                  tmp_path, monkeypatch,
+                                                  runner):
+    """A sync whose in-place apply fails propagates the error and leaves
+    no cached delta behind, for both sync runners: the delta is
+    persisted and counted, then the apply raises."""
+    from data_warehouse_migrate_spark.operators import delta as delta_ops
+
+    src = str(tmp_path / "fail_src.parquet")
+    spark.createDataFrame([(1, "A"), (2, "B")],
+                          "k long, v string").write.parquet(src)
+    job = MigrationJob(source_path=src, destination_path=f"t_fail_{runner}",
+                       destination_format="jdbc",
+                       destination_jdbc=derby_opts, mode="append")
+    sync = getattr(job, runner)
+    kwargs = {"batch_date": "2026-01-01"} if runner == "run_scd2" else {}
+    sync(spark, ["k"], **kwargs)
+    spark.createDataFrame([(1, "A"), (2, "B2")], "k long, v string").write.mode(
+        "overwrite").parquet(src)
+
+    def failing_apply(*args, **kw):
+        raise RuntimeError("apply failed")
+
+    monkeypatch.setattr(delta_ops, "apply_delta_jdbc", failing_apply)
+
+    # RDD id sets, not counts: the ContextCleaner may reap an earlier
+    # test's cached RDD in between
+    def rdd_ids():
+        return {i.id() for i in spark.sparkContext._jsc.sc()
+                .getRDDStorageInfo()}
+
+    before = rdd_ids()
+    if runner == "run_scd2":
+        kwargs = {"batch_date": "2026-02-01"}
+    with pytest.raises(RuntimeError, match="apply failed"):
+        sync(spark, ["k"], **kwargs)
+    assert not (rdd_ids() - before)
+
+
+def test_scd2_jdbc_same_batch_date_rerun(spark, derby_opts, tmp_path):
+    """Re-running run_scd2 with the same batch_date after a payload
+    change closes the current version and opens its successor on that
+    date, both keyed (k, batch_date): the staged MERGE inserts the new
+    version instead of matching it to the one it closes, so the table
+    ends as a file destination would."""
+    src = str(tmp_path / "same_src.parquet")
+    job = MigrationJob(source_path=src, destination_path="t_scd2_same",
+                       destination_format="jdbc",
+                       destination_jdbc=derby_opts, mode="append")
+
+    def sync(rows):
+        spark.createDataFrame(rows, "k long, v string").write.mode(
+            "overwrite").parquet(src)
+        return job.run_scd2(spark, ["k"], batch_date="2026-01-01")
+
+    sync([(1, "A"), (2, "B")])
+    out = sync([(1, "A"), (2, "B2")])
+    assert (out["versions_opened"], out["versions_closed"]) == (1, 1)
+    rows = {(r.k, r.v, str(r.valid_from), str(r.valid_to), bool(r.is_current))
+            for r in _read(spark, derby_opts, "t_scd2_same").collect()}
+    assert rows == {
+        (1, "A", "2026-01-01", "None", True),
+        (2, "B", "2026-01-01", "2026-01-01", False),
+        (2, "B2", "2026-01-01", "None", True),
+    }

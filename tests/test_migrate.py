@@ -865,6 +865,109 @@ def test_run_scd2_first_run_counts_on_the_write(spark, tmp_path):
     assert (jobs, tasks) == (2, 2)
 
 
+def _write_sync_source(path, changed):
+    """1,000 rows in eight parquet files; ``changed`` rewrites the
+    payload of every 20th id (50 rows)."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    path.mkdir(parents=True)
+    for f in range(8):
+        ids = list(range(f * 125, (f + 1) * 125))
+        pq.write_table(pa.table({
+            "id": ids,
+            "v": [f"y{i}" if changed and i % 20 == 0 else f"x{i}"
+                  for i in ids]}), path / f"part-{f}.parquet")
+
+
+def _sync_cost(spark, root, runner, before, sized=False, fail=True):
+    """(result, Spark jobs, tasks) of one ``runner`` sync ('incremental'
+    or 'scd2') on :func:`_write_sync_source`'s source under ``root``.
+    ``before``: None measures a first run; 'same' or 'changed' measures
+    the run after a first one, on the same or the changed source."""
+    kw = dict(non_nullable=["id"], null_policy="fail") if fail else {}
+
+    def sync(batch_date):
+        job = MigrationJob(source_path=str(root / "src"),
+                           destination_path=str(root / "dst"),
+                           mode="overwrite", target_file_mb=int(sized), **kw)
+        if runner == "incremental":
+            return job.run_incremental(spark, ["id"])
+        return job.run_scd2(spark, ["id"], batch_date=batch_date)
+
+    _write_sync_source(root / "src", changed=False)
+    if before is not None:
+        sync("2024-01-01")
+        _write_sync_source(root / "src", changed=before == "changed")
+    return _spark_jobs(spark, lambda: sync("2024-02-01"))
+
+
+def test_run_scd2_spark_job_counts(spark, tmp_path):
+    """Pinned Spark jobs and tasks of a second-run run_scd2 into a file
+    destination under the 'fail' null check: the fold marks the versions
+    it closes and opens, so the run counts that marked history and
+    rewrites it, with no second diff of the next history against the
+    current one and nothing persisted."""
+    out, jobs, tasks = _sync_cost(spark, tmp_path, "scd2", "changed")
+    assert (out["versions_opened"], out["versions_closed"],
+            out["history_rows"]) == (50, 50, 1050)
+    assert spark.read.parquet(str(tmp_path / "dst")).count() == 1050
+    assert (jobs, tasks) == (14, 41)
+
+
+@pytest.mark.parametrize("runner, before, fail, extra", [
+    ("incremental", "changed", True, 1),
+    ("scd2", None, True, 1),
+    ("incremental", "same", False, 0),
+])
+def test_sized_sync_takes_the_gate_figures(spark, tmp_path, runner, before,
+                                           fail, extra):
+    """Where the pre-write gate measures the rows a sync writes (it runs
+    the 'fail' null check, so sizing shares its aggregate), a sized
+    write costs one job over the unsized one, the repartition: the
+    second-run run_incremental rewrite and the first-run run_scd2
+    write. Without 'fail' the gate measures nothing, so a converged
+    sized run_incremental, which writes nothing, costs what an unsized
+    one does."""
+    unsized, sized = (
+        _sync_cost(spark, tmp_path / str(s), runner, before, s, fail)[1]
+        for s in (False, True))
+    assert sized == unsized + extra
+
+
+def test_run_scd2_counts_come_from_the_fold(spark, tmp_path):
+    """Re-running run_scd2 with the same batch_date after one key's
+    payload changed closes that key's version and opens its successor on
+    the same date: one version opened and one closed, as the fold did,
+    and the history holds both."""
+    import datetime as dt
+
+    src, dst = str(tmp_path / "same_src"), str(tmp_path / "same_hist")
+
+    def sync(rows):
+        spark.createDataFrame(rows, "k long, v string").write.mode(
+            "overwrite").parquet(src)
+        return MigrationJob(source_path=src, destination_path=dst,
+                            mode="overwrite").run_scd2(
+            spark, ["k"], batch_date="2024-01-01")
+
+    sync([(1, "a"), (2, "b"), (3, "c")])
+    out = sync([(1, "a"), (2, "B"), (3, "c")])
+    assert (out["versions_opened"], out["versions_closed"]) == (1, 1)
+    assert out["history_rows"] == 4
+    day = dt.date(2024, 1, 1)
+    got = sorted(map(tuple, spark.read.parquet(dst).select(
+        "k", "v", "valid_from", "valid_to", "is_current").collect()),
+        key=repr)
+    assert got == sorted([(1, "a", day, None, True),
+                          (2, "b", day, day, False),
+                          (2, "B", day, None, True),
+                          (3, "c", day, None, True)], key=repr)
+
+
 def test_target_file_mb_sizes_every_runner_write(spark, tmp_path):
     """target_file_mb sizes every file write of a MigrationJob, not only
     run()'s: the run_incremental rewrite, the first-run and the rewrite
