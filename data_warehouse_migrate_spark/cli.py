@@ -76,9 +76,10 @@ def build_parser() -> argparse.ArgumentParser:
                    help="size output files near this many MB (file sinks: "
                         "every write of the job — run, the incremental "
                         "rewrite, both SCD2 writes, each stream batch — "
-                        "measures the data in one aggregate (shared with "
-                        "the 'fail' null check) and repartitions before "
-                        "writing; the anti-small-files knob)")
+                        "measures the data in one aggregate, shared with "
+                        "the 'fail' null check where that sees the rows "
+                        "written, and repartitions before writing; the "
+                        "anti-small-files knob)")
     p.add_argument("--verify", dest="verify", action="store_const",
                    const=True,
                    help="after the migration, recompute the transformed "

@@ -513,15 +513,10 @@ class MigrationJob:
         from applying the delta: a value equal under ``<=>`` but not
         identical (``0.0`` vs ``-0.0``) counts as unchanged, yet a
         rewrite carries the source's value. A converged run writes
-        nothing. A JDBC destination applies the
-        same delta IN PLACE: the changed rows are bulk-staged to a temp
-        table and one server-side MERGE (``jdbc_merge=True``, the
-        default — live-tested against embedded Derby) or a
-        DELETE+INSERT pair (``jdbc_merge=False``, for dialects without
-        MERGE) reconciles the destination where it lives — no snapshot
-        rewrite, no rows pulled through the driver
-        (``operators.delta.apply_delta_jdbc``). First-run detection for
-        JDBC probes the destination table (see :meth:`_read_destination`).
+        nothing. A JDBC destination takes the same delta IN PLACE
+        (:meth:`_apply_changes`): staged, then one server-side MERGE
+        (``jdbc_merge=True``) or, for dialects without MERGE, a
+        DELETE+INSERT pair — no rewrite, no rows through the driver.
 
         ``reconcile_drift=True`` projects the transformed source onto the
         destination's CURRENT schema first
@@ -551,7 +546,7 @@ class MigrationJob:
             out["incremental"] = False
             return out
 
-        figures = self._pre_write_gate(src, self._sized)
+        gated = src
         if reconcile_drift:
             from data_warehouse_migrate_spark.functions.casts import (
                 reconcile_to_schema,
@@ -563,55 +558,54 @@ class MigrationJob:
         # here, before the join runs and before any write
         nxt = (ops.snapshot_from_source(src, dest, delta)
                if self.destination_format != "jdbc" else None)
-        counts, jdbc_apply = self._apply_changes(
-            delta, key_cols, lambda: nxt, figures, use_merge=jdbc_merge)
-        out = {"status": "success", "incremental": True,
-               "destination": self.destination_path,
-               "delta_counts": counts,
-               "rows_applied": sum(n for t, n in counts.items()
-                                   if t != "unchanged")}
-        if jdbc_apply is not None:
-            out["jdbc_apply"] = jdbc_apply
-        return out
+        # the gate's figures size the rewrite only if it writes the gated
+        # rows' columns as they are; else the sized write measures nxt
+        figures = self._pre_write_gate(
+            gated, self._sized and nxt.dtypes == gated.dtypes)
+        return {"status": "success", "incremental": True,
+                "destination": self.destination_path,
+                **self._apply_changes(delta, key_cols, lambda: nxt,
+                                      figures, use_merge=jdbc_merge)}
 
     def _apply_changes(self, delta: DataFrame, keys: list[str], rewrite,
                        figures: tuple[int, float] | None = None,
-                       use_merge: bool = True
-                       ) -> tuple[dict[str, int], dict | None]:
+                       use_merge: bool = True) -> dict[str, Any]:
         """The one apply step of both sync runners: count the
         ``change_type``-marked ``delta`` and, if anything changed,
         overwrite a file destination with ``rewrite()`` through
         :meth:`_write`, or apply the delta keyed by ``keys`` to a JDBC
         destination IN PLACE (``operators.delta.apply_delta_jdbc``),
         persisting it for the count and the staged apply and
-        unpersisting it even when either fails. Returns the counts per
-        change type and the JDBC apply's figures (else None)."""
+        unpersisting it even when either fails. Returns the summary
+        fields it owns: ``delta_counts`` per change type,
+        ``rows_applied`` (the rows not 'unchanged') and, when it ran,
+        ``jdbc_apply``."""
         from pyspark import StorageLevel
 
         from data_warehouse_migrate_spark.operators import delta as ops
 
-        def count(d: DataFrame) -> tuple[dict[str, int], int]:
-            counts = {r.change_type: int(r.n_rows)
-                      for r in ops.delta_counts(d).collect()}
-            return counts, sum(n for t, n in counts.items()
-                               if t != "unchanged")
-
-        if self.destination_format != "jdbc":
-            counts, changed = count(delta)
-            if changed:
-                self._write(rewrite(), MigrationMode.OVERWRITE, figures)
-            return counts, None
-        delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
+        jdbc = self.destination_format == "jdbc"
+        if jdbc:
+            delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            counts, changed = count(delta)
-            if not changed:
-                return counts, None
-            return counts, ops.apply_delta_jdbc(
-                delta, keys, self.destination_jdbc or {},
-                self.destination_path, use_merge=use_merge,
-                n_changed=changed)
+            counts = {r.change_type: int(r.n_rows)
+                      for r in ops.delta_counts(delta).collect()}
+            out = {"delta_counts": counts,
+                   "rows_applied": sum(n for t, n in counts.items()
+                                       if t != "unchanged")}
+            if not out["rows_applied"]:
+                return out
+            if jdbc:
+                out["jdbc_apply"] = ops.apply_delta_jdbc(
+                    delta, keys, self.destination_jdbc or {},
+                    self.destination_path, use_merge=use_merge,
+                    n_changed=out["rows_applied"])
+            else:
+                self._write(rewrite(), MigrationMode.OVERWRITE, figures)
+            return out
         finally:
-            delta.unpersist()
+            if jdbc:
+                delta.unpersist()
 
     # ------------------------------------------------------------------
     def run_scd2(self, spark: SparkSession, key_cols: list[str],
@@ -638,18 +632,17 @@ class MigrationJob:
         refused under limit/partition pruning, where the source is a
         subset and every unseen key would be wrongly closed.
 
-        Apply strategy: the fold marks its changes. Each version of the
-        next history, keyed by (business key, ``valid_from``), comes out
-        of it as closed this batch ('update'), opened this batch
-        ('insert') or untouched — never a delete — and that marked
-        history goes through the same apply step as
-        :meth:`run_incremental` (:meth:`_apply_changes`), with no second
-        diff of the next history against the current one. File sinks
-        rewrite the history through :meth:`_write` (localCheckpointed
-        first to break the read-then-overwrite cycle); JDBC destinations
-        apply IN PLACE through the staged server-side MERGE
-        (``operators.delta.apply_delta_jdbc``) — delta-sized traffic,
-        no history rewrite, no rows through the driver.
+        Apply strategy: the fold marks each version of the next history,
+        keyed by (business key, ``valid_from``), as closed this batch
+        ('update'), opened ('insert') or untouched, and
+        :meth:`run_incremental`'s apply step (:meth:`_apply_changes`)
+        applies those marks: a file sink rewrites the history
+        (localCheckpointed first to break the read-then-overwrite
+        cycle), a JDBC table takes them IN PLACE by the staged MERGE.
+        That finds a version by its key, so a JDBC history takes one
+        change per key per ``batch_date``: a second raises
+        ``ConfigurationError`` before anything is written, where a file
+        history keeps the zero-length version it closes.
         """
         if close_deleted and (self.limit or self.partition_columns):
             raise ConfigurationError(
@@ -674,7 +667,7 @@ class MigrationJob:
         history (absent → first-run initialize), fold ``src`` in with
         the fold marking the versions it closes and opens, and apply
         those through :meth:`_apply_changes`."""
-        from data_warehouse_migrate_spark.operators.delta import _scd2_marked
+        from data_warehouse_migrate_spark.operators import delta as ops
 
         from_col, to_col, cur_col = _SCD2_COLS
         clash = [c for c in src.columns if c in _SCD2_COLS]
@@ -683,35 +676,42 @@ class MigrationJob:
                 f"source columns {clash} collide with SCD2 bookkeeping "
                 f"columns {list(_SCD2_COLS)}; rename them in the mapping")
         hist = self._read_destination(spark)
-        # only the first run writes the gated rows, so only it takes the
-        # gate's figures; a rewrite sizes the history it writes
-        figures = self._pre_write_gate(src, self._sized and hist is None)
         out: dict[str, Any] = {"status": "success", "scd2": True,
                                "first_run": hist is None,
                                "destination": self.destination_path,
                                "batch_date": batch_date}
-        if hist is None:
-            n = self._write(
-                src.withColumn(from_col, F.lit(batch_date).cast("date"))
-                .withColumn(to_col, F.lit(None).cast("date"))
-                .withColumn(cur_col, F.lit(True)),
-                MigrationMode.OVERWRITE, figures)
+        if hist is None:  # the gate's figures size the rows it sees
+            first = (src.withColumn(from_col, F.lit(batch_date).cast("date"))
+                     .withColumn(to_col, F.lit(None).cast("date"))
+                     .withColumn(cur_col, F.lit(True)))
+            n = self._write(first, MigrationMode.OVERWRITE,
+                            self._pre_write_gate(first, self._sized))
             return {**out, "history_rows": n, "versions_opened": n,
                     "versions_closed": 0}
 
+        self._pre_write_gate(src)  # a rewrite sizes what it writes
         tracked = tracked_cols or [c for c in src.columns
                                    if c not in set(key_cols)]
-        marked = _scd2_marked(hist, src, key_cols, tracked, batch_date,
-                              *_SCD2_COLS, close_deleted)
-        counts, jdbc_apply = self._apply_changes(
-            marked, [*key_cols, from_col],
-            lambda: marked.drop("change_type").localCheckpoint())
-        out.update(versions_opened=counts.get("insert", 0),
-                   versions_closed=counts.get("update", 0),
-                   history_rows=sum(counts.values()))
-        if jdbc_apply is not None:
-            out["jdbc_apply"] = jdbc_apply
-        return out
+        jdbc = self.destination_format == "jdbc"
+        marked = ops._scd2_marked(hist, src, key_cols, tracked, batch_date,
+                                  *_SCD2_COLS, close_deleted,
+                                  unique_from=jdbc)
+        try:
+            applied = self._apply_changes(
+                marked, [*key_cols, from_col],
+                lambda: marked.drop("change_type").localCheckpoint())
+        except Exception as err:
+            if not jdbc or ops._SCD2_SAME_DATE not in str(err):
+                raise
+            raise ConfigurationError(
+                f"{ops._SCD2_SAME_DATE} {batch_date}: a JDBC history keys "
+                f"versions by (key, {from_col}); nothing was written, fold "
+                f"the second change with a later batch_date") from None
+        counts = applied.pop("delta_counts")
+        return {**out, **applied,
+                "versions_opened": counts.get("insert", 0),
+                "versions_closed": counts.get("update", 0),
+                "history_rows": sum(counts.values())}
 
     # ------------------------------------------------------------------
     def _drive_stream(self, spark: SparkSession, checkpoint_dir: str,
@@ -750,8 +750,9 @@ class MigrationJob:
         :meth:`run_scd2` run). ``batch_date=None`` stamps each batch
         with its processing UTC date (the usual always-on semantics);
         an explicit date pins every folded batch to one version date
-        (reproducible catch-up runs). foreachBatch serializes batches,
-        so history read-fold-write cycles never interleave;
+        (reproducible catch-up runs); a JDBC history takes one change
+        per key per date (see :meth:`run_scd2`). foreachBatch serializes
+        batches, so history read-fold-write cycles never interleave;
         at-least-once on crash between write and checkpoint commit, as
         with :meth:`run_stream` (an identical-payload replay is a
         no-op by SCD2 semantics — replays cannot duplicate versions

@@ -44,6 +44,9 @@ _SPARK_ONLY_JDBC_KEYS = frozenset({
     "connectionprovider", "prefertimestampntz", "driver",
 })
 
+# opens the error of a fold that keys by (key, valid_from), see _scd2_marked
+_SCD2_SAME_DATE = "an SCD2 key changed twice on batch_date"
+
 
 def snapshot_delta(source: DataFrame, dest: DataFrame,
                    key_cols: list[str],
@@ -193,15 +196,10 @@ def apply_delta_jdbc(delta: DataFrame, key_cols: list[str],
     harness — MySQL 8 via its MERGE-less path below, Postgres 15+,
     Oracle, BigQuery all speak a dialect of it):
 
-      MERGE INTO target t USING stage s
-        ON <null-safe key equality> AND s.change_type <> 'insert'
+      MERGE INTO target t USING stage s ON <null-safe key equality>
       WHEN MATCHED AND s.change_type = 'delete' THEN DELETE
       WHEN MATCHED AND s.change_type = 'update' THEN UPDATE SET ...
       WHEN NOT MATCHED AND s.change_type = 'insert' THEN INSERT ...
-
-    An insert row never matches, so it always inserts: an SCD2 re-run
-    on the same batch date opens a version whose key (business key,
-    ``valid_from``) equals that of the version it closes.
 
     ``use_merge=False`` is the two-statement fallback for dialects
     without MERGE: DELETE every staged delete/update key, then INSERT
@@ -227,22 +225,15 @@ def apply_delta_jdbc(delta: DataFrame, key_cols: list[str],
     str_cols = {name for name, t in delta.dtypes if t == "string"}
     stage = stage_table or f"{table}_dwms_stage"
 
-    # bulk-stage the delta (drop/recreate: a stale stage from a failed
-    # run must not leak schema or rows into this one). The stage name is
-    # a FIXED derivative of the target (r15 review, disclosed): two
-    # CONCURRENT syncs into the same target table would fight over one
-    # stage — but concurrent MERGEs into one target are already a
-    # caller-serialization contract (they deadlock or double-apply at
-    # the engine level regardless of staging), so a unique-suffix stage
-    # would hide, not fix, the real constraint. Sequential re-runs are
-    # safe: overwrite drop/recreates, and the finally below drops the
-    # stage even on a failed apply. dbtable, truncate
-    # and the change_type DDL are set AFTER the options loop — module
-    # convention (read_table/write_table do the same) so a stray
-    # 'dbtable'/'createTableColumnTypes' in caller options cannot
-    # redirect the staging write at a real table, and a caller-supplied
-    # truncate=true cannot make the stage overwrite KEEP a stale schema
-    # from an earlier failed run instead of drop/recreating it
+    # bulk-stage the delta, drop/recreating the stage so a failed run's
+    # schema or rows cannot leak in. Its name is a FIXED derivative of
+    # the target: concurrent MERGEs into one target already need the
+    # caller to serialize them, which a unique stage name would hide,
+    # not fix; sequential re-runs are safe, as the finally below drops
+    # the stage even when the apply fails. dbtable, truncate and the
+    # change_type DDL are set AFTER the options loop (as read_table and
+    # write_table do), so caller options cannot redirect the stage at a
+    # real table or keep a stale schema
     writer = changed.write.format("jdbc").mode("overwrite")
     for k, v in jdbc_options.items():
         writer = writer.option(k, v)
@@ -274,8 +265,7 @@ def apply_delta_jdbc(delta: DataFrame, key_cols: list[str],
         upd = (f"WHEN MATCHED AND s.{q('change_type')} = 'update' "
                f"THEN UPDATE SET {sets} " if payload_cols else "")
         stmts = [
-            f"MERGE INTO {table} t USING {stage} s "
-            f"ON {on} AND s.{q('change_type')} <> 'insert' "
+            f"MERGE INTO {table} t USING {stage} s ON {on} "
             f"WHEN MATCHED AND s.{q('change_type')} = 'delete' THEN DELETE "
             + upd +
             f"WHEN NOT MATCHED AND s.{q('change_type')} = 'insert' "
@@ -363,11 +353,14 @@ def scd2_apply(history: DataFrame, updates: DataFrame,
 def _scd2_marked(history: DataFrame, updates: DataFrame,
                  key_cols: list[str], tracked_cols: list[str],
                  batch_date: str, from_col: str, to_col: str, cur_col: str,
-                 close_deleted: bool) -> DataFrame:
+                 close_deleted: bool, unique_from: bool = False
+                 ) -> DataFrame:
     """:func:`scd2_apply`'s next history plus the ``change_type`` of
     each version, keyed by (key, ``from_col``): 'update' if this batch
     closes it, 'insert' if it opens it, else 'unchanged' — a delta
-    ``apply_delta_jdbc`` applies as it stands."""
+    ``apply_delta_jdbc`` applies as it stands while that key is unique.
+    A key changing twice on one ``batch_date`` leaves two versions from
+    it; with ``unique_from`` such a batch fails as its marks compute."""
     # untracked payload columns ride along on new versions (sourced from
     # updates); change detection stays on tracked_cols only
     bookkeeping = {from_col, to_col, cur_col}
@@ -375,9 +368,7 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
              if c not in set(key_cols) | set(tracked_cols) | bookkeeping]
     missing = [c for c in extra if c not in updates.columns]
     if missing:
-        from data_warehouse_migrate_spark.exceptions import (
-            ConfigurationError,
-        )
+        from data_warehouse_migrate_spark.exceptions import ConfigurationError
 
         raise ConfigurationError(
             f"history carries untracked payload columns {missing} that "
@@ -393,16 +384,25 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
         key_cols, compare_cols=tracked_cols)
 
     close_types = ["update"] + (["delete"] if close_deleted else [])
-    to_close = (delta.filter(F.col("change_type").isin(close_types))
-                .select(*key_cols).withColumn("__close", F.lit(1)))
+    # boolean markers: a string change_type here cost four more jobs
+    ct = F.col("change_type")
+    touched = (delta.filter(ct.isin("insert", *close_types))
+               .select(*key_cols, ct.isin(close_types).alias("__close"),
+                       ct.isin("insert", "update").alias("__open")))
 
-    h, m = history.alias("h"), to_close.alias("m")
+    h, m = history.alias("h"), touched.alias("m")
     cond = None
     for k in key_cols:
         eq = F.col(f"h.{k}").eqNullSafe(F.col(f"m.{k}"))
         cond = eq if cond is None else cond & eq
     batch = F.lit(batch_date).cast(dict(history.dtypes)[from_col])
-    closing = F.col(f"h.{cur_col}") & F.col("m.__close").isNotNull()
+    closing = F.col(f"h.{cur_col}") & F.col("m.__close")
+    mark = F.when(closing, F.lit("update")).otherwise(F.lit("unchanged"))
+    if unique_from:
+        # a version from batch_date of a key that opens one now
+        again = F.col("m.__open") & (F.col(f"h.{from_col}") == batch)
+        mark = F.when(again, F.raise_error(F.lit(
+            f"{_SCD2_SAME_DATE} {batch_date}"))).otherwise(mark)
     kept = (h.join(m, cond, "left")
             .select(*[F.col(f"h.{c}") for c in history.columns
                       if c not in (to_col, cur_col)],
@@ -410,8 +410,7 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
                     .alias(to_col),
                     F.when(closing, F.lit(False))
                     .otherwise(F.col(f"h.{cur_col}")).alias(cur_col),
-                    F.when(closing, F.lit("update"))
-                    .otherwise(F.lit("unchanged")).alias("change_type")))
+                    mark.alias("change_type")))
 
     opened = (delta.filter(F.col("change_type").isin("insert", "update"))
               .select(*key_cols, *tracked_cols, *extra)

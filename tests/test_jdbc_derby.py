@@ -468,29 +468,49 @@ def test_failing_jdbc_apply_leaves_nothing_cached(spark, derby_opts,
     assert not (rdd_ids() - before)
 
 
-def test_scd2_jdbc_same_batch_date_rerun(spark, derby_opts, tmp_path):
-    """Re-running run_scd2 with the same batch_date after a payload
-    change closes the current version and opens its successor on that
-    date, both keyed (k, batch_date): the staged MERGE inserts the new
-    version instead of matching it to the one it closes, so the table
-    ends as a file destination would."""
-    src = str(tmp_path / "same_src.parquet")
-    job = MigrationJob(source_path=src, destination_path="t_scd2_same",
-                       destination_format="jdbc",
-                       destination_jdbc=derby_opts, mode="append")
+def test_scd2_jdbc_takes_one_change_per_key_per_batch_date(
+        spark, derby_opts, tmp_path):
+    """A JDBC history is applied in place keyed by (k, valid_from), so it
+    takes one change of a key per batch_date. A key's first change on a
+    date, a new key on that date and a key closing as deleted on the
+    date it opened leave the table as a file history of the same runs.
+    A second change of one key on one date, or a key reopening on the
+    date it closed, raises ConfigurationError before anything is
+    written: a MERGE on (k, valid_from) would otherwise overwrite the
+    version it closed that date."""
+    from data_warehouse_migrate_spark.exceptions import ConfigurationError
 
-    def sync(rows):
+    src = str(tmp_path / "same_src.parquet")
+    jdbc = MigrationJob(source_path=src, destination_path="t_scd2_same",
+                        destination_format="jdbc",
+                        destination_jdbc=derby_opts, mode="append")
+    files = MigrationJob(source_path=src,
+                         destination_path=str(tmp_path / "same_hist"),
+                         mode="overwrite")
+
+    def history(df):
+        return sorted((r.k, r.v, str(r.valid_from), str(r.valid_to),
+                       bool(r.is_current)) for r in df.collect())
+
+    def sync(job, rows, day, **kw):
         spark.createDataFrame(rows, "k long, v string").write.mode(
             "overwrite").parquet(src)
-        return job.run_scd2(spark, ["k"], batch_date="2026-01-01")
+        return job.run_scd2(spark, ["k"], batch_date=day, **kw)
 
-    sync([(1, "A"), (2, "B")])
-    out = sync([(1, "A"), (2, "B2")])
-    assert (out["versions_opened"], out["versions_closed"]) == (1, 1)
-    rows = {(r.k, r.v, str(r.valid_from), str(r.valid_to), bool(r.is_current))
-            for r in _read(spark, derby_opts, "t_scd2_same").collect()}
-    assert rows == {
-        (1, "A", "2026-01-01", "None", True),
-        (2, "B", "2026-01-01", "2026-01-01", False),
-        (2, "B2", "2026-01-01", "None", True),
-    }
+    for rows, day, kw in [
+            ([(1, "A"), (2, "B")], "2026-01-01", {}),
+            ([(1, "A"), (2, "B2")], "2026-02-01", {}),
+            ([(1, "A"), (2, "B2"), (3, "C")], "2026-02-01", {}),
+            ([(1, "A"), (2, "B2")], "2026-02-01", {"close_deleted": True})]:
+        for job in (jdbc, files):
+            sync(job, rows, day, **kw)
+        assert history(_read(spark, derby_opts, "t_scd2_same")) == history(
+            spark.read.parquet(str(tmp_path / "same_hist")))
+    before = history(_read(spark, derby_opts, "t_scd2_same"))
+    assert ((3, "C", "2026-02-01", "2026-02-01", False) in before
+            and (2, "B2", "2026-02-01", "None", True) in before)
+
+    for rows in ([(1, "A"), (2, "B3")], [(1, "A"), (2, "B2"), (3, "C")]):
+        with pytest.raises(ConfigurationError, match="changed twice"):
+            sync(jdbc, rows, "2026-02-01")
+        assert history(_read(spark, derby_opts, "t_scd2_same")) == before

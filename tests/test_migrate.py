@@ -1016,3 +1016,52 @@ def test_target_file_mb_sizes_every_runner_write(spark, tmp_path):
     assert (out["rows_written"], out["batches"]) == (8000, 1)
     assert files("tf_stream") == want
 
+
+@pytest.mark.parametrize("case", ["scd2_first_run", "reconcile_drift",
+                                  "extra_source_column"])
+def test_sized_write_under_fail_sizes_the_rows_written(spark, tmp_path,
+                                                       case):
+    """Under 'fail' the pre-write gate measures the gated rows, and a
+    sized write takes those figures only if it writes them as they are:
+    it leaves as many files as the same write without 'fail', which
+    measures what it writes. The first run_scd2 write adds three
+    bookkeeping columns to the gated rows; a run_incremental rewrite
+    leaves out a wide source column the destination lacks, reconciled
+    away or not."""
+    import glob
+
+    def source(name, changed, pad):
+        path = str(tmp_path / name)
+        cols = [F.col("id").alias("k")]
+        if case != "scd2_first_run":
+            cols.append(F.when(F.col("id") == changed, F.lit("y"))
+                        .otherwise(F.lit("x")).alias("v"))
+        if pad:
+            cols.append(F.repeat(F.lit("p"), 1000).alias("pad"))
+        n = 150_000 if case == "scd2_first_run" else 8000
+        spark.range(0, n, 1, 4).select(*cols).write.parquet(path)
+        return path
+
+    def files(fail):
+        dest = str(tmp_path / f"dst_{fail}")
+        kw = dict(non_nullable=["k"], null_policy="fail") if fail else {}
+
+        def job(src):
+            return MigrationJob(source_path=src, destination_path=dest,
+                                mode="overwrite", target_file_mb=1, **kw)
+
+        if case == "scd2_first_run":
+            job(src1).run_scd2(spark, ["k"], batch_date="2024-01-01")
+        else:
+            job(src1).run_incremental(spark, ["k"])
+            out = job(src2).run_incremental(
+                spark, ["k"], reconcile_drift=case == "reconcile_drift")
+            assert out["rows_applied"] == 1
+        return len(glob.glob(dest + "/part-*"))
+
+    src1 = source("src1", -1, pad=False)
+    src2 = None if case == "scd2_first_run" else source("src2", 5, pad=True)
+    want = files(fail=False)
+    assert want == (2 if case == "scd2_first_run" else 1)
+    assert files(fail=True) == want
+
