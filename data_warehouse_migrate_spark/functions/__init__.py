@@ -1,9 +1,11 @@
 """Expression factories: the engine's scalar-function layer.
 
-Everything here returns Spark Column expressions built from
-``pyspark.sql.functions`` so the hot path stays JVM-side inside
-whole-stage codegen; Python/pandas UDFs appear only as clearly-marked
-fallbacks.
+Everything here returns Spark Column expressions over built-in Spark
+functions, so the hot path stays JVM-side inside whole-stage codegen;
+Python/pandas UDFs appear only as clearly-marked fallbacks. The cast,
+computed-column and sizing rules are rendered once as Spark SQL text,
+which the migration path issues one stage per call and the public
+helpers here wrap in ``F.expr``.
 """
 
 from data_warehouse_migrate_spark.functions.casts import (

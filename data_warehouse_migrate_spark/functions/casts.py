@@ -6,8 +6,13 @@ The reference's central design commitment: values are coerced to the
 strings. Every cast is a ``try_cast`` — a per-column cast failure must
 never fail the job (reference ``migrator.py:385-386``).
 
-All expressions are built-in Column functions (JVM-side, codegen-friendly);
-no Python UDFs.
+Each rule is rendered once, as Spark SQL text (``data_warehouse_migrate_spark.sqltext``):
+:func:`apply_source_schema` issues a whole table's casts as ONE
+``selectExpr`` call, where building them as ``Column`` objects cost a
+py4j round trip per node (about 1,600 per run on a 19-column table).
+The public helpers wrap the same text in ``F.expr``. Every expression
+is a built-in Spark function (JVM-side, codegen-friendly); no Python
+UDFs.
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.schema import _base_type, parse_source_type
+from data_warehouse_migrate_spark.sqltext import ident, project, sql_string, sql_type
 
 # reference migrator.py:431-446 (strip + lower first)
 TRUTHY_TOKENS = ("true", "1", "yes", "y")
@@ -30,34 +36,53 @@ STRING_NULL_TOKENS = ("nan", "none", "null", "<na>")
 _PY_WS = r"[\s\x1c-\x1f\x85\u00a0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
 
 
-def _pystrip(col: Column) -> Column:
+def _in(x: str, tokens) -> str:
+    return f"{x} IN ({', '.join(map(sql_string, tokens))})"
+
+
+def _pystrip(x: str) -> str:
     """Python ``str.strip()`` semantics: ALL leading/trailing whitespace.
     Spark's ``trim`` removes only spaces — '\\r'/'\\t'/'\\x1f' would
     survive and flip token classification (found by hypothesis)."""
-    return F.regexp_replace(col, f"^{_PY_WS}+|{_PY_WS}+$", "")
+    return f"regexp_replace({x}, {sql_string(f'^{_PY_WS}+|{_PY_WS}+$')}, '')"
 
 
-def boolean_token_expr(col: Column, unknown_to_null: bool = True) -> Column:
-    """Parse boolean tokens: 'true','1','yes','y' → True;
-    'false','0','no','n','' → False; unknown → NULL (reference
+def _boolean_token_sql(x: str, unknown_to_null: bool = True) -> str:
+    s = f"lower({_pystrip(f'CAST({x} AS STRING)')})"
+    return (f"CASE WHEN {x} IS NULL THEN CAST(NULL AS BOOLEAN) "
+            f"WHEN {_in(s, TRUTHY_TOKENS)} THEN TRUE "
+            f"WHEN {_in(s, FALSY_TOKENS)} THEN FALSE "
+            f"ELSE {'CAST(NULL AS BOOLEAN)' if unknown_to_null else 'FALSE'} END")
+
+
+def boolean_token_expr(name: str, unknown_to_null: bool = True) -> Column:
+    """Parse boolean tokens in column ``name``: 'true','1','yes','y' →
+    True; 'false','0','no','n','' → False; unknown → NULL (reference
     ``migrator.py:431-446``) or False (legacy client variant,
     ``maxcompute_client.py:438-451``) when ``unknown_to_null=False``.
     Non-string inputs are stringified first, mirroring the pandas path;
     stripping matches Python ``str.strip()``, not SQL ``trim``.
     """
-    s = F.lower(_pystrip(col.cast("string")))
-    expr = (
-        F.when(col.isNull(), F.lit(None).cast("boolean"))
-        .when(s.isin(*TRUTHY_TOKENS), F.lit(True))
-        .when(s.isin(*FALSY_TOKENS), F.lit(False))
-    )
-    return expr.otherwise(F.lit(None).cast("boolean") if unknown_to_null else F.lit(False))
+    return F.expr(_boolean_token_sql(ident(name), unknown_to_null))
 
 
-def string_preserve_expr(col: Column,
+def _string_preserve_sql(x: str, preserve_null_tokens: bool = True,
+                         treat_empty_as_null: bool = False) -> str:
+    s = f"CAST({x} AS STRING)"
+    if not preserve_null_tokens:
+        s = (f"CASE WHEN {_in(f'lower({s})', STRING_NULL_TOKENS)} "
+             f"THEN NULL ELSE {s} END")
+    if treat_empty_as_null:
+        # reference uses Python .strip() (maxcompute_client.py:369)
+        s = f"CASE WHEN {_pystrip(s)} = '' THEN NULL ELSE {s} END"
+    return s
+
+
+def string_preserve_expr(name: str,
                          preserve_null_tokens: bool = True,
                          treat_empty_as_null: bool = False) -> Column:
-    """Force-preserve a column as string (reference ``migrator.py:449-473``).
+    """Force-preserve column ``name`` as string (reference
+    ``migrator.py:449-473``).
 
     With ``preserve_null_tokens`` (the default —
     ``preserve_string_null_tokens=true``), literal tokens like 'nan'/'None'/
@@ -65,76 +90,80 @@ def string_preserve_expr(col: Column,
     case-insensitively. Empty string → NULL only if ``treat_empty_as_null``
     (reference ``maxcompute_client.py:366-378``, default false).
     """
-    s = col.cast("string")
-    if not preserve_null_tokens:
-        s = F.when(F.lower(s).isin(*STRING_NULL_TOKENS), F.lit(None)).otherwise(s)
-    if treat_empty_as_null:
-        # reference uses Python .strip() (maxcompute_client.py:369)
-        s = F.when(_pystrip(s) == "", F.lit(None)).otherwise(s)
-    return s
+    return F.expr(_string_preserve_sql(ident(name), preserve_null_tokens,
+                                       treat_empty_as_null))
 
 
-def inf_nan_to_null(col: Column) -> Column:
-    """±inf → NULL in float columns (reference ``migrator.py:503-505``,
-    ``bigquery_client.py:273-278``); NaN → NULL likewise (the Arrow path
-    treats NaN as missing)."""
-    c = col.cast("double")
-    return F.when(F.isnan(c) | c.isin(float("inf"), float("-inf")), F.lit(None).cast("double")).otherwise(c)
+def _inf_nan_to_null_sql(x: str) -> str:
+    c = f"CAST({x} AS DOUBLE)"
+    return (f"CASE WHEN isnan({c}) OR {c} IN (CAST('Infinity' AS DOUBLE), "
+            f"CAST('-Infinity' AS DOUBLE)) THEN CAST(NULL AS DOUBLE) "
+            f"ELSE {c} END")
 
 
-def _int_cast(col: Column, target: str) -> Column:
-    """Integer cast with the reference's '1.0' → 1 semantics
-    (``pd.to_numeric`` then int64 — reference ``migrator.py:411-422``,
-    ``maxcompute_client.py:406-411``): parse as double first, then truncate.
-    Spark nullable longs make the reference's NaN→float64 widening hack
-    unnecessary (SURVEY.md §1.3).
-    """
-    return col.cast("string").try_cast("double").try_cast(target)
+def inf_nan_to_null(name: str) -> Column:
+    """±inf → NULL in float column ``name`` (reference
+    ``migrator.py:503-505``, ``bigquery_client.py:273-278``); NaN → NULL
+    likewise (the Arrow path treats NaN as missing)."""
+    return F.expr(_inf_nan_to_null_sql(ident(name)))
 
 
-def cast_expr_for_source_type(col: Column, type_str: str,
-                              preserve_null_tokens: bool = True,
-                              treat_empty_as_null: bool = False) -> Column:
-    """The T3 operator (reference ``migrator.py:345-394``): one cast
-    expression per declared source type. Unknown types pass through as
-    strings.
-    """
+def _try_cast_text(x: str, target: str) -> str:
+    return f"TRY_CAST(CAST({x} AS STRING) AS {target})"
+
+
+_INT_TYPES = {"bigint": "bigint", "int": "int", "integer": "int",
+              "smallint": "smallint", "tinyint": "tinyint",
+              "long": "bigint", "short": "smallint", "byte": "tinyint"}
+
+
+def _cast_sql(x: str, type_str: str, preserve_null_tokens: bool = True,
+              treat_empty_as_null: bool = False) -> str:
     base = _base_type(type_str)
-    if base in ("bigint", "int", "integer", "smallint", "tinyint",
-                "long", "short", "byte"):
-        spark_t = {"bigint": "bigint", "int": "int", "integer": "int",
-                   "smallint": "smallint", "tinyint": "tinyint",
-                   "long": "bigint", "short": "smallint", "byte": "tinyint"}[base]
-        return _int_cast(col, spark_t)
+    if base in _INT_TYPES:
+        # the reference's '1.0' → 1 semantics (pd.to_numeric then int64 —
+        # reference migrator.py:411-422, maxcompute_client.py:406-411):
+        # parse as double first, then truncate. Spark nullable longs make
+        # the reference's NaN→float64 widening hack unnecessary
+        # (SURVEY.md §1.3)
+        return f"TRY_CAST({_try_cast_text(x, 'double')} AS {_INT_TYPES[base]})"
     if base in ("double", "float"):
-        return inf_nan_to_null(col.cast("string").try_cast("double"))
+        return _inf_nan_to_null_sql(_try_cast_text(x, "double"))
     if base == "decimal":
-        dt = parse_source_type(type_str)
-        return col.cast("string").try_cast(dt.simpleString())
+        return _try_cast_text(x, parse_source_type(type_str).simpleString())
     if base in ("string", "varchar", "char"):
-        return string_preserve_expr(col, preserve_null_tokens, treat_empty_as_null)
+        return _string_preserve_sql(x, preserve_null_tokens, treat_empty_as_null)
     if base == "boolean":
-        return boolean_token_expr(col)
+        return _boolean_token_sql(x)
     if base in ("datetime", "timestamp_ntz"):
-        return col.cast("string").try_cast("timestamp_ntz")
-    if base == "timestamp":
-        return col.cast("string").try_cast("timestamp")
-    if base == "date":
-        return col.cast("string").try_cast("date")
+        return _try_cast_text(x, "timestamp_ntz")
+    if base in ("timestamp", "date"):
+        return _try_cast_text(x, base)
     if base == "binary":
-        return col.cast("binary")
+        return f"CAST({x} AS BINARY)"
     if base in ("array", "map", "struct"):
         # already-typed nested values pass through; no coercion path in the
         # reference for complex types (they only exist in schema translation)
-        return col
-    return col.cast("string")
+        return x
+    return f"CAST({x} AS STRING)"
+
+
+def cast_expr_for_source_type(name: str, type_str: str,
+                              preserve_null_tokens: bool = True,
+                              treat_empty_as_null: bool = False) -> Column:
+    """The T3 operator (reference ``migrator.py:345-394``): one cast
+    expression per declared source type, over column ``name``. Unknown
+    types pass through as strings.
+    """
+    return F.expr(_cast_sql(ident(name), type_str, preserve_null_tokens,
+                            treat_empty_as_null))
 
 
 def apply_source_schema(df, schema, preserve_null_tokens: bool = True,
                         treat_empty_as_null: bool = False):
     """Apply declared source types to a whole DataFrame in one select —
     the reference's per-batch ``_apply_source_schema_types`` collapses into
-    a single narrow projection (no shuffle).
+    a single narrow projection (no shuffle), issued as one SQL-text call.
 
     ``schema`` is a list of ``ColumnSpec``; columns absent from the
     DataFrame are ignored, extra DataFrame columns pass through unchanged
@@ -143,11 +172,12 @@ def apply_source_schema(df, schema, preserve_null_tokens: bool = True,
     from pyspark.sql import types as T
 
     by_name = {c.name.lower(): c for c in schema}
-    exprs = []
+    out = []
     for f in df.schema.fields:
+        x = ident(f.name)
         spec = by_name.get(f.name.lower())
         if spec is None:
-            exprs.append(F.col(f.name))
+            out.append((f.name, x))
             continue
         target = parse_source_type(spec.type)
         # Fast path: column already has the declared type → no string
@@ -157,23 +187,17 @@ def apply_source_schema(df, schema, preserve_null_tokens: bool = True,
         # inf/NaN cleanup the reference applies unconditionally.
         if f.dataType == target:
             if isinstance(target, T.DoubleType):
-                exprs.append(inf_nan_to_null(F.col(f.name)).alias(f.name))
+                x = _inf_nan_to_null_sql(x)
             elif isinstance(target, T.StringType) and (
                     not preserve_null_tokens or treat_empty_as_null):
-                exprs.append(string_preserve_expr(
-                    F.col(f.name), preserve_null_tokens, treat_empty_as_null
-                ).alias(f.name))
-            else:
-                exprs.append(F.col(f.name))
+                x = _string_preserve_sql(x, preserve_null_tokens,
+                                         treat_empty_as_null)
+            out.append((f.name, x))
             continue
-        exprs.append(
-            cast_expr_for_source_type(
-                F.col(f.name), spec.type,
-                preserve_null_tokens=preserve_null_tokens,
-                treat_empty_as_null=treat_empty_as_null,
-            ).alias(f.name)
-        )
-    return df.select(*exprs)
+        out.append((f.name, _cast_sql(
+            x, spec.type, preserve_null_tokens=preserve_null_tokens,
+            treat_empty_as_null=treat_empty_as_null)))
+    return project(df, out)
 
 
 # ---------------------------------------------------------------------------
@@ -263,20 +287,20 @@ def reconcile_to_schema(df, target_schema,
         key = fld.name.lower()
         tgt_t = fld.dataType.simpleString()
         if key not in by_lower:
-            out.append(F.lit(None).cast(fld.dataType).alias(fld.name))
+            out.append((fld.name, f"CAST(NULL AS {sql_type(fld.dataType)})"))
             continue
-        src_c = by_lower[key]
+        x = ident(by_lower[key])
         src_t = src_types[key]
         if src_t == tgt_t:
-            out.append(F.col(src_c).alias(fld.name))
+            out.append((fld.name, x))
             continue
         if _is_lossless_widening(src_t, tgt_t):
-            out.append(F.col(src_c).cast(fld.dataType).alias(fld.name))
+            out.append((fld.name, f"CAST({x} AS {sql_type(fld.dataType)})"))
             continue
         if on_narrowing == "error":
             raise ValueError(
                 f"narrowing/incompatible drift on {fld.name!r}: source "
                 f"{src_t} -> target {tgt_t}; pass on_narrowing='try_cast' "
                 "to accept cast-failure->NULL semantics")
-        out.append(F.col(src_c).try_cast(fld.dataType).alias(fld.name))
-    return df.select(*out)
+        out.append((fld.name, f"TRY_CAST({x} AS {sql_type(fld.dataType)})"))
+    return project(df, out)

@@ -3,8 +3,11 @@
 ``migrator.py:783-788``, dispatch ``:854-860``, impl ``:875-977``).
 
 Deliberately NOT an arbitrary-expression surface — the whitelist is the
-contract (reference ``README.md:221``). Everything compiles to built-in
-Column expressions; ``format`` templates are translated to
+contract (reference ``README.md:221``). Everything compiles to Spark SQL
+text over built-in functions, quoted by ``data_warehouse_migrate_spark
+.sqltext``: ``operators.mapping`` folds a mapping's computed columns
+into its one projection call, where a ``Column`` tree cost a py4j round
+trip per node. ``format`` templates are translated to
 ``format_string`` printf with the reference's exact null-coercion rules
 (``migrator.py:923-936``): numeric ``d``/``f`` specs treat None/NaN/'' as 0,
 everything else treats None/NaN as ''.
@@ -20,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.exceptions import SchemaError
+from data_warehouse_migrate_spark.sqltext import ident, project, sql_string
 
 COMPUTED_WHITELIST = frozenset({"concat", "upper", "lower", "substr", "now", "format"})
 
@@ -68,18 +72,29 @@ def _strip_quotes(s: str) -> tuple[str, bool]:
     return s, False
 
 
-def _col_or_lit(arg: str, columns: Sequence[str], pandas_compat: bool) -> Column:
-    """An argument is a column if its (unquoted) name matches a DataFrame
+# the columns a computed expression sees: lower-cased name -> (its SQL
+# text, whether it is float-typed)
+Visible = dict[str, tuple[str, bool]]
+
+
+def _visible(columns: Sequence[str],
+             dtypes: dict[str, str] | None = None) -> Visible:
+    dt_low = {c.lower(): t for c, t in (dtypes or {}).items()}
+    return {c.lower(): (ident(c), dt_low.get(c.lower()) in ("float", "double"))
+            for c in columns}
+
+
+def _col_or_lit(arg: str, cols: Visible, pandas_compat: bool) -> str:
+    """An argument is a column if its (unquoted) name matches a visible
     column case-insensitively, else a literal (reference
     ``migrator.py:879-893``). Columns are stringified; with
     ``pandas_compat`` NULL stringifies to 'nan' like pandas ``astype(str)``.
     """
     text, quoted = _strip_quotes(arg)
-    low = {c.lower(): c for c in columns}
-    if not quoted and text.lower() in low:
-        c = F.col(low[text.lower()]).cast("string")
-        return F.coalesce(c, F.lit("nan")) if pandas_compat else F.coalesce(c, F.lit(""))
-    return F.lit(text)
+    if quoted or text.lower() not in cols:
+        return sql_string(text)
+    null = "'nan'" if pandas_compat else "''"
+    return f"coalesce(CAST({cols[text.lower()][0]} AS STRING), {null})"
 
 
 # ---------------------------------------------------------------------------
@@ -131,8 +146,7 @@ def translate_format_template(template: str) -> tuple[str, list[tuple[str | None
     return "".join(fmt_parts), fields
 
 
-def _format_arg_expr(col: Column, kind: str,
-                     is_float_col: bool = False) -> Column:
+def _format_arg_sql(x: str, kind: str, is_float_col: bool = False) -> str:
     """Per-arg null coercion (reference ``migrator.py:923-936``):
     numeric specs: None/NaN/'' → 0; string specs: None/NaN → ''.
 
@@ -141,28 +155,20 @@ def _format_arg_expr(col: Column, kind: str,
     the SOURCE column is float-typed (``is_float_col``): a string column
     whose text happens to be "NaN" must pass through verbatim, exactly
     as the reference's isinstance(val, float) check behaves."""
+    d = f"TRY_CAST(CAST({x} AS STRING) AS DOUBLE)"
     if kind == "int":
-        d = col.cast("string").try_cast("double")
-        return F.coalesce(d.try_cast("bigint"), F.lit(0))
+        return f"coalesce(TRY_CAST({d} AS BIGINT), 0)"
     if kind == "float":
-        return F.coalesce(F.nanvl(col.cast("string").try_cast("double"),
-                                  F.lit(0.0)), F.lit(0.0))
-    s = col.cast("string")
+        return f"coalesce(nanvl({d}, 0.0D), 0.0D)"
+    s = f"CAST({x} AS STRING)"
     if is_float_col:
-        s = F.when(F.isnan(col), F.lit("")).otherwise(s)
-    return F.coalesce(s, F.lit(""))
+        s = f"CASE WHEN isnan({x}) THEN '' ELSE {s} END"
+    return f"coalesce({s}, '')"
 
 
-def format_expr(template: str, col_args: Sequence[str], columns: Sequence[str],
-                dtypes: dict[str, str] | None = None) -> Column:
-    """Compile format(template, cols...) into a JVM-side format_string call.
-    ``dtypes`` (column → simple type string) enables the reference's
-    float-NaN→'' coercion on string specs; without it a float NaN renders
-    'NaN' (only distinguishable from the STRING value "NaN" by type)."""
+def _format_sql(template: str, col_args: Sequence[str], cols: Visible) -> str:
     printf_fmt, fields = translate_format_template(template)
-    low = {c.lower(): c for c in columns}
-    dt_low = {c.lower(): t for c, t in (dtypes or {}).items()}
-    args: list[Column] = []
+    args: list[str] = []
     pos = 0
     for name, kind in fields:
         if name is None:
@@ -173,25 +179,31 @@ def format_expr(template: str, col_args: Sequence[str], columns: Sequence[str],
             pos += 1
         else:
             ref = name
-        if ref.lower() not in low:
+        if ref.lower() not in cols:
             raise ComputedExpressionError(f"format references unknown column {ref!r}")
-        is_float = dt_low.get(ref.lower()) in ("float", "double")
-        args.append(_format_arg_expr(F.col(low[ref.lower()]), kind,
-                                     is_float_col=is_float))
-    return F.format_string(printf_fmt, *args)
+        x, is_float = cols[ref.lower()]
+        args.append(_format_arg_sql(x, kind, is_float_col=is_float))
+    return f"format_string({', '.join([sql_string(printf_fmt), *args])})"
+
+
+def format_expr(template: str, col_args: Sequence[str], columns: Sequence[str],
+                dtypes: dict[str, str] | None = None) -> Column:
+    """Compile format(template, cols...) into a JVM-side format_string call.
+    ``dtypes`` (column → simple type string) enables the reference's
+    float-NaN→'' coercion on string specs; without it a float NaN renders
+    'NaN' (only distinguishable from the STRING value "NaN" by type)."""
+    return F.expr(_format_sql(template, col_args, _visible(columns, dtypes)))
 
 
 # ---------------------------------------------------------------------------
 # dispatch
 # ---------------------------------------------------------------------------
 
-def computed_expr(expression: str, columns: Sequence[str],
-                  pandas_compat: bool = True,
-                  dtypes: dict[str, str] | None = None) -> Column:
-    """Compile one computed-column expression string (e.g.
-    ``concat(spu_code, '-', size)`` or ``format("{year}-{week:02d}")``)
-    into a Column. Whitelist enforced (reference ``migrator.py:783-788``).
-    """
+def _computed_sql(expression: str, cols: Visible,
+                  pandas_compat: bool = True) -> str:
+    """One computed-column expression string as SQL text over the
+    ``cols`` it may reference. Whitelist enforced (reference
+    ``migrator.py:783-788``)."""
     m = _CALL_RE.match(expression)
     if not m:
         raise ComputedExpressionError(f"not a function call: {expression!r}")
@@ -203,37 +215,36 @@ def computed_expr(expression: str, columns: Sequence[str],
 
     if func == "now":
         # one scalar per run, broadcast (reference migrator.py:877-878)
-        return F.current_timestamp()
+        return "current_timestamp()"
     if func == "concat":
         if not args:
             raise ComputedExpressionError("concat() needs at least one argument")
-        return F.concat(*[_col_or_lit(a, columns, pandas_compat) for a in args])
+        return f"concat({', '.join(_col_or_lit(a, cols, pandas_compat) for a in args)})"
     if func in ("upper", "lower"):
         if len(args) != 1:
             raise ComputedExpressionError(f"{func}() takes exactly one column")
-        col = _col_or_lit(args[0], columns, pandas_compat)
-        return F.upper(col) if func == "upper" else F.lower(col)
+        return f"{func}({_col_or_lit(args[0], cols, pandas_compat)})"
     if func == "substr":
         # Python slice semantics s[start:start+length] (reference
         # migrator.py:900-905 uses pandas str.slice), INCLUDING negative
         # indices — the old start+1 shift silently returned the wrong
         # characters for start<0 (substr(col,-1) gave the whole string).
         # Both bounds resolve to clamped 0-based offsets against the
-        # string's own length, then one 1-based Spark substr.
+        # string's own length, then one 1-based Spark substring.
         if len(args) not in (2, 3):
             raise ComputedExpressionError("substr(col, start[, length])")
-        col = _col_or_lit(args[0], columns, pandas_compat)
+        col = _col_or_lit(args[0], cols, pandas_compat)
         start = int(_strip_quotes(args[1])[0])
-        ln = F.length(col)
-        frm = (F.lit(start) if start >= 0
-               else F.greatest(ln + start, F.lit(0)))
+        ln = f"length({col})"
+        frm = (str(start) if start >= 0
+               else f"greatest({ln} + {start}, 0)")
         if len(args) == 3:
             end = start + int(_strip_quotes(args[2])[0])
-            to = (F.least(F.lit(end), ln) if end >= 0
-                  else F.greatest(ln + end, F.lit(0)))
+            to = (f"least({end}, {ln})" if end >= 0
+                  else f"greatest({ln} + {end}, 0)")
         else:
             to = ln
-        return col.substr(frm + 1, F.greatest(to - frm, F.lit(0)))
+        return f"substring({col}, {frm} + 1, greatest({to} - {frm}, 0))"
     if func == "format":
         if not args:
             raise ComputedExpressionError("format(template[, cols...])")
@@ -241,17 +252,46 @@ def computed_expr(expression: str, columns: Sequence[str],
         if not quoted:
             raise ComputedExpressionError("format template must be a quoted string")
         col_args = [_strip_quotes(a)[0] for a in args[1:]]
-        return format_expr(template, col_args, columns, dtypes=dtypes)
+        return _format_sql(template, col_args, cols)
     raise AssertionError("unreachable")
+
+
+def computed_expr(expression: str, columns: Sequence[str],
+                  pandas_compat: bool = True,
+                  dtypes: dict[str, str] | None = None) -> Column:
+    """Compile one computed-column expression string (e.g.
+    ``concat(spu_code, '-', size)`` or ``format("{year}-{week:02d}")``)
+    into a Column over ``columns``.
+    """
+    return F.expr(_computed_sql(expression, _visible(columns, dtypes),
+                                pandas_compat))
+
+
+def put_computed(out: list[list], computed: dict[str, str],
+                 pandas_compat: bool = True) -> None:
+    """Add ``computed`` columns **in config order** to ``out``, a
+    projection of ``[name, sql, simple type]`` items: later expressions
+    may reference earlier targets (their text is inlined) and the key
+    replaces any existing column in place, case-insensitively, as
+    ``withColumn`` does (reference ``README.md:316-317``)."""
+    for target, expression in computed.items():
+        cols = {n.lower(): (sql if sql == ident(n) else f"({sql})",
+                            t in ("float", "double"))
+                for n, sql, t in out}
+        sql = _computed_sql(expression, cols, pandas_compat)
+        typ = "timestamp" if sql == "current_timestamp()" else "string"
+        hits = [c for c in out if c[0].lower() == target.lower()]
+        for c in hits:
+            c[:] = [target, sql, typ]
+        if not hits:
+            out.append([target, sql, typ])
 
 
 def with_computed_columns(df: DataFrame, computed: dict[str, str],
                           pandas_compat: bool = True) -> DataFrame:
-    """Apply computed columns **in config order**; later expressions may
-    reference earlier targets; the key overwrites any existing column
-    (reference ``README.md:316-317``)."""
-    for target, expression in computed.items():
-        df = df.withColumn(
-            target, computed_expr(expression, df.columns, pandas_compat,
-                                  dtypes=dict(df.dtypes)))
-    return df
+    """Apply computed columns **in config order** in one projection;
+    later expressions may reference earlier targets; the key overwrites
+    any existing column (reference ``README.md:316-317``)."""
+    out = [[n, ident(n), t] for n, t in df.dtypes]
+    put_computed(out, computed, pandas_compat)
+    return project(df, [(n, sql) for n, sql, _ in out])

@@ -96,6 +96,27 @@ def _count_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
+def _checkpoint_counted(delta: DataFrame
+                        ) -> tuple[DataFrame, dict[str, int]]:
+    """``delta`` localCheckpointed, and its rows per ``change_type``
+    (the types present, as ``operators.delta.delta_counts`` gives them),
+    counted by an Observation on the checkpoint's own pass."""
+    from data_warehouse_migrate_spark.sqltext import ident, sql_string
+
+    obs = Observation()
+    types = ("insert", "update", "delete", "unchanged")
+    cp = delta.observe(obs, *[
+        F.expr(f"count_if(change_type = {sql_string(t)}) AS {ident(t)}")
+        for t in types]).localCheckpoint()
+    return cp, {t: int(n) for t, n in obs.get.items() if n}
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint()``ed DataFrame now, not
+    when the JVM collects it; the DataFrame cannot be read after."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def _java_throwable_chain(err: Exception):
     """The Java cause chain of a Py4J / pyspark-captured exception
     (depth-capped — JDBC drivers occasionally build cyclic causes)."""
@@ -569,17 +590,19 @@ class MigrationJob:
 
     def _apply_changes(self, delta: DataFrame, keys: list[str], rewrite,
                        figures: tuple[int, float] | None = None,
-                       use_merge: bool = True) -> dict[str, Any]:
+                       use_merge: bool = True,
+                       counts: dict[str, int] | None = None
+                       ) -> dict[str, Any]:
         """The one apply step of both sync runners: count the
-        ``change_type``-marked ``delta`` and, if anything changed,
-        overwrite a file destination with ``rewrite()`` through
-        :meth:`_write`, or apply the delta keyed by ``keys`` to a JDBC
-        destination IN PLACE (``operators.delta.apply_delta_jdbc``),
-        persisting it for the count and the staged apply and
-        unpersisting it even when either fails. Returns the summary
-        fields it owns: ``delta_counts`` per change type,
-        ``rows_applied`` (the rows not 'unchanged') and, when it ran,
-        ``jdbc_apply``."""
+        ``change_type``-marked ``delta`` (unless the caller passes its
+        ``counts``) and, if anything changed, overwrite a file
+        destination with ``rewrite()`` through :meth:`_write`, or apply
+        the delta keyed by ``keys`` to a JDBC destination IN PLACE
+        (``operators.delta.apply_delta_jdbc``), persisting it for the
+        count and the staged apply and unpersisting it even when either
+        fails. Returns the summary fields it owns: ``delta_counts`` per
+        change type, ``rows_applied`` (the rows not 'unchanged') and,
+        when it ran, ``jdbc_apply``."""
         from pyspark import StorageLevel
 
         from data_warehouse_migrate_spark.operators import delta as ops
@@ -588,8 +611,9 @@ class MigrationJob:
         if jdbc:
             delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            counts = {r.change_type: int(r.n_rows)
-                      for r in ops.delta_counts(delta).collect()}
+            if counts is None:
+                counts = {r.change_type: int(r.n_rows)
+                          for r in ops.delta_counts(delta).collect()}
             out = {"delta_counts": counts,
                    "rows_applied": sum(n for t, n in counts.items()
                                        if t != "unchanged")}
@@ -638,7 +662,8 @@ class MigrationJob:
         :meth:`run_incremental`'s apply step (:meth:`_apply_changes`)
         applies those marks: a file sink rewrites the history
         (localCheckpointed first to break the read-then-overwrite
-        cycle), a JDBC table takes them IN PLACE by the staged MERGE.
+        cycle; the checkpoint's pass runs the fold once and counts the
+        marks), a JDBC table takes them IN PLACE by the staged MERGE.
         That finds a version by its key, so a JDBC history takes one
         change per key per ``batch_date``: a second raises
         ``ConfigurationError`` before anything is written, where a file
@@ -696,10 +721,16 @@ class MigrationJob:
         marked = ops._scd2_marked(hist, src, key_cols, tracked, batch_date,
                                   *_SCD2_COLS, close_deleted,
                                   unique_from=jdbc)
+        counts = None
+        if not jdbc:
+            # the rewrite overwrites the history the fold reads, so it
+            # writes a checkpoint of the marked history: the fold runs
+            # once, in the checkpoint's pass, which also counts the marks
+            marked, counts = _checkpoint_counted(marked)
         try:
             applied = self._apply_changes(
                 marked, [*key_cols, from_col],
-                lambda: marked.drop("change_type").localCheckpoint())
+                lambda: marked.drop("change_type"), counts=counts)
         except Exception as err:
             if not jdbc or ops._SCD2_SAME_DATE not in str(err):
                 raise
@@ -707,6 +738,9 @@ class MigrationJob:
                 f"{ops._SCD2_SAME_DATE} {batch_date}: a JDBC history keys "
                 f"versions by (key, {from_col}); nothing was written, fold "
                 f"the second change with a later batch_date") from None
+        finally:
+            if not jdbc:
+                _release_checkpoint(marked)
         counts = applied.pop("delta_counts")
         return {**out, **applied,
                 "versions_opened": counts.get("insert", 0),

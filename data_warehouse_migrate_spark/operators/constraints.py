@@ -11,6 +11,9 @@ Policies (reference ``migrator.py:616-679``):
 Scale note: ``fail`` needs one aggregate over the data (unavoidable — it is
 a data-quality gate); ``fill``/``skip`` stay narrow. The null-count
 aggregate is a single partial-aggregated pass, not per-column scans.
+The null counts, the ``fill`` projection and the default backfill are
+each issued as quoted Spark SQL text in one call
+(``data_warehouse_migrate_spark.sqltext``).
 """
 
 from __future__ import annotations
@@ -21,9 +24,14 @@ import re
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.exceptions import DataMigrationError
+from data_warehouse_migrate_spark.sqltext import (
+    ident,
+    project,
+    sql_literal,
+    sql_string,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -49,10 +57,14 @@ def null_counts(df: DataFrame, columns: list[str]) -> dict[str, int]:
     cols = [low[c.lower()] for c in columns if c.lower() in low]
     if not cols:
         return {}
-    row = df.agg(*[
-        F.sum(F.col(c).isNull().cast("long")).alias(c) for c in cols
-    ]).first()
-    return {c: int(row[c] or 0) for c in cols}
+    row = df.selectExpr(*[null_count_sql(c, f"null_{i}")
+                          for i, c in enumerate(cols)]).first()
+    return {c: int(row[f"null_{i}"] or 0) for i, c in enumerate(cols)}
+
+
+def null_count_sql(column: str, alias: str) -> str:
+    """The aggregate counting the NULLs of ``column``, as SQL text."""
+    return f"sum(CAST({ident(column)} IS NULL AS BIGINT)) AS {ident(alias)}"
 
 
 def apply_null_policy(df: DataFrame, non_nullable: list[str],
@@ -86,30 +98,24 @@ def apply_null_policy(df: DataFrame, non_nullable: list[str],
 
     if policy == "skip":
         # drop rows with NULL in ANY non-nullable column (migrator.py:666-674)
-        return df.na.drop(subset=cols)
+        return df.na.drop(subset=[ident(c) for c in cols])
 
     # fill
     types = {k.lower(): v for k, v in (dest_types or {}).items()}
-    exprs = []
-    for c in df.columns:
-        if c in cols:
-            dest_t = types.get(c.lower())
-            if dest_t is None or _FILLABLE_RE.search(dest_t):
-                dtype = dict(df.dtypes)[c]
-                if dtype == "string":
-                    exprs.append(F.coalesce(F.col(c), F.lit(sentinel)).alias(c))
-                elif dtype in ("date", "timestamp", "timestamp_ntz"):
-                    # date-ish sentinel: epoch (the reference fills '' which
-                    # MySQL coerces to zero-date; Spark needs a typed value)
-                    exprs.append(F.coalesce(
-                        F.col(c), F.lit("1970-01-01 00:00:00").cast(dtype)).alias(c))
-                else:
-                    exprs.append(F.col(c))  # numeric: intentionally unfilled
-            else:
-                exprs.append(F.col(c))
-        else:
-            exprs.append(F.col(c))
-    return df.select(*exprs)
+    out = []
+    for c, dtype in df.dtypes:
+        x = ident(c)
+        dest_t = types.get(c.lower())
+        if c in cols and (dest_t is None or _FILLABLE_RE.search(dest_t)):
+            if dtype == "string":
+                x = f"coalesce({x}, {sql_string(sentinel)})"
+            elif dtype in ("date", "timestamp", "timestamp_ntz"):
+                # date-ish sentinel: epoch (the reference fills '' which
+                # MySQL coerces to zero-date; Spark needs a typed value)
+                x = f"coalesce({x}, CAST('1970-01-01 00:00:00' AS {dtype}))"
+            # numeric: intentionally unfilled
+        out.append((c, x))
+    return project(df, out)
 
 
 # ---------------------------------------------------------------------------
@@ -174,7 +180,8 @@ def apply_defaults_backfill(df: DataFrame,
     (reference ``mysql_writer.py:69-96`` + ``migrator.py:509-535``).
     """
     low = {c.lower(): c for c in df.columns}
-    exprs = {c: F.col(c) for c in df.columns}
+    dtypes = dict(df.dtypes)
+    out = {c: ident(c) for c in df.columns}
     for col in dest_schema:
         name = low.get(str(col.get("name", "")).lower())
         if name is None or col.get("is_nullable", True) or col.get("default") is None:
@@ -182,6 +189,6 @@ def apply_defaults_backfill(df: DataFrame,
         val = parse_default_value(col["default"], str(col.get("type", "")))
         if val is None:
             continue
-        dtype = dict(df.dtypes)[name]
-        exprs[name] = F.coalesce(F.col(name), F.lit(val).cast(dtype)).alias(name)
-    return df.select(*[exprs[c].alias(c) for c in df.columns])
+        out[name] = (f"coalesce({ident(name)}, "
+                     f"CAST({sql_literal(val)} AS {dtypes[name]}))")
+    return project(df, out.items())

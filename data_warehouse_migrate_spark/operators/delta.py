@@ -28,6 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_warehouse_migrate_spark.sqltext import (
+    ident,
+    project,
+    sql_string,
+    sql_type,
+)
+
 # Spark JDBC reader/writer options that are NOT driver connection
 # properties (Spark DataSource option reference) — stripped before
 # building java.util.Properties for a raw DriverManager connection.
@@ -77,34 +84,26 @@ def snapshot_delta(source: DataFrame, dest: DataFrame,
     # explicit presence markers: inferring existence from key nullability
     # misclassifies NULL business keys (a NULL-key source row would look
     # "absent from source" and come out as delete/update noise)
-    s = source.withColumn("__in_s", F.lit(1)).alias("s")
-    d = dest.withColumn("__in_d", F.lit(1)).alias("d")
-    cond = None
-    for k in key_cols:
-        eq = F.col(f"s.{k}").eqNullSafe(F.col(f"d.{k}"))
-        cond = eq if cond is None else cond & eq
-    joined = s.join(d, cond, "full_outer")
+    s = source.selectExpr("*", "1 AS __in_s").alias("s")
+    d = dest.selectExpr("*", "1 AS __in_d").alias("d")
+    joined = s.join(d, F.expr(_keys_match("s", "d", key_cols)), "full_outer")
 
-    in_s = F.col("s.__in_s").isNotNull()
-    in_d = F.col("d.__in_d").isNotNull()
-    changed = None
-    for c in compare_cols:
-        ne = ~F.col(f"s.{c}").eqNullSafe(F.col(f"d.{c}"))
-        changed = ne if changed is None else changed | ne
-    if changed is None:
-        changed = F.lit(False)
+    changed = " OR ".join(f"NOT (s.{ident(c)} <=> d.{ident(c)})"
+                          for c in compare_cols) or "FALSE"
+    in_s, in_d = "(s.__in_s IS NOT NULL)", "(d.__in_d IS NOT NULL)"
+    change = (f"CASE WHEN {in_s} AND NOT {in_d} THEN 'insert' "
+              f"WHEN NOT {in_s} AND {in_d} THEN 'delete' "
+              f"WHEN {changed} THEN 'update' ELSE 'unchanged' END")
+    out = [(k, f"coalesce(s.{ident(k)}, d.{ident(k)})") for k in key_cols]
+    out += [(c, f"s.{ident(c)}") for c in source.columns
+            if c not in key_cols]
+    return project(joined, [*out, ("change_type", change)])
 
-    change = (F.when(in_s & ~in_d, F.lit("insert"))
-              .when(~in_s & in_d, F.lit("delete"))
-              .when(changed, F.lit("update"))
-              .otherwise(F.lit("unchanged")))
 
-    out_cols = [F.coalesce(F.col(f"s.{k}"), F.col(f"d.{k}")).alias(k)
-                for k in key_cols]
-    out_cols += [F.col(f"s.{c}").alias(c) for c in source.columns
-                 if c not in key_cols]
-    out_cols.append(change.alias("change_type"))
-    return joined.select(*out_cols)
+def _keys_match(left: str, right: str, key_cols: list[str]) -> str:
+    """Null-safe equality of ``key_cols`` between two aliased sides."""
+    return " AND ".join(f"{left}.{ident(k)} <=> {right}.{ident(k)}"
+                        for k in key_cols)
 
 
 def delta_counts(delta: DataFrame) -> DataFrame:
@@ -128,20 +127,17 @@ def apply_delta(dest: DataFrame, delta: DataFrame,
     matches and the stale destination row survives (duplicating on every
     sync).
     """
-    moves = delta.filter(F.col("change_type").isin("delete", "update"))
-    dd, mm = dest.alias("dd"), moves.select(*key_cols).alias("mm")
-    cond = None
-    for k in key_cols:
-        eq = F.col(f"dd.{k}").eqNullSafe(F.col(f"mm.{k}"))
-        cond = eq if cond is None else cond & eq
-    keep = dd.join(mm, cond, "left_anti")
+    moves = delta.filter("change_type IN ('delete', 'update')")
+    dd = dest.alias("dd")
+    mm = moves.selectExpr(*map(ident, key_cols)).alias("mm")
+    keep = dd.join(mm, F.expr(_keys_match("dd", "mm", key_cols)), "left_anti")
     return keep.unionByName(_upserts(dest, delta))
 
 
 def _upserts(dest: DataFrame, delta: DataFrame) -> DataFrame:
     """The insert/update rows of ``delta`` in ``dest``'s columns."""
-    return (delta.filter(F.col("change_type").isin("insert", "update"))
-            .select(*dest.columns))
+    return (delta.filter("change_type IN ('insert', 'update')")
+            .selectExpr(*map(ident, dest.columns)))
 
 
 def snapshot_from_source(source: DataFrame, dest: DataFrame,
@@ -163,8 +159,9 @@ def snapshot_from_source(source: DataFrame, dest: DataFrame,
     lacks raises ``AnalysisException`` here, as apply_delta would.
     """
     schema = dest.unionByName(_upserts(dest, delta)).schema
-    return source.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
-                           for f in schema.fields])
+    return project(source, [
+        (f.name, f"CAST({ident(f.name)} AS {sql_type(f.dataType)})")
+        for f in schema.fields])
 
 
 def _jdbc_connection(spark: SparkSession, jdbc_options: dict[str, str]):
@@ -377,45 +374,44 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
             f"not compared), list them in tracked_cols, or drop them "
             f"from history.")
 
-    cur = history.filter(F.col(cur_col))
+    cur = history.filter(ident(cur_col))
     delta = snapshot_delta(
-        updates.select(*key_cols, *tracked_cols, *extra),
-        cur.select(*key_cols, *tracked_cols),
+        updates.selectExpr(*map(ident, [*key_cols, *tracked_cols, *extra])),
+        cur.selectExpr(*map(ident, [*key_cols, *tracked_cols])),
         key_cols, compare_cols=tracked_cols)
 
     close_types = ["update"] + (["delete"] if close_deleted else [])
     # boolean markers: a string change_type here cost four more jobs
-    ct = F.col("change_type")
-    touched = (delta.filter(ct.isin("insert", *close_types))
-               .select(*key_cols, ct.isin(close_types).alias("__close"),
-                       ct.isin("insert", "update").alias("__open")))
+    closes = f"change_type IN ({', '.join(map(sql_string, close_types))})"
+    touched = (delta.filter(
+        f"change_type IN ({', '.join(map(sql_string, ['insert', *close_types]))})")
+        .selectExpr(*map(ident, key_cols), f"{closes} AS __close",
+                    "change_type IN ('insert', 'update') AS __open"))
 
     h, m = history.alias("h"), touched.alias("m")
-    cond = None
-    for k in key_cols:
-        eq = F.col(f"h.{k}").eqNullSafe(F.col(f"m.{k}"))
-        cond = eq if cond is None else cond & eq
-    batch = F.lit(batch_date).cast(dict(history.dtypes)[from_col])
-    closing = F.col(f"h.{cur_col}") & F.col("m.__close")
-    mark = F.when(closing, F.lit("update")).otherwise(F.lit("unchanged"))
+    dtypes = dict(history.dtypes)
+    batch = f"CAST({sql_string(batch_date)} AS {dtypes[from_col]})"
+    closing = f"(h.{ident(cur_col)} AND m.__close)"
+    mark = f"CASE WHEN {closing} THEN 'update' ELSE 'unchanged' END"
     if unique_from:
         # a version from batch_date of a key that opens one now
-        again = F.col("m.__open") & (F.col(f"h.{from_col}") == batch)
-        mark = F.when(again, F.raise_error(F.lit(
-            f"{_SCD2_SAME_DATE} {batch_date}"))).otherwise(mark)
-    kept = (h.join(m, cond, "left")
-            .select(*[F.col(f"h.{c}") for c in history.columns
-                      if c not in (to_col, cur_col)],
-                    F.when(closing, batch).otherwise(F.col(f"h.{to_col}"))
-                    .alias(to_col),
-                    F.when(closing, F.lit(False))
-                    .otherwise(F.col(f"h.{cur_col}")).alias(cur_col),
-                    mark.alias("change_type")))
+        again = f"(m.__open AND (h.{ident(from_col)} = {batch}))"
+        error = sql_string(f"{_SCD2_SAME_DATE} {batch_date}")
+        mark = f"CASE WHEN {again} THEN raise_error({error}) ELSE {mark} END"
+    kept = (h.join(m, F.expr(_keys_match("h", "m", key_cols)), "left")
+            .selectExpr(*[f"h.{ident(c)}" for c in history.columns
+                          if c not in (to_col, cur_col)],
+                        f"CASE WHEN {closing} THEN {batch} "
+                        f"ELSE h.{ident(to_col)} END AS {ident(to_col)}",
+                        f"CASE WHEN {closing} THEN FALSE "
+                        f"ELSE h.{ident(cur_col)} END AS {ident(cur_col)}",
+                        f"{mark} AS change_type"))
 
-    opened = (delta.filter(F.col("change_type").isin("insert", "update"))
-              .select(*key_cols, *tracked_cols, *extra)
-              .withColumn(from_col, batch)
-              .withColumn(to_col, F.lit(None).cast(dict(history.dtypes)[to_col]))
-              .withColumn(cur_col, F.lit(True))
-              .withColumn("change_type", F.lit("insert")))
-    return kept.unionByName(opened.select(*history.columns, "change_type"))
+    opened = (delta.filter("change_type IN ('insert', 'update')")
+              .selectExpr(*map(ident, [*key_cols, *tracked_cols, *extra]),
+                          f"{batch} AS {ident(from_col)}",
+                          f"CAST(NULL AS {dtypes[to_col]}) AS {ident(to_col)}",
+                          f"TRUE AS {ident(cur_col)}",
+                          "'insert' AS change_type"))
+    return kept.unionByName(
+        opened.selectExpr(*map(ident, history.columns), "change_type"))

@@ -3,8 +3,13 @@ order (the documented order, reference ``README.md:218``, data path
 ``migrator.py:827-977``).
 
 All name matching is case-insensitive (reference ``migrator.py:838-852``).
-The whole pipeline is narrow (one projection chain, no shuffle) — at 100 TB
-it runs entirely map-side inside whole-stage codegen.
+The whole pipeline is narrow (one projection, no shuffle) — at 100 TB
+it runs entirely map-side inside whole-stage codegen. Each stage is
+rendered as quoted Spark SQL text (``data_warehouse_migrate_spark
+.sqltext``) and :func:`apply_mapping` folds all five steps into ONE
+``selectExpr`` call: building them as ``Column`` objects, one ``select``
+per step, cost a py4j round trip per expression node (about 850 per
+run on the benchmark's 19-column mapping).
 """
 
 from __future__ import annotations
@@ -13,7 +18,6 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.exceptions import SchemaError
 from data_warehouse_migrate_spark.functions.computed import (
@@ -21,8 +25,9 @@ from data_warehouse_migrate_spark.functions.computed import (
     _CALL_RE,
     _split_args,
     _strip_quotes,
-    with_computed_columns,
+    put_computed,
 )
+from data_warehouse_migrate_spark.sqltext import ident, project, sql_literal
 
 
 class MappingError(SchemaError):
@@ -163,36 +168,33 @@ def apply_mapping(df: DataFrame, mapping: Mapping | dict | None,
     if validate:
         validate_mapping(mapping, df.columns)
 
-    low = _lower_map(df.columns)
+    # the projection so far: [name, sql, simple type] per output column
+    out = [[n, ident(n), t] for n, t in df.dtypes]
     # P1 include (keeps include-list order) / P2 exclude
     if mapping.include:
-        df = df.select(*[low[c.lower()] for c in mapping.include])
+        low = {c[0].lower(): c for c in out}
+        out = [list(low[c.lower()]) for c in mapping.include]
     if mapping.exclude:
         exc = {c.lower() for c in mapping.exclude}
-        keep = [c for c in df.columns if c.lower() not in exc]
-        df = df.select(*keep)
+        out = [c for c in out if c[0].lower() not in exc]
 
     # P3 rename (case-insensitive source matching)
-    if mapping.rename:
-        ren_low = {k.lower(): v for k, v in mapping.rename.items()}
-        actual = {c: ren_low[c.lower()] for c in df.columns if c.lower() in ren_low}
-        if actual:
-            df = df.withColumnsRenamed(actual)
+    ren_low = {k.lower(): v for k, v in mapping.rename.items()}
+    for c in out:
+        c[0] = ren_low.get(c[0].lower(), c[0])
 
     # F1-F6 computed, in config order, may chain
-    if mapping.computed:
-        df = with_computed_columns(df, mapping.computed, pandas_compat=pandas_compat)
+    put_computed(out, mapping.computed, pandas_compat=pandas_compat)
 
     # F13 defaults: fillna per configured column (app layer)
     if mapping.defaults:
-        low2 = _lower_map(df.columns)
-        dtypes = dict(df.dtypes)
-        exprs = []
-        fill = {low2[k.lower()]: v for k, v in mapping.defaults.items() if k.lower() in low2}
+        low = {c[0].lower(): c for c in out}
+        fill = {k.lower(): v for k, v in mapping.defaults.items()
+                if k.lower() in low}
         numeric_t = ("tinyint", "smallint", "int", "bigint",
                      "float", "double")
-        for c, v in fill.items():
-            t = dtypes[c]
+        for k, v in fill.items():
+            c, _, t = low[k]
             if (t in numeric_t or t.startswith("decimal")):
                 try:
                     float(str(v))
@@ -203,30 +205,23 @@ def apply_mapping(df: DataFrame, mapping: Mapping | dict | None,
                     # default doesn't fit its column
                     raise MappingError(
                         f"default {v!r} is not castable to {c!r}:{t}")
-        for c in df.columns:
-            if c in fill:
-                v = fill[c]
-                # try_cast: a runtime-surprise value (post-validation) must
-                # degrade to no-fill, never abort the batch (T3 contract)
-                exprs.append(F.coalesce(F.col(c),
-                                        F.lit(v).try_cast(dtypes[c])).alias(c))
-            else:
-                exprs.append(F.col(c))
-        df = df.select(*exprs)
+        for k, v in fill.items():
+            # try_cast: a runtime-surprise value (post-validation) must
+            # degrade to no-fill, never abort the batch (T3 contract)
+            c = low[k]
+            c[1] = f"coalesce({c[1]}, TRY_CAST({sql_literal(v)} AS {c[2]}))"
 
     # P4 order: listed columns first, remainder appended in original order
     if mapping.order:
-        low3 = _lower_map(df.columns)
-        ordered = [low3[c.lower()] for c in mapping.order if c.lower() in low3]
-        rest = [c for c in df.columns if c not in ordered]
-        df = df.select(*ordered, *rest)
-    return df
+        low = {c[0].lower(): c for c in out}
+        ordered = [low[c.lower()] for c in mapping.order if c.lower() in low]
+        out = ordered + [c for c in out if all(c is not o for o in ordered)]
+    return project(df, [(n, sql) for n, sql, _ in out])
 
 
 def project_to_destination(df: DataFrame, dest_columns: list[str]) -> DataFrame:
     """P5: keep only columns present in the destination table, reordered to
     destination column order (reference ``migrator.py:320-325``)."""
     low = _lower_map(df.columns)
-    keep = [low[c.lower()] for c in dest_columns if c.lower() in low]
-    return df.select(*[F.col(c).alias(d) for c, d in
-                       zip(keep, [c for c in dest_columns if c.lower() in low])])
+    return project(df, [(d, ident(low[d.lower()])) for d in dest_columns
+                        if d.lower() in low])

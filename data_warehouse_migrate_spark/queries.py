@@ -320,8 +320,8 @@ def q_string_preservation(spark, sf_dir):
     base = d.select("doc_id", tok.alias("code"))
     return base.select(
         "doc_id",
-        string_preserve_expr(F.col("code")).alias("preserved"),
-        string_preserve_expr(F.col("code"), preserve_null_tokens=False).alias("nulled"),
+        string_preserve_expr("code").alias("preserved"),
+        string_preserve_expr("code", preserve_null_tokens=False).alias("nulled"),
     )
 
 
@@ -350,7 +350,7 @@ def q_inf_cleanup(spark, sf_dir):
            .otherwise(F.col("l_extendedprice")))
     return (li.select("l_orderkey", "l_linenumber", raw.alias("raw"))
             .select("l_orderkey", "l_linenumber",
-                    inf_nan_to_null(F.col("raw")).alias("cleaned")))
+                    inf_nan_to_null("raw").alias("cleaned")))
 
 
 O_INF_CLEANUP = """

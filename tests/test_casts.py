@@ -23,7 +23,7 @@ def test_numeric_looking_strings_stay_strings(spark):
     # FIXTURES F2: status codes '0','1','2' must stay strings
     df = spark.createDataFrame(
         [(1, "0"), (2, "1"), (3, "2"), (4, None)], "id int, status string")
-    out = df.select("id", cast_expr_for_source_type(F.col("status"), "string").alias("status"))
+    out = df.select("id", cast_expr_for_source_type("status", "string").alias("status"))
     assert dict(out.dtypes)["status"] == "string"
     assert col1(out, "status") == ["0", "1", "2", None]
 
@@ -31,15 +31,15 @@ def test_numeric_looking_strings_stay_strings(spark):
 def test_string_null_tokens_preserved_by_default(spark):
     df = spark.createDataFrame(
         [(1, "nan"), (2, "None"), (3, "null"), (4, "<NA>"), (5, "x")], "id int, s string")
-    keep = df.select("id", string_preserve_expr(F.col("s")).alias("s"))
+    keep = df.select("id", string_preserve_expr("s").alias("s"))
     assert col1(keep, "s") == ["nan", "None", "null", "<NA>", "x"]
-    drop = df.select("id", string_preserve_expr(F.col("s"), preserve_null_tokens=False).alias("s"))
+    drop = df.select("id", string_preserve_expr("s", preserve_null_tokens=False).alias("s"))
     assert col1(drop, "s") == [None, None, None, None, "x"]
 
 
 def test_empty_string_to_null_flag(spark):
     df = spark.createDataFrame([(1, ""), (2, " "), (3, "a")], "id int, s string")
-    out = df.select("id", string_preserve_expr(F.col("s"), treat_empty_as_null=True).alias("s"))
+    out = df.select("id", string_preserve_expr("s", treat_empty_as_null=True).alias("s"))
     assert col1(out, "s") == [None, None, "a"]
 
 
@@ -48,11 +48,11 @@ def test_boolean_tokens(spark):
     rows = [(i, t) for i, t in enumerate(
         ["true", "1", "yes", "y", "false", "0", "no", "n", "", "TRUE ", " N", "maybe", None])]
     df = spark.createDataFrame(rows, "id int, tok string")
-    out = df.select("id", boolean_token_expr(F.col("tok")).alias("b"))
+    out = df.select("id", boolean_token_expr("tok").alias("b"))
     vals = col1(out, "b")
     assert vals == [True, True, True, True, False, False, False, False, False,
                     True, False, None, None]
-    legacy = df.select("id", boolean_token_expr(F.col("tok"), unknown_to_null=False).alias("b"))
+    legacy = df.select("id", boolean_token_expr("tok", unknown_to_null=False).alias("b"))
     vals2 = col1(legacy, "b")
     assert vals2[11] is False and vals2[12] is None  # unknown→False, NULL stays NULL
 
@@ -61,7 +61,7 @@ def test_int_cast_float_string(spark):
     # reference maxcompute_client.py:406-411: '1.0' → 1
     df = spark.createDataFrame(
         [(1, "1"), (2, "2.0"), (3, "notanint"), (4, None), (5, "1.7")], "id int, v string")
-    out = df.select("id", cast_expr_for_source_type(F.col("v"), "bigint").alias("v"))
+    out = df.select("id", cast_expr_for_source_type("v", "bigint").alias("v"))
     assert dict(out.dtypes)["v"] == "bigint"
     assert col1(out, "v") == [1, 2, None, None, 1]
 
@@ -70,7 +70,7 @@ def test_inf_nan_cleanup(spark):
     df = spark.createDataFrame(
         [(1, 1.5), (2, float("inf")), (3, float("-inf")), (4, float("nan")), (5, None)],
         "id int, v double")
-    out = df.select("id", inf_nan_to_null(F.col("v")).alias("v"))
+    out = df.select("id", inf_nan_to_null("v").alias("v"))
     assert col1(out, "v") == [1.5, None, None, None, None]
 
 
@@ -102,9 +102,9 @@ def test_decimal_and_datetime_casts(spark):
     df = spark.createDataFrame([("1.23", "2024-12-26 10:00:00", "2024-12-26")],
                                "d string, ts string, dt string")
     out = df.select(
-        cast_expr_for_source_type(F.col("d"), "decimal(10,2)").alias("d"),
-        cast_expr_for_source_type(F.col("ts"), "datetime").alias("ts"),
-        cast_expr_for_source_type(F.col("dt"), "date").alias("dt"),
+        cast_expr_for_source_type("d", "decimal(10,2)").alias("d"),
+        cast_expr_for_source_type("ts", "datetime").alias("ts"),
+        cast_expr_for_source_type("dt", "date").alias("dt"),
     )
     types = dict(out.dtypes)
     assert types["d"] == "decimal(10,2)"
@@ -117,9 +117,9 @@ def test_decimal_and_datetime_casts(spark):
 def test_cast_failure_never_raises(spark):
     df = spark.createDataFrame([("abc",), ("1",)], "v string")
     out = df.select(
-        cast_expr_for_source_type(F.col("v"), "bigint").alias("i"),
-        cast_expr_for_source_type(F.col("v"), "double").alias("f"),
-        cast_expr_for_source_type(F.col("v"), "date").alias("d"),
+        cast_expr_for_source_type("v", "bigint").alias("i"),
+        cast_expr_for_source_type("v", "double").alias("f"),
+        cast_expr_for_source_type("v", "date").alias("d"),
     )
     assert out.count() == 2  # no exception
 

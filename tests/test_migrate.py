@@ -573,18 +573,34 @@ def _spark_jobs(spark, fn):
     return out, len(jobs), tasks
 
 
-def test_run_and_verify_spark_job_counts(spark, tmp_path):
-    """Pinned Spark job and task counts on the nightly latest-partition
-    shape: 40 ``dt=`` partitions (over Spark's default 32-path
-    parallel-listing threshold), declared source types, a mapping,
-    destination defaults, the 'fail' null policy and the sized sink.
-    run() submits 8 jobs: the source's schema inference (the listing
-    stays on the driver), the LIMIT-1 probe of the newest ``dt=``, one
-    AQE shuffle + result pair each for the pre-write gate (null check and
-    sizing in one aggregate), the sized write and the destination count.
-    Its task total shows that no job fans out over the 40 directories.
-    verify() reuses that plan, so it submits only the destination's
-    schema read and one shuffle + result job per checksum."""
+def _py4j_round_trips(spark, fn):
+    """(fn(), py4j round trips it made), counted by wrapping the gateway
+    client's ``send_command``: every call into the JVM, building a plan
+    as much as running one, is one command. Releases of JVM objects
+    (the 'm' commands Python's collectors send) are left out: how many
+    land in a call depends on what earlier code left to free."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal n
+        n += not command.startswith("m\n")
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command  # the class's method again
+    return out, n
+
+
+def _daily_job(tmp_path):
+    """The nightly latest-partition shape: 40 ``dt=`` partitions (over
+    Spark's default 32-path parallel-listing threshold), declared source
+    types, a mapping, destination defaults, the 'fail' null policy and
+    the sized sink."""
     import datetime as dt
 
     import pyarrow as pa
@@ -601,7 +617,7 @@ def test_run_and_verify_spark_job_counts(spark, tmp_path):
                                  "cat": [f"c{j % 3}" for j in ids],
                                  "qty": [str(j) for j in ids]}),
                        part / "part-00000.parquet")
-    job = MigrationJob(
+    return MigrationJob(
         source_path=str(src), destination_path=str(tmp_path / "daily_dest"),
         mode="overwrite",
         source_schema=[ColumnSpec("id", "bigint"), ColumnSpec("cat", "string"),
@@ -619,11 +635,42 @@ def test_run_and_verify_spark_job_counts(spark, tmp_path):
              "default": "n/a"}],
         non_nullable=["id", "sku", "quantity"], null_policy="fail",
         partition_columns=["dt"], target_file_mb=1)
+
+
+def test_run_and_verify_spark_job_counts(spark, tmp_path):
+    """Pinned Spark job and task counts on :func:`_daily_job`'s nightly
+    shape. run() submits 8 jobs: the source's schema inference (the
+    listing stays on the driver), the LIMIT-1 probe of the newest
+    ``dt=``, one AQE shuffle + result pair each for the pre-write gate
+    (null check and sizing in one aggregate), the sized write and the
+    destination count. Its task total shows that no job fans out over
+    the 40 directories. verify() reuses that plan, so it submits only
+    the destination's schema read and one shuffle + result job per
+    checksum."""
+    job = _daily_job(tmp_path)
     out, run_jobs, run_tasks = _spark_jobs(spark, lambda: job.run(spark))
     assert out["rows_written"] == 20
     rep, verify_jobs, _ = _spark_jobs(spark, lambda: job.verify(spark))
     assert rep["verified"] is True and rep["source_rows"] == 20
     assert (run_jobs, run_tasks, verify_jobs) == (8, 8, 5)
+
+
+def test_run_and_verify_py4j_round_trips(spark, tmp_path):
+    """Each plan stage (casts, mapping, projection, backfill, the gate's
+    aggregate, the checksum) is built as SQL text in one py4j call, so
+    the round trips of a run() and a verify() on :func:`_daily_job`'s
+    shape stay near the fixed cost of reading, probing and writing
+    (276 and 55). Built as Column trees, one round trip per node, the
+    stages cost 888 and 831 here."""
+    job = _daily_job(tmp_path)
+    job.run(spark)  # warm: first-use lookups are not the stages' cost
+    job.verify(spark)
+    out, run_trips = _py4j_round_trips(spark, lambda: job.run(spark))
+    assert out["rows_written"] == 20
+    rep, verify_trips = _py4j_round_trips(spark, lambda: job.verify(spark))
+    assert rep["verified"] is True
+    assert run_trips <= 320 and verify_trips <= 80, (run_trips,
+                                                     verify_trips)
 
 
 def test_run_incremental_first_run_builds_plan_once(spark, tmp_path,
@@ -804,13 +851,10 @@ def test_run_incremental_null_safe_equal_and_converged(spark, tmp_path):
     assert math.copysign(1.0, values()[1]) == 1.0
 
 
-def test_run_incremental_spark_job_counts(spark, tmp_path):
-    """Pinned Spark jobs and tasks of a second-run run_incremental into a
-    file destination: the source's and the destination's schema
-    inference, four for the delta join's counting aggregate (a shuffle
-    job per join side, one for the grouping and a result job) and the
-    rewrite, whose plan reads the source alone. Nothing is cached or checkpointed, and the destination is
-    neither re-scanned nor anti-joined."""
+def _incremental_pair(spark, tmp_path):
+    """(a job factory over a 200-row source it has synced once, its
+    destination), with a changed source left in place: 190 rows
+    unchanged, 5 updated, 5 deleted and 5 inserted."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -833,19 +877,41 @@ def test_run_incremental_spark_job_counts(spark, tmp_path):
                            ColumnSpec("amount", "double")])
 
     job().run_incremental(spark, ["id"])
-    # 190 unchanged, 5 updated, 5 deleted, 5 inserted
     ids = list(range(5, 200)) + list(range(1000, 1005))
     pq.write_table(pa.table({"id": [str(i) for i in ids],
                              "name": [f"n{i}" if i % 39 else "changed"
                                       for i in ids],
                              "amount": [str(i / 4) for i in ids]}),
                    src / "part-00000.parquet")
+    return job, dst
+
+
+def test_run_incremental_spark_job_counts(spark, tmp_path):
+    """Pinned Spark jobs and tasks of a second-run run_incremental into a
+    file destination: the source's and the destination's schema
+    inference, four for the delta join's counting aggregate (a shuffle
+    job per join side, one for the grouping and a result job) and the
+    rewrite, whose plan reads the source alone. Nothing is cached or checkpointed, and the destination is
+    neither re-scanned nor anti-joined."""
+    job, dst = _incremental_pair(spark, tmp_path)
     out, jobs, tasks = _spark_jobs(
         spark, lambda: job().run_incremental(spark, ["id"]))
     assert out["delta_counts"] == {"unchanged": 190, "update": 5,
                                    "delete": 5, "insert": 5}
     assert spark.read.parquet(str(dst)).count() == 200
     assert (jobs, tasks) == (7, 7)
+
+
+def test_run_incremental_py4j_round_trips(spark, tmp_path):
+    """A second-run run_incremental builds its casts, its delta join and
+    its rewrite projection as SQL text, one py4j call each: 139 round
+    trips. Built as Column trees they cost 884 here."""
+    job, _ = _incremental_pair(spark, tmp_path)
+    out, trips = _py4j_round_trips(
+        spark, lambda: job().run_incremental(spark, ["id"]))
+    assert out["delta_counts"] == {"unchanged": 190, "update": 5,
+                                   "delete": 5, "insert": 5}
+    assert trips <= 170, trips
 
 
 def test_run_scd2_first_run_counts_on_the_write(spark, tmp_path):
@@ -908,14 +974,16 @@ def _sync_cost(spark, root, runner, before, sized=False, fail=True):
 def test_run_scd2_spark_job_counts(spark, tmp_path):
     """Pinned Spark jobs and tasks of a second-run run_scd2 into a file
     destination under the 'fail' null check: the fold marks the versions
-    it closes and opens, so the run counts that marked history and
-    rewrites it, with no second diff of the next history against the
-    current one and nothing persisted."""
+    it closes and opens, and the checkpoint the rewrite needs (it
+    overwrites the history the fold reads) runs the fold once and
+    counts those marks with an Observation. No second diff of the next
+    history against the current one, no count job and no second fold;
+    the checkpoint is released after the write."""
     out, jobs, tasks = _sync_cost(spark, tmp_path, "scd2", "changed")
     assert (out["versions_opened"], out["versions_closed"],
             out["history_rows"]) == (50, 50, 1050)
     assert spark.read.parquet(str(tmp_path / "dst")).count() == 1050
-    assert (jobs, tasks) == (14, 41)
+    assert (jobs, tasks) == (9, 26)
 
 
 @pytest.mark.parametrize("runner, before, fail, extra", [
@@ -1065,3 +1133,74 @@ def test_sized_write_under_fail_sizes_the_rows_written(spark, tmp_path,
     assert want == (2 if case == "scd2_first_run" else 1)
     assert files(fail=True) == want
 
+
+
+def test_hostile_column_names_migrate(spark, tmp_path):
+    """Every plan stage quotes the names it renders, so a column named
+    with a dot, a backtick, a space, quotes or non-ASCII characters is
+    one column everywhere: run() with declared types, a mapping, a
+    destination schema and the sized sink, verify(), run_incremental()
+    keyed by a dotted column and a file run_scd2(). A dotted name used
+    to resolve as a struct field (UNRESOLVED_COLUMN) and a backtick as
+    bad syntax."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_warehouse_migrate_spark.schema import ColumnSpec
+
+    key, odd, space, quotes, uni = ("id.k", "we`ird", "sp ace",
+                                    "quo'te\"d", "ünï 😀")
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def source(ids, changed=()):
+        pq.write_table(pa.table({
+            key: [str(i) for i in ids],
+            odd: ["chg" if i in changed else f"t{i}" for i in ids],
+            space: [f"s {i}" for i in ids],
+            quotes: [None if i == 3 else f"q'{i}\"" for i in ids],
+            uni: [str(i * 10) for i in ids]}), src / "part-0.parquet")
+
+    schema = [ColumnSpec(key, "bigint"), ColumnSpec(odd, "string"),
+              ColumnSpec(space, "string"), ColumnSpec(quotes, "string"),
+              ColumnSpec(uni, "bigint")]
+
+    def job(dest, **kw):
+        return MigrationJob(source_path=str(src),
+                            destination_path=str(tmp_path / dest),
+                            mode="overwrite", source_schema=schema, **kw)
+
+    source(range(20))
+    full = job(
+        "full", mapping={"rename": {space: "re.named"},
+                         "computed": {"c`c": f"concat({odd}, '-', re.named)"},
+                         "defaults": {quotes: "x'y"}},
+        dest_schema=[{"name": key, "type": "bigint", "is_nullable": False,
+                      "default": None},
+                     {"name": "c`c", "type": "varchar(16)",
+                      "is_nullable": True, "default": None},
+                     {"name": quotes, "type": "varchar(16)",
+                      "is_nullable": False, "default": "d"},
+                     {"name": uni, "type": "bigint", "is_nullable": True,
+                      "default": None}],
+        non_nullable=[key], null_policy="fail", target_file_mb=1)
+    assert full.run(spark)["rows_written"] == 20
+    assert full.verify(spark)["verified"] is True
+    got = {tuple(r) for r in spark.read.parquet(
+        str(tmp_path / "full")).collect()}
+    assert got == {(i, f"t{i}-s {i}", "x'y" if i == 3 else f"q'{i}\"",
+                    i * 10) for i in range(20)}
+
+    inc, scd = job("inc"), job("scd")
+    inc.run_incremental(spark, [key])
+    scd.run_scd2(spark, [key], batch_date="2024-01-01")
+    source(range(2, 25), changed={6, 9})
+    out = job("inc").run_incremental(spark, [key])
+    assert out["delta_counts"] == {"unchanged": 16, "update": 2,
+                                   "delete": 2, "insert": 5}
+    assert sorted(r[0] for r in spark.read.parquet(
+        str(tmp_path / "inc")).select(F.col(f"`{key}`")).collect()) == \
+        list(range(2, 25))
+    out = job("scd").run_scd2(spark, [key], batch_date="2024-02-01")
+    assert (out["versions_opened"], out["versions_closed"],
+            out["history_rows"]) == (7, 2, 27)

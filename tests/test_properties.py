@@ -5,7 +5,9 @@ One shared SparkSession; each property materializes a small DataFrame, so
 examples are capped for runtime.
 """
 
+import datetime
 import math
+import struct
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -28,7 +30,7 @@ FALSE_TOKENS = {"false", "0", "no", "n", ""}
                 min_size=1, max_size=8))
 def test_boolean_token_parse_matches_reference_rules(spark, tokens):
     df = spark.createDataFrame([(t,) for t in tokens], "s string")
-    got = [r.b for r in df.select(boolean_token_expr(F.col("s")).alias("b")).collect()]
+    got = [r.b for r in df.select(boolean_token_expr("s").alias("b")).collect()]
     for t, b in zip(tokens, got):
         norm = t.strip().lower()
         if norm in TRUE_TOKENS:
@@ -49,8 +51,8 @@ def test_boolean_token_parse_matches_reference_rules(spark, tokens):
 def test_string_preservation_is_identity_and_token_nulling(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "s string")
     out = df.select(
-        string_preserve_expr(F.col("s")).alias("keep"),
-        string_preserve_expr(F.col("s"), preserve_null_tokens=False).alias("drop"),
+        string_preserve_expr("s").alias("keep"),
+        string_preserve_expr("s", preserve_null_tokens=False).alias("drop"),
     ).collect()
     for v, r in zip(vals, out):
         # default mode: values pass through untouched (reference
@@ -69,7 +71,7 @@ def test_string_preservation_is_identity_and_token_nulling(spark, vals):
     min_size=1, max_size=8))
 def test_inf_nan_cleanup(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    got = [r.c for r in df.select(inf_nan_to_null(F.col("x")).alias("c")).collect()]
+    got = [r.c for r in df.select(inf_nan_to_null("x").alias("c")).collect()]
     for v, c in zip(vals, got):
         if v is None or math.isnan(v) or math.isinf(v):
             assert c is None
@@ -548,3 +550,96 @@ def test_builtin_decoder_containers_agree_with_luma_reference(data):
     bmp8 = (b"BM" + struct.pack("<IHHI", off + len(raster8), 0, 0, off)
             + dib8 + palb + raster8)
     check(dec(bmp8))
+
+
+# characters that break SQL text unless it is quoted: quotes, escapes,
+# printf/format syntax, control characters and non-BMP code points
+_HOSTILE = st.text(alphabet=st.sampled_from(
+    ["'", "\\", '"', "%", "{", "}", "\n", "\x00", "\U0001F600",
+     "\U0001D11E", "é", "x", "q"]), min_size=1, max_size=8)
+_NULL_TOKENS = {"nan", "none", "null", "<na>"}
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(values=st.lists(_HOSTILE, min_size=4, max_size=4),
+       tokens=st.lists(st.one_of(
+           st.sampled_from(["nan", "None", "NULL", "<NA>", "NaN"]),
+           st.tuples(st.sampled_from(["nan", "None"]),
+                     _HOSTILE.filter(lambda s: not s.isspace()))
+           .map("".join),
+           _HOSTILE), min_size=3, max_size=3),
+       flags=st.lists(st.one_of(
+           st.sampled_from(["yes", " Y\n", "0", "FALSE", "n", "", "ja"]),
+           _HOSTILE), min_size=3, max_size=3),
+       num=st.floats(allow_nan=False, allow_infinity=False),
+       day=st.dates(min_value=datetime.date(1900, 1, 1),
+                    max_value=datetime.date(2100, 12, 31)))
+def test_hostile_literals_reach_the_destination(spark, tmp_path_factory,
+                                                values, tokens, flags,
+                                                num, day):
+    """Every literal the migration path renders into SQL text — a
+    mapping default, typed destination defaults, the 'fill' sentinel,
+    a format template and the null and boolean tokens it compares
+    against — reaches the destination byte for byte, and each token
+    classifies as the Python model above says."""
+    from data_warehouse_migrate_spark.migrate import MigrationJob
+    from data_warehouse_migrate_spark.operators.constraints import (
+        parse_default_value,
+    )
+    from data_warehouse_migrate_spark.schema import ColumnSpec
+
+    mapping_default, dest_default, sentinel, text = values
+    # the computed language quotes its template with '"' and no escape;
+    # '{' and '}' are doubled to stand for themselves in str.format
+    text = text.replace('"', "")
+    template = text.replace("{", "{{").replace("}", "}}") + "{id}" + \
+        text.replace("{", "{{").replace("}", "}}")
+    root = tmp_path_factory.mktemp("hostile")
+    rows = [(i, tokens[i], flags[i], None if i == 0 else "a",
+             None if i == 1 else "b", None if i == 2 else "c", None, None)
+            for i in range(3)]
+    spark.createDataFrame(
+        rows, "id long, tok string, flag string, a string, b string, "
+              "c string, num double, day date").write.parquet(str(root / "src"))
+    dest_schema = [
+        {"name": "id", "type": "bigint", "is_nullable": False, "default": None},
+        {"name": "tok", "type": "varchar(64)", "is_nullable": True, "default": None},
+        {"name": "flag", "type": "tinyint(1)", "is_nullable": True, "default": None},
+        {"name": "a", "type": "varchar(64)", "is_nullable": True, "default": None},
+        {"name": "b", "type": "varchar(64)", "is_nullable": False,
+         "default": dest_default},
+        {"name": "c", "type": "varchar(64)", "is_nullable": True, "default": None},
+        {"name": "f", "type": "varchar(64)", "is_nullable": True, "default": None},
+        {"name": "num", "type": "double", "is_nullable": False,
+         "default": repr(num)},
+        {"name": "day", "type": "date", "is_nullable": False,
+         "default": day.isoformat()}]
+    job = MigrationJob(
+        source_path=str(root / "src"), destination_path=str(root / "dst"),
+        mode="overwrite",
+        source_schema=[ColumnSpec("id", "bigint"), ColumnSpec("tok", "string"),
+                       ColumnSpec("flag", "boolean"), ColumnSpec("a", "string"),
+                       ColumnSpec("b", "string"), ColumnSpec("c", "string")],
+        preserve_string_null_tokens=False,
+        mapping={"defaults": {"a": mapping_default},
+                 "computed": {"f": f'format("{template}")'}},
+        dest_schema=dest_schema,
+        non_nullable=["c"], null_policy="fill", null_fill_sentinel=sentinel)
+    assert job.run(spark)["rows_written"] == 3
+    got = {r.id: r for r in spark.read.parquet(str(root / "dst")).collect()}
+    b_default = parse_default_value(dest_default, "varchar(64)")
+    for i in range(3):
+        r = got[i]
+        tok = tokens[i]
+        assert r.tok == (None if tok.strip().lower() in _NULL_TOKENS
+                         else tok), (tok, r.tok)
+        norm = flags[i].strip().lower()
+        assert r.flag == (True if norm in TRUE_TOKENS else
+                          False if norm in FALSE_TOKENS else None)
+        assert r.a == (mapping_default if i == 0 else "a")
+        assert r.b == (b_default if i == 1 else "b")
+        assert r.c == (sentinel if i == 2 else "c")
+        assert r.f == template.format(id=i)
+        assert struct.pack("<d", r.num) == struct.pack("<d", num)
+        assert r.day == day
