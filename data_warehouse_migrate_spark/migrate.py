@@ -51,6 +51,7 @@ from data_warehouse_migrate_spark.sources.readers import (
     validate_table_access,
 )
 from data_warehouse_migrate_spark.sources.sinks import MigrationMode, write_table
+from data_warehouse_migrate_spark.sqltext import ident, sql_string
 
 logger = logging.getLogger(__name__)
 
@@ -96,19 +97,20 @@ def _count_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
-def _checkpoint_counted(delta: DataFrame
+def _checkpoint_counted(delta: DataFrame, **conditions: str
                         ) -> tuple[DataFrame, dict[str, int]]:
     """``delta`` localCheckpointed, and its rows per ``change_type``
-    (the types present, as ``operators.delta.delta_counts`` gives them),
+    (the types present, as ``operators.delta.delta_counts`` gives them)
+    plus, under each keyword, its rows that meet that SQL condition:
     counted by an Observation on the checkpoint's own pass."""
-    from data_warehouse_migrate_spark.sqltext import ident, sql_string
-
     obs = Observation()
     types = ("insert", "update", "delete", "unchanged")
-    cp = delta.observe(obs, *[
-        F.expr(f"count_if(change_type = {sql_string(t)}) AS {ident(t)}")
-        for t in types]).localCheckpoint()
-    return cp, {t: int(n) for t, n in obs.get.items() if n}
+    conditions = {**{t: f"change_type = {sql_string(t)}" for t in types},
+                  **conditions}
+    cp = delta.observe(obs, *[F.expr(f"count_if({c}) AS {ident(n)}")
+                              for n, c in conditions.items()]
+                       ).localCheckpoint()
+    return cp, {n: int(v) for n, v in obs.get.items() if v}
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -248,7 +250,8 @@ class MigrationJob:
         mapping = self._mapping()
         if not (mapping and mapping.type_override):
             return None
-        return ", ".join(f"{c} {t}" for c, t in mapping.type_override.items())
+        return ", ".join(f"{ident(c)} {t}"
+                         for c, t in mapping.type_override.items())
 
     def _read_source(self, spark: SparkSession) -> DataFrame:
         return read_table(spark, self.source_path, fmt=self.source_format,
@@ -598,17 +601,19 @@ class MigrationJob:
         ``counts``) and, if anything changed, overwrite a file
         destination with ``rewrite()`` through :meth:`_write`, or apply
         the delta keyed by ``keys`` to a JDBC destination IN PLACE
-        (``operators.delta.apply_delta_jdbc``), persisting it for the
-        count and the staged apply and unpersisting it even when either
-        fails. Returns the summary fields it owns: ``delta_counts`` per
-        change type, ``rows_applied`` (the rows not 'unchanged') and,
-        when it ran, ``jdbc_apply``."""
+        (``operators.delta.apply_delta_jdbc``). A JDBC delta counted
+        here is persisted for the count and the staged apply and
+        unpersisted even when either fails; a caller that passes
+        ``counts`` owns its delta's storage. Returns the summary fields
+        it owns: ``delta_counts`` per change type, ``rows_applied`` (the
+        rows not 'unchanged') and, when it ran, ``jdbc_apply``."""
         from pyspark import StorageLevel
 
         from data_warehouse_migrate_spark.operators import delta as ops
 
         jdbc = self.destination_format == "jdbc"
-        if jdbc:
+        persist = jdbc and counts is None
+        if persist:
             delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             if counts is None:
@@ -628,7 +633,7 @@ class MigrationJob:
                 self._write(rewrite(), MigrationMode.OVERWRITE, figures)
             return out
         finally:
-            if jdbc:
+            if persist:
                 delta.unpersist()
 
     # ------------------------------------------------------------------
@@ -641,8 +646,8 @@ class MigrationJob:
         ``tracked_cols`` + ``valid_from``/``valid_to``/``is_current``),
         and each run folds the transformed source snapshot into it via
         ``operators.delta.scd2_apply`` — changed keys close and reopen,
-        new keys insert, identical payloads are no-ops, prior versions
-        are never rewritten.
+        new keys insert, identical payloads are no-ops, and versions
+        closed by an earlier batch are never rewritten.
 
         First run (destination absent) initializes the history: every
         source row becomes version 1, valid from ``batch_date``. Like
@@ -656,18 +661,23 @@ class MigrationJob:
         refused under limit/partition pruning, where the source is a
         subset and every unseen key would be wrongly closed.
 
+        One ``batch_date`` may take many runs: a key changing again on
+        the date its current version opened rewrites that version in
+        place, and closing it as deleted removes it, so (business key,
+        ``valid_from``) is unique and no version is the empty
+        ``[batch_date, batch_date)``, on every destination.
+
         Apply strategy: the fold marks each version of the next history,
-        keyed by (business key, ``valid_from``), as closed this batch
-        ('update'), opened ('insert') or untouched, and
+        keyed by (business key, ``valid_from``), as opened ('insert'),
+        closed or rewritten ('update'), removed ('delete') or untouched,
+        in the pass of a checkpoint that also counts the marks, and
         :meth:`run_incremental`'s apply step (:meth:`_apply_changes`)
-        applies those marks: a file sink rewrites the history
-        (localCheckpointed first to break the read-then-overwrite
-        cycle; the checkpoint's pass runs the fold once and counts the
-        marks), a JDBC table takes them IN PLACE by the staged MERGE.
-        That finds a version by its key, so a JDBC history takes one
-        change per key per ``batch_date``: a second raises
-        ``ConfigurationError`` before anything is written, where a file
-        history keeps the zero-length version it closes.
+        applies them: a file sink rewrites the history from the
+        checkpoint (which breaks the read-then-overwrite cycle), a JDBC
+        table takes the changed versions IN PLACE by the staged MERGE.
+        ``versions_opened`` and ``versions_closed`` count the versions
+        added and the versions whose ``valid_to`` this batch set; a
+        rewrite or a removal counts in ``rows_applied`` only.
         """
         if close_deleted and (self.limit or self.partition_columns):
             raise ConfigurationError(
@@ -690,12 +700,13 @@ class MigrationJob:
         """The SCD2 fold core shared by :meth:`run_scd2` (batch) and
         :meth:`run_scd2_stream` (per micro-batch): read the destination
         history (absent → first-run initialize), fold ``src`` in with
-        the fold marking the versions it closes and opens, and apply
-        those through :meth:`_apply_changes`."""
+        the fold marking the versions it opens, closes, rewrites and
+        removes, checkpoint and count those, and apply them through
+        :meth:`_apply_changes`, the same way into files and JDBC."""
         from data_warehouse_migrate_spark.operators import delta as ops
 
         from_col, to_col, cur_col = _SCD2_COLS
-        clash = [c for c in src.columns if c in _SCD2_COLS]
+        clash = [c for c in src.columns if c.lower() in _SCD2_COLS]
         if clash:
             raise ConfigurationError(
                 f"source columns {clash} collide with SCD2 bookkeeping "
@@ -717,35 +728,27 @@ class MigrationJob:
         self._pre_write_gate(src)  # a rewrite sizes what it writes
         tracked = tracked_cols or [c for c in src.columns
                                    if c not in set(key_cols)]
-        jdbc = self.destination_format == "jdbc"
-        marked = ops._scd2_marked(hist, src, key_cols, tracked, batch_date,
-                                  *_SCD2_COLS, close_deleted,
-                                  unique_from=jdbc)
-        counts = None
-        if not jdbc:
-            # the rewrite overwrites the history the fold reads, so it
-            # writes a checkpoint of the marked history: the fold runs
-            # once, in the checkpoint's pass, which also counts the marks
-            marked, counts = _checkpoint_counted(marked)
+        # the fold runs once, in the pass of a checkpoint that counts its
+        # marks: a file rewrite overwrites the history the fold reads,
+        # and a JDBC apply stages the changed versions from it
+        marked, counts = _checkpoint_counted(
+            ops._scd2_marked(hist, src, key_cols, tracked, batch_date,
+                             *_SCD2_COLS, close_deleted),
+            closed=f"change_type = 'update' AND NOT {ident(cur_col)}")
+        closed = counts.pop("closed", 0)
         try:
             applied = self._apply_changes(
                 marked, [*key_cols, from_col],
-                lambda: marked.drop("change_type"), counts=counts)
-        except Exception as err:
-            if not jdbc or ops._SCD2_SAME_DATE not in str(err):
-                raise
-            raise ConfigurationError(
-                f"{ops._SCD2_SAME_DATE} {batch_date}: a JDBC history keys "
-                f"versions by (key, {from_col}); nothing was written, fold "
-                f"the second change with a later batch_date") from None
+                lambda: marked.filter("change_type <> 'delete'")
+                .drop("change_type"), counts=counts)
         finally:
-            if not jdbc:
-                _release_checkpoint(marked)
-        counts = applied.pop("delta_counts")
+            _release_checkpoint(marked)
+        del applied["delta_counts"]  # the counts passed in
         return {**out, **applied,
                 "versions_opened": counts.get("insert", 0),
-                "versions_closed": counts.get("update", 0),
-                "history_rows": sum(counts.values())}
+                "versions_closed": closed,
+                "history_rows": sum(counts.values())
+                - counts.get("delete", 0)}
 
     # ------------------------------------------------------------------
     def _drive_stream(self, spark: SparkSession, checkpoint_dir: str,
@@ -784,8 +787,9 @@ class MigrationJob:
         :meth:`run_scd2` run). ``batch_date=None`` stamps each batch
         with its processing UTC date (the usual always-on semantics);
         an explicit date pins every folded batch to one version date
-        (reproducible catch-up runs); a JDBC history takes one change
-        per key per date (see :meth:`run_scd2`). foreachBatch serializes
+        (reproducible catch-up runs); a key changing in two batches of
+        one date keeps one version from it (see :meth:`run_scd2`), on
+        every destination. foreachBatch serializes
         batches, so history read-fold-write cycles never interleave;
         at-least-once on crash between write and checkpoint commit, as
         with :meth:`run_stream` (an identical-payload replay is a

@@ -19,8 +19,9 @@ The delta is typically a small fraction of the corpus: a JDBC sink
 the corpus. A file sink has no in-place update, so its next snapshot is
 a full rewrite; ``snapshot_from_source`` builds it from the source alone,
 and the join only counts the changes. The SCD2 fold (``scd2_apply``)
-marks the versions it closes and opens as it builds the next history,
-so a sync applies its changes without diffing that history again.
+marks the versions it opens, closes, rewrites and removes as it builds
+the next history, so a sync applies its changes without diffing that
+history again.
 """
 
 from __future__ import annotations
@@ -50,9 +51,6 @@ _SPARK_ONLY_JDBC_KEYS = frozenset({
     "pushdowntablesample", "keytab", "principal", "refreshkrb5config",
     "connectionprovider", "prefertimestampntz", "driver",
 })
-
-# opens the error of a fold that keys by (key, valid_from), see _scd2_marked
-_SCD2_SAME_DATE = "an SCD2 key changed twice on batch_date"
 
 
 def snapshot_delta(source: DataFrame, dest: DataFrame,
@@ -313,17 +311,21 @@ def scd2_apply(history: DataFrame, updates: DataFrame,
 
       * changed tracked payload — the current version closes
         (``to_col`` = ``batch_date``, ``cur_col`` = false) and a new
-        current version opens at ``batch_date``;
+        current version opens at ``batch_date``; if the current version
+        itself opened at ``batch_date``, its payload is rewritten in
+        place instead;
       * new key — a first version opens;
       * identical payload — no-op (null-safe comparison, so
         NULL == NULL is unchanged).
 
     Keys absent from ``updates`` are untouched by default (partial
     snapshots); ``close_deleted=True`` treats ``updates`` as a FULL
-    snapshot and closes their current versions without a successor.
-    ``batch_date`` is an ISO date/timestamp string cast to ``from_col``'s
-    existing type, so one operator serves date- and timestamp-grained
-    histories.
+    snapshot and closes their current versions without a successor,
+    removing a version that opened at ``batch_date``. So (key,
+    ``from_col``) stays unique and no version is the empty interval
+    ``[batch_date, batch_date)``. ``batch_date`` is an ISO
+    date/timestamp string cast to ``from_col``'s existing type, so one
+    operator serves date- and timestamp-grained histories.
 
     UNTRACKED payload columns (history columns beyond ``key_cols`` ∪
     ``tracked_cols`` ∪ bookkeeping) are carried onto new versions from
@@ -335,29 +337,35 @@ def scd2_apply(history: DataFrame, updates: DataFrame,
 
     Beyond-reference surface: the reference ships whole tables
     (``migrator.py:210-224``, append or overwrite) — history tracking is
-    the warehouse-side feature its users hand-roll downstream. Built on
-    ``snapshot_delta``'s classification join. 100 TB shape: two
-    key-keyed shuffle joins (classification + close-marker) and a
-    union — no collects, no windows, no UDFs; with history and updates
-    bucketed on the key both exchanges vanish. History rows stay one
-    pass; only delta-sized data moves twice.
+    the warehouse-side feature its users hand-roll downstream. 100 TB
+    shape: one key-keyed shuffle join of history and updates and a
+    generator — no collects, no windows, no UDFs; with history and
+    updates bucketed on the key the exchange vanishes.
     """
-    return _scd2_marked(history, updates, key_cols, tracked_cols,
-                        batch_date, from_col, to_col, cur_col,
-                        close_deleted).drop("change_type")
+    return (_scd2_marked(history, updates, key_cols, tracked_cols,
+                         batch_date, from_col, to_col, cur_col,
+                         close_deleted)
+            .filter("change_type <> 'delete'").drop("change_type"))
 
 
 def _scd2_marked(history: DataFrame, updates: DataFrame,
                  key_cols: list[str], tracked_cols: list[str],
                  batch_date: str, from_col: str, to_col: str, cur_col: str,
-                 close_deleted: bool, unique_from: bool = False
-                 ) -> DataFrame:
-    """:func:`scd2_apply`'s next history plus the ``change_type`` of
-    each version, keyed by (key, ``from_col``): 'update' if this batch
-    closes it, 'insert' if it opens it, else 'unchanged' — a delta
-    ``apply_delta_jdbc`` applies as it stands while that key is unique.
-    A key changing twice on one ``batch_date`` leaves two versions from
-    it; with ``unique_from`` such a batch fails as its marks compute."""
+                 close_deleted: bool) -> DataFrame:
+    """:func:`scd2_apply`'s next history, plus the versions it removes,
+    with the ``change_type`` of each version keyed by (key,
+    ``from_col``): 'insert' if this batch opens it, 'update' if it
+    closes it or rewrites it in place, 'delete' if it removes it, else
+    'unchanged' — a delta ``apply_delta_jdbc`` applies as it stands.
+
+    A version that opened at ``batch_date`` is never closed: a change
+    rewrites its payload in place and ``close_deleted`` removes it. The
+    version ``[batch_date, batch_date)`` that closing it would leave
+    contains no instant, so no as-of answer changes.
+
+    One join: history FULL OUTER JOIN updates on the key and the history
+    version being current, so an update meets its key's current version
+    only; each joined row emits its versions through ``inline``."""
     # untracked payload columns ride along on new versions (sourced from
     # updates); change detection stays on tracked_cols only
     bookkeeping = {from_col, to_col, cur_col}
@@ -374,44 +382,43 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
             f"not compared), list them in tracked_cols, or drop them "
             f"from history.")
 
-    cur = history.filter(ident(cur_col))
-    delta = snapshot_delta(
-        updates.selectExpr(*map(ident, [*key_cols, *tracked_cols, *extra])),
-        cur.selectExpr(*map(ident, [*key_cols, *tracked_cols])),
-        key_cols, compare_cols=tracked_cols)
+    carried = [*key_cols, *tracked_cols, *extra]
+    # presence markers, as in snapshot_delta: a NULL key is still a key
+    h = history.selectExpr("*", "TRUE AS __in_h").alias("h")
+    u = updates.selectExpr(*map(ident, carried), "TRUE AS __in_u").alias("u")
+    joined = h.join(u, F.expr(f"{_keys_match('h', 'u', key_cols)} "
+                              f"AND h.{ident(cur_col)}"), "full_outer")
 
-    close_types = ["update"] + (["delete"] if close_deleted else [])
-    # boolean markers: a string change_type here cost four more jobs
-    closes = f"change_type IN ({', '.join(map(sql_string, close_types))})"
-    touched = (delta.filter(
-        f"change_type IN ({', '.join(map(sql_string, ['insert', *close_types]))})")
-        .selectExpr(*map(ident, key_cols), f"{closes} AS __close",
-                    "change_type IN ('insert', 'update') AS __open"))
-
-    h, m = history.alias("h"), touched.alias("m")
     dtypes = dict(history.dtypes)
     batch = f"CAST({sql_string(batch_date)} AS {dtypes[from_col]})"
-    closing = f"(h.{ident(cur_col)} AND m.__close)"
-    mark = f"CASE WHEN {closing} THEN 'update' ELSE 'unchanged' END"
-    if unique_from:
-        # a version from batch_date of a key that opens one now
-        again = f"(m.__open AND (h.{ident(from_col)} = {batch}))"
-        error = sql_string(f"{_SCD2_SAME_DATE} {batch_date}")
-        mark = f"CASE WHEN {again} THEN raise_error({error}) ELSE {mark} END"
-    kept = (h.join(m, F.expr(_keys_match("h", "m", key_cols)), "left")
-            .selectExpr(*[f"h.{ident(c)}" for c in history.columns
-                          if c not in (to_col, cur_col)],
-                        f"CASE WHEN {closing} THEN {batch} "
-                        f"ELSE h.{ident(to_col)} END AS {ident(to_col)}",
-                        f"CASE WHEN {closing} THEN FALSE "
-                        f"ELSE h.{ident(cur_col)} END AS {ident(cur_col)}",
-                        f"{mark} AS change_type"))
+    in_h, in_u = "(h.__in_h IS NOT NULL)", "(u.__in_u IS NOT NULL)"
+    diff = " OR ".join(f"NOT (h.{ident(c)} <=> u.{ident(c)})"
+                       for c in tracked_cols) or "FALSE"
+    changed = f"({in_h} AND {in_u} AND ({diff}))"
+    closes = (f"({changed} OR ({in_h} AND NOT {in_u} "
+              f"AND h.{ident(cur_col)}))" if close_deleted else changed)
+    same = f"(h.{ident(from_col)} = {batch})"
 
-    opened = (delta.filter("change_type IN ('insert', 'update')")
-              .selectExpr(*map(ident, [*key_cols, *tracked_cols, *extra]),
-                          f"{batch} AS {ident(from_col)}",
-                          f"CAST(NULL AS {dtypes[to_col]}) AS {ident(to_col)}",
-                          f"TRUE AS {ident(cur_col)}",
-                          "'insert' AS change_type"))
-    return kept.unionByName(
-        opened.selectExpr(*map(ident, history.columns), "change_type"))
+    def version(values: dict[str, str]) -> str:
+        """A version as a struct: ``values`` by column, else history's."""
+        return "named_struct({})".format(", ".join(
+            f"{sql_string(c)}, {values.get(c, f'h.{ident(c)}')}"
+            for c in [*history.columns, "change_type"]))
+
+    old = version({to_col: f"CASE WHEN {closes} THEN {batch} "
+                           f"ELSE h.{ident(to_col)} END",
+                   cur_col: f"CASE WHEN {closes} THEN FALSE "
+                            f"ELSE h.{ident(cur_col)} END",
+                   "change_type": f"CASE WHEN {closes} AND {same} THEN "
+                                  f"'delete' WHEN {closes} THEN 'update' "
+                                  f"ELSE 'unchanged' END"})
+    new = version({**{c: f"u.{ident(c)}" for c in carried},
+                   from_col: batch,
+                   to_col: f"CAST(NULL AS {dtypes[to_col]})",
+                   cur_col: "TRUE",
+                   "change_type": f"CASE WHEN {same} THEN 'update' "
+                                  f"ELSE 'insert' END"})
+    return joined.selectExpr(
+        f"inline(CASE WHEN NOT {in_h} OR ({changed} AND {same}) "
+        f"THEN array({new}) WHEN {changed} THEN array({old}, {new}) "
+        f"ELSE array({old}) END)")

@@ -468,18 +468,17 @@ def test_failing_jdbc_apply_leaves_nothing_cached(spark, derby_opts,
     assert not (rdd_ids() - before)
 
 
-def test_scd2_jdbc_takes_one_change_per_key_per_batch_date(
+def test_scd2_jdbc_history_equals_file_history_on_one_date(
         spark, derby_opts, tmp_path):
-    """A JDBC history is applied in place keyed by (k, valid_from), so it
-    takes one change of a key per batch_date. A key's first change on a
-    date, a new key on that date and a key closing as deleted on the
-    date it opened leave the table as a file history of the same runs.
-    A second change of one key on one date, or a key reopening on the
-    date it closed, raises ConfigurationError before anything is
-    written: a MERGE on (k, valid_from) would otherwise overwrite the
-    version it closed that date."""
-    from data_warehouse_migrate_spark.exceptions import ConfigurationError
-
+    """A JDBC history, applied in place keyed by (k, valid_from), and a
+    file history of the same runs hold the same rows and report the same
+    counts after every run. On one date: a key's first change closes
+    its version, its second and third rewrite the version it opened in
+    place, a new key opens one, closing as deleted removes a version
+    opened that date and closes an older one, and keys reopening on the
+    date they closed open a version from it. No version is the empty
+    [d, d), which a JDBC history used to refuse and a file history to
+    keep."""
     src = str(tmp_path / "same_src.parquet")
     jdbc = MigrationJob(source_path=src, destination_path="t_scd2_same",
                         destination_format="jdbc",
@@ -495,22 +494,58 @@ def test_scd2_jdbc_takes_one_change_per_key_per_batch_date(
     def sync(job, rows, day, **kw):
         spark.createDataFrame(rows, "k long, v string").write.mode(
             "overwrite").parquet(src)
-        return job.run_scd2(spark, ["k"], batch_date=day, **kw)
+        out = job.run_scd2(spark, ["k"], batch_date=day, **kw)
+        return tuple(out.get(c) for c in ("versions_opened",
+                                          "versions_closed",
+                                          "rows_applied", "history_rows"))
 
-    for rows, day, kw in [
-            ([(1, "A"), (2, "B")], "2026-01-01", {}),
-            ([(1, "A"), (2, "B2")], "2026-02-01", {}),
-            ([(1, "A"), (2, "B2"), (3, "C")], "2026-02-01", {}),
-            ([(1, "A"), (2, "B2")], "2026-02-01", {"close_deleted": True})]:
-        for job in (jdbc, files):
-            sync(job, rows, day, **kw)
+    day = "2026-02-01"
+    for rows, d, kw, counts in [
+            ([(1, "A"), (2, "B")], "2026-01-01", {}, (2, 0, None, 2)),
+            ([(1, "A"), (2, "B2")], day, {}, (1, 1, 2, 3)),
+            ([(1, "A"), (2, "B3"), (3, "C")], day, {}, (1, 0, 2, 4)),
+            ([(1, "A"), (2, "B4"), (3, "C")], day, {}, (0, 0, 1, 4)),
+            ([(2, "B4")], day, {"close_deleted": True}, (0, 1, 2, 3)),
+            ([(1, "A2"), (2, "B4"), (3, "C2")], day, {}, (2, 0, 2, 5))]:
+        assert [sync(job, rows, d, **kw) for job in (jdbc, files)] == [
+            counts, counts]
         assert history(_read(spark, derby_opts, "t_scd2_same")) == history(
             spark.read.parquet(str(tmp_path / "same_hist")))
-    before = history(_read(spark, derby_opts, "t_scd2_same"))
-    assert ((3, "C", "2026-02-01", "2026-02-01", False) in before
-            and (2, "B2", "2026-02-01", "None", True) in before)
+    assert history(_read(spark, derby_opts, "t_scd2_same")) == [
+        (1, "A", "2026-01-01", day, False),
+        (1, "A2", day, "None", True),
+        (2, "B", "2026-01-01", day, False),
+        (2, "B4", day, "None", True),
+        (3, "C2", day, "None", True)]
 
-    for rows in ([(1, "A"), (2, "B3")], [(1, "A"), (2, "B2"), (3, "C")]):
-        with pytest.raises(ConfigurationError, match="changed twice"):
-            sync(jdbc, rows, "2026-02-01")
-        assert history(_read(spark, derby_opts, "t_scd2_same")) == before
+
+def test_scd2_stream_jdbc_takes_two_changes_of_a_key_on_one_day(
+        spark, derby_opts, tmp_path):
+    """run_scd2_stream into a JDBC history, two micro-batches changing
+    one key on one day: the first closes the key's version and opens
+    one from that day, the second rewrites that version in place. The
+    second used to stop the stream with a refusal."""
+    import shutil
+
+    src = str(tmp_path / "scd_stream_src")
+    ckpt = str(tmp_path / "ckpt")
+    job = MigrationJob(source_path=src, destination_path="t_scd2_stream",
+                       destination_format="jdbc",
+                       destination_jdbc=derby_opts, mode="append")
+
+    def arrive(rows, day):
+        spark.createDataFrame(rows, "k long, v string").coalesce(1).write \
+            .mode("append").parquet(src)
+        shutil.rmtree(f"{src}/_spark_metadata", ignore_errors=True)
+        out = job.run_scd2_stream(spark, ckpt, ["k"], batch_date=day)
+        return out["batches"], out["versions_opened"], out["versions_closed"]
+
+    assert arrive([(1, "A"), (2, "B")], "2026-01-01") == (1, 2, 0)
+    assert arrive([(1, "A2")], "2026-02-01") == (1, 1, 1)
+    assert arrive([(1, "A3")], "2026-02-01") == (1, 0, 0)
+    rows = sorted((r.k, r.v, str(r.valid_from), str(r.valid_to),
+                   bool(r.is_current))
+                  for r in _read(spark, derby_opts, "t_scd2_stream").collect())
+    assert rows == [(1, "A", "2026-01-01", "2026-02-01", False),
+                    (1, "A3", "2026-02-01", "None", True),
+                    (2, "B", "2026-01-01", "None", True)]

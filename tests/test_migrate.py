@@ -165,7 +165,7 @@ def test_type_override_reaches_jdbc_writer(spark, orders_path, monkeypatch):
         mapping={"include": ["o_orderkey", "o_orderstatus"],
                  "type_override": {"o_orderstatus": "VARCHAR(255)"}})
     out = job.run(spark)
-    assert seen["ctypes"] == "o_orderstatus VARCHAR(255)"
+    assert seen["ctypes"] == "`o_orderstatus` VARCHAR(255)"
     assert out["rows_written"] > 0
     assert out["destination_rows"] is None  # no post-write JDBC full scan
 
@@ -949,17 +949,30 @@ def _write_sync_source(path, changed):
                   for i in ids]}), path / f"part-{f}.parquet")
 
 
-def _sync_cost(spark, root, runner, before, sized=False, fail=True):
+def _derby_options(root):
+    """Connection options of an embedded Derby database under ``root``
+    (Derby ships in Spark's jars)."""
+    return {"url": f"jdbc:derby:{root / 'derby'};create=true",
+            "driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
+
+
+def _sync_cost(spark, root, runner, before, sized=False, fail=True,
+               jdbc=False):
     """(result, Spark jobs, tasks) of one ``runner`` sync ('incremental'
-    or 'scd2') on :func:`_write_sync_source`'s source under ``root``.
+    or 'scd2') on :func:`_write_sync_source`'s source under ``root``,
+    into files or, with ``jdbc``, into a Derby table.
     ``before``: None measures a first run; 'same' or 'changed' measures
     the run after a first one, on the same or the changed source."""
     kw = dict(non_nullable=["id"], null_policy="fail") if fail else {}
+    if jdbc:
+        kw.update(destination_path="t_sync", destination_format="jdbc",
+                  destination_jdbc=_derby_options(root))
+    else:
+        kw.update(destination_path=str(root / "dst"))
 
     def sync(batch_date):
-        job = MigrationJob(source_path=str(root / "src"),
-                           destination_path=str(root / "dst"),
-                           mode="overwrite", target_file_mb=int(sized), **kw)
+        job = MigrationJob(source_path=str(root / "src"), mode="overwrite",
+                           target_file_mb=int(sized), **kw)
         if runner == "incremental":
             return job.run_incremental(spark, ["id"])
         return job.run_scd2(spark, ["id"], batch_date=batch_date)
@@ -973,17 +986,34 @@ def _sync_cost(spark, root, runner, before, sized=False, fail=True):
 
 def test_run_scd2_spark_job_counts(spark, tmp_path):
     """Pinned Spark jobs and tasks of a second-run run_scd2 into a file
-    destination under the 'fail' null check: the fold marks the versions
-    it closes and opens, and the checkpoint the rewrite needs (it
-    overwrites the history the fold reads) runs the fold once and
-    counts those marks with an Observation. No second diff of the next
-    history against the current one, no count job and no second fold;
-    the checkpoint is released after the write."""
+    destination under the 'fail' null check: the fold is one join of the
+    history and the source that marks the versions it closes and opens,
+    and the checkpoint the rewrite needs (it overwrites the history the
+    fold reads) runs the fold once and counts those marks with an
+    Observation. No second diff of the next history against the current
+    one, no count job and no second fold; the checkpoint is released
+    after the write. It was 9 jobs / 26 tasks while the fold joined the
+    source to the current versions and that result to the history."""
     out, jobs, tasks = _sync_cost(spark, tmp_path, "scd2", "changed")
     assert (out["versions_opened"], out["versions_closed"],
             out["history_rows"]) == (50, 50, 1050)
     assert spark.read.parquet(str(tmp_path / "dst")).count() == 1050
-    assert (jobs, tasks) == (9, 26)
+    assert (jobs, tasks) == (8, 17)
+
+
+def test_run_scd2_jdbc_spark_job_counts(spark, tmp_path):
+    """The same second-run run_scd2 into a Derby table takes the same
+    path as into files: the checkpoint's pass runs the fold and counts
+    its marks, and the staged MERGE reads the changed versions from the
+    checkpoint, which is not cached a second time. It was 12 jobs / 39
+    tasks while a JDBC history was persisted and counted on a path of
+    its own."""
+    out, jobs, tasks = _sync_cost(spark, tmp_path, "scd2", "changed",
+                                  jdbc=True)
+    assert (out["versions_opened"], out["versions_closed"],
+            out["history_rows"]) == (50, 50, 1050)
+    assert out["jdbc_apply"] == {"staged": 100, "applied": 100}
+    assert (jobs, tasks) == (7, 13)
 
 
 @pytest.mark.parametrize("runner, before, fail, extra", [
@@ -1008,9 +1038,9 @@ def test_sized_sync_takes_the_gate_figures(spark, tmp_path, runner, before,
 
 def test_run_scd2_counts_come_from_the_fold(spark, tmp_path):
     """Re-running run_scd2 with the same batch_date after one key's
-    payload changed closes that key's version and opens its successor on
-    the same date: one version opened and one closed, as the fold did,
-    and the history holds both."""
+    payload changed rewrites the version that key opened on that date in
+    place: no version opened or closed, one row applied, and the history
+    holds no empty version [d, d)."""
     import datetime as dt
 
     src, dst = str(tmp_path / "same_src"), str(tmp_path / "same_hist")
@@ -1024,14 +1054,13 @@ def test_run_scd2_counts_come_from_the_fold(spark, tmp_path):
 
     sync([(1, "a"), (2, "b"), (3, "c")])
     out = sync([(1, "a"), (2, "B"), (3, "c")])
-    assert (out["versions_opened"], out["versions_closed"]) == (1, 1)
-    assert out["history_rows"] == 4
+    assert (out["versions_opened"], out["versions_closed"],
+            out["rows_applied"], out["history_rows"]) == (0, 0, 1, 3)
     day = dt.date(2024, 1, 1)
     got = sorted(map(tuple, spark.read.parquet(dst).select(
         "k", "v", "valid_from", "valid_to", "is_current").collect()),
         key=repr)
     assert got == sorted([(1, "a", day, None, True),
-                          (2, "b", day, day, False),
                           (2, "B", day, None, True),
                           (3, "c", day, None, True)], key=repr)
 
@@ -1140,9 +1169,10 @@ def test_hostile_column_names_migrate(spark, tmp_path):
     with a dot, a backtick, a space, quotes or non-ASCII characters is
     one column everywhere: run() with declared types, a mapping, a
     destination schema and the sized sink, verify(), run_incremental()
-    keyed by a dotted column and a file run_scd2(). A dotted name used
-    to resolve as a struct field (UNRESOLVED_COLUMN) and a backtick as
-    bad syntax."""
+    keyed by a dotted column, a file run_scd2() and a JDBC run() with a
+    type_override. A dotted name used to resolve as a struct field
+    (UNRESOLVED_COLUMN), a backtick as bad syntax and a type_override
+    on a spaced name failed to parse."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1204,3 +1234,22 @@ def test_hostile_column_names_migrate(spark, tmp_path):
     out = job("scd").run_scd2(spark, [key], batch_date="2024-02-01")
     assert (out["versions_opened"], out["versions_closed"],
             out["history_rows"]) == (7, 2, 27)
+
+    # a JDBC table takes a type_override by its quoted name
+    from data_warehouse_migrate_spark.operators.delta import _jdbc_connection
+
+    opts = _derby_options(tmp_path)
+    out = MigrationJob(
+        source_path=str(src), destination_path="t_hostile",
+        destination_format="jdbc", destination_jdbc=opts, mode="overwrite",
+        source_schema=schema,
+        mapping={"type_override": {space: "VARCHAR(20)"}}).run(spark)
+    assert out["rows_written"] == 23
+    conn = _jdbc_connection(spark, opts)
+    try:
+        col = conn.getMetaData().getColumns(None, None, "T_HOSTILE", space)
+        assert col.next()
+        assert (col.getString("TYPE_NAME"), col.getInt("COLUMN_SIZE")) == (
+            "VARCHAR", 20)
+    finally:
+        conn.close()

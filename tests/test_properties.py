@@ -9,7 +9,7 @@ import datetime
 import math
 import struct
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.functions.casts import (
@@ -48,6 +48,7 @@ def test_boolean_token_parse_matches_reference_rules(spark, tokens):
     st.text(alphabet=st.characters(codec="ascii", exclude_characters="\x00"),
             max_size=10)),
     min_size=1, max_size=8))
+@example([" nan", "null\t", "NaN"])
 def test_string_preservation_is_identity_and_token_nulling(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "s string")
     out = df.select(
@@ -58,7 +59,9 @@ def test_string_preservation_is_identity_and_token_nulling(spark, vals):
         # default mode: values pass through untouched (reference
         # preserve_string_null_tokens=true)
         assert r.keep == v
-        if v is not None and v.strip().lower() in {"nan", "none", "null", "<na>"}:
+        # a token matches case-insensitively and unpadded (SURVEY F10:
+        # c.isin(tokens)); " nan" is a value, not a token
+        if v is not None and v.lower() in {"nan", "none", "null", "<na>"}:
             assert r.drop is None
         else:
             assert r.drop == v
@@ -348,6 +351,42 @@ def test_scd2_apply_invariants(spark, initial, update):
     assert again.filter("valid_from = '2026-06-01'").count() == 0
 
 
+_SCD2_STEP = st.tuples(
+    st.booleans(),  # the snapshot's date is the day after the last one's
+    st.dictionaries(st.integers(min_value=0, max_value=4),
+                    st.integers(min_value=0, max_value=2), max_size=5))
+
+
+@settings(**dict(_SETTINGS, max_examples=8))
+@given(st.lists(_SCD2_STEP, min_size=2, max_size=5))
+@example([(False, {0: 0, 1: 0}), (False, {0: 1, 2: 0}),
+          (False, {0: 2, 1: 1}), (False, {1: 1}), (False, {0: 0, 1: 1}),
+          (True, {0: 0})])
+def test_scd2_history_as_of_each_date_is_its_last_snapshot(spark, steps):
+    """Full snapshots folded on non-decreasing dates, many on one date:
+    the history as of each date is the last snapshot folded at or before
+    it, (key, valid_from) is unique and no version is empty."""
+    from data_warehouse_migrate_spark.operators.delta import scd2_apply
+
+    cols = "k int, v int, valid_from date, valid_to date, is_current boolean"
+    day, last = datetime.date(2026, 1, 1), {}
+    hist = spark.createDataFrame([], cols)
+    for later, snap in steps:
+        day += datetime.timedelta(days=int(later))
+        upd = spark.createDataFrame(list(snap.items()), "k int, v int")
+        rows = scd2_apply(hist, upd, ["k"], ["v"], day.isoformat(),
+                          close_deleted=True).collect()
+        hist = spark.createDataFrame(rows, cols)
+        last[day] = snap
+    starts = [(r.k, r.valid_from) for r in rows]
+    assert len(starts) == len(set(starts))
+    assert all(r.valid_to is None or r.valid_from < r.valid_to
+               for r in rows)
+    for d, snap in last.items():
+        assert {r.k: r.v for r in rows if r.valid_from <= d and
+                (r.valid_to is None or d < r.valid_to)} == snap, d
+
+
 _WORDS = st.lists(st.sampled_from(["aa", "bb", "cc", "dd", "ee"]),
                   min_size=3, max_size=10)
 
@@ -575,6 +614,8 @@ _NULL_TOKENS = {"nan", "none", "null", "<na>"}
        num=st.floats(allow_nan=False, allow_infinity=False),
        day=st.dates(min_value=datetime.date(1900, 1, 1),
                     max_value=datetime.date(2100, 12, 31)))
+@example(values=["a", "b", "c", "d"], tokens=[" nan", "null\t", "None"],
+         flags=["yes", "0", "ja"], num=1.5, day=datetime.date(2024, 1, 1))
 def test_hostile_literals_reach_the_destination(spark, tmp_path_factory,
                                                 values, tokens, flags,
                                                 num, day):
@@ -632,7 +673,7 @@ def test_hostile_literals_reach_the_destination(spark, tmp_path_factory,
     for i in range(3):
         r = got[i]
         tok = tokens[i]
-        assert r.tok == (None if tok.strip().lower() in _NULL_TOKENS
+        assert r.tok == (None if tok.lower() in _NULL_TOKENS
                          else tok), (tok, r.tok)
         norm = flags[i].strip().lower()
         assert r.flag == (True if norm in TRUE_TOKENS else

@@ -477,6 +477,28 @@ def test_run_scd2_guards(spark, tmp_path):
         job2.run_scd2(spark, ["k"], batch_date="2026-01-01")
 
 
+def test_run_scd2_refuses_bookkeeping_names_in_any_case(spark, tmp_path):
+    """The engine resolves names case-insensitively, and so does the
+    bookkeeping clash check: a source column Valid_From is refused
+    before anything is written. Let through, the first run replaced its
+    values with the batch date and the second failed with
+    AMBIGUOUS_REFERENCE."""
+    import pytest as _pytest
+
+    from data_warehouse_migrate_spark.exceptions import ConfigurationError
+    from data_warehouse_migrate_spark.migrate import MigrationJob
+
+    src = str(tmp_path / "vf.parquet")
+    spark.createDataFrame([(1, "2020-05-05")],
+                          "k long, Valid_From string").write.parquet(src)
+    dst = tmp_path / "vf_hist.parquet"
+    job = MigrationJob(source_path=src, destination_path=str(dst),
+                       mode="overwrite")
+    with _pytest.raises(ConfigurationError, match="Valid_From"):
+        job.run_scd2(spark, ["k"], batch_date="2026-01-01")
+    assert not dst.exists()
+
+
 def test_funnel_strict_order(spark):
     from data_warehouse_migrate_spark.operators.analytics import (
         funnel_counts,
