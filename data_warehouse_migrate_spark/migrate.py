@@ -98,19 +98,19 @@ def _count_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
 
 
 def _checkpoint_counted(delta: DataFrame, **conditions: str
-                        ) -> tuple[DataFrame, dict[str, int]]:
-    """``delta`` localCheckpointed, and its rows per ``change_type``
-    (the types present, as ``operators.delta.delta_counts`` gives them)
-    plus, under each keyword, its rows that meet that SQL condition:
-    counted by an Observation on the checkpoint's own pass."""
+                        ) -> tuple[DataFrame, dict[str, int], dict[str, int]]:
+    """``delta`` localCheckpointed, its rows per ``change_type`` (each
+    type, zero included) and, under each keyword, its rows that meet
+    that SQL condition: all counted by an Observation on the
+    checkpoint's own pass."""
     obs = Observation()
-    types = ("insert", "update", "delete", "unchanged")
-    conditions = {**{t: f"change_type = {sql_string(t)}" for t in types},
-                  **conditions}
+    types = {t: f"change_type = {sql_string(t)}"
+             for t in ("insert", "update", "delete", "unchanged")}
     cp = delta.observe(obs, *[F.expr(f"count_if({c}) AS {ident(n)}")
-                              for n, c in conditions.items()]
+                              for n, c in {**types, **conditions}.items()]
                        ).localCheckpoint()
-    return cp, {n: int(v) for n, v in obs.get.items() if v}
+    got = {n: int(v) for n, v in obs.get.items()}
+    return cp, {t: got.pop(t) for t in types}, got
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -665,7 +665,10 @@ class MigrationJob:
         the date its current version opened rewrites that version in
         place, and closing it as deleted removes it, so (business key,
         ``valid_from``) is unique and no version is the empty
-        ``[batch_date, batch_date)``, on every destination.
+        ``[batch_date, batch_date)``, on every destination. Batches
+        fold in date order: a ``batch_date`` earlier than a date already
+        in the history raises :class:`ConfigurationError` before
+        anything is written.
 
         Apply strategy: the fold marks each version of the next history,
         keyed by (business key, ``valid_from``), as opened ('insert'),
@@ -702,7 +705,15 @@ class MigrationJob:
         history (absent → first-run initialize), fold ``src`` in with
         the fold marking the versions it opens, closes, rewrites and
         removes, checkpoint and count those, and apply them through
-        :meth:`_apply_changes`, the same way into files and JDBC."""
+        :meth:`_apply_changes`, the same way into files and JDBC.
+
+        A ``batch_date`` earlier than a date already in the history is
+        refused before anything is written: it would close versions
+        before they opened, and could open a second version of a key
+        from one date. The checkpoint is a ``localCheckpoint``, which
+        cannot be recomputed: an executor lost before the apply has read
+        it fails the run, leaving the destination as it was (a JDBC
+        apply stages the changed versions before its MERGE)."""
         from data_warehouse_migrate_spark.operators import delta as ops
 
         from_col, to_col, cur_col = _SCD2_COLS
@@ -731,12 +742,17 @@ class MigrationJob:
         # the fold runs once, in the pass of a checkpoint that counts its
         # marks: a file rewrite overwrites the history the fold reads,
         # and a JDBC apply stages the changed versions from it
-        marked, counts = _checkpoint_counted(
+        marked, counts, seen = _checkpoint_counted(
             ops._scd2_marked(hist, src, key_cols, tracked, batch_date,
                              *_SCD2_COLS, close_deleted),
-            closed=f"change_type = 'update' AND NOT {ident(cur_col)}")
-        closed = counts.pop("closed", 0)
+            closed=f"change_type = 'update' AND NOT {ident(cur_col)}",
+            later=f"greatest({ident(from_col)}, {ident(to_col)}) > "
+                  f"{sql_string(batch_date)}")
         try:
+            if seen["later"]:  # versions dated after batch_date
+                raise ConfigurationError(
+                    f"batch_date {batch_date} precedes {seen['later']} SCD2 "
+                    f"versions' dates: fold batches in date order")
             applied = self._apply_changes(
                 marked, [*key_cols, from_col],
                 lambda: marked.filter("change_type <> 'delete'")
@@ -745,10 +761,9 @@ class MigrationJob:
             _release_checkpoint(marked)
         del applied["delta_counts"]  # the counts passed in
         return {**out, **applied,
-                "versions_opened": counts.get("insert", 0),
-                "versions_closed": closed,
-                "history_rows": sum(counts.values())
-                - counts.get("delete", 0)}
+                "versions_opened": counts["insert"],
+                "versions_closed": seen["closed"],
+                "history_rows": sum(counts.values()) - counts["delete"]}
 
     # ------------------------------------------------------------------
     def _drive_stream(self, spark: SparkSession, checkpoint_dir: str,
@@ -788,8 +803,9 @@ class MigrationJob:
         with its processing UTC date (the usual always-on semantics);
         an explicit date pins every folded batch to one version date
         (reproducible catch-up runs); a key changing in two batches of
-        one date keeps one version from it (see :meth:`run_scd2`), on
-        every destination. foreachBatch serializes
+        one date keeps one version from it, and a date earlier than the
+        history's last is refused (see :meth:`run_scd2`), on every
+        destination. foreachBatch serializes
         batches, so history read-fold-write cycles never interleave;
         at-least-once on crash between write and checkpoint commit, as
         with :meth:`run_stream` (an identical-payload replay is a

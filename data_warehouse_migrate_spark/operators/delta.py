@@ -338,9 +338,14 @@ def scd2_apply(history: DataFrame, updates: DataFrame,
     Beyond-reference surface: the reference ships whole tables
     (``migrator.py:210-224``, append or overwrite) — history tracking is
     the warehouse-side feature its users hand-roll downstream. 100 TB
-    shape: one key-keyed shuffle join of history and updates and a
-    generator — no collects, no windows, no UDFs; with history and
-    updates bucketed on the key the exchange vanishes.
+    shape: one key-keyed shuffle join of the current versions and
+    updates and a generator — no collects, no windows, no UDFs; with
+    history and updates bucketed on the key the exchange vanishes.
+
+    ``batch_date`` must be no earlier than any date in ``history``: an
+    earlier one would close a version before it opened and could open a
+    second version of a key from one date. ``MigrationJob.run_scd2``
+    refuses such a batch before it writes.
     """
     return (_scd2_marked(history, updates, key_cols, tracked_cols,
                          batch_date, from_col, to_col, cur_col,
@@ -363,9 +368,10 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
     version ``[batch_date, batch_date)`` that closing it would leave
     contains no instant, so no as-of answer changes.
 
-    One join: history FULL OUTER JOIN updates on the key and the history
-    version being current, so an update meets its key's current version
-    only; each joined row emits its versions through ``inline``."""
+    One join: the current versions FULL OUTER JOIN updates on the key,
+    each joined row emitting its versions through ``inline``; the
+    versions closed before this batch, which no update can touch, skip
+    the join and come out 'unchanged'."""
     # untracked payload columns ride along on new versions (sourced from
     # updates); change detection stays on tracked_cols only
     bookkeeping = {from_col, to_col, cur_col}
@@ -383,11 +389,11 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
             f"from history.")
 
     carried = [*key_cols, *tracked_cols, *extra]
+    current = f"{ident(cur_col)} IS TRUE"
     # presence markers, as in snapshot_delta: a NULL key is still a key
-    h = history.selectExpr("*", "TRUE AS __in_h").alias("h")
+    h = history.filter(current).selectExpr("*", "TRUE AS __in_h").alias("h")
     u = updates.selectExpr(*map(ident, carried), "TRUE AS __in_u").alias("u")
-    joined = h.join(u, F.expr(f"{_keys_match('h', 'u', key_cols)} "
-                              f"AND h.{ident(cur_col)}"), "full_outer")
+    joined = h.join(u, F.expr(_keys_match("h", "u", key_cols)), "full_outer")
 
     dtypes = dict(history.dtypes)
     batch = f"CAST({sql_string(batch_date)} AS {dtypes[from_col]})"
@@ -395,8 +401,7 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
     diff = " OR ".join(f"NOT (h.{ident(c)} <=> u.{ident(c)})"
                        for c in tracked_cols) or "FALSE"
     changed = f"({in_h} AND {in_u} AND ({diff}))"
-    closes = (f"({changed} OR ({in_h} AND NOT {in_u} "
-              f"AND h.{ident(cur_col)}))" if close_deleted else changed)
+    closes = f"({changed} OR ({in_h} AND NOT {in_u} AND {close_deleted}))"
     same = f"(h.{ident(from_col)} = {batch})"
 
     def version(values: dict[str, str]) -> str:
@@ -407,8 +412,7 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
 
     old = version({to_col: f"CASE WHEN {closes} THEN {batch} "
                            f"ELSE h.{ident(to_col)} END",
-                   cur_col: f"CASE WHEN {closes} THEN FALSE "
-                            f"ELSE h.{ident(cur_col)} END",
+                   cur_col: f"NOT {closes}",
                    "change_type": f"CASE WHEN {closes} AND {same} THEN "
                                   f"'delete' WHEN {closes} THEN 'update' "
                                   f"ELSE 'unchanged' END"})
@@ -421,4 +425,6 @@ def _scd2_marked(history: DataFrame, updates: DataFrame,
     return joined.selectExpr(
         f"inline(CASE WHEN NOT {in_h} OR ({changed} AND {same}) "
         f"THEN array({new}) WHEN {changed} THEN array({old}, {new}) "
-        f"ELSE array({old}) END)")
+        f"ELSE array({old}) END)").unionByName(
+        history.filter(f"NOT ({current})")
+        .selectExpr("*", "'unchanged' AS change_type"))

@@ -549,3 +549,87 @@ def test_scd2_stream_jdbc_takes_two_changes_of_a_key_on_one_day(
     assert rows == [(1, "A", "2026-01-01", "2026-02-01", False),
                     (1, "A3", "2026-02-01", "None", True),
                     (2, "B", "2026-01-01", "None", True)]
+
+
+def test_scd2_refuses_an_earlier_batch_date(spark, derby_opts, tmp_path):
+    """A batch_date earlier than a date already in the history is refused
+    before anything is written, into files and into JDBC alike. Folding
+    it would close key 1's current version before it opened and open a
+    second version of key 1 from 2026-01-01, or open a version of key 3
+    overlapping the one closed as deleted on 2026-02-01."""
+    from data_warehouse_migrate_spark.exceptions import ConfigurationError
+
+    src = str(tmp_path / "order_src.parquet")
+    jdbc = MigrationJob(source_path=src, destination_path="t_scd2_order",
+                        destination_format="jdbc",
+                        destination_jdbc=derby_opts, mode="append")
+    files = MigrationJob(source_path=src,
+                         destination_path=str(tmp_path / "order_hist"),
+                         mode="overwrite")
+
+    def histories():
+        return [sorted((r.k, r.v, str(r.valid_from), str(r.valid_to),
+                        bool(r.is_current)) for r in df.collect())
+                for df in (_read(spark, derby_opts, "t_scd2_order"),
+                           spark.read.parquet(str(tmp_path / "order_hist")))]
+
+    def sync(rows, day, **kw):
+        spark.createDataFrame(rows, "k long, v string").write.mode(
+            "overwrite").parquet(src)
+        for job in (jdbc, files):
+            job.run_scd2(spark, ["k"], batch_date=day, **kw)
+
+    sync([(1, "A"), (3, "X")], "2026-01-01")
+    sync([(1, "B")], "2026-02-01", close_deleted=True)
+    folded = histories()
+    assert folded[0] == folded[1] == [
+        (1, "A", "2026-01-01", "2026-02-01", False),
+        (1, "B", "2026-02-01", "None", True),
+        (3, "X", "2026-01-01", "2026-02-01", False)]
+    for rows, day in [([(1, "C")], "2026-01-01"), ([(3, "Y")], "2026-01-15")]:
+        with pytest.raises(ConfigurationError, match="precedes"):
+            sync(rows, day)
+        assert histories() == folded
+
+
+def test_run_scd2_jdbc_spark_job_counts(spark, derby_opts, tmp_path):
+    """The second-run run_scd2 of ``test_run_scd2_spark_job_counts``
+    into a JDBC table takes the same path as into files: the
+    checkpoint's pass runs the fold and counts its marks, and the staged
+    MERGE reads the changed versions from the checkpoint, which is not
+    cached a second time. It was 12 jobs / 39 tasks while a JDBC history
+    was persisted and counted on a path of its own."""
+    from test_migrate import _sync_cost
+
+    out, jobs, tasks = _sync_cost(spark, tmp_path, "scd2", "changed",
+                                  jdbc=derby_opts)
+    assert (out["versions_opened"], out["versions_closed"],
+            out["history_rows"]) == (50, 50, 1050)
+    assert out["jdbc_apply"] == {"staged": 100, "applied": 100}
+    assert (jobs, tasks) == (7, 15)
+
+
+def test_type_override_quotes_the_column_name(spark, derby_opts, tmp_path):
+    """A type_override on a column whose name needs quoting creates that
+    column with the override's type; the unquoted name used to fail to
+    parse."""
+    from data_warehouse_migrate_spark.operators.delta import _jdbc_connection
+
+    src = str(tmp_path / "spaced_src.parquet")
+    spark.createDataFrame([(1, "9.50"), (2, "12.00")],
+                          "`k` long, `unit price` string").write.parquet(src)
+    out = MigrationJob(
+        source_path=src, destination_path="t_spaced",
+        destination_format="jdbc", destination_jdbc=derby_opts,
+        mode="overwrite",
+        mapping={"type_override": {"unit price": "VARCHAR(20)"}}).run(spark)
+    assert out["rows_written"] == 2
+    conn = _jdbc_connection(spark, derby_opts)
+    try:
+        col = conn.getMetaData().getColumns(None, None, "T_SPACED",
+                                            "unit price")
+        assert col.next()
+        assert (col.getString("TYPE_NAME"), col.getInt("COLUMN_SIZE")) == (
+            "VARCHAR", 20)
+    finally:
+        conn.close()

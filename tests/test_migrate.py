@@ -949,24 +949,17 @@ def _write_sync_source(path, changed):
                   for i in ids]}), path / f"part-{f}.parquet")
 
 
-def _derby_options(root):
-    """Connection options of an embedded Derby database under ``root``
-    (Derby ships in Spark's jars)."""
-    return {"url": f"jdbc:derby:{root / 'derby'};create=true",
-            "driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
-
-
 def _sync_cost(spark, root, runner, before, sized=False, fail=True,
-               jdbc=False):
+               jdbc=None):
     """(result, Spark jobs, tasks) of one ``runner`` sync ('incremental'
     or 'scd2') on :func:`_write_sync_source`'s source under ``root``,
-    into files or, with ``jdbc``, into a Derby table.
+    into files or, given ``jdbc`` connection options, into a table.
     ``before``: None measures a first run; 'same' or 'changed' measures
     the run after a first one, on the same or the changed source."""
     kw = dict(non_nullable=["id"], null_policy="fail") if fail else {}
     if jdbc:
         kw.update(destination_path="t_sync", destination_format="jdbc",
-                  destination_jdbc=_derby_options(root))
+                  destination_jdbc=jdbc)
     else:
         kw.update(destination_path=str(root / "dst"))
 
@@ -987,33 +980,21 @@ def _sync_cost(spark, root, runner, before, sized=False, fail=True,
 def test_run_scd2_spark_job_counts(spark, tmp_path):
     """Pinned Spark jobs and tasks of a second-run run_scd2 into a file
     destination under the 'fail' null check: the fold is one join of the
-    history and the source that marks the versions it closes and opens,
-    and the checkpoint the rewrite needs (it overwrites the history the
-    fold reads) runs the fold once and counts those marks with an
-    Observation. No second diff of the next history against the current
-    one, no count job and no second fold; the checkpoint is released
-    after the write. It was 9 jobs / 26 tasks while the fold joined the
-    source to the current versions and that result to the history."""
+    current versions and the source that marks the versions it closes
+    and opens, and the checkpoint the rewrite needs (it overwrites the
+    history the fold reads) runs the fold once and counts those marks
+    with an Observation. No second diff of the next history against the
+    current one, no count job and no second fold; the checkpoint is
+    released after the write. The versions closed before the batch skip
+    the join's shuffle: their scan is the checkpoint stage's second
+    input, 8 of its tasks here. It was 9 jobs / 26 tasks while the fold
+    joined the source to the current versions and that result to the
+    whole history."""
     out, jobs, tasks = _sync_cost(spark, tmp_path, "scd2", "changed")
     assert (out["versions_opened"], out["versions_closed"],
             out["history_rows"]) == (50, 50, 1050)
     assert spark.read.parquet(str(tmp_path / "dst")).count() == 1050
-    assert (jobs, tasks) == (8, 17)
-
-
-def test_run_scd2_jdbc_spark_job_counts(spark, tmp_path):
-    """The same second-run run_scd2 into a Derby table takes the same
-    path as into files: the checkpoint's pass runs the fold and counts
-    its marks, and the staged MERGE reads the changed versions from the
-    checkpoint, which is not cached a second time. It was 12 jobs / 39
-    tasks while a JDBC history was persisted and counted on a path of
-    its own."""
-    out, jobs, tasks = _sync_cost(spark, tmp_path, "scd2", "changed",
-                                  jdbc=True)
-    assert (out["versions_opened"], out["versions_closed"],
-            out["history_rows"]) == (50, 50, 1050)
-    assert out["jdbc_apply"] == {"staged": 100, "applied": 100}
-    assert (jobs, tasks) == (7, 13)
+    assert (jobs, tasks) == (8, 25)
 
 
 @pytest.mark.parametrize("runner, before, fail, extra", [
@@ -1169,10 +1150,9 @@ def test_hostile_column_names_migrate(spark, tmp_path):
     with a dot, a backtick, a space, quotes or non-ASCII characters is
     one column everywhere: run() with declared types, a mapping, a
     destination schema and the sized sink, verify(), run_incremental()
-    keyed by a dotted column, a file run_scd2() and a JDBC run() with a
-    type_override. A dotted name used to resolve as a struct field
-    (UNRESOLVED_COLUMN), a backtick as bad syntax and a type_override
-    on a spaced name failed to parse."""
+    keyed by a dotted column and a file run_scd2(). A dotted name used
+    to resolve as a struct field (UNRESOLVED_COLUMN) and a backtick as
+    bad syntax."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1234,22 +1214,3 @@ def test_hostile_column_names_migrate(spark, tmp_path):
     out = job("scd").run_scd2(spark, [key], batch_date="2024-02-01")
     assert (out["versions_opened"], out["versions_closed"],
             out["history_rows"]) == (7, 2, 27)
-
-    # a JDBC table takes a type_override by its quoted name
-    from data_warehouse_migrate_spark.operators.delta import _jdbc_connection
-
-    opts = _derby_options(tmp_path)
-    out = MigrationJob(
-        source_path=str(src), destination_path="t_hostile",
-        destination_format="jdbc", destination_jdbc=opts, mode="overwrite",
-        source_schema=schema,
-        mapping={"type_override": {space: "VARCHAR(20)"}}).run(spark)
-    assert out["rows_written"] == 23
-    conn = _jdbc_connection(spark, opts)
-    try:
-        col = conn.getMetaData().getColumns(None, None, "T_HOSTILE", space)
-        assert col.next()
-        assert (col.getString("TYPE_NAME"), col.getInt("COLUMN_SIZE")) == (
-            "VARCHAR", 20)
-    finally:
-        conn.close()
