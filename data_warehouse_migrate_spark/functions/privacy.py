@@ -1,5 +1,5 @@
 """Privacy transforms beyond redaction (beyond-reference surface;
-complements ``functions.text.scrub_pii`` which masks free text).
+complements ``functions.text.redact_pii`` which masks free text).
 
 Structured identifiers need a different treatment than free-text PII:
 analytics still has to JOIN and GROUP on them, so deletion/masking is

@@ -1,14 +1,28 @@
 """Text-analysis expressions for LLM-data pipelines: tokenization, shingles,
 deterministic hashing, quality scoring, language ID, fingerprinting.
 
-Everything is a built-in Column expression (JVM-side, codegen) — no Python
-UDFs — and every function has an exact ANSI-SQL twin runnable by DuckDB
-(used by the correctness oracle). Determinism rules:
+Each rule has one implementation: a private renderer that writes Spark SQL
+text over an operand (a column name quoted by ``sqltext.ident``, a lambda
+variable, or another renderer's text). The public functions take a column
+NAME and return ``F.expr`` of that text: one JVM-side parse, where a
+``Column`` tree built with ``pyspark.sql.functions`` costs one py4j round
+trip per node (the bits=60 simhash alone cost ~280 ms of driver latency).
+Everything is a built-in expression (JVM-side, no Python UDFs) that the
+DuckDB oracles in ``queries.py`` re-implement. Determinism rules:
   * ``polyhash``: 31-polynomial over unicode code points mod 1e9+7 —
     identical in Spark (``aggregate``/``ascii``) and DuckDB
     (``list_reduce``/``ascii``).
   * ``md5_prefix_int``: first 15 hex chars of md5 → int64 (60 bits, never
     overflows) — identical via ``conv`` (Spark) / ``CAST('0x…')`` (DuckDB).
+The fingerprints (``hashed_shingles``, ``simhash``, ``minhash_signature``)
+are stored and compared across sessions; ``tests/test_text.py`` pins their
+values.
+
+Filter predicates get no subexpression elimination, so the rules a fused
+FILTER evaluates (``lang_keep``, ``gopher_keep``) bind the token split once
+per row as a lambda variable: ``transform(array(x), v -> …)[0]``. A lambda
+variable shadows a column of the same name, so the lambdas whose body reads
+the text column itself have ``__`` names.
 
 Beyond-reference operators (the reference has no text functions at all);
 designed per SURVEY.md §7.3.
@@ -18,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from data_warehouse_migrate_spark.sqltext import ident, sql_literal, sql_string
 
 POLY_MOD = 1_000_000_007
 POLY_BASE = 31
@@ -32,69 +48,111 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 # a BPE-ish word/number/symbol segmentation used for token counting
 TOKEN_REGEX = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
+SIMHASH_BITS = 60  # md5-prefix token hashes carry exactly 60 meaningful bits
 
-def tokens(col: Column) -> Column:
+# MinHash: k fixed affine permutations (a_i*h + b_i) mod p over shingle hashes.
+# Constants are arbitrary-but-fixed odd multipliers (no runtime randomness —
+# resumability + cross-engine determinism).
+MINHASH_A = (1579, 2719, 3359, 4463, 5519, 6689, 7717, 8837,
+             9739, 10847, 11941, 13043, 14159, 15269, 16381, 17477)
+MINHASH_B = (401, 7919, 1201, 9601, 2801, 11003, 4001, 12413,
+             5209, 13807, 6397, 15013, 7591, 16217, 8783, 17401)
+
+_WS = sql_string(r"\s+")
+_NEWLINE = sql_string("\n")
+_PUNCT = sql_string(r"[a-zA-Z0-9\s]")
+
+
+def _strings(words) -> str:
+    return ", ".join(sql_string(w) for w in words)
+
+
+def _longs(values) -> str:
+    return "array(" + ", ".join(f"CAST({v} AS BIGINT)" for v in values) + ")"
+
+
+def _ratio(num: str, den: str, rest: str = "ELSE 0.0D") -> str:
+    """``round(num / den, 6)`` where ``den > 0``; ``rest`` closes the CASE."""
+    return f"round(CASE WHEN ({den}) > 0 THEN ({num}) / ({den}) {rest} END, 6)"
+
+
+# ---------------------------------------------------------------------------
+# Tokens, shingles, hashes
+# ---------------------------------------------------------------------------
+
+def _tokens(c: str) -> str:
+    return f"split(lower(trim({c})), {_WS})"
+
+
+def tokens(name: str) -> Column:
     """Whitespace tokens of lowercased trimmed text. Empty text yields
     [''] (both engines agree)."""
-    return F.split(F.lower(F.trim(col)), r"\s+")
+    return F.expr(_tokens(ident(name)))
 
 
-def token_count(col: Column) -> Column:
+def _token_count(c: str) -> str:
+    return f"size(regexp_extract_all({c}, {sql_string(TOKEN_REGEX)}, 0))"
+
+
+def token_count(name: str) -> Column:
     """BPE-ish token count: words, numbers, and individual symbols."""
-    return F.size(F.regexp_extract_all(col, F.lit(TOKEN_REGEX), 0))
+    return F.expr(_token_count(ident(name)))
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
+def _word_shingles(c: str, n: int) -> str:
+    return (f"transform(array({_tokens(c)}), "
+            f"t -> CASE WHEN size(t) < {n} THEN array(array_join(t, ' ')) "
+            f"ELSE transform(sequence(1, size(t) - {n} + 1), "
+            f"i -> array_join(slice(t, i, {n}), ' ')) END)[0]")
+
+
+def word_shingles(name: str, n: int = 3) -> Column:
     """Word n-gram shingle strings; texts shorter than n words yield the
     whole text as a single shingle.
 
     The token array is LET-BOUND via a single-element-array transform so
     the per-shingle lambda references it as a bound lambda variable.
-    Referencing the ``tokens`` expression tree directly inside the
-    lambda (the r8 shape) made Catalyst inline the full-text regex
-    split into the lambda body — re-evaluated PER SHINGLE ELEMENT,
-    O(words²) regex work per document. The binding makes it one split
-    per row: measured 6× on the sf0.1 shingle-explode path (4.27s →
-    0.71s), and it is the difference between the shingle family
-    scaling with corpus size vs corpus size × document length at
-    100 TB. Same construction as the round-7 CollapseProject fix in
-    ``operators/spans.py``, expressed inside a single Column."""
-    return F.transform(
-        F.array(tokens(col)),
-        lambda t: F.when(
-            F.size(t) < n, F.array(F.array_join(t, " "))
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - n + 1),
-                lambda i: F.array_join(F.slice(t, i, n), " "),
-            )
-        ))[0]
+    Referencing the token split directly inside the lambda (the r8
+    shape) made Catalyst inline the full-text regex split into the
+    lambda body — re-evaluated PER SHINGLE ELEMENT, O(words²) regex work
+    per document. The binding makes it one split per row: measured 6× on
+    the sf0.1 shingle-explode path (4.27s → 0.71s). Same construction as
+    the round-7 CollapseProject fix in ``operators/spans.py``."""
+    return F.expr(_word_shingles(ident(name), n))
 
 
-def polyhash(col: Column) -> Column:
+def polyhash(name: str) -> Column:
     """31-polynomial rolling hash over code points mod 1e9+7 (document
     fingerprint primitive; deterministic across engines)."""
-    return F.aggregate(
-        F.transform(F.split(col, ""), lambda ch: F.ascii(ch).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * POLY_BASE + x) % F.lit(POLY_MOD),
-    )
+    return F.expr(
+        f"aggregate(transform(split({ident(name)}, ''), "
+        f"ch -> CAST(ascii(ch) AS BIGINT)), CAST(0 AS BIGINT), "
+        f"(acc, x) -> (acc * {POLY_BASE} + x) % {POLY_MOD})")
 
 
-def md5_prefix_int(col: Column) -> Column:
+def _md5_prefix_int(c: str) -> str:
+    return f"CAST(conv(substring(md5({c}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def md5_prefix_int(name: str) -> Column:
     """First 60 bits of md5 as int64 — a strong deterministic hash."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+    return F.expr(_md5_prefix_int(ident(name)))
 
 
-def normalized_text(col: Column) -> Column:
+def normalized_text(name: str) -> Column:
     """Canonical form for exact dedup: lowercase, collapse whitespace, trim."""
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+    return F.expr(f"regexp_replace(lower(trim({ident(name)})), {_WS}, ' ')")
 
 
-SIMHASH_BITS = 60  # md5-prefix token hashes carry exactly 60 meaningful bits
+def hashed_shingles(name: str, n: int) -> Column:
+    """``array<long>``: the distinct md5-prefix hashes of the word
+    n-gram shingles — the shared shingle-set form of the
+    Jaccard/MinHash/contamination family."""
+    return F.expr(f"array_distinct(transform({_word_shingles(ident(name), n)}, "
+                  f"s -> {_md5_prefix_int('s')}))")
 
 
-def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
+def simhash(name: str, bits: int = SIMHASH_BITS) -> Column:
     """``bits``-wide SimHash over whitespace tokens with md5-prefix token
     hashes (60 usable bits — polyhash mod 1e9+7 only fills ~30 bits, which
     makes fingerprints cluster and near-pair search quadratic).
@@ -107,128 +165,9 @@ def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
     pure array math, expressible identically in DuckDB for the oracle.
     """
     assert 0 < bits <= 60
-    powers = F.array(*[F.lit(1 << j).cast("long") for j in range(bits)])
-    tok_hashes = F.transform(tokens(col), lambda t: md5_prefix_int(t))
-    votes = F.aggregate(
-        tok_hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc, powers,
-            lambda a, p: a + F.when(h.bitwiseAND(p) != 0, 1).otherwise(-1)),
-    )
-    return F.aggregate(
-        F.zip_with(votes, powers,
-                   lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-
-
-def simhash32(col: Column) -> Column:
-    """32-bit SimHash (back-compat shorthand for ``simhash(col, 32)``)."""
-    return simhash(col, 32)
-
-
-# MinHash: k fixed affine permutations (a_i*h + b_i) mod p over shingle hashes.
-# Constants are arbitrary-but-fixed odd multipliers (no runtime randomness —
-# resumability + cross-engine determinism).
-MINHASH_A = (1579, 2719, 3359, 4463, 5519, 6689, 7717, 8837,
-             9739, 10847, 11941, 13043, 14159, 15269, 16381, 17477)
-MINHASH_B = (401, 7919, 1201, 9601, 2801, 11003, 4001, 12413,
-             5209, 13807, 6397, 15013, 7591, 16217, 8783, 17401)
-
-
-def minhash_signature(shingle_hashes: Column, k: int = 16) -> Column:
-    """Array of k min-hash values over an array<long> of shingle hashes.
-
-    Single-pass: ONE ``aggregate`` over the shingle array with a k-element
-    running-min accumulator, so the (possibly expensive) shingle-hash
-    subtree is referenced exactly once — k separate array_min expressions
-    made Catalyst inline that subtree k times (measured 6× slower).
-
-    Hashes are reduced mod 1e9+7 BEFORE the affine permutation: 60-bit
-    inputs times a 5-digit multiplier would overflow int64 — Spark would
-    silently wrap while DuckDB raises, so the oracle twin requires the
-    reduction on both sides."""
-    assert k <= len(MINHASH_A)
-    A = F.array(*[F.lit(a).cast("long") for a in MINHASH_A[:k]])
-    B = F.array(*[F.lit(b).cast("long") for b in MINHASH_B[:k]])
-    return F.aggregate(
-        shingle_hashes,
-        F.array_repeat(F.lit(POLY_MOD).cast("long"), k),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.zip_with(A, B, lambda a, b: ((h % F.lit(POLY_MOD)) * a + b)
-                       % F.lit(POLY_MOD)),
-            lambda x, y: F.least(x, y)),
-    )
-
-
-# ---------------------------------------------------------------------------
-# SQL-text twins of the fingerprint expression builders (r18, guide §1.2
-# driver-bound work). The Column builders above cost 180-280 ms of
-# py4j round-trips PER CALL at the default sizes (measured: simhash
-# bits=60 → 279 ms, minhash k=16 → 180 ms) — pure driver latency every
-# banding/fingerprint operator paid on every invocation. Emitting the
-# SAME expression as one SQL string parses JVM-side in <1 ms (the
-# vectors.band_keys_sql precedent). Twins take plain COLUMN NAMES (all
-# in-tree operator callers pass names); expression-valued inputs keep
-# the Column builders. Outputs are pinned BIT-IDENTICAL to the Column
-# forms in tests/test_text.py::test_sql_twins_match_column_builders —
-# and transitively by the cell-exact DuckDB oracle replay, since every
-# fingerprint query's oracle hashes these columns.
-# ---------------------------------------------------------------------------
-
-def _tokens_sql(col_sql: str) -> str:
-    # twin of tokens(): split(lower(trim(c)), '\s+') — the SQL literal
-    # needs the backslash doubled ('\\s+' parses to \s+)
-    return f"split(lower(trim({col_sql})), '\\\\s+')"
-
-
-def _md5_prefix_int_sql(s: str) -> str:
-    # twin of md5_prefix_int()
-    return f"CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def _word_shingles_sql_text(col_name: str, n: int) -> str:
-    # twin of word_shingles(): same let-bound single-element-array form
-    # (the binding is load-bearing — see the Column builder's docstring)
-    t = _tokens_sql(f"`{col_name}`")
-    return (f"transform(array({t}), "
-            f"t -> CASE WHEN size(t) < {n} THEN array(array_join(t, ' ')) "
-            f"ELSE transform(sequence(1, size(t) - {n} + 1), "
-            f"i -> array_join(slice(t, i, {n}), ' ')) END)[0]")
-
-
-def hashed_shingles_sql(col_name: str, n: int) -> Column:
-    """``array_distinct(transform(word_shingles(col, n), md5_prefix_int))``
-    as one JVM-parsed expression — the shared shingle-set form of the
-    Jaccard/MinHash/contamination family."""
-    sh = _word_shingles_sql_text(col_name, n)
-    return F.expr(f"array_distinct(transform({sh}, "
-                  f"s -> {_md5_prefix_int_sql('s')}))")
-
-
-def minhash_signature_sql(arr_name: str, k: int = 16) -> Column:
-    """Twin of :func:`minhash_signature` over an array<long> COLUMN."""
-    assert k <= len(MINHASH_A)
-    A = ", ".join(f"CAST({a} AS BIGINT)" for a in MINHASH_A[:k])
-    B = ", ".join(f"CAST({b} AS BIGINT)" for b in MINHASH_B[:k])
-    return F.expr(
-        f"aggregate(`{arr_name}`, "
-        f"array_repeat(CAST({POLY_MOD} AS BIGINT), {k}), "
-        f"(acc, h) -> zip_with(acc, zip_with(array({A}), array({B}), "
-        f"(a, b) -> ((h % {POLY_MOD}) * a + b) % {POLY_MOD}), "
-        f"(x, y) -> least(x, y)))")
-
-
-def simhash_sql(col_name: str, bits: int = SIMHASH_BITS) -> Column:
-    """Twin of :func:`simhash` over a text COLUMN."""
-    assert 0 < bits <= 60
-    powers = ("array(" + ", ".join(f"CAST({1 << j} AS BIGINT)"
-                                   for j in range(bits)) + ")")
-    tokh = (f"transform({_tokens_sql(f'`{col_name}`')}, "
-            f"t -> {_md5_prefix_int_sql('t')})")
+    powers = _longs(1 << j for j in range(bits))
+    tokh = (f"transform({_tokens(ident(name))}, "
+            f"t -> {_md5_prefix_int('t')})")
     votes = (f"aggregate({tokh}, array_repeat(CAST(0 AS BIGINT), {bits}), "
              f"(acc, h) -> zip_with(acc, {powers}, "
              f"(a, p) -> a + (CASE WHEN (h & p) != 0 THEN 1 ELSE -1 END)))")
@@ -238,131 +177,115 @@ def simhash_sql(col_name: str, bits: int = SIMHASH_BITS) -> Column:
         f"CAST(0 AS BIGINT), (a, x) -> a + x)")
 
 
+def minhash_signature(name: str, k: int = 16) -> Column:
+    """Array of k min-hash values over an array<long> column of shingle
+    hashes (``hashed_shingles``).
+
+    Single-pass: ONE ``aggregate`` over the shingle array with a k-element
+    running-min accumulator, so the shingle array is referenced exactly
+    once — k separate array_min expressions made Catalyst inline an
+    upstream shingle subtree k times (measured 6× slower).
+
+    Hashes are reduced mod 1e9+7 BEFORE the affine permutation: 60-bit
+    inputs times a 5-digit multiplier would overflow int64 — Spark would
+    silently wrap while DuckDB raises, so the oracle requires the
+    reduction on both sides."""
+    assert k <= len(MINHASH_A)
+    return F.expr(
+        f"aggregate({ident(name)}, "
+        f"array_repeat(CAST({POLY_MOD} AS BIGINT), {k}), "
+        f"(acc, h) -> zip_with(acc, zip_with({_longs(MINHASH_A[:k])}, "
+        f"{_longs(MINHASH_B[:k])}, "
+        f"(a, b) -> ((h % {POLY_MOD}) * a + b) % {POLY_MOD}), "
+        f"(x, y) -> least(x, y)))")
+
+
 # ---------------------------------------------------------------------------
-# Quality / stats expressions (all arithmetic, oracle-twinned)
+# Quality / stats expressions (all arithmetic, oracle-checked)
 # ---------------------------------------------------------------------------
 
-def text_stats_exprs(col: Column) -> dict[str, Column]:
-    """Standard quality-signal columns for a text column.
-
-    NULL text propagates NULL through every stat (the module's uniform
-    convention, same as :func:`gopher_quality_flags`). The explicit
-    NULL gates are load-bearing: without them the ``otherwise(0.0)``
-    fallbacks fire on NULL comparisons (NULL > 0 is false, not NULL),
-    so a missing document reported the same zero ratios as a real empty
-    one — silently indistinguishable instead of honestly NULL (r8
-    audit)."""
-    notnull = col.isNotNull()
-    n_chars = F.length(col)
-    toks = tokens(col)
-    n_words = (F.when(~notnull, F.lit(None))
-               .when(F.trim(col) == "", F.lit(0))
-               .otherwise(F.size(toks)))
-    n_alpha = F.length(F.regexp_replace(col, r"[^a-zA-Z]", ""))
-    n_digit = F.length(F.regexp_replace(col, r"[^0-9]", ""))
-    n_punct = F.length(F.regexp_replace(col, r"[a-zA-Z0-9\s]", ""))
-    stop_all = tuple(w for ws in LANG_STOPWORDS.values() for w in ws)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*stop_all)))
+def _text_stats(c: str) -> dict[str, str]:
+    tk = _tokens(c)
+    nw = (f"CASE WHEN {c} IS NULL THEN NULL WHEN trim({c}) = '' THEN 0 "
+          f"ELSE size({tk}) END")
+    n_alpha = f"length(regexp_replace({c}, '[^a-zA-Z]', ''))"
+    n_digit = f"length(regexp_replace({c}, '[^0-9]', ''))"
+    n_punct = f"length(regexp_replace({c}, {_PUNCT}, ''))"
+    stop_all = _strings(w for ws in LANG_STOPWORDS.values() for w in ws)
+    n_stop = f"size(filter({tk}, t -> t IN ({stop_all})))"
+    text_zero = f"WHEN {c} IS NOT NULL THEN 0.0D"
     return {
-        "n_chars": n_chars.cast("bigint"),
-        "n_words": n_words.cast("bigint"),
-        "n_tokens": F.when(notnull, token_count(col)).cast("bigint"),
-        "avg_word_len": F.round(
-            F.when(n_words > 0, (n_alpha + n_digit) / n_words)
-            .when(notnull, F.lit(0.0)), 6),
-        "punct_ratio": F.round(
-            F.when(n_chars > 0, n_punct / n_chars)
-            .when(notnull, F.lit(0.0)), 6),
-        "digit_ratio": F.round(
-            F.when(n_chars > 0, n_digit / n_chars)
-            .when(notnull, F.lit(0.0)), 6),
-        "stopword_ratio": F.round(
-            F.when(n_words > 0, n_stop / n_words)
-            .when(notnull, F.lit(0.0)), 6),
+        "n_chars": f"CAST(length({c}) AS BIGINT)",
+        "n_words": f"CAST({nw} AS BIGINT)",
+        "n_tokens": (f"CAST(CASE WHEN {c} IS NOT NULL "
+                     f"THEN {_token_count(c)} END AS BIGINT)"),
+        "avg_word_len": _ratio(f"{n_alpha} + {n_digit}", nw, text_zero),
+        "punct_ratio": _ratio(n_punct, f"length({c})", text_zero),
+        "digit_ratio": _ratio(n_digit, f"length({c})", text_zero),
+        "stopword_ratio": _ratio(n_stop, nw, text_zero),
     }
 
 
-def quality_score(col: Column) -> Column:
+def text_stats_exprs(name: str) -> dict[str, Column]:
+    """Standard quality-signal columns for a text column.
+
+    NULL text propagates NULL through every stat (the module's uniform
+    convention). The explicit NULL gates are load-bearing: without them
+    the 0.0 fallbacks fire on NULL comparisons (NULL > 0 is false, not
+    NULL), so a missing document reported the same zero ratios as a real
+    empty one (r8 audit)."""
+    return {k: F.expr(v) for k, v in _text_stats(ident(name)).items()}
+
+
+def quality_score(name: str) -> Column:
     """Composite quality score in [0,1]: rewards mid-length docs with low
     punctuation/digit noise and some stopword mass (heuristic,
     deterministic). NULL text scores NULL (module convention) — without
-    the gate, NULL-skipping ``least``/``when``-fallback arithmetic
-    silently produced a non-NULL score for missing text.
+    the gate, NULL-skipping ``least`` arithmetic silently produced a
+    non-NULL score for missing text.
     """
-    s = text_stats_exprs(col)
-    length_term = F.least(s["n_words"] / F.lit(50.0), F.lit(1.0))
-    clean_term = F.lit(1.0) - F.least(s["punct_ratio"] * 4 + s["digit_ratio"] * 2, F.lit(1.0))
-    stop_term = F.least(s["stopword_ratio"] * 5, F.lit(1.0))
-    return F.when(col.isNotNull(), F.round(
-        0.5 * length_term + 0.3 * clean_term + 0.2 * stop_term, 6))
+    c = ident(name)
+    s = _text_stats(c)
+    length_term = f"least(({s['n_words']}) / 50.0D, 1.0D)"
+    clean_term = (f"1.0D - least(({s['punct_ratio']}) * 4 "
+                  f"+ ({s['digit_ratio']}) * 2, 1.0D)")
+    stop_term = f"least(({s['stopword_ratio']}) * 5, 1.0D)"
+    return F.expr(
+        f"CASE WHEN {c} IS NOT NULL THEN round(0.5D * ({length_term}) "
+        f"+ 0.3D * ({clean_term}) + 0.2D * ({stop_term}), 6) END")
 
 
-def lang_id(col: Column) -> Column:
+def _lang_id(c: str, allow: tuple[str, ...] | None = None) -> str:
+    counts = ", ".join(f"size(filter(t, w -> w IN ({_strings(ws)}))) AS {lang}"
+                       for lang, ws in LANG_STOPWORDS.items())
+    vote = ("CASE WHEN n.en = 0 AND n.de = 0 AND n.fr = 0 THEN 'und' "
+            "WHEN n.en >= n.de AND n.en >= n.fr THEN 'en' "
+            "WHEN n.de >= n.fr THEN 'de' ELSE 'fr' END")
+    if allow is not None:
+        vote = f"({vote}) IN ({_strings(allow)})" if allow else "FALSE"
+    return (f"CASE WHEN {c} IS NOT NULL THEN transform(array({_tokens(c)}), "
+            f"t -> transform(array(struct({counts})), n -> {vote})[0])[0] END")
+
+
+def lang_id(name: str) -> Column:
     """Stopword-vote language heuristic: argmax of per-language stopword
     counts over whitespace tokens; zero evidence for every language →
     'und' (undetermined). Ties resolve by the fixed precedence en ≻ de ≻
-    fr (>= comparisons in that order), keeping the argmax deterministic."""
-    toks = tokens(col)
-
-    def _counter(ws):
-        # NB: single-arg lambda only — PySpark treats 2-arg lambdas in
-        # higher-order functions as (element, index)
-        return F.size(F.filter(toks, lambda t: t.isin(*ws)))
-
-    counts = {lang: _counter(ws) for lang, ws in LANG_STOPWORDS.items()}
-    en, de, fr = counts["en"], counts["de"], counts["fr"]
-    return (
-        # NULL text first: every count is NULL, every when() below would
-        # evaluate NULL→false and fall through to the 'fr' fallback —
-        # NULL in, NULL out instead
-        F.when(col.isNull(), F.lit(None).cast("string"))
-        .when((en == 0) & (de == 0) & (fr == 0), F.lit("und"))
-        .when((en >= de) & (en >= fr), F.lit("en"))
-        .when(de >= fr, F.lit("de"))
-        .otherwise(F.lit("fr"))
-    )
+    fr (>= comparisons in that order), keeping the argmax deterministic.
+    NULL text yields NULL. The token array and then the three counts are
+    bound as lambda variables, so a row splits its text once and counts
+    each language once."""
+    return F.expr(_lang_id(ident(name)))
 
 
-def lang_keep(col: Column, allow: tuple[str, ...]) -> Column:
-    """``lang_id(col).isin(*allow)`` with the token split and the three
-    stopword counts bound ONCE per row, for use inside a fused FILTER.
-
-    Filter predicates get no subexpression elimination, so the plain
-    ``lang_id(col).isin(...)`` predicate inlines the whitespace-split
-    subtree into every count reference — the r16 ``clean_corpus`` plan
-    shows ~8 ``split(lower(trim(text)))`` evaluations per row for the
-    language gate alone. Binding the token array via
-    ``transform(array(...))[0]`` (the :func:`gopher_keep` construction)
-    and then the three counts via a second bound struct makes it one
-    split + one count per language per row. Identical values to
-    ``lang_id(col).isin(*allow)`` for every input incl. NULL (NULL in,
-    NULL out — asserted in tests/test_text.py)."""
-    def from_counts(c: Column) -> Column:
-        en, de, fr = c["en"], c["de"], c["fr"]
-        lang = (F.when((en == 0) & (de == 0) & (fr == 0), F.lit("und"))
-                .when((en >= de) & (en >= fr), F.lit("en"))
-                .when(de >= fr, F.lit("de"))
-                .otherwise(F.lit("fr")))
-        return lang.isin(*allow)
-
-    def _counter(t: Column, ws: tuple[str, ...]) -> Column:
-        # NB: single-arg lambda only — PySpark treats 2-arg lambdas in
-        # higher-order functions as (element, index), so the usual
-        # default-arg capture (lambda x, ws=ws: ...) breaks here
-        return F.size(F.filter(t, lambda x: x.isin(*ws)))
-
-    def from_toks(t: Column) -> Column:
-        counts = F.struct(*[_counter(t, ws).alias(lang)
-                            for lang, ws in LANG_STOPWORDS.items()])
-        return F.transform(F.array(counts), from_counts)[0]
-
-    # NULL text first: lang_id yields NULL, NULL.isin(...) is NULL —
-    # mirror that instead of letting the counts see a NULL array
-    return F.when(col.isNotNull(),
-                  F.transform(F.array(tokens(col)), from_toks)[0])
+def lang_keep(name: str, allow: tuple[str, ...]) -> Column:
+    """``lang_id(name).isin(*allow)`` as one expression, the membership
+    test inside the bound lambda: a fused FILTER on it splits the text
+    once and counts each language once per row. NULL text yields NULL."""
+    return F.expr(_lang_id(ident(name), tuple(allow)))
 
 
-def duplicate_token_fraction(col: Column) -> Column:
+def duplicate_token_fraction(name: str) -> Column:
     """Share of tokens that are repeats of an earlier token — the
     token-level analogue of Gopher's duplicate-line fraction (Rae et al.
     2021, public quality-filter heuristics). Rounded to 6dp (the ratio is
@@ -372,12 +295,11 @@ def duplicate_token_fraction(col: Column) -> Column:
     Empty/blank text: ``tokens`` yields the single token ``''`` (never an
     empty array — the DuckDB oracle's split agrees), so the fraction is
     0.0 (one distinct token, no repeats). NULL text propagates NULL."""
-    toks = tokens(col)
-    return F.round(F.lit(1.0) -
-                   F.size(F.array_distinct(toks)) / F.size(toks), 6)
+    tk = _tokens(ident(name))
+    return F.expr(f"round(1.0D - size(array_distinct({tk})) / size({tk}), 6)")
 
 
-def top_ngram_fraction(col: Column, n: int = 2) -> Column:
+def top_ngram_fraction(name: str, n: int = 2) -> Column:
     """Fraction of all word n-grams taken by the single most frequent one
     (Gopher's top-n-gram repetition filter). Computed per row in
     O(t log t): sort the shingle array, then ONE ``aggregate`` pass tracks
@@ -390,30 +312,23 @@ def top_ngram_fraction(col: Column, n: int = 2) -> Column:
     ''-shingle IS the top n-gram and the fraction is 1.0 — meaning
     ``q_doc_repetition`` marks empty documents keep=False, the right
     outcome for a quality filter. NULL text propagates NULL."""
-    grams = F.sort_array(word_shingles(col, n))
-
-    def _step(acc, g):
-        run = (F.when(acc["prev"].isNull() | (acc["prev"] != g), F.lit(1))
-               .otherwise(acc["run"] + 1))
-        return F.struct(g.alias("prev"), run.alias("run"),
-                        F.greatest(acc["best"], run).alias("best"))
-
-    best = F.aggregate(
-        grams,
-        F.struct(F.lit(None).cast("string").alias("prev"),
-                 F.lit(0).alias("run"), F.lit(0).alias("best")),
-        _step,
-        lambda acc: acc["best"])
-    return F.when(F.size(grams) == 0, F.lit(0.0)).otherwise(
-        F.round(best / F.size(grams), 6))
+    grams = f"sort_array({_word_shingles(ident(name), n)})"
+    run = ("CASE WHEN acc.prev IS NULL OR acc.prev != g THEN 1 "
+           "ELSE acc.run + 1 END")
+    best = (f"aggregate({grams}, "
+            f"struct(CAST(NULL AS STRING) AS prev, 0 AS run, 0 AS best), "
+            f"(acc, g) -> struct(g AS prev, {run} AS run, "
+            f"greatest(acc.best, {run}) AS best), acc -> acc.best)")
+    return F.expr(f"CASE WHEN size({grams}) = 0 THEN 0.0D "
+                  f"ELSE round({best} / size({grams}), 6) END")
 
 
 # ---------------------------------------------------------------------------
 # PII scrubbing (standard pre-training hygiene: redact contact strings
 # before anything downstream sees the text). Pure regexp_replace chains —
-# JVM expressions with exact DuckDB twins; patterns stay within the
-# Java-regex ∩ RE2 subset (character classes, \b, bounded repeats) so both
-# engines match identically.
+# JVM expressions re-implemented by the DuckDB oracle; patterns stay within
+# the Java-regex ∩ RE2 subset (character classes, \b, bounded repeats) so
+# both engines match identically.
 # ---------------------------------------------------------------------------
 
 PII_PATTERNS: dict[str, tuple[str, str]] = {
@@ -426,38 +341,87 @@ PII_PATTERNS: dict[str, tuple[str, str]] = {
 }
 
 
-def pii_counts_exprs(col: Column) -> list[Column]:
+def pii_counts_exprs(name: str) -> list[Column]:
     """One ``n_{kind}`` count column per PII pattern (counted on the RAW
     text, before any replacement disturbs overlapping matches)."""
-    return [F.regexp_count(col, F.lit(pat)).alias(f"n_{kind}")
+    c = ident(name)
+    return [F.expr(f"regexp_count({c}, {sql_string(pat)}) AS n_{kind}")
             for kind, (pat, _) in PII_PATTERNS.items()]
 
 
-def redact_pii(col: Column) -> Column:
+def redact_pii(name: str) -> Column:
     """Text with every PII match replaced by its ``[KIND]`` token —
     a fixed chain of 4 ``regexp_replace`` (all-occurrence) expressions,
     order as declared in ``PII_PATTERNS``."""
-    out = col
+    out = ident(name)
     for pat, token in PII_PATTERNS.values():
-        out = F.regexp_replace(out, pat, token)
-    return out
+        out = f"regexp_replace({out}, {sql_string(pat)}, {sql_string(token)})"
+    return F.expr(out)
 
 
+# ---------------------------------------------------------------------------
 # Gopher rule-based quality filter (Rae et al. 2021 §A1.1.1, public):
 # the canonical pre-training document gate. The stopword rule uses the
 # paper's own word list.
+# ---------------------------------------------------------------------------
+
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+_ELLIPSIS = sql_string(r"\.\.\.")
+_ELLIPSIS_LINE = sql_string(r"(\.\.\.|…)\s*$")
+_BULLET_LINE = sql_string(r"^\s*([•‣▪-]\s)")
 
 
-def gopher_quality_flags(col: Column,
-                         min_words: int = 50, max_words: int = 100_000,
-                         min_avg_word_len: float = 3.0,
-                         max_avg_word_len: float = 10.0,
-                         max_symbol_ratio: float = 0.1,
-                         max_ellipsis_line_ratio: float = 0.3,
-                         max_bullet_line_ratio: float = 0.9,
-                         min_alpha_word_ratio: float = 0.8,
-                         min_stopword_hits: int = 2) -> dict[str, Column]:
+def _gopher_rules(c: str, tk: str, ln: str,
+                  min_words: int = 50, max_words: int = 100_000,
+                  min_avg_word_len: float = 3.0,
+                  max_avg_word_len: float = 10.0,
+                  max_symbol_ratio: float = 0.1,
+                  max_ellipsis_line_ratio: float = 0.3,
+                  max_bullet_line_ratio: float = 0.9,
+                  min_alpha_word_ratio: float = 0.8,
+                  min_stopword_hits: int = 2) -> dict[str, str]:
+    """The rule texts over text ``c``, its tokens ``tk`` and its lines
+    ``ln`` — split expressions or bound lambda fields."""
+    lit = sql_literal
+    nw = f"CASE WHEN trim({c}) = '' THEN 0 ELSE size({tk}) END"
+
+    def matches(pattern: str) -> str:
+        return f"size(regexp_extract_all({c}, {pattern}, 0))"
+
+    def lines(pattern: str) -> str:
+        return f"size(filter({ln}, y -> y rlike {pattern}))"
+
+    avg = _ratio(f"aggregate({tk}, CAST(0 AS BIGINT), "
+                 f"(acc, w) -> acc + length(w))", nw)
+    symbol = _ratio(f"{matches(sql_string('#'))} + ({matches(_ELLIPSIS)} "
+                    f"+ {matches(sql_string('…'))})", nw)
+    ellipsis = _ratio(lines(_ELLIPSIS_LINE), f"size({ln})")
+    bullet = _ratio(lines(_BULLET_LINE), f"size({ln})")
+    alpha = _ratio(f"size(filter({tk}, w -> w rlike '[a-z]'))", nw)
+    stop_hits = (f"size(filter(array({_strings(GOPHER_STOPWORDS)}), "
+                 f"__w -> array_contains({tk}, __w)))")
+    flags = {
+        "ok_word_count": f"({nw}) >= {lit(min_words)} "
+                         f"AND ({nw}) <= {lit(max_words)}",
+        "ok_word_len": f"({avg}) >= {lit(min_avg_word_len)} "
+                       f"AND ({avg}) <= {lit(max_avg_word_len)}",
+        "ok_symbols": f"({symbol}) <= {lit(max_symbol_ratio)}",
+        "ok_ellipsis_lines":
+            f"({ellipsis}) <= {lit(max_ellipsis_line_ratio)}",
+        "ok_bullet_lines": f"({bullet}) <= {lit(max_bullet_line_ratio)}",
+        "ok_alpha_words": f"({alpha}) >= {lit(min_alpha_word_ratio)}",
+        "ok_stopwords": f"({stop_hits}) >= {lit(min_stopword_hits)}",
+    }
+    return {"n_words": f"CAST({nw} AS BIGINT)",
+            "avg_word_len": avg,
+            "symbol_ratio": symbol,
+            "alpha_word_ratio": alpha,
+            "stopword_hits": f"CAST({stop_hits} AS INT)",
+            **flags,
+            "keep": " AND ".join(f"({f})" for f in flags.values())}
+
+
+def gopher_quality_flags(name: str, **thresholds) -> dict[str, Column]:
     """Gopher's published rule set as per-row JVM expressions — one
     boolean column per rule plus the conjunction ``keep``. Pure
     projection: at 100 TB this is a map-side filter fused into the scan.
@@ -468,109 +432,29 @@ def gopher_quality_flags(col: Column,
     ≥80% of words containing an alphabetic character; at least 2 of the
     paper's 8 stopwords present. Every cap is INCLUSIVE (uniform ``<=``
     boundary convention; floors are inclusive ``>=``). Ratios round at
-    6dp so the DuckDB twin in tests/test_text.py compares cell-exact;
-    blank text fails the word-count rule (keep=False); NULL text
-    propagates NULL through every flag.
+    6dp so the DuckDB oracle compares cell-exact; blank text fails the
+    word-count rule (keep=False). ``thresholds`` override the defaults of
+    ``_gopher_rules`` by name.
 
     Per-column form: each returned Column computes only ITS metric —
-    right for projections that select several flags side by side (one
-    split per selected column, same as any projection). For a fused
-    FILTER on the conjunction use :func:`gopher_keep`, which binds the
-    splits once (filter predicates get no subexpression elimination, so
-    ``flags["keep"]`` there would split the text once per rule).
+    right for projections that select several flags side by side. For a
+    fused FILTER on the conjunction use :func:`gopher_keep`, which binds
+    the splits once (``flags["keep"]`` there would split the text once
+    per rule).
     """
-    return _gopher_rules(
-        col, tokens(col), F.split(col, "\n"),
-        min_words=min_words, max_words=max_words,
-        min_avg_word_len=min_avg_word_len,
-        max_avg_word_len=max_avg_word_len,
-        max_symbol_ratio=max_symbol_ratio,
-        max_ellipsis_line_ratio=max_ellipsis_line_ratio,
-        max_bullet_line_ratio=max_bullet_line_ratio,
-        min_alpha_word_ratio=min_alpha_word_ratio,
-        min_stopword_hits=min_stopword_hits)
+    c = ident(name)
+    rules = _gopher_rules(c, _tokens(c), f"split({c}, {_NEWLINE})",
+                          **thresholds)
+    return {k: F.expr(v) for k, v in rules.items()}
 
 
-def _gopher_rules(col: Column, tk: Column, ln: Column,
-                  min_words: int = 50, max_words: int = 100_000,
-                  min_avg_word_len: float = 3.0,
-                  max_avg_word_len: float = 10.0,
-                  max_symbol_ratio: float = 0.1,
-                  max_ellipsis_line_ratio: float = 0.3,
-                  max_bullet_line_ratio: float = 0.9,
-                  min_alpha_word_ratio: float = 0.8,
-                  min_stopword_hits: int = 2) -> dict[str, Column]:
-    """Rule math shared by :func:`gopher_quality_flags` (unbound
-    token/line expressions) and :func:`gopher_keep` (lambda-bound
-    arrays) — ``tk``/``ln`` may be either."""
-    n_words = F.when(F.trim(col) == "", F.lit(0)).otherwise(F.size(tk))
-    avg_wlen = F.round(
-        F.when(n_words > 0,
-               F.aggregate(tk, F.lit(0).cast("bigint"),
-                           lambda acc, t: acc + F.length(t)) / n_words)
-        .otherwise(F.lit(0.0)), 6)
-    n_hash = F.size(F.regexp_extract_all(col, F.lit(r"#"), 0))
-    n_ellipsis = (F.size(F.regexp_extract_all(col, F.lit(r"\.\.\."), 0))
-                  + F.size(F.regexp_extract_all(col, F.lit("…"), 0)))
-    symbol_ratio = F.round(
-        F.when(n_words > 0, (n_hash + n_ellipsis) / n_words)
-        .otherwise(F.lit(0.0)), 6)
-    n_lines = F.size(ln)
-    ellipsis_lines = F.size(F.filter(
-        ln, lambda x: x.rlike(r"(\.\.\.|…)\s*$")))
-    bullet_lines = F.size(F.filter(
-        ln, lambda x: x.rlike(r"^\s*([•‣▪-]\s)")))
-    ellipsis_line_ratio = F.round(
-        F.when(n_lines > 0, ellipsis_lines / n_lines)
-        .otherwise(F.lit(0.0)), 6)
-    bullet_line_ratio = F.round(
-        F.when(n_lines > 0, bullet_lines / n_lines)
-        .otherwise(F.lit(0.0)), 6)
-    alpha_words = F.size(F.filter(tk, lambda t: t.rlike("[a-z]")))
-    alpha_word_ratio = F.round(
-        F.when(n_words > 0, alpha_words / n_words)
-        .otherwise(F.lit(0.0)), 6)
-    stop_hits = F.size(F.filter(
-        F.array(*[F.lit(w) for w in GOPHER_STOPWORDS]),
-        lambda w: F.array_contains(tk, w)))
-    flags = {
-        "ok_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "ok_word_len": (avg_wlen >= min_avg_word_len)
-                       & (avg_wlen <= max_avg_word_len),
-        "ok_symbols": symbol_ratio <= max_symbol_ratio,
-        "ok_ellipsis_lines":
-            ellipsis_line_ratio <= max_ellipsis_line_ratio,
-        "ok_bullet_lines": bullet_line_ratio <= max_bullet_line_ratio,
-        "ok_alpha_words": alpha_word_ratio >= min_alpha_word_ratio,
-        "ok_stopwords": stop_hits >= min_stopword_hits,
-    }
-    keep = None
-    for f in flags.values():
-        keep = f if keep is None else (keep & f)
-    fields = {"n_words": n_words.cast("bigint"),
-              "avg_word_len": avg_wlen,
-              "symbol_ratio": symbol_ratio,
-              "alpha_word_ratio": alpha_word_ratio,
-              "stopword_hits": stop_hits.cast("int")}
-    fields.update(flags)
-    fields["keep"] = keep
-    return fields
-
-
-def gopher_keep(col: Column, **thresholds) -> Column:
+def gopher_keep(name: str, **thresholds) -> Column:
     """The :func:`gopher_quality_flags` ``keep`` conjunction with the
-    token/line splits bound ONCE per row, for use inside a fused FILTER:
-    ``transform(array(struct(toks, lines)), x -> …)[0]`` makes every
-    rule reference the same bound arrays instead of re-inlining the
-    split subtree (FilterExec predicates get no subexpression
-    elimination — measured ~2x on the composed
-    ``operators.pipeline.clean_corpus`` gate at sf0.1). Identical values
-    to ``gopher_quality_flags(col, **thresholds)["keep"]`` (asserted in
-    tests/test_text.py)."""
-    def bound_keep(x: Column) -> Column:
-        return _gopher_rules(col, x["t"], x["l"], **thresholds)["keep"]
-
-    return F.transform(
-        F.array(F.struct(tokens(col).alias("t"),
-                         F.split(col, "\n").alias("l"))),
-        bound_keep)[0]
+    token/line splits bound ONCE per row, for use inside a fused FILTER
+    (measured ~2x on the composed ``operators.pipeline.clean_corpus``
+    gate at sf0.1). Identical values to
+    ``gopher_quality_flags(name, **thresholds)["keep"]``."""
+    c = ident(name)
+    keep = _gopher_rules(c, "__g.t", "__g.l", **thresholds)["keep"]
+    return F.expr(f"transform(array(struct({_tokens(c)} AS t, "
+                  f"split({c}, {_NEWLINE}) AS l)), __g -> {keep})[0]")

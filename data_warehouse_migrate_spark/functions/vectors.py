@@ -1,7 +1,7 @@
 """Vector expressions over array<float|double> embedding columns.
 
-Built-in ``zip_with``/``aggregate`` array math — JVM-side, no UDFs — with
-exact DuckDB SQL twins (list_transform/list_reduce) for the oracle.
+Built-in ``zip_with``/``aggregate`` array math — JVM-side, no UDFs —
+re-implemented by the DuckDB oracles (list_transform/list_reduce).
 Results are rounded where they feed hash-compared query outputs (float
 summation order is engine-defined past ~1e-12).
 """
@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from data_warehouse_migrate_spark.sqltext import ident
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -81,88 +83,31 @@ def normalize(a: Column) -> Column:
         F.transform(a, lambda x: x.cast("double") / n))
 
 
-def hyperplane_projections(vec: Column, n_planes: int) -> Column:
-    """``array<double>[n_planes]`` of signed projections onto deterministic
-    pseudo-random hyperplanes — the shared core of every hyperplane-LSH
-    operator.
+def band_keys(vec_name: str, n_planes: int, bands: int,
+              rows_per_band: int) -> Column:
+    """``array<long>[bands]`` of hyperplane-LSH band keys for an array
+    column: band b's key packs the sign bits of planes
+    [b·r, (b+1)·r) — the LSH shuffle key is (band, key), a 2^r key space
+    per band. The shared core of every hyperplane-LSH operator, rendered
+    as SQL text and parsed JVM-side in one ``F.expr`` call (built as a
+    Column tree it cost ~160 ms of py4j round trips per call at 24 planes).
 
     Plane weights are drawn from {-2,-1,1,2} (never 0 — zero weights make
     sparse vectors knife-edge on a plane) by Murmur3-hashing
     (dimension_index, plane_index) — deterministic (no runtime randomness,
     stable across runs) yet decorrelated across planes. An affine pattern
     like (d·31 + j·17) mod 4 is NOT usable here: mod 4 it collapses to
-    (3d + j) mod 4, making plane j identical to plane j+4 — n planes carry
-    only 4 distinct hyperplanes and LSH recall/selectivity collapse.
+    (3d + j) mod 4, making plane j identical to plane j+4.
 
     Single-pass: ONE ``aggregate`` over the vector with an n_planes-element
-    running-sum accumulator. Per-plane aggregate expressions made Catalyst
-    inline the vector subtree n_planes times (the same pathology fixed in
-    ``minhash_signature``); with 24+ planes that inlining is fatal.
-    """
-    pairs = F.zip_with(
-        vec,
-        F.sequence(F.lit(0), F.size(vec) - 1),
-        lambda x, d: F.struct(x.cast("double").alias("x"), d.alias("d")),
-    )
-
-    def _w(d, j):
-        m = F.pmod(F.hash(d, j), F.lit(4))
-        return F.when(m < 2, m - 2).otherwise(m - 1).cast("double")
-
-    return F.aggregate(
-        pairs,
-        F.array_repeat(F.lit(0.0), n_planes),
-        lambda acc, p: F.transform(acc, lambda a, j: a + p["x"] * _w(p["d"], j)),
-    )
-
-
-def band_keys_from_projections(proj: Column, bands: int,
-                               rows_per_band: int) -> Column:
-    """``array<long>[bands]``: band b's key packs the sign bits of planes
-    [b·r, (b+1)·r) — the LSH shuffle key is (band, key), a 2^r key space
-    per band.
-
-    Single-pass: one ``aggregate`` with a (keys[], position) accumulator,
-    so ``proj`` is referenced exactly once — per-band slice expressions
-    would make CollapseProject inline the projection aggregate once per
-    band. 2^(i mod r) via float pow is integer-exact for r ≤ 52.
-    """
+    running-sum accumulator, then one over the sign bits with a
+    (keys[], position) accumulator, so neither the vector nor the
+    projections are inlined once per plane or band. 2^(i mod r) via float
+    pow is integer-exact for r ≤ 52. Probes must land in the buckets of an
+    index persisted in another session (``build_lsh_index``), so
+    ``tests/test_similarity.py`` pins the keys' values."""
     r = rows_per_band
-    bits = F.transform(proj, lambda p: F.when(p > 0, F.lit(1))
-                       .otherwise(F.lit(0)).cast("long"))
-    st = F.aggregate(
-        bits,
-        F.struct(F.array_repeat(F.lit(0).cast("long"), bands).alias("ks"),
-                 F.lit(0).cast("int").alias("i")),
-        lambda acc, bit: F.struct(
-            F.transform(
-                acc["ks"],
-                lambda key, b: F.when(
-                    b == (acc["i"] / r).cast("int"),
-                    key + bit * F.pow(F.lit(2.0), acc["i"] % r).cast("long"),
-                ).otherwise(key),
-            ).alias("ks"),
-            (acc["i"] + 1).alias("i"),
-        ),
-    )
-    return st["ks"]
-
-
-def band_keys_sql(vec_name: str, n_planes: int, bands: int,
-                  rows_per_band: int) -> Column:
-    """Parse-fast twin of ``band_keys_from_projections(
-    hyperplane_projections(col, n_planes), bands, r)`` for callers that
-    have a plain COLUMN NAME: the whole projection→bits→band-key pipeline
-    is emitted as ONE SQL string and parsed JVM-side in a single
-    ``F.expr`` call. The Column-builder form costs ~160 ms of driver-side
-    py4j round-trips PER CALL to assemble the same tree (measured, 24
-    planes) — pure fixed overhead on every LSH query. Output is verified
-    BIT-IDENTICAL to the Column builders in
-    tests/test_similarity.py::test_band_keys_sql_matches_column_builders,
-    which is what keeps probes compatible with indexes persisted by
-    either form (build_lsh_index's cross-session contract)."""
-    r = rows_per_band
-    vec = f"`{vec_name}`"
+    vec = ident(vec_name)
     w = ("CAST(CASE WHEN pmod(hash(p.d, j), 4) < 2 "
          "THEN pmod(hash(p.d, j), 4) - 2 "
          "ELSE pmod(hash(p.d, j), 4) - 1 END AS DOUBLE)")

@@ -28,17 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_warehouse_migrate_spark.functions.text import hashed_shingles_sql
+from data_warehouse_migrate_spark.functions.text import hashed_shingles
 from data_warehouse_migrate_spark.operators.skew import spread_input
+from data_warehouse_migrate_spark.sqltext import ident
 
 
 def _doc_shingle_hashes(df: DataFrame, text_col: str, id_col: str,
                         n: int, out_id: str) -> DataFrame:
-    # SQL-text twin (r18): one JVM-side parse per call instead of the
-    # Column builders' py4j round trips; bit-identical (test_text pin)
-    sh = hashed_shingles_sql(text_col, n)
+    sh = hashed_shingles(text_col, n)
     return spread_input(df).select(
-        F.col(id_col).alias(out_id), F.explode(sh).alias("sh"))
+        F.col(ident(id_col)).alias(out_id), F.explode(sh).alias("sh"))
 
 
 def _doc_shingles_with_size(df: DataFrame, text_col: str, id_col: str,
@@ -47,8 +46,8 @@ def _doc_shingles_with_size(df: DataFrame, text_col: str, id_col: str,
     the per-doc total comes from the pre-explode array size, a pure
     projection: counting it with an aggregate would pay a corpus-wide
     shuffle for a number every row already knows."""
-    sh = hashed_shingles_sql(text_col, n)
-    base = spread_input(df).select(F.col(id_col).alias(out_id),
+    sh = hashed_shingles(text_col, n)
+    base = spread_input(df).select(F.col(ident(id_col)).alias(out_id),
                                    sh.alias("__shs"))
     exploded = base.select(out_id, F.explode("__shs").alias("sh"))
     # NULL/empty shingle arrays produce no exploded rows — the totals
@@ -126,9 +125,9 @@ def decontaminate(train_df: DataFrame, benchmark_df: DataFrame,
     if drop_threshold <= 0:
         raise ValueError("drop_threshold must be > 0 — at 0 every "
                          "document (hit or not) would be dropped")
-    sh = hashed_shingles_sql(text_col, n)
-    base = spread_input(train_df).select(F.col(id_col).alias("train_id"),
-                                         sh.alias("__shs"))
+    sh = hashed_shingles(text_col, n)
+    base = spread_input(train_df).select(
+        F.col(ident(id_col)).alias("train_id"), sh.alias("__shs"))
     tr = base.select("train_id", F.size("__shs").alias("n_shingles"),
                      F.explode("__shs").alias("sh"))
     bench = (_doc_shingle_hashes(benchmark_df, text_col, id_col, n, "__bid")

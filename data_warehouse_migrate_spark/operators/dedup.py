@@ -33,13 +33,14 @@ from data_warehouse_migrate_spark.functions.sizing import (
 )
 from data_warehouse_migrate_spark.functions.text import (
     SIMHASH_BITS,
-    hashed_shingles_sql,
+    hashed_shingles,
     md5_prefix_int,
-    minhash_signature_sql,
+    minhash_signature,
     normalized_text,
-    simhash_sql,
+    simhash,
 )
 from data_warehouse_migrate_spark.operators.skew import spread_input
+from data_warehouse_migrate_spark.sqltext import ident
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -383,9 +384,11 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     with the keeper (min id) and the duplicate count. One hash-partitioned
     aggregate; at scale group keys are the 128-bit md5, not the text."""
     return (
-        df.select(F.col(id_col), F.md5(normalized_text(F.col(text_col))).alias("text_hash"))
+        df.select(F.col(ident(id_col)),
+                  F.md5(normalized_text(text_col)).alias("text_hash"))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
+        .agg(F.min(F.col(ident(id_col))).alias("keep_id"),
+             F.count("*").alias("n_dups"))
     )
 
 
@@ -407,10 +410,11 @@ def drop_exact_dups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     unique ``id_col`` the kept rows are identical to the join shape;
     duplicated (id, text) rows keep ONE representative here (the
     aggregate's semantics — 'the min-id row', singular)."""
-    h = F.coalesce(F.md5(normalized_text(F.col(text_col))),
-                   F.lit("__null_text__"))
+    h = F.coalesce(F.md5(normalized_text(text_col)), F.lit("__null_text__"))
+    row = F.expr(f"min_by(struct({', '.join(map(ident, df.columns))}), "
+                 f"{ident(id_col)})")
     return (df.groupBy(h.alias("__h"))
-            .agg(F.min_by(F.struct(*df.columns), F.col(id_col)).alias("__r"))
+            .agg(row.alias("__r"))
             .select("__r.*"))
 
 
@@ -449,7 +453,7 @@ def line_dedup(df: DataFrame, text_col: str, id_col: str,
         F.col(text_col).isNull().alias("__null_text"))
     lines = (df.select(F.col(id_col),
                        F.posexplode(split_arr).alias("pos", "line"))
-             .withColumn("__h", md5_prefix_int(F.col("line"))))
+             .withColumn("__h", md5_prefix_int("line")))
     kept = (lines
             .withColumn("__c", F.count("*").over(W.partitionBy("__h")))
             .filter(F.col("__c") < min_occurrences)
@@ -485,13 +489,11 @@ def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     Input is spread to the session's parallelism first (no-op at scale):
     the shingle+md5 expression tree is the dominant cost of every operator
     built on this, and a small single-file scan would otherwise compute it
-    all on one core. Built via the SQL-text twin (r18): one JVM-side
-    parse instead of ~125 ms of py4j Column-builder round trips per call
-    — bit-identical, pinned in tests/test_text.py."""
+    all on one core."""
     df = spread_input(df)
     return df.select(
-        F.col(id_col).alias("id"),
-        hashed_shingles_sql(text_col, n).alias("shingles"),
+        F.col(ident(id_col)).alias("id"),
+        hashed_shingles(text_col, n).alias("shingles"),
     )
 
 
@@ -685,9 +687,7 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(f"k must be in [1, {len(MINHASH_A)}] — one affine "
                          f"permutation per signature element (got {k})")
     sets = _shingle_sets(df, text_col, id_col, n)
-    # SQL-text twin (r18): the k=16 Column build alone cost ~180 ms of
-    # driver py4j latency per call; bit-identical, pinned in test_text
-    return sets.withColumn("sig", minhash_signature_sql("shingles", k))
+    return sets.withColumn("sig", minhash_signature("shingles", k))
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -724,8 +724,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     # the candidates ``.distinct()`` (one full pair shuffle removed); the
     # extra ``bands`` ints per row are far cheaper than re-shuffling the
     # whole candidate set (guide §2.3/2.4)
-    # SQL-text twin (r18): bands × r getItem Column calls cost ~70 ms of
-    # py4j per call at k=16; hash(sig[i], ...) parses to the same tree
+    # one parsed expression: bands × r getItem Column calls cost ~70 ms
+    # of py4j per call at k=16
     bkeys = F.expr("array(" + ", ".join(
         "hash(" + ", ".join(f"sig[{i}]" for i in range(b * r, (b + 1) * r))
         + ")" for b in range(bands)) + ")")
@@ -788,10 +788,8 @@ def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str,
     if not 1 <= bits <= 60:
         raise ValueError(f"bits must be in [1, 60] — the md5-prefix token "
                          f"hash has 60 usable bits (got {bits})")
-    # SQL-text twin (r18): the bits=60 Column build alone cost ~280 ms
-    # of driver py4j latency per call; bit-identical, pinned in test_text
-    return df.select(F.col(id_col).alias("id"),
-                     simhash_sql(text_col, bits).alias("simhash"))
+    return df.select(F.col(ident(id_col)).alias("id"),
+                     simhash(text_col, bits).alias("simhash"))
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -958,9 +956,10 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # reads the edge frame twice). The distributed fallback re-derives
     # the distinct once more under its own persist — the degenerate-
     # scale path pays one extra pass so the common path saves one.
-    und = edges.select(F.least(F.col(src_col), F.col(dst_col)).alias("s"),
-                       F.greatest(F.col(src_col), F.col(dst_col)).alias("d")
-                       ).distinct()
+    src, dst = F.col(ident(src_col)), F.col(ident(dst_col))
+    node = nodes[ident(id_col)]
+    und = edges.select(F.least(src, dst).alias("s"),
+                       F.greatest(src, dst).alias("d")).distinct()
     pdf = _edges_pdf_or_none(und, local_max_edges)
     if pdf is not None:
         lab_pdf = _cc_local_moved(pdf)
@@ -969,14 +968,11 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
             id_t = nodes.schema[id_col].dataType.simpleString()
             lab = spark.createDataFrame(
                 lab_pdf, schema=f"node {id_t}, __cc_label {id_t}")
-            out = (nodes.join(F.broadcast(lab),
-                              nodes[id_col] == lab.node, "left")
-                   .select(nodes[id_col],
-                           F.coalesce(F.col("__cc_label"), nodes[id_col])
+            out = (nodes.join(F.broadcast(lab), node == lab.node, "left")
+                   .select(node, F.coalesce(F.col("__cc_label"), node)
                            .alias("cluster_id")))
         else:
-            out = nodes.select(F.col(id_col),
-                               F.col(id_col).alias("cluster_id"))
+            out = nodes.select(node, node.alias("cluster_id"))
         return out
 
     # fallback regime: sym references und TWICE (forward + reversed), so
@@ -987,7 +983,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                                    F.col("s").alias("d"))))
     sym = _materialize(sym)
     labels = _materialize(
-        nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label")))
+        nodes.select(node.alias("node"), node.alias("label")))
     for _ in range(max_iterations):
         neighbor_min = (sym.join(labels, sym.s == labels.node)
                         .groupBy(F.col("d").alias("node"))
@@ -1126,7 +1122,7 @@ def near_dup_removal(df: DataFrame, pairs: DataFrame, id_col: str,
         id_t = df.schema[id_col].dataType.simpleString()
         drops = spark.createDataFrame(
             moved[["node"]], schema=f"node {id_t}")
-        return df.join(F.broadcast(drops), df[id_col] == drops.node,
+        return df.join(F.broadcast(drops), df[ident(id_col)] == drops.node,
                        "left_anti")
     # fallback regime: members + the CC iteration both re-read the edge
     # set — persist it here (degenerate-scale path only)
@@ -1136,8 +1132,8 @@ def near_dup_removal(df: DataFrame, pairs: DataFrame, id_col: str,
                .distinct())
     comp = connected_components(members, und, id_col=id_col,
                                 src_col="s", dst_col="d")
-    drops = (comp.filter(F.col(id_col) != F.col("cluster_id"))
-             .select(id_col))
+    drops = (comp.filter(F.col(ident(id_col)) != F.col("cluster_id"))
+             .select(F.col(ident(id_col))))
     return df.join(drops, id_col, "left_anti")
 
 
@@ -1198,7 +1194,7 @@ def embedding_near_dups(df: DataFrame, vec_col: str, id_col: str,
     import math
 
     from data_warehouse_migrate_spark.functions.vectors import (
-        band_keys_sql,
+        band_keys,
         dot,
         normalize,
     )
@@ -1235,19 +1231,15 @@ def embedding_near_dups(df: DataFrame, vec_col: str, id_col: str,
     # materialize once: unit-normalized vectors (per-pair cosine becomes
     # a single dot) + the banded keys (candidate join scans base three
     # times); spread first — the n_planes dot products per row serialize
-    # on a single-partition scan otherwise. Keys come from the SQL-text
-    # twin band_keys_sql (r18, guide §1.2 driver-bound work): ONE
-    # JVM-side parse instead of ~130 ms of py4j Column-builder round
-    # trips per call (bit-identical, pinned in tests/test_similarity),
-    # and the persisted payload carries bands longs instead of the
-    # n_planes-double projection column the Column form cached.
+    # on a single-partition scan otherwise. The persisted payload carries
+    # bands longs per row, not the n_planes-double projections.
     df = spread_input(df)
     from pyspark import StorageLevel
 
     base = df.select(
         F.col(id_col).alias("id"),
         normalize(F.col(vec_col)).alias("vec"),
-        band_keys_sql(vec_col, n_planes, bands, r).alias("bkeys")
+        band_keys(vec_col, n_planes, bands, r).alias("bkeys")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # persist + size in ONE job (the sizing agg is the materializer)
     n_rows, base_bytes = count_and_row_bytes(base.select("id", "vec"))

@@ -69,7 +69,7 @@ def pack_sequences(df: DataFrame, text_col: str, id_col: str,
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     base = df.select(
         F.col(id_col).alias("id"),
-        F.coalesce(token_count(F.col(text_col)), F.lit(0))
+        F.coalesce(token_count(text_col), F.lit(0))
         .cast("long").alias("n_tokens"),
         group_expr.cast("long").alias("pack_group"))
     cum_before = F.sum("n_tokens").over(w) - F.col("n_tokens")

@@ -32,6 +32,7 @@ from data_warehouse_migrate_spark.functions.text import (
     lang_keep,
 )
 from data_warehouse_migrate_spark.operators.dedup import drop_exact_dups
+from data_warehouse_migrate_spark.sqltext import ident
 
 
 def clean_corpus(df: DataFrame, text_col: str = "text",
@@ -52,16 +53,13 @@ def clean_corpus(df: DataFrame, text_col: str = "text",
       documents; short-document corpora need lower floors).
     * ``dedup``: keep the min-id representative per normalized text.
     """
-    out = df.filter(F.col(text_col).isNotNull())
+    # lang_keep and gopher_keep, not lang_id().isin() or flags["keep"]:
+    # the bound forms split the text once inside the fused filter
+    # instead of once per stopword count or rule
+    out = df.filter(F.col(ident(text_col)).isNotNull())
     if lang_allow is not None:
-        # lang_keep, not lang_id().isin(): the bound-count form splits
-        # the text once inside the fused filter instead of once per
-        # count reference (filter predicates get no subexpression
-        # elimination — the r16 plan showed ~8 splits/row here)
-        out = out.filter(lang_keep(F.col(text_col), tuple(lang_allow)))
-    # gopher_keep, not flags["keep"]: the bound-array form splits the
-    # text once inside the fused filter instead of once per rule
-    out = out.filter(gopher_keep(F.col(text_col), **(gopher_kwargs or {})))
+        out = out.filter(lang_keep(text_col, tuple(lang_allow)))
+    out = out.filter(gopher_keep(text_col, **(gopher_kwargs or {})))
     if dedup:
         out = drop_exact_dups(out, text_col, id_col)
     return out

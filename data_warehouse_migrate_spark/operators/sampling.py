@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_warehouse_migrate_spark.functions.text import md5_prefix_int
+from data_warehouse_migrate_spark.functions.text import _md5_prefix_int
+from data_warehouse_migrate_spark.sqltext import ident, sql_string
 
 HASH_SPACE = 1 << 60  # md5_prefix_int range
 
@@ -37,10 +38,10 @@ def _draw(id_col: str, salt: str = "") -> F.Column:
     a SUBSET of the first's), not p1·p2. Pass a distinct salt per stage
     to restore independence while staying deterministic; the default ""
     preserves the single-stage contract (and its SQL oracles)."""
-    c = F.col(id_col).cast("string")
+    c = f"CAST({ident(id_col)} AS STRING)"
     if salt:
-        c = F.concat(F.lit(salt), F.lit(":"), c)
-    return md5_prefix_int(c)
+        c = f"concat({sql_string(salt)}, ':', {c})"
+    return F.expr(_md5_prefix_int(c))
 
 
 def hash_sample(df: DataFrame, id_col: str, fraction: float,
@@ -97,7 +98,7 @@ def stratified_sample(df: DataFrame, strata_cols: list[str], n: int,
     just the rank. For fraction-per-stratum (no exactness), prefer
     ``hash_sample`` filtered per stratum — shuffle-free."""
     w = Window.partitionBy(*strata_cols).orderBy(
-        _draw(id_col).asc(), F.col(id_col).asc())
+        _draw(id_col).asc(), F.col(ident(id_col)).asc())
     return (df.withColumn("__rk", F.row_number().over(w))
             .filter(F.col("__rk") <= n).drop("__rk"))
 
@@ -129,7 +130,8 @@ def reservoir_n(df: DataFrame, id_col: str, n: int) -> DataFrame:
     plans orderBy+limit as TakeOrdered — each partition keeps its local
     top-n and the driver merges; the full data is never sorted or
     shuffled."""
-    return df.orderBy(_draw(id_col).asc(), F.col(id_col).asc()).limit(n)
+    return (df.orderBy(_draw(id_col).asc(), F.col(ident(id_col)).asc())
+            .limit(n))
 
 
 def shuffle_corpus(df: DataFrame, id_col: str, salt: str = "v1",
@@ -156,5 +158,6 @@ def shuffle_corpus(df: DataFrame, id_col: str, salt: str = "v1",
     key = _draw(id_col, salt)
     n = n_shards or df.sparkSession.sparkContext.defaultParallelism
     return (df.withColumn("shuffle_key", key)
-            .repartitionByRange(n, F.col("shuffle_key"), F.col(id_col))
-            .sortWithinPartitions("shuffle_key", id_col))
+            .repartitionByRange(n, F.col("shuffle_key"),
+                                F.col(ident(id_col)))
+            .sortWithinPartitions("shuffle_key", F.col(ident(id_col))))

@@ -24,6 +24,7 @@ from data_warehouse_migrate_spark.functions.vectors import (
     norm,
 )
 from data_warehouse_migrate_spark.operators.skew import spread_input
+from data_warehouse_migrate_spark.sqltext import ident
 
 
 def _resolve_planes(corpus: DataFrame, n_planes: int | None,
@@ -381,7 +382,7 @@ def _cent_sims_sql(vec_name: str, cents: list[list[float]]) -> str:
     ``repr`` (shortest round-trip form) inside CAST('…' AS DOUBLE), so
     the parsed doubles are bit-identical to the ``F.lit(float)`` form;
     the casts are constant-folded at optimization."""
-    vec = f"`{vec_name}`"
+    vec = ident(vec_name)
     structs = []
     for j, c in enumerate(cents):
         arr = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in c)
@@ -511,7 +512,7 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame,
     ``build_lsh_index`` table records its occupancy at build time, so
     the indexed path makes this choice with no extra job at all."""
 
-    from data_warehouse_migrate_spark.functions.vectors import band_keys_sql
+    from data_warehouse_migrate_spark.functions.vectors import band_keys
     from data_warehouse_migrate_spark.operators.dedup import _probe_keys
 
     if not 0 <= probe_bits <= 2:
@@ -524,11 +525,9 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame,
     n_planes, r = _resolve_planes(corpus, n_planes, bands)
 
     def _indexed(df, id_name, vec_name, out_id, out_vec, out_norm):
-        # band_keys_sql: bit-identical to the Column builders, parsed
-        # JVM-side in one call (~160 ms less driver latency per side).
         # The norm rides along per input row (evaluated before the
         # generator) — per-pair cosine then costs one fold, not three
-        keys = band_keys_sql(vec_name, n_planes, bands, r)
+        keys = band_keys(vec_name, n_planes, bands, r)
         return df.select(
             F.col(id_name).alias(out_id), F.col(vec_name).alias(out_vec),
             norm(F.col(vec_name)).alias(out_norm),
@@ -573,18 +572,18 @@ def build_lsh_index(corpus: DataFrame, table: str,
     layout and only the (tiny) probe side exchanges.
 
     The hyperplanes are deterministic in (dimension, plane) — see
-    ``vectors.hyperplane_projections`` — so probes computed in ANY later
+    ``vectors.band_keys`` — so probes computed in ANY later
     session land in the right buckets as long as they use the same
     n_planes/bands; those are recorded on the table as TBLPROPERTIES
     (``dwms.lsh.n_planes`` / ``dwms.lsh.bands``), making the index
     self-describing. Returns {table, n_planes, bands, r}.
     """
 
-    from data_warehouse_migrate_spark.functions.vectors import band_keys_sql
+    from data_warehouse_migrate_spark.functions.vectors import band_keys
     from data_warehouse_migrate_spark.sources.sinks import write_bucketed
 
     n_planes, r = _resolve_planes(corpus, n_planes, bands)
-    keys = band_keys_sql(corpus_vec, n_planes, bands, r)
+    keys = band_keys(corpus_vec, n_planes, bands, r)
     rows = spread_input(corpus).select(
         F.col(corpus_id).alias("corpus_id"),
         F.col(corpus_vec).alias("corpus_vec"),
@@ -640,7 +639,7 @@ def lsh_topk_indexed(queries: DataFrame, index_table: str,
     re-projects everything. Use the index when the corpus is ≥ ~10k
     vectors AND the same corpus serves many query batches; below that,
     call ``lsh_topk`` directly."""
-    from data_warehouse_migrate_spark.functions.vectors import band_keys_sql
+    from data_warehouse_migrate_spark.functions.vectors import band_keys
     from data_warehouse_migrate_spark.operators.dedup import _probe_keys
 
     if not 0 <= probe_bits <= 2:
@@ -657,7 +656,7 @@ def lsh_topk_indexed(queries: DataFrame, index_table: str,
     bounded = (max_bucket_size is None
                or int(props.get("dwms.lsh.max_bucket", 0)) <= max_bucket_size)
 
-    keys = band_keys_sql(query_vec, n_planes, bands, r)
+    keys = band_keys(query_vec, n_planes, bands, r)
     probes = (queries.select(F.col(query_id).alias("query_id"),
                              F.col(query_vec).alias("__qv"),
                              norm(F.col(query_vec)).alias("__qn"),

@@ -155,7 +155,7 @@ def corpus_stats(docs: DataFrame, text_col: str,
     """
     from data_warehouse_migrate_spark.functions.text import token_count
 
-    nt = token_count(F.col(text_col))
+    nt = token_count(text_col)
     return (docs.groupBy(*group_cols)
             .agg(F.count("*").alias("n_docs"),
                  F.sum(nt.cast("long")).alias("total_tokens"),

@@ -599,7 +599,7 @@ FROM numbered GROUP BY user_id, session_id
 
 def q_text_stats(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    stats = X.text_stats_exprs(F.col("text"))
+    stats = X.text_stats_exprs("text")
     return d.select("doc_id", *[v.alias(k) for k, v in stats.items()])
 
 
@@ -637,7 +637,7 @@ FROM w
 
 def q_lang_id(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", X.lang_id(F.col("text")).alias("lang_pred"))
+    return d.select("doc_id", X.lang_id("text").alias("lang_pred"))
 
 
 def _stop_sql(lang: str) -> str:
@@ -668,9 +668,9 @@ def q_doc_fingerprints(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.md5(X.normalized_text(F.col("text"))).alias("md5_hex"),
-        X.polyhash(F.col("text")).alias("poly_hash"),
-        X.md5_prefix_int(F.col("text")).alias("md5_int"),
+        F.md5(X.normalized_text("text")).alias("md5_hex"),
+        X.polyhash("text").alias("poly_hash"),
+        X.md5_prefix_int("text").alias("md5_int"),
     )
 
 
@@ -713,7 +713,7 @@ FROM bits GROUP BY doc_id
 def q_quality_score(spark, sf_dir):
     """Composite text-quality score (length/noise/stopword heuristic)."""
     d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", X.quality_score(F.col("text")).alias("quality"))
+    return d.select("doc_id", X.quality_score("text").alias("quality"))
 
 
 O_QUALITY_SCORE = f"""
@@ -754,7 +754,7 @@ def q_gopher_quality(spark, sf_dir):
     projection — a map-side filter fused into the scan at 100 TB.
     NULL-text docs are excluded on both sides (the gate scores text)."""
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    flags = X.gopher_quality_flags(F.col("text"))
+    flags = X.gopher_quality_flags("text")
     cols = ["n_words", "avg_word_len", "symbol_ratio", "alpha_word_ratio",
             "stopword_hits", "ok_word_count", "ok_word_len", "ok_symbols",
             "ok_ellipsis_lines", "ok_bullet_lines", "ok_alpha_words",
@@ -2109,8 +2109,8 @@ def q_doc_repetition(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    dup = duplicate_token_fraction(F.col("text"))
-    top2 = top_ngram_fraction(F.col("text"), 2)
+    dup = duplicate_token_fraction("text")
+    top2 = top_ngram_fraction("text", 2)
     return d.select(
         "doc_id", dup.alias("dup_token_frac"), top2.alias("top_bigram_frac"),
         ((dup < 0.55) & (top2 < 0.10)).alias("keep"))
@@ -2264,10 +2264,10 @@ def q_scrub_pii(spark, sf_dir):
         F.lit("https://ex.org/d/"), sid,
         F.lit(" ip 10.0."), (F.col("doc_id") % 256).cast("string"),
         F.lit(".1 tel 555-0100-"), sid)
-    return d.select(
+    return d.select("doc_id", injected.alias("raw")).select(
         "doc_id",
-        *pii_counts_exprs(injected),
-        redact_pii(injected).alias("clean_text"))
+        *pii_counts_exprs("raw"),
+        redact_pii("raw").alias("clean_text"))
 
 
 O_SCRUB_PII = r"""
@@ -2560,7 +2560,7 @@ def q_quality_band_filter(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     scored = d.select("doc_id", "lang",
-                      F.round(X.quality_score(F.col("text")), 6)
+                      F.round(X.quality_score("text"), 6)
                       .alias("quality"))
     return (quality_band_filter(scored, "quality", "lang", keep_top=0.5)
             .select("doc_id", "lang", "quality", "q_rank"))
@@ -3030,7 +3030,7 @@ def q_curriculum_buckets(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     scored = d.select("doc_id", "lang",
-                      F.round(X.quality_score(F.col("text")), 6)
+                      F.round(X.quality_score("text"), 6)
                       .alias("quality"))
     return curriculum_buckets(scored, "quality", n_buckets=4)
 

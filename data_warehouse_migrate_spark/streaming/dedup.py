@@ -52,7 +52,7 @@ def dedup_exact_stream(docs: DataFrame, text_col: str = "text",
     )
 
     hashed = docs.withColumn("text_hash",
-                             F.md5(normalized_text(F.col(text_col))))
+                             F.md5(normalized_text(text_col)))
     if ts_col is None:
         return hashed.dropDuplicates(["text_hash"])
     # epoch-nanos long columns (the nanosAsLong read this module itself

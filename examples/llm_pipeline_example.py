@@ -37,7 +37,7 @@ def main() -> None:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     # 1. hygiene: redact contact strings before anything else sees text
-    docs = docs.withColumn("text", redact_pii(F.col("text")))
+    docs = docs.withColumn("text", redact_pii("text"))
 
     # 2. exact dedup (normalized-text hash, keep min id)
     docs = drop_exact_dups(docs, "text", "doc_id")
@@ -54,7 +54,7 @@ def main() -> None:
                          "text", "doc_id", n=3, drop_threshold=0.8)
 
     # 5. per-language quality banding: keep each language's top 80%
-    scored = docs.withColumn("q", F.round(quality_score(F.col("text")), 6))
+    scored = docs.withColumn("q", F.round(quality_score("text"), 6))
     docs = (quality_band_filter(scored, "q", "lang", keep_top=0.8)
             .drop("q", "q_rank"))
 

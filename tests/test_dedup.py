@@ -9,6 +9,7 @@ from data_warehouse_migrate_spark.operators.dedup import (
     exact_dedup,
     embedding_near_dups,
     minhash_lsh_pairs,
+    near_dup_removal,
     ngram_jaccard_pairs,
     simhash_near_pairs,
 )
@@ -621,3 +622,92 @@ def test_pair_sum_branch_exact_counts(spark):
     empty = df.filter(F.col("band_key").isNull())
     row = _pair_sum_branch(empty).collect()[0]
     assert int(row["c1"]) == 0
+
+
+def _write_corpus(tmp_path, text_col="text", id_col="doc_id"):
+    """A small English corpus for the clean → MinHash LSH → near-dup
+    removal chain, as parquet: 30 base documents of 60 words, 6 exact
+    copies (case and spacing folded by the normalisation), 6 near-dups
+    with one word replaced and 4 junk documents that the gates drop.
+    Every copy has a higher id than its base. Returns (path, base ids)."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(12)
+    glue = ("the", "and", "of", "to", "with", "that", "in", "is", "for")
+    vocab = sorted({"".join(rng.choice("bcdfghklmnprstvz") + rng.choice("aeiou")
+                            for _ in range(rng.randint(2, 3)))
+                    for _ in range(600)})
+
+    def doc(n_words):
+        return [rng.choice(glue) if i % 4 == 1 else rng.choice(vocab)
+                for i in range(n_words)]
+
+    base = [doc(60) for _ in range(30)]
+    texts = [" ".join(w) for w in base]
+    texts += ["  " + " ".join(base[j]).upper() for j in range(0, 12, 2)]
+    for j in range(1, 13, 2):
+        words = list(base[j])
+        words[30] = "zzzq"
+        texts.append(" ".join(words))
+    texts += [" ".join(doc(20)), "# 123 ... " * 30,
+              " ".join(["der", "die", "und", "ist"] * 20), None]
+    path = tmp_path / "corpus"
+    path.mkdir()
+    pq.write_table(pa.table({id_col: list(range(1, len(texts) + 1)),
+                             text_col: texts}), path / "part-0.parquet")
+    return str(path), set(range(1, 31))
+
+
+def _corpus_chain(spark, path, dest, text_col="text", id_col="doc_id"):
+    from data_warehouse_migrate_spark.operators.pipeline import clean_corpus
+    from data_warehouse_migrate_spark.sources import readers, sinks
+
+    clean = clean_corpus(readers.read_table(spark, path), text_col, id_col)
+    pairs = minhash_lsh_pairs(clean, text_col, id_col, threshold=0.5)
+    kept = near_dup_removal(clean, pairs, id_col)
+    sinks.write_table(kept, dest, mode="overwrite")
+    spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("name", ["doc text", "doc.text", "doc`text"])
+def test_corpus_chain_takes_any_column_name(spark, tmp_path, name):
+    """Text and id columns named with a space, a dot (not a struct
+    field) or a backtick run through clean → pairs → removal and keep
+    what the plain names keep: the base documents, every copy dropped."""
+    from data_warehouse_migrate_spark.sqltext import ident
+
+    text_col, id_col = name, name + " id"
+    path, base = _write_corpus(tmp_path, text_col, id_col)
+    dest = str(tmp_path / "kept")
+    _corpus_chain(spark, path, dest, text_col, id_col)
+    out = spark.read.parquet(dest)
+    assert out.columns == [id_col, text_col]
+    assert {r[0] for r in out.select(F.col(ident(id_col))).collect()} == base
+
+
+def test_corpus_chain_work_is_pinned(spark, tmp_path):
+    """Pinned work of the corpus chain, counted as the migration pins
+    are. Building clean_corpus's plan makes 98 py4j round trips: each
+    text rule is one parsed SQL expression (built as Column trees, one
+    round trip per node, the same plan cost 1,619).
+    read → clean_corpus → minhash_lsh_pairs → near_dup_removal → write
+    submits 16 Spark jobs: the schema inference, minhash_lsh_pairs' fused
+    sizing and hot-bucket collect, near_dup_removal's edge collect and
+    the write, each with the AQE shuffle stages in front of it."""
+    from test_migrate import _py4j_round_trips, _spark_jobs
+
+    from data_warehouse_migrate_spark.operators.pipeline import clean_corpus
+
+    path, base = _write_corpus(tmp_path)
+    dest = str(tmp_path / "kept")
+    docs = spark.read.parquet(path)
+    clean_corpus(docs)  # warm: first-use lookups are not the rules' cost
+    _, trips = _py4j_round_trips(spark, lambda: clean_corpus(docs))
+    _, jobs, _ = _spark_jobs(
+        spark, lambda: _corpus_chain(spark, path, dest))
+    kept = {r.doc_id for r in spark.read.parquet(dest).collect()}
+    assert kept == base
+    assert trips <= 110 and jobs == 16, (trips, jobs)

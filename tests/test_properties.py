@@ -475,7 +475,7 @@ def test_word_shingles_match_python_reference(spark, texts, n):
 
     df = spark.createDataFrame([(t,) for t in texts], "t string")
     got = [r.s for r in
-           df.select(word_shingles(F.col("t"), n).alias("s")).collect()]
+           df.select(word_shingles("t", n).alias("s")).collect()]
 
     def ref(t):
         # Java semantics, not Python's: Spark trim() strips 0x20 only and

@@ -350,24 +350,22 @@ def test_registry_lsh_ann_recall_pinned(spark, sf_dir):
     assert recall >= 0.6, f"registry lsh_ann recall dropped: {recall}"
 
 
-def test_band_keys_sql_matches_column_builders(emb):
-    """band_keys_sql MUST stay bit-identical to the Column builders: a
-    probe computed by one form must land in buckets an index persisted by
-    the other form laid out (build_lsh_index cross-session contract)."""
-    from data_warehouse_migrate_spark.functions.vectors import (
-        band_keys_from_projections,
-        band_keys_sql,
-        hyperplane_projections,
-    )
+def test_band_keys_match_golden_values(emb):
+    """Band keys as the Column-tree builders computed them before the
+    keys were rendered as SQL text: a probe must land in the buckets an
+    index persisted in an earlier session laid out (build_lsh_index's
+    cross-session contract). 24 planes, 4 bands of 6 over the 500
+    embeddings; the digest is sha256 of repr(sorted((vec_id, keys)))."""
+    import hashlib
 
-    col_form = {r.vec_id: list(r.k) for r in emb.select(
-        "vec_id", band_keys_from_projections(
-            hyperplane_projections(F.col("embedding"), 24), 4, 6).alias("k")
-    ).collect()}
-    sql_form = {r.vec_id: list(r.k) for r in emb.select(
-        "vec_id", band_keys_sql("embedding", 24, 4, 6).alias("k")
-    ).collect()}
-    assert col_form == sql_form and len(col_form) > 0
+    from data_warehouse_migrate_spark.functions.vectors import band_keys
+
+    got = sorted((r.vec_id, list(r.k)) for r in emb.select(
+        "vec_id", band_keys("embedding", 24, 4, 6).alias("k")).collect())
+    assert got[:3] == [(0, [19, 42, 23, 60]), (1, [9, 6, 59, 55]),
+                       (2, [45, 45, 48, 45])]
+    assert hashlib.sha256(repr(got).encode()).hexdigest() == (
+        "57f84bde037ca1164b0f22e38c77248ddb98ee08a30c56a67d2e04125e958a8d")
 
 
 def test_lsh_topk_hot_bucket_spill_path(spark):

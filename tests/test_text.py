@@ -15,15 +15,15 @@ def docs(spark, sf_dir):
 
 def test_tokens_and_counts(spark):
     df = spark.createDataFrame([("Hello  world foo",), ("one",), ("",)], "t string")
-    out = df.select(F.size(X.tokens(F.col("t"))).alias("n"),
-                    X.token_count(F.col("t")).alias("bpe")).collect()
+    out = df.select(F.size(X.tokens("t")).alias("n"),
+                    X.token_count("t").alias("bpe")).collect()
     assert [r.n for r in out] == [3, 1, 1]   # empty → [''] (size 1, engines agree)
     assert [r.bpe for r in out] == [3, 1, 0]
 
 
 def test_word_shingles(spark):
     df = spark.createDataFrame([("a b c d",), ("a b",)], "t string")
-    out = df.select(X.word_shingles(F.col("t"), 3).alias("s")).collect()
+    out = df.select(X.word_shingles("t", 3).alias("s")).collect()
     assert out[0].s == ["a b c", "b c d"]
     assert out[1].s == ["a b"]  # shorter than n → whole text
 
@@ -31,7 +31,7 @@ def test_word_shingles(spark):
 def test_polyhash_matches_duckdb(spark):
     texts = ["abc", "key agg row scan", "", "Ünïcode test"]
     df = spark.createDataFrame([(t,) for t in texts], "t string")
-    spark_vals = {r.t: r.h for r in df.select("t", X.polyhash(F.col("t")).alias("h")).collect()}
+    spark_vals = {r.t: r.h for r in df.select("t", X.polyhash("t").alias("h")).collect()}
     con = duckdb.connect()
     for t in texts:
         dd = con.execute(
@@ -44,7 +44,7 @@ def test_polyhash_matches_duckdb(spark):
 def test_md5_prefix_int_matches_duckdb(spark):
     texts = ["abc", "hello world"]
     df = spark.createDataFrame([(t,) for t in texts], "t string")
-    spark_vals = {r.t: r.h for r in df.select("t", X.md5_prefix_int(F.col("t")).alias("h")).collect()}
+    spark_vals = {r.t: r.h for r in df.select("t", X.md5_prefix_int("t").alias("h")).collect()}
     con = duckdb.connect()
     for t in texts:
         dd = con.execute("SELECT CAST(concat('0x', substr(md5(?),1,15)) AS BIGINT)", [t]).fetchone()[0]
@@ -52,7 +52,7 @@ def test_md5_prefix_int_matches_duckdb(spark):
 
 
 def test_text_stats_ranges(docs):
-    stats = X.text_stats_exprs(F.col("text"))
+    stats = X.text_stats_exprs("text")
     out = docs.select(F.col("doc_id"), *[v.alias(k) for k, v in stats.items()])
     row = out.agg(F.min("punct_ratio"), F.max("punct_ratio"),
                   F.min("n_words"), F.max("avg_word_len")).first()
@@ -65,7 +65,7 @@ def test_text_stats_ranges(docs):
 
 
 def test_quality_score_bounded(docs):
-    out = docs.select(X.quality_score(F.col("text")).alias("q"))
+    out = docs.select(X.quality_score("text").alias("q"))
     row = out.agg(F.min("q"), F.max("q")).first()
     assert 0.0 <= row[0] and row[1] <= 1.0
 
@@ -79,11 +79,11 @@ def test_null_text_propagates_null_stats(spark):
     keeps its honest zeros."""
     df = spark.createDataFrame([(1, None), (2, ""), (3, "the cat")],
                                "id int, text string")
-    stats = X.text_stats_exprs(F.col("text"))
+    stats = X.text_stats_exprs("text")
     out = {r.id: r for r in df.select(
         "id", *[v.alias(k) for k, v in stats.items()],
-        X.quality_score(F.col("text")).alias("q"),
-        X.lang_id(F.col("text")).alias("lang")).collect()}
+        X.quality_score("text").alias("q"),
+        X.lang_id("text").alias("lang")).collect()}
     for field in ("n_chars", "n_words", "n_tokens", "avg_word_len",
                   "punct_ratio", "digit_ratio", "stopword_ratio"):
         assert getattr(out[1], field) is None, field
@@ -99,7 +99,7 @@ def test_lang_id_deterministic(spark):
          ("der hund und die katze ist ein tier",),
          ("le chat et la maison dans les champs",),
          ("xyzzy plugh",)], "t string")
-    out = [r.l for r in df.select(X.lang_id(F.col("t")).alias("l")).collect()]
+    out = [r.l for r in df.select(X.lang_id("t").alias("l")).collect()]
     assert out == ["en", "de", "fr", "und"]
 
 
@@ -109,9 +109,9 @@ def test_simhash_is_stable_and_locality_sensitive(spark):
          (2, "the quick brown fox jumps over the lazy cat"),
          (3, "completely different words entirely unrelated text")],
         "id int, t string")
-    rows = {r.id: r.s for r in df.select("id", X.simhash32(F.col("t")).alias("s")).collect()}
+    rows = {r.id: r.s for r in df.select("id", X.simhash("t", 32).alias("s")).collect()}
     # deterministic across invocations
-    rows2 = {r.id: r.s for r in df.select("id", X.simhash32(F.col("t")).alias("s")).collect()}
+    rows2 = {r.id: r.s for r in df.select("id", X.simhash("t", 32).alias("s")).collect()}
     assert rows == rows2
     ham = lambda a, b: bin(a ^ b).count("1")
     assert ham(rows[1], rows[2]) < ham(rows[1], rows[3])
@@ -146,8 +146,8 @@ def test_redact_pii(spark):
     ]
     df = spark.createDataFrame(rows, "id long, text string")
     out = {r.id: r for r in df.select(
-        "id", *pii_counts_exprs(F.col("text")),
-        redact_pii(F.col("text")).alias("clean")).collect()}
+        "id", *pii_counts_exprs("text"),
+        redact_pii("text").alias("clean")).collect()}
     assert out[1].n_email == 1 and out[1].clean == "mail [EMAIL] now"
     assert out[2].n_url == 2 and out[2].clean == "see [URL] and [URL]"
     assert out[3].n_ipv4 == 2 and out[3].clean == "host [IP] and [IP] up"
@@ -163,7 +163,7 @@ def test_lang_id_null_text_is_null(spark):
     df = spark.createDataFrame([(1, None), (2, "the and is of")],
                                "id int, text string")
     out = {r.id: r.lang for r in
-           df.select("id", lang_id(F.col("text")).alias("lang")).collect()}
+           df.select("id", lang_id("text").alias("lang")).collect()}
     assert out[1] is None          # not 'fr' via the when-fallthrough
     assert out[2] == "en"
 
@@ -204,7 +204,7 @@ def test_gopher_flags_edges(spark):
     ten_lines = "\n".join(["- item here"] * 9 + ["plain closing line"])
     rows = [(1, ""), (2, "the and of to be that have with"), (3, ten_lines)]
     df = spark.createDataFrame(rows, "id int, text string")
-    flags = X.gopher_quality_flags(F.col("text"))
+    flags = X.gopher_quality_flags("text")
     out = {r.id: r for r in df.select(
         "id", flags["n_words"].alias("n_words"),
         flags["ok_word_count"].alias("okwc"),
@@ -220,7 +220,7 @@ def test_gopher_flags_edges(spark):
 def test_gopher_keep_is_conjunction(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .filter(F.col("text").isNotNull())
-    flags = X.gopher_quality_flags(F.col("text"))
+    flags = X.gopher_quality_flags("text")
     names = [k for k in flags if k.startswith("ok_")]
     bad = (d.select(flags["keep"].alias("keep"),
                     *[flags[k].alias(k) for k in names])
@@ -264,10 +264,9 @@ def test_clean_corpus_stage_interplay(spark):
 
 
 def test_lang_keep_equals_lang_id_isin(spark, sf_dir):
-    """The bound-count lang_keep and the plain lang_id().isin() predicate
-    must agree row-for-row (same vote math, different sharing structure)
-    — including NULL text (NULL in, NULL out on both sides) and the
-    'und' zero-evidence case."""
+    """lang_keep (the membership test inside the bound lambda) and
+    lang_id().isin() must agree row-for-row — including NULL text (NULL
+    in, NULL out on both sides) and the 'und' zero-evidence case."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     extra = spark.createDataFrame(
         [(9_000_001, None), (9_000_002, ""), (9_000_003, "zzz qqq xxx"),
@@ -276,12 +275,12 @@ def test_lang_keep_equals_lang_id_isin(spark, sf_dir):
         "doc_id long, text string")
     d = d.select("doc_id", "text").unionByName(extra)
     for allow in (("en",), ("en", "de"), ("und",), ("fr",)):
-        plain = X.lang_id(F.col("text")).isin(*allow)
-        bound = X.lang_keep(F.col("text"), allow)
+        plain = X.lang_id("text").isin(*allow)
+        bound = X.lang_keep("text", allow)
         # eqNullSafe: both are NULL on NULL text — a plain != would
         # silently skip those rows instead of asserting them equal
         assert d.filter(~plain.eqNullSafe(bound)).count() == 0, allow
-    assert d.filter(X.lang_keep(F.col("text"), ("en",))).count() > 0
+    assert d.filter(X.lang_keep("text", ("en",))).count() > 0
 
 
 def test_drop_exact_dups_min_by_matches_join_shape(spark, sf_dir):
@@ -293,7 +292,7 @@ def test_drop_exact_dups_min_by_matches_join_shape(spark, sf_dir):
     from data_warehouse_migrate_spark.operators.dedup import drop_exact_dups
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    h = F.coalesce(F.md5(normalized_text(F.col("text"))),
+    h = F.coalesce(F.md5(normalized_text("text")),
                    F.lit("__null_text__"))
     w = d.withColumn("__h", h)
     keep = w.groupBy("__h").agg(F.min("doc_id").alias("doc_id"))
@@ -309,66 +308,96 @@ def test_gopher_keep_equals_flags_keep(spark, sf_dir):
     agree row-for-row — same rule math, different sharing structure."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .filter(F.col("text").isNotNull())
-    flags = X.gopher_quality_flags(F.col("text"), min_words=5,
+    flags = X.gopher_quality_flags("text", min_words=5,
                                    min_stopword_hits=1)
-    bound = X.gopher_keep(F.col("text"), min_words=5, min_stopword_hits=1)
+    bound = X.gopher_keep("text", min_words=5, min_stopword_hits=1)
     assert d.filter(flags["keep"] != bound).count() == 0
     assert d.filter(bound).count() > 0   # nonempty keep set at these floors
 
 
-def test_sql_twins_match_column_builders(spark, sf_dir):
-    """r18: the fingerprint operators build their expressions via
-    SQL-text twins (one JVM parse) instead of py4j Column builders
-    (~180-280 ms of driver round-trips per call). The twins must be
-    BIT-IDENTICAL to the Column forms — this pin is what keeps
-    signatures/fingerprints computed by either form interchangeable
-    (and the DuckDB oracle twins valid) forever. Edge cases: empty
-    text, NULL, single word, ragged whitespace, unicode, long text."""
-    from data_warehouse_migrate_spark.functions.text import (
-        hashed_shingles_sql,
-        md5_prefix_int,
-        minhash_signature,
-        minhash_signature_sql,
-        simhash,
-        simhash_sql,
-        word_shingles,
-    )
+# Fingerprint values as the Column-tree builders computed them before the
+# rules were rendered as SQL text. Signatures, simhashes and shingle sets
+# are stored and joined across sessions, so their values are a contract.
+_EDGE_TEXTS = [(1, "the quick brown fox jumps over the lazy dog"),
+               (2, ""), (3, None), (4, "one"),
+               (5, "  padded   whitespace\ttabs  "),
+               (6, "Ünïcode tøkens ünïcode agaín mixed CASE Text"),
+               (7, "a b"), (8, "x " * 500)]
+_EDGE_GOLDEN = {
+    1: dict(sh=[846626497777792448, 643013968315013980, 176602673785286095,
+                615559873102124360, 630160792246107383, 566259559947799308,
+                365586147241278684],
+            s60=71287727808099948, s7=108,
+            mh16=[155385266, 38246269, 196936923, 75167313, 3694398,
+                  61467717, 153030689, 108512716, 4755725, 48337686,
+                  413676436, 82668364, 71791955, 133576176, 272877796,
+                  40244488]),
+    2: dict(sh=[955282973525019424], s60=955282973525019424, s7=32,
+            mh16=[263038438, 627113951, 971847161, 166531927, 135346004,
+                  640581886, 144313386, 747616672, 658477300, 205316891,
+                  19599290, 538206969, 789339794, 12256723, 911234916,
+                  401610653]),
+    3: dict(sh=None, s60=None, s7=None, mh16=None),
+    4: dict(sh=[1123584140357255089], s60=1123584140357255089, s7=49,
+            mh16=[130369497, 199801188, 186137865, 537588624, 265048424,
+                  99465644, 46272720, 272382075, 206252593, 526368196,
+                  956141530, 323260175, 580689050, 885137004, 173901214,
+                  588022899]),
+    5: dict(sh=[618277881176738848], s60=422078924357519337, s7=105,
+            mh16=[245268585, 870105574, 98073288, 166337593, 492488617,
+                  581137588, 141064523, 790028205, 401947471, 865386817,
+                  445698208, 816375311, 70148309, 231175101, 89773251,
+                  367688095]),
+    6: dict(sh=[991271933478380795, 318043899624813970, 30237237252873376,
+                570668366960272602, 61740162881002131],
+            s60=923523894634516046, s7=78,
+            mh16=[74880089, 57384658, 104282884, 88105191, 43067905,
+                  163638922, 38538864, 196789994, 56641691, 34351977,
+                  121056650, 243355779, 456205966, 47771439, 105521235,
+                  44527062]),
+    7: dict(sh=[57593333306279187], s60=3401182656201322, s7=106,
+            mh16=[35728096, 599212231, 599753787, 650707960, 351605810,
+                  8866323, 422239989, 923207884, 542723401, 206181196,
+                  225860992, 470563669, 359012299, 828721841, 104667028,
+                  930614571]),
+    8: dict(sh=[357420995980477506], s60=710810379057940483, s7=3,
+            mh16=[599741461, 124577857, 384124197, 681861621, 10117359,
+                  890870998, 820271092, 774497352, 409047734, 620907562,
+                  133323654, 474000191, 514088411, 683009370, 808975372,
+                  278468595]),
+}
+# sha256 of repr(sorted((doc_id, shingle hashes))) over the sf0.001 documents
+_DOC_SHINGLES_SHA256 = {
+    2: "9202b5e161e52d2a375319251d36caa832b8e93506f497d1d01850d32d495d64",
+    3: "5855faa56947e642109b7cb69a4fcf8f2db7480ac213010260b9fda2be819a74",
+}
 
-    rows = [(1, "the quick brown fox jumps over the lazy dog"),
-            (2, ""), (3, None), (4, "one"),
-            (5, "  padded   whitespace\ttabs  "),
-            (6, "Ünïcode tøkens ünïcode agaín mixed CASE Text"),
-            (7, "a b"), (8, "x " * 500)]
-    df = spark.createDataFrame(rows, "id long, text string")
-    col_sh = F.array_distinct(
-        F.transform(word_shingles(F.col("text"), 3),
-                    lambda s: md5_prefix_int(s)))
-    a = df.select("id", col_sh.alias("sh"),
-                  simhash(F.col("text"), 60).alias("s60"),
-                  simhash(F.col("text"), 7).alias("s7")).collect()
-    b = df.select("id", hashed_shingles_sql("text", 3).alias("sh"),
-                  simhash_sql("text", 60).alias("s60"),
-                  simhash_sql("text", 7).alias("s7")).collect()
-    assert a == b
 
-    sets = df.select("id", col_sh.alias("shingles"))
-    for k in (16, 5, 1):
-        ca = sets.select(
-            "id", minhash_signature(F.col("shingles"), k).alias("sig")
-        ).collect()
-        cb = sets.select(
-            "id", minhash_signature_sql("shingles", k).alias("sig")
-        ).collect()
-        assert ca == cb
+def test_fingerprints_match_golden_values(spark, sf_dir):
+    """Shingle sets, simhash at 60 and 7 bits and MinHash signatures at
+    k 16, 5 and 1 over edge texts: empty, NULL, one word, ragged
+    whitespace, unicode, long. A k-prefix signature is the prefix of
+    the k=16 one (the permutations are the first k pairs)."""
+    import hashlib
 
-    # real corpus: every doc, shingle sizes n=2 and n=3
+    df = spark.createDataFrame(_EDGE_TEXTS, "id long, text string")
+    sets = df.select("id", X.hashed_shingles("text", 3).alias("shingles"),
+                     X.simhash("text", 60).alias("s60"),
+                     X.simhash("text", 7).alias("s7"))
+    sigs = sets.select("id", "shingles", "s60", "s7", *[
+        X.minhash_signature("shingles", k).alias(f"mh{k}")
+        for k in (16, 5, 1)])
+    for r in sigs.collect():
+        want = _EDGE_GOLDEN[r.id]
+        mh = want["mh16"]
+        assert (r.shingles, r.s60, r.s7) == (want["sh"], want["s60"],
+                                             want["s7"]), r.id
+        for k in (16, 5, 1):
+            assert r[f"mh{k}"] == (mh and mh[:k]), (r.id, k)
+
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for n in (2, 3):
-        csh = F.array_distinct(
-            F.transform(word_shingles(F.col("text"), n),
-                        lambda s: md5_prefix_int(s)))
-        ra = d.select("doc_id", csh.alias("sh")).collect()
-        rb = d.select("doc_id",
-                      hashed_shingles_sql("text", n).alias("sh")).collect()
-        key = lambda r: r["doc_id"]  # noqa: E731
-        assert sorted(ra, key=key) == sorted(rb, key=key)
+    for n, digest in _DOC_SHINGLES_SHA256.items():
+        got = sorted((r.doc_id, r.sh) for r in d.select(
+            "doc_id", X.hashed_shingles("text", n).alias("sh")).collect())
+        assert len(got) == 500
+        assert hashlib.sha256(repr(got).encode()).hexdigest() == digest, n
