@@ -47,6 +47,7 @@ from data_warehouse_migrate_spark.schema import ColumnSpec, dedup_columns, specs
 from data_warehouse_migrate_spark.sources.readers import (
     latest_partition_filter,
     open_file_stream,
+    parquet_rows,
     read_table,
     validate_table_access,
 )
@@ -295,8 +296,9 @@ class MigrationJob:
     # ------------------------------------------------------------------
     def build_plan(self, spark: SparkSession) -> DataFrame:
         """Construct the full lazy plan. Resolving the latest partition is
-        its one eager step (a LIMIT-1 probe on a hive-partitioned file
-        source, an ``agg(max)`` elsewhere). The null-policy 'fail' check
+        its one eager step (the footers' row counts, read on the driver,
+        on a hive-partitioned local Parquet source; an ``agg(max)`` on
+        sources without directory partitions). The null-policy 'fail' check
         is not part of the plan: every runner runs it in
         :meth:`_pre_write_gate`."""
         return self._plan_from(self._read_source(spark))
@@ -378,9 +380,8 @@ class MigrationJob:
         ``rows_written`` is measured ON the write via an Observation (zero
         extra pass — the reference reports rows migrated,
         ``migrator.py:334-338``); ``destination_rows`` is the post-write
-        destination total, counted only for file sinks, by reading the
-        files back with the schema just written (on JDBC it would be a
-        full table scan — reported as None there). In append mode it
+        destination total, counted only for file sinks (on JDBC it would
+        be a full table scan — reported as None there). In append mode it
         includes pre-existing rows.
         """
         mode = MigrationMode.parse(self.mode)
@@ -392,12 +393,19 @@ class MigrationJob:
 
     def _migrate(self, spark: SparkSession, plan: DataFrame,
                  mode: MigrationMode) -> dict[str, Any]:
-        """Gate, write and read back ``plan``: :meth:`run`'s summary."""
+        """Gate, write and read back ``plan``: :meth:`run`'s summary. A
+        local Parquet destination's ``destination_rows`` is the sum of
+        the row counts in its data files' footers, read on the driver
+        (``sources.readers.parquet_rows``); any other file destination,
+        or one whose footers cannot answer, is read back with the schema
+        just written and counted (two Spark jobs)."""
         rows_written = self._write(plan, mode,
                                    self._pre_write_gate(plan, self._sized))
-        if self.destination_format == "jdbc":
-            destination_rows = None
-        else:
+        destination_rows = None
+        if self.destination_format == "parquet":
+            # the row counts in the footers of the files just written
+            destination_rows = parquet_rows(spark, self.destination_path)
+        if destination_rows is None and self.destination_format != "jdbc":
             # a real count of what is on disk; the schema just written
             # saves the read its inference job
             destination_rows = read_table(
@@ -439,10 +447,10 @@ class MigrationJob:
         reference stops at row counts, ``migrator.py:334-338``): compare
         the transformed source with the destination by row count AND an
         order-independent checksum (sum of 60-bit row hashes mod 2^60 —
-        multiset-safe where XOR would cancel duplicate pairs)
-        (``operators.validate.group_checksum``) over every column whose
-        string rendering is engine/layout-stable (integer, string, date,
-        boolean, decimal). Float/timestamp columns are EXCLUDED and
+        multiset-safe where XOR would cancel duplicate pairs), the
+        whole-table ``operators.validate.group_checksum``, over every
+        column whose string rendering is engine/layout-stable (integer,
+        string, date, boolean, decimal). Float/timestamp columns are EXCLUDED and
         reported in ``skipped_columns`` — their renderings differ across
         engines, so a checksum over them would alarm on noise; the row
         count still covers their presence.
@@ -452,10 +460,13 @@ class MigrationJob:
         wrote: its file listing, resolved latest partition and null-policy
         check are reused, not redone, so the checksum covers the rows
         that run wrote even if a newer partition has landed since. A job
-        that has not run yet builds the plan here. Either way the cost
-        is two aggregate jobs (one per side) plus the destination read —
-        no row transfer, no sort, safe at any scale. Returns a dict with
-        ``verified`` True iff counts and checksums both match.
+        that has not run yet builds the plan here. Both sides' counts and
+        checksums come from ONE aggregate over their hashed rows
+        (``operators.validate.paired_checksums``): two Spark jobs (AQE's
+        shuffle and result), and a local Parquet destination's schema
+        comes from a footer, so its read runs none — no row transfer, no
+        sort, safe at any scale. Returns a dict with ``verified`` True
+        iff counts and checksums both match.
 
         Snapshot semantics only: in APPEND mode the destination may hold
         rows from earlier runs, so whole-table equality against one
@@ -481,7 +492,7 @@ class MigrationJob:
         from pyspark.sql import types as T
 
         from data_warehouse_migrate_spark.operators.validate import (
-            group_checksum,
+            paired_checksums,
         )
 
         plan = self._plan if self._plan is not None else self.build_plan(spark)
@@ -498,13 +509,12 @@ class MigrationJob:
                 if isinstance(f.dataType, stable)
                 and f.name.lower() in dest_by_lower]
         skipped = [c for c in plan.columns if c not in cols]
+        s, d = paired_checksums(plan, dest, cols)
         if not cols:
-            src_n, dst_n = plan.count(), dest.count()
-            return {"verified": src_n == dst_n, "source_rows": src_n,
-                    "destination_rows": dst_n, "checksum_match": None,
+            return {"verified": s["n_rows"] == d["n_rows"],
+                    "source_rows": s["n_rows"],
+                    "destination_rows": d["n_rows"], "checksum_match": None,
                     "columns_checked": [], "skipped_columns": skipped}
-        s = group_checksum(plan, [], cols).first()
-        d = group_checksum(dest, [], cols).first()
         counts_ok = s["n_rows"] == d["n_rows"]
         sums_ok = s["checksum"] == d["checksum"]
         return {"verified": counts_ok and sums_ok,
@@ -533,7 +543,10 @@ class MigrationJob:
         (``operators.delta.snapshot_from_source``), so the delta JOIN
         only counts the changes and the rewrite reads the source alone:
         no cached delta, no destination re-scan, and no read-then-
-        overwrite cycle on the same path. The one visible difference
+        overwrite cycle on the same path. Local Parquet sides take their
+        schemas from footers (``sources.readers.footer_schema``), so the
+        Spark jobs of a changed run are the delta's counting aggregate
+        and the rewrite. The one visible difference
         from applying the delta: a value equal under ``<=>`` but not
         identical (``0.0`` vs ``-0.0``) counts as unchanged, yet a
         rewrite carries the source's value. A converged run writes

@@ -445,19 +445,20 @@ def line_dedup(df: DataFrame, text_col: str, id_col: str,
 
     if min_occurrences < 2:
         raise ValueError("min_occurrences must be >= 2 (1 drops every line)")
-    split_arr = F.split(F.col(text_col), delimiter)
+    text, doc_id = F.col(ident(text_col)), F.col(ident(id_col))
+    split_arr = F.split(text, delimiter)
     sizes = df.select(
-        F.col(id_col),
+        doc_id,
         F.coalesce(F.when(F.size(split_arr) >= 0, F.size(split_arr)),
                    F.lit(0)).alias("n_lines"),
-        F.col(text_col).isNull().alias("__null_text"))
-    lines = (df.select(F.col(id_col),
+        text.isNull().alias("__null_text"))
+    lines = (df.select(doc_id,
                        F.posexplode(split_arr).alias("pos", "line"))
              .withColumn("__h", md5_prefix_int("line")))
     kept = (lines
             .withColumn("__c", F.count("*").over(W.partitionBy("__h")))
             .filter(F.col("__c") < min_occurrences)
-            .groupBy(id_col)
+            .groupBy(doc_id)
             .agg(F.array_join(
                      F.transform(
                          F.array_sort(F.collect_list(
@@ -466,7 +467,7 @@ def line_dedup(df: DataFrame, text_col: str, id_col: str,
                      delimiter).alias("__clean"),
                  F.count("*").alias("__kept")))
     return (sizes.join(kept, id_col, "left")
-            .select(F.col(id_col),
+            .select(doc_id,
                     F.when(F.col("__null_text"), F.lit(None))
                      .otherwise(F.coalesce(F.col("__clean"), F.lit("")))
                      .alias("text_clean"),
@@ -1237,8 +1238,8 @@ def embedding_near_dups(df: DataFrame, vec_col: str, id_col: str,
     from pyspark import StorageLevel
 
     base = df.select(
-        F.col(id_col).alias("id"),
-        normalize(F.col(vec_col)).alias("vec"),
+        F.col(ident(id_col)).alias("id"),
+        normalize(F.col(ident(vec_col))).alias("vec"),
         band_keys(vec_col, n_planes, bands, r).alias("bkeys")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # persist + size in ONE job (the sizing agg is the materializer)
@@ -1307,9 +1308,10 @@ def embedding_exact_pairs(df: DataFrame, vec_col: str, id_col: str,
 
     # spread the STREAM side: a single-partition scan would run the whole
     # N²/2 nested loop on one core (the broadcast side's layout is moot)
-    a = spread_input(df).select(
-        F.col(id_col).alias("id_a"), normalize(F.col(vec_col)).alias("vec_a"))
-    b = df.select(F.col(id_col).alias("id_b"), normalize(F.col(vec_col)).alias("vec_b"))
+    vec = normalize(F.col(ident(vec_col)))
+    a = spread_input(df).select(F.col(ident(id_col)).alias("id_a"),
+                                vec.alias("vec_a"))
+    b = df.select(F.col(ident(id_col)).alias("id_b"), vec.alias("vec_b"))
     return (
         a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", F.round(dot(F.col("vec_a"), F.col("vec_b")), 6))

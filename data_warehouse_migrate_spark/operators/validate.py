@@ -17,7 +17,9 @@ both beyond-reference:
     change it) AND multiset-correct: duplicate rows accumulate instead
     of cancelling (an XOR fingerprint zeroes out every PAIR of identical
     rows, so two tables of different all-duplicate content could both
-    hash to 0 — the reason this is a sum).
+    hash to 0 — the reason this is a sum). ``paired_checksums`` takes
+    the whole-table fingerprint of two frames (a source and its
+    destination) in one aggregate instead of one per frame.
 
 100 TB shape: both are single hash aggregates (profile additionally
 pays Spark's expand for multi-column DISTINCT — #cols × rows map-side,
@@ -76,6 +78,14 @@ def _row_hash(cols: list[str]) -> str:
 
 
 _CHECKSUM_MOD = 1 << 60
+_DEC = "DECIMAL(38,0)"
+
+
+def _checksum(hashes: str) -> str:
+    """The checksum of the DECIMAL row hashes ``hashes`` (NULLs skipped):
+    their exact sum reduced mod 2⁶⁰, NULL when there are none."""
+    return (f"CAST(pmod(sum({hashes}), CAST({_CHECKSUM_MOD}L AS {_DEC})) "
+            "AS BIGINT)")
 
 
 def group_checksum(df: DataFrame, key_cols: list[str],
@@ -94,12 +104,31 @@ def group_checksum(df: DataFrame, key_cols: list[str],
     """
     if not value_cols:
         raise ValueError("value_cols must be non-empty")
-    dec = "DECIMAL(38,0)"
-    total = f"sum(CAST({_row_hash(value_cols)} AS {dec}))"
     return df.groupBy(*[F.col(ident(k)) for k in key_cols]).agg(
         F.expr("count(1) AS n_rows"),
-        F.expr(f"CAST(pmod({total}, CAST({_CHECKSUM_MOD}L AS {dec})) "
-               "AS BIGINT) AS checksum"))
+        F.expr(_checksum(f"CAST({_row_hash(value_cols)} AS {_DEC})")
+               + " AS checksum"))
+
+
+def paired_checksums(left: DataFrame, right: DataFrame,
+                     value_cols: list[str]) -> tuple[dict, dict]:
+    """``group_checksum(side, [], value_cols)`` of both frames as
+    ``{'n_rows', 'checksum'}`` dicts, computed in ONE aggregate: each
+    side's rows are hashed before a union-all (so no column type
+    widens), and the aggregate counts and sums each side under a
+    condition. An empty side gives ``n_rows`` 0 and checksum None, as
+    ``group_checksum`` does. With no ``value_cols`` only the rows are
+    counted (checksum None)."""
+    h = (f"CAST({_row_hash(value_cols)} AS {_DEC})" if value_cols
+         else f"CAST(NULL AS {_DEC})")
+    left, right = (df.selectExpr(f"{i} AS side", f"{h} AS h")
+                   for i, df in enumerate((left, right)))
+    row = left.unionAll(right).selectExpr(*[
+        expr for i in (0, 1) for expr in (
+            f"count_if(side = {i}) AS n{i}",
+            _checksum(f"IF(side = {i}, h, NULL)") + f" AS c{i}")]).first()
+    return tuple({"n_rows": row[f"n{i}"], "checksum": row[f"c{i}"]}
+                 for i in (0, 1))
 
 
 def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:

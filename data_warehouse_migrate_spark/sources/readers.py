@@ -7,10 +7,22 @@ as DataFrame filters, which Catalyst pushes into the scan (PushedFilters /
 partition pruning — free at any scale, verified in tests via the query plan).
 
 Scale notes:
+  * a local Parquet path is listed on the driver the way Spark's file
+    index lists it (:func:`list_parquet_files`), and its footers answer
+    what Spark would otherwise ask a job for: the schema
+    (:func:`footer_schema`, so :func:`read_table` runs no inference
+    job) and row counts (:func:`parquet_rows`). The cost is one footer
+    read per file consulted, about a millisecond each, on the driver.
+    Whenever Spark could read the path differently (another filesystem
+    or format, a reader option, a session setting that changes the
+    types, an unusual layout or type, a footer that does not parse) the
+    helpers return None and Spark's own path runs unchanged.
   * latest-partition discovery on a hive-partitioned file source reads the
     candidate values off the file index's listing and confirms the newest
-    with one LIMIT-1 probe (one task on one partition). Every other source
-    pays an ``agg(max)``: two Spark jobs (AQE) that read every file.
+    by the row counts in its files' footers: no Spark job. A footer that
+    does not parse takes a LIMIT-1 probe (one task on one partition)
+    instead. Every other source pays an ``agg(max)``: two Spark jobs (AQE)
+    that read every file.
   * the reference's sequential batch loop (S3) does not exist: Spark's
     split planning (``maxPartitionBytes``) parallelizes the scan.
 """
@@ -18,7 +30,9 @@ Scale notes:
 from __future__ import annotations
 
 import datetime as _dt
+import json
 import logging
+import os
 import re
 from decimal import Decimal
 from urllib.parse import unquote, urlparse
@@ -45,7 +59,9 @@ def read_table(spark: SparkSession, path_or_table: str,
     one row per FILE with ``wholetext=True`` (the document-ingestion
     shape; Spark's text source parallelizes line mode by split and
     wholetext by file). See ``read_text_corpus`` for the id-stamped
-    convenience wrapper."""
+    convenience wrapper. A local Parquet path read without options takes
+    its schema from a footer (:func:`footer_schema`) instead of an
+    inference job."""
     if fmt == "table":
         return spark.table(path_or_table)
     if fmt == "jdbc":
@@ -55,6 +71,8 @@ def read_table(spark: SparkSession, path_or_table: str,
         return reader.option("dbtable", path_or_table).load()
     if fmt not in _FORMAT_READERS:
         raise ValueError(f"unsupported format {fmt!r}")
+    if schema is None and fmt == "parquet" and not options:
+        schema = footer_schema(spark, path_or_table)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -83,6 +101,221 @@ def normalize_nano_timestamps(df: DataFrame, columns: list[str]) -> DataFrame:
         if dtypes.get(c) == "bigint":
             df = df.withColumn(c, nanos_to_timestamp(F.col(c)))
     return df
+
+
+# ---------------------------------------------------------------------------
+# Parquet footers read on the driver
+# ---------------------------------------------------------------------------
+
+# the summary files Spark's Parquet schema inference reads before any data
+# file, in its order of preference (ParquetUtils.inferSchema)
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+# the footer key under which Spark's writer stores the Spark schema as JSON;
+# Spark's reader takes it over the Parquet types when it is present
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# the session settings under which Spark types Parquet as the footer
+# conversion does: any other value takes Spark's own inference
+_FOOTER_SETTINGS = {"spark.sql.parquet.mergeSchema": "false",
+                    "spark.sql.parquet.binaryAsString": "false",
+                    "spark.sql.parquet.inferTimestampNTZ.enabled": "true"}
+# the Parquet logical types of the leaf columns whose Spark type follows
+# from their arrow type alone (ENUM, JSON, UUID, TIME ... do not)
+_FOOTER_LOGICAL_TYPES = frozenset({"NONE", "STRING", "INT", "DATE",
+                                   "DECIMAL", "TIMESTAMP"})
+
+
+def _spark_lists(name: str) -> bool:
+    """Whether Spark's file index keeps a file or directory of this name
+    (``HadoopFSUtils.shouldFilterOutPathName``, negated)."""
+    hidden = ((name.startswith("_") and "=" not in name)
+              or name.startswith(".") or name.endswith("._COPYING_"))
+    return not hidden or name.startswith(_SUMMARY_FILES)
+
+
+def _raise(err: OSError):
+    raise err
+
+
+def list_parquet_files(path: str
+                       ) -> tuple[list[str], list[str], list[str]] | None:
+    """(data files, summary files, partition column names) of the local
+    file or directory ``path``, listed as Spark's file index lists it:
+    recursively, skipping names that start with ``_`` (unless they hold
+    ``=`` or are ``_metadata`` / ``_common_metadata``) or ``.``. Files
+    come in Spark's path order (its ``Path.toString`` sort, UTF-16 code
+    units). None when that listing is in doubt: no data file, a symlink,
+    an unreadable directory, another ``_`` file, or data files that are
+    not all at the same depth of ``name=value`` directories with the same
+    names."""
+    if os.path.isfile(path):
+        name = os.path.basename(path)
+        return (([path], [], []) if _spark_lists(name)
+                and not name.startswith("_") else None)
+    files = []
+    try:
+        for d, dirs, names in os.walk(path, onerror=_raise):
+            dirs[:] = [n for n in dirs if _spark_lists(n)]
+            names = [n for n in names if _spark_lists(n)]
+            if any(os.path.islink(os.path.join(d, n)) for n in dirs + names):
+                return None
+            files += [os.path.join(d, n) for n in names]
+    except OSError:
+        return None
+    files.sort(key=lambda f: f.encode("utf-16-be", "surrogatepass"))
+    data = [f for f in files if not os.path.basename(f).startswith("_")]
+    summaries = [f for f in files if os.path.basename(f) in _SUMMARY_FILES]
+    if not data or len(data) + len(summaries) < len(files):
+        return None
+    layouts = set()
+    for f in data:
+        rel = os.path.relpath(os.path.dirname(f), path)
+        dirs = [seg.partition("=") for seg in
+                ([] if rel == "." else rel.split(os.sep))]
+        if not all(name and eq for name, eq, _ in dirs):
+            return None
+        layouts.add(tuple(name for name, _, _ in dirs))
+    if len(layouts) > 1:
+        return None
+    return data, summaries, [_unescape(k) for k in layouts.pop()]
+
+
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """The local file-system path Spark reads for ``path``: a ``file:``
+    URI, or an absolute path while the default file system is local.
+    None for another scheme, a relative path or a glob pattern."""
+    if any(ch in path for ch in "*?[]{}\\"):
+        return None
+    url = urlparse(path)
+    if url.scheme == "file" and not url.netloc:
+        return url.path
+    if url.scheme or not path.startswith("/"):
+        return None
+    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS")
+    return path if str(default_fs).startswith("file:") else None
+
+
+def _footer_rows(files) -> int | None:
+    """Summed ``num_rows`` of the Parquet footers of local ``files``;
+    None when one is None or its footer does not parse."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 0
+    for f in files:
+        if f is None:
+            return None
+        try:
+            n += pq.read_metadata(f).num_rows
+        except (OSError, pa.ArrowException):
+            return None
+    return n
+
+
+def parquet_rows(spark: SparkSession, path: str) -> int | None:
+    """Rows of the local Parquet table at ``path``, summed from the
+    footers of the data files Spark would scan: no Spark job. None
+    whenever the listing is in doubt (see :func:`list_parquet_files`)
+    or a footer does not parse."""
+    local = _local_path(spark, path)
+    listed = list_parquet_files(local) if local else None
+    return _footer_rows(listed[0]) if listed else None
+
+
+def _arrow_leaf_paths(name: str, field):
+    """The Parquet column paths of arrow ``field`` in the standard
+    nested layout (3-level lists, ``key_value`` maps). Raises
+    ``ValueError`` at a type whose Spark type is not what
+    ``from_arrow_schema`` gives: unsigned, ns timestamps (INT96 reads as
+    those), durations, fixed-size binary, float16 ..."""
+    import pyarrow.types as pat
+
+    t = field.type
+    if field.metadata:  # field ids and the like
+        raise ValueError(name)
+    if pat.is_dictionary(t):
+        t = t.value_type
+    if pat.is_struct(t):
+        for f in t:
+            yield from _arrow_leaf_paths(f"{name}.{f.name}", f)
+    elif pat.is_list(t):
+        yield from _arrow_leaf_paths(
+            f"{name}.list.{t.value_field.name}", t.value_field)
+    elif pat.is_map(t):
+        yield from _arrow_leaf_paths(f"{name}.key_value.key", t.key_field)
+        yield from _arrow_leaf_paths(f"{name}.key_value.value", t.item_field)
+    elif (pat.is_boolean(t) or pat.is_signed_integer(t) or pat.is_float32(t)
+          or pat.is_float64(t) or pat.is_decimal128(t) or pat.is_string(t)
+          or pat.is_large_string(t) or pat.is_binary(t)
+          or pat.is_large_binary(t) or pat.is_date32(t)
+          or (pat.is_timestamp(t) and t.unit != "ns")):
+        yield name
+    else:
+        raise ValueError(name)
+
+
+def _file_schema(file: str) -> T.StructType | None:
+    """The Spark schema of one Parquet file, from its footer: the Spark
+    schema its writer stored, else ``from_arrow_schema`` of its arrow
+    schema (tz-naive timestamps as TIMESTAMP_NTZ, as Spark infers them).
+    None for a footer that does not parse or a type the conversion
+    could get wrong."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    try:
+        md = pq.read_metadata(file)
+    except (OSError, pa.ArrowException):
+        return None
+    stored = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        try:
+            return T.StructType.fromJson(json.loads(stored))
+        except (ValueError, KeyError, TypeError):  # not a schema PySpark reads
+            return None
+    columns = [md.schema.column(i) for i in range(md.num_columns)]
+    if any(c.logical_type.type not in _FOOTER_LOGICAL_TYPES for c in columns):
+        return None
+    arrow = md.schema.to_arrow_schema()
+    try:
+        paths = [p for f in arrow for p in _arrow_leaf_paths(f.name, f)]
+    except ValueError:
+        return None
+    if paths != [c.path for c in columns]:  # a legacy nested layout
+        return None
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's Parquet inference gives the local ``path``,
+    read on the driver from the footer of the file that inference reads
+    (``_common_metadata``, then ``_metadata``, then the first data file
+    in path order), so no Spark job runs. Spark still appends the hive
+    partition columns itself. None, for Spark's own inference, whenever
+    the answer could differ: a path that is not local, a session setting
+    in ``_FOOTER_SETTINGS`` off its default, a listing in doubt, a
+    footer that does not parse or holds a type Spark reads otherwise,
+    no columns, duplicate names, or a data column named like a
+    partition column."""
+    local = _local_path(spark, path)
+    if local is None or any(
+            str(spark.conf.get(k, v)).lower() != v
+            for k, v in _FOOTER_SETTINGS.items()):
+        return None
+    listed = list_parquet_files(local)
+    if listed is None:
+        return None
+    data, summaries, partitions = listed
+    source = min(summaries, default=data[0],
+                 key=lambda f: _SUMMARY_FILES.index(os.path.basename(f)))
+    schema = _file_schema(source)
+    if schema is None:
+        return None
+    names = [n.lower() for n in schema.fieldNames()]
+    if (not names or len(set(names)) < len(names)
+            or set(names) & {p.lower() for p in partitions}):
+        return None
+    return schema
 
 
 # Spark's name for the directory of a NULL partition value
@@ -122,32 +355,83 @@ def _directory_partition_types(df: DataFrame,
     return {c: types[c.lower()] for c in cols}
 
 
-def _listed_partition_values(df: DataFrame, col: str,
-                             dtype: T.DataType) -> set | None:
-    """The non-NULL values of directory partition ``col`` over the files
-    the index listed, typed as Spark typed the column (so ``hour=10``
-    sorts after ``hour=9``); None when some value does not parse."""
-    parse = next((p for types, p in _PATH_VALUE_PARSERS
-                  if isinstance(dtype, types)), None)
-    if parse is None:
+def _partition_listing(df: DataFrame, cols: list[str]
+                       ) -> list[tuple[str | None, dict]] | None:
+    """[(local path or None, {col: value})] over the data files the index
+    listed, when ``df`` is a bare read of a hive-partitioned file source
+    and every column in ``cols`` is a directory partition column. Values
+    are typed as Spark typed the column (so ``hour=10`` sorts after
+    ``hour=9``), None for a NULL partition; a file not on the local
+    file system has no path. None when a value does not parse."""
+    types = _directory_partition_types(df, cols)
+    if not types:
         return None
-    values = set()
+    parsers = {}
+    for c, dtype in types.items():
+        parsers[c] = next((p for ts, p in _PATH_VALUE_PARSERS
+                           if isinstance(dtype, ts)), None)
+        if parsers[c] is None:
+            return None
+    listing = []
     for uri in df.inputFiles():
         # the URI escapes what Spark already escaped in the directory
         # name: undo the URI layer here, Spark's own %XX layer below
-        dirs = unquote(urlparse(uri).path).split("/")[:-1]
-        raw = next((value for name, eq, value
-                    in (seg.partition("=") for seg in reversed(dirs))
-                    if eq and _unescape(name).lower() == col.lower()), None)
-        if raw is None:
-            return None
-        if raw == _NULL_PARTITION:
+        url = urlparse(uri)
+        *dirs, name = unquote(url.path).split("/")
+        if name.startswith(("_", ".")):  # summary files: never scanned
             continue
-        try:
-            values.add(parse(_unescape(raw)))
-        except (ValueError, ArithmeticError):  # decimal.InvalidOperation
-            return None
-    return values
+        values = {}
+        for c, parse in parsers.items():
+            raw = next((value for key, eq, value
+                        in (seg.partition("=") for seg in reversed(dirs))
+                        if eq and _unescape(key).lower() == c.lower()), None)
+            if raw is None:
+                return None
+            try:
+                values[c] = (None if raw == _NULL_PARTITION
+                             else parse(_unescape(raw)))
+            except (ValueError, ArithmeticError):  # decimal.InvalidOperation
+                return None
+        listing.append((unquote(url.path) if url.scheme == "file" else None,
+                        values))
+    return listing
+
+
+def _has_rows(df: DataFrame, listing, vals: dict) -> bool:
+    """Whether ``df`` holds rows in the partition ``vals``: the footer
+    row counts of its listed files, or a LIMIT-1 probe when there is no
+    listing or a footer cannot answer."""
+    n = None if listing is None else _footer_rows(
+        path for path, values in listing
+        if all(values[c] == v for c, v in vals.items()))
+    if n is not None:
+        return n > 0
+    out = df
+    for c, v in vals.items():
+        out = out.filter(F.col(c) == F.lit(v))
+    return not out.isEmpty()
+
+
+def _latest_partition(df: DataFrame, partition_cols: list[str]):
+    """(:func:`latest_partition_values`, the partition listing it used
+    or None)."""
+    if not partition_cols:
+        return {}, None
+    listing = _partition_listing(df, partition_cols)
+    if listing is None:
+        row = df.agg(*[F.max(F.col(c)).alias(c)
+                       for c in partition_cols]).first()
+        if row is None:
+            return {}, None
+        return {c: row[c] for c in partition_cols if row[c] is not None}, None
+    vals = {}
+    for c in partition_cols:
+        candidates = {values[c] for _, values in listing} - {None}
+        for v in sorted(candidates, reverse=True):
+            if _has_rows(df, listing, {c: v}):
+                vals[c] = v
+                break
+    return vals, listing
 
 
 def latest_partition_values(df: DataFrame, partition_cols: list[str]) -> dict[str, object]:
@@ -159,28 +443,13 @@ def latest_partition_values(df: DataFrame, partition_cols: list[str]) -> dict[st
 
     When ``df`` is a bare read of a hive-partitioned file source and every
     column is a directory partition column, the candidates come from the
-    file index's listing (no job); the newest is confirmed by a LIMIT-1
-    probe, stepping down past partitions whose files hold no rows.
-    Otherwise — in-memory frames, JDBC and catalog tables, data columns —
-    one ``agg(max)`` over the rows."""
-    if not partition_cols:
-        return {}
-    types = _directory_partition_types(df, partition_cols)
-    listed = types and {c: _listed_partition_values(df, c, t)
-                        for c, t in types.items()}
-    if not listed or any(v is None for v in listed.values()):
-        row = df.agg(*[F.max(F.col(c)).alias(c)
-                       for c in partition_cols]).first()
-        if row is None:
-            return {}
-        return {c: row[c] for c in partition_cols if row[c] is not None}
-    vals = {}
-    for c, candidates in listed.items():
-        for v in sorted(candidates, reverse=True):
-            if not df.filter(F.col(c) == F.lit(v)).isEmpty():
-                vals[c] = v
-                break
-    return vals
+    file index's listing, and the newest one whose files' footers count
+    any rows wins, stepping down past partitions whose files hold none:
+    no Spark job. A file whose footer cannot answer (not local, not
+    Parquet, unreadable) takes a LIMIT-1 probe instead. Otherwise —
+    in-memory frames, JDBC and catalog tables, data columns — one
+    ``agg(max)`` over the rows."""
+    return _latest_partition(df, partition_cols)[0]
 
 
 def latest_partition_filter(df: DataFrame, partition_cols: list[str],
@@ -191,7 +460,7 @@ def latest_partition_filter(df: DataFrame, partition_cols: list[str],
     The returned plan carries plain equality filters — Catalyst turns them
     into real partition pruning on partitioned layouts.
     """
-    vals = latest_partition_values(df, partition_cols)
+    vals, listing = _latest_partition(df, partition_cols)
     if not vals:
         logger.warning("no prunable partition values; applying LIMIT %s guard", guard_limit)
         return df.limit(guard_limit) if guard_limit else df
@@ -204,8 +473,9 @@ def latest_partition_filter(df: DataFrame, partition_cols: list[str],
     # exist — e.g. (dt=01-02, hour=03) and (dt=01-01, hour=23) prune to
     # dt=01-02 AND hour=23 → empty. The reference migrates 0 rows
     # silently there; we keep the semantics (it is the oracle-checked
-    # contract) but SAY so — one limit-1 probe, metadata-cheap.
-    if len(vals) > 1 and out.isEmpty():
+    # contract) but SAY so — by the footers of the listed files, or one
+    # limit-1 probe.
+    if len(vals) > 1 and not _has_rows(df, listing, vals):
         logger.warning(
             "independent per-column latest-partition values %s name a "
             "combination with no rows (reference semantics); result is "
@@ -217,8 +487,9 @@ def latest_partition_filter(df: DataFrame, partition_cols: list[str],
 def open_file_stream(spark: SparkSession, source_path: str,
                      fmt: str = "parquet", **options) -> DataFrame:
     """Open a file-format path (file OR directory) as a streaming
-    DataFrame with the batch-inferred schema (file streams require an
-    explicit one; the batch read also validates the source up front).
+    DataFrame with the batch read's schema (file streams require an
+    explicit one; the batch read also validates the source up front; a
+    local Parquet source takes it from a footer, see :func:`read_table`).
     ``options`` go to the stream reader (e.g. ``maxFilesPerTrigger``);
     CSV defaults to a header row, as in :func:`read_table`. File stream
     sources require a directory, so a single file streams via its parent
@@ -227,17 +498,15 @@ def open_file_stream(spark: SparkSession, source_path: str,
     resolves against this process's working directory — the one the
     file-or-directory check sees — not the JVM's launch directory. The
     shared logic behind every ``run_*_stream`` runner."""
-    import os as _os
-
     if not urlparse(source_path).scheme:
-        source_path = _os.path.abspath(source_path)
+        source_path = os.path.abspath(source_path)
     schema = read_table(spark, source_path, fmt=fmt).schema
     if fmt == "csv":
         options.setdefault("header", "true")
     reader = spark.readStream.format(fmt).schema(schema).options(**options)
-    if _os.path.isdir(source_path) or "://" in source_path:
+    if os.path.isdir(source_path) or "://" in source_path:
         return reader.load(source_path)
-    base, fname = _os.path.split(source_path.rstrip("/"))
+    base, fname = os.path.split(source_path.rstrip("/"))
     for ch in "\\*?[]{}":
         fname = fname.replace(ch, "\\" + ch)
     return reader.option("pathGlobFilter", fname).load(base)
@@ -322,6 +591,8 @@ def parquet_footer_stats(path: str,
     file skipping, so this probe also SHOWS a table's clustering quality
     (disjoint per-file ranges → range scans skip files).
 
+    The files are the data files Spark would scan, hive ``name=value``
+    partition directories included (:func:`list_parquet_files`).
     Driver-side file iteration: cost is #files × footer parse, no row
     data moves. Bounded and appropriate for per-table ops checks; for a
     catalog-wide sweep over millions of files, parallelize the listing
@@ -329,16 +600,14 @@ def parquet_footer_stats(path: str,
     columns whose writer emitted no statistics — None means "no
     information", never "zero".
     """
-    import glob as _glob
-    import os as _os
-
     import pyarrow.parquet as pq
 
-    files = ([path] if _os.path.isfile(path)
-             else sorted(_glob.glob(_os.path.join(path, "*.parquet"))
-                         or _glob.glob(_os.path.join(path, "part-*"))))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path!r}")
+    listed = list_parquet_files(path)
+    if listed is None:
+        raise FileNotFoundError(
+            f"no parquet data files Spark would list the same way under "
+            f"{path!r}")
+    files = listed[0]
     n_rows = 0
     total_bytes = 0
     n_row_groups = 0
@@ -347,7 +616,7 @@ def parquet_footer_stats(path: str,
     for f in files:
         md = pq.ParquetFile(f).metadata
         n_rows += md.num_rows
-        total_bytes += _os.path.getsize(f)
+        total_bytes += os.path.getsize(f)
         names = [md.schema.column(i).name for i in range(md.num_columns)]
         for g in range(md.num_row_groups):
             n_row_groups += 1

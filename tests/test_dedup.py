@@ -91,6 +91,29 @@ def test_embedding_near_dups(spark):
     assert all(v >= 0.95 for v in got.values())
 
 
+@pytest.mark.parametrize("name", ["vec.id", "vec id", "vec`id"])
+def test_embedding_operators_take_any_column_name(spark, name):
+    """Vector and id columns named with a dot (not a struct field), a
+    space or a backtick give the pairs the plain names give."""
+    from data_warehouse_migrate_spark.operators.dedup import (
+        embedding_exact_pairs,
+    )
+
+    rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.999, 0.01, 0.0, 0.0]),
+            (3, [0.0, 1.0, 0.0, 0.0]), (4, [-1.0, 0.0, 0.0, 0.0])]
+    plain = spark.createDataFrame(rows, "id int, vec array<double>")
+    odd = plain.toDF(name, name + " vec")
+
+    def pairs(out):
+        return sorted((r.id_a, r.id_b) for r in out.collect())
+
+    assert pairs(embedding_near_dups(odd, name + " vec", name,
+                                     threshold=0.95)) == \
+        pairs(embedding_near_dups(plain, "vec", "id", threshold=0.95))
+    assert pairs(embedding_exact_pairs(odd, name + " vec", name, 0.95)) == \
+        pairs(embedding_exact_pairs(plain, "vec", "id", 0.95)) == [(1, 2)]
+
+
 def test_embedding_lsh_recall_vs_exact(spark, sf_dir):
     # the brute-force companion pins the LSH path: precision must be 1.0
     # (verification join) and banded multi-probe recall must hold the
@@ -366,6 +389,20 @@ class TestLineDedup:
         import pytest as _pytest
         with _pytest.raises(ValueError):
             line_dedup(df, "text", "doc_id", min_occurrences=1)
+
+    @pytest.mark.parametrize("name", ["doc.text", "doc text", "doc`text"])
+    def test_any_column_name(self, spark, name):
+        """Text and id columns named with a dot (not a struct field), a
+        space or a backtick clean as the plain names do."""
+        from data_warehouse_migrate_spark.operators.dedup import line_dedup
+
+        df = self._df(spark, [(1, "BANNER\none"), (2, "BANNER\ntwo"),
+                              (3, None)]).toDF(name + " id", name)
+        out = line_dedup(df, name, name + " id")
+        assert out.columns == [name + " id", "text_clean", "n_lines",
+                               "n_kept"]
+        assert sorted(map(tuple, out.collect()), key=repr) == [
+            (1, "one", 2, 1), (2, "two", 2, 1), (3, None, 0, 0)]
 
 
 def test_connected_components_random_graphs_match_union_find(spark):
@@ -694,9 +731,10 @@ def test_corpus_chain_work_is_pinned(spark, tmp_path):
     text rule is one parsed SQL expression (built as Column trees, one
     round trip per node, the same plan cost 1,619).
     read → clean_corpus → minhash_lsh_pairs → near_dup_removal → write
-    submits 16 Spark jobs: the schema inference, minhash_lsh_pairs' fused
-    sizing and hot-bucket collect, near_dup_removal's edge collect and
-    the write, each with the AQE shuffle stages in front of it."""
+    submits 15 Spark jobs: minhash_lsh_pairs' fused sizing and
+    hot-bucket collect, near_dup_removal's edge collect and the write,
+    each with the AQE shuffle stages in front of it. The read takes its
+    schema from a Parquet footer (16 jobs while it was inferred)."""
     from test_migrate import _py4j_round_trips, _spark_jobs
 
     from data_warehouse_migrate_spark.operators.pipeline import clean_corpus
@@ -710,4 +748,4 @@ def test_corpus_chain_work_is_pinned(spark, tmp_path):
         spark, lambda: _corpus_chain(spark, path, dest))
     kept = {r.doc_id for r in spark.read.parquet(dest).collect()}
     assert kept == base
-    assert trips <= 110 and jobs == 16, (trips, jobs)
+    assert trips <= 110 and jobs == 15, (trips, jobs)

@@ -120,10 +120,11 @@ def test_dry_run_defers_eager_checks(spark, tmp_path):
     job = MigrationJob(source_path=src, destination_path=str(tmp_path / "out"),
                        mode="overwrite", non_nullable=["id"],
                        null_policy="fail", partition_columns=["pt"])
-    # must not raise NullPolicyViolation; one schema inference (the probe
-    # and the plan share the read) + the LIMIT-1 probe
+    # must not raise NullPolicyViolation; only the LIMIT-1 access probe
+    # (the probe and the plan share the read, whose schema comes from a
+    # footer: 2 jobs while it was inferred)
     report, jobs, _ = _spark_jobs(spark, lambda: job.dry_run(spark))
-    assert jobs == 2
+    assert jobs == 1
     assert report["planned_checks"]["null_policy"] == {
         "policy": "fail", "columns": ["id"]}
     assert report["planned_checks"]["partition_filter"] == "latest of ['pt']"
@@ -425,6 +426,35 @@ def test_verify_after_migration(spark, orders_path, tmp_path):
     assert rep2["source_rows"] == rep2["destination_rows"]
 
 
+def test_verify_counts_only_and_empty_sides(spark, tmp_path):
+    """With no stable-rendering column verify() compares the row counts
+    alone; an empty source and destination verify with 0 rows each and
+    both checksums None."""
+    src, dest = str(tmp_path / "floats"), str(tmp_path / "floats_dest")
+    spark.createDataFrame([(0.5,), (1.5,)], "x double").write.parquet(src)
+    job = MigrationJob(source_path=src, destination_path=dest,
+                       mode="overwrite")
+    job.run(spark)
+    assert job.verify(spark) == {
+        "verified": True, "source_rows": 2, "destination_rows": 2,
+        "checksum_match": None, "columns_checked": [],
+        "skipped_columns": ["x"]}
+    spark.createDataFrame([(2.5,)], "x double").write.mode("append") \
+        .parquet(dest)
+    rep = job.verify(spark)
+    assert (rep["verified"], rep["destination_rows"]) == (False, 3)
+
+    empty = str(tmp_path / "empty")
+    spark.createDataFrame([], "id long, s string").write.parquet(empty)
+    job = MigrationJob(source_path=empty, destination_path=dest,
+                       mode="overwrite")
+    assert job.run(spark)["destination_rows"] == 0
+    assert job.verify(spark) == {
+        "verified": True, "source_rows": 0, "destination_rows": 0,
+        "checksum_match": True, "columns_checked": ["id", "s"],
+        "skipped_columns": []}
+
+
 def test_run_incremental_reconciles_drift(spark, tmp_path):
     """A source that gained a column and widened a type still syncs when
     reconcile_drift=True; without it the union in apply_delta fails."""
@@ -639,20 +669,22 @@ def _daily_job(tmp_path):
 
 def test_run_and_verify_spark_job_counts(spark, tmp_path):
     """Pinned Spark job and task counts on :func:`_daily_job`'s nightly
-    shape. run() submits 8 jobs: the source's schema inference (the
-    listing stays on the driver), the LIMIT-1 probe of the newest
-    ``dt=``, one AQE shuffle + result pair each for the pre-write gate
-    (null check and sizing in one aggregate), the sized write and the
-    destination count. Its task total shows that no job fans out over
-    the 40 directories. verify() reuses that plan, so it submits only
-    the destination's schema read and one shuffle + result job per
-    checksum."""
+    shape. run() submits 4 jobs: one AQE shuffle + result pair each for
+    the pre-write gate (null check and sizing in one aggregate) and the
+    sized write. The source's schema, the emptiness of the newest
+    ``dt=`` and the destination's row count come from Parquet footers
+    read on the driver (they were 4 more jobs: the inference, a LIMIT-1
+    probe and a two-job count). Its task total shows that no job fans
+    out over the 40 directories. verify() reuses that plan and reads the
+    destination's schema from a footer, so it submits only the one
+    shuffle + result pair that checksums both sides (5 jobs while each
+    side had its own aggregate and the schema was inferred)."""
     job = _daily_job(tmp_path)
     out, run_jobs, run_tasks = _spark_jobs(spark, lambda: job.run(spark))
     assert out["rows_written"] == 20
     rep, verify_jobs, _ = _spark_jobs(spark, lambda: job.verify(spark))
     assert rep["verified"] is True and rep["source_rows"] == 20
-    assert (run_jobs, run_tasks, verify_jobs) == (8, 8, 5)
+    assert (run_jobs, run_tasks, verify_jobs) == (4, 4, 2)
 
 
 def test_run_and_verify_py4j_round_trips(spark, tmp_path):
@@ -660,8 +692,10 @@ def test_run_and_verify_py4j_round_trips(spark, tmp_path):
     aggregate, the checksum) is built as SQL text in one py4j call, so
     the round trips of a run() and a verify() on :func:`_daily_job`'s
     shape stay near the fixed cost of reading, probing and writing
-    (276 and 55). Built as Column trees, one round trip per node, the
-    stages cost 888 and 831 here."""
+    (248 and 48; 276 and 55 before footers replaced the inference, the
+    probe, the read-back count and one checksum aggregate). Built as
+    Column trees, one round trip per node, the stages cost 888 and 831
+    here."""
     job = _daily_job(tmp_path)
     job.run(spark)  # warm: first-use lookups are not the stages' cost
     job.verify(spark)
@@ -888,24 +922,27 @@ def _incremental_pair(spark, tmp_path):
 
 def test_run_incremental_spark_job_counts(spark, tmp_path):
     """Pinned Spark jobs and tasks of a second-run run_incremental into a
-    file destination: the source's and the destination's schema
-    inference, four for the delta join's counting aggregate (a shuffle
-    job per join side, one for the grouping and a result job) and the
-    rewrite, whose plan reads the source alone. Nothing is cached or checkpointed, and the destination is
-    neither re-scanned nor anti-joined."""
+    file destination: four for the delta join's counting aggregate (a
+    shuffle job per join side, one for the grouping and a result job)
+    and the rewrite, whose plan reads the source alone. Both schemas
+    come from Parquet footers (7 jobs / 7 tasks while each side ran an
+    inference job). Nothing is cached or checkpointed, and the
+    destination is neither re-scanned nor anti-joined."""
     job, dst = _incremental_pair(spark, tmp_path)
     out, jobs, tasks = _spark_jobs(
         spark, lambda: job().run_incremental(spark, ["id"]))
     assert out["delta_counts"] == {"unchanged": 190, "update": 5,
                                    "delete": 5, "insert": 5}
     assert spark.read.parquet(str(dst)).count() == 200
-    assert (jobs, tasks) == (7, 7)
+    assert (jobs, tasks) == (5, 5)
 
 
 def test_run_incremental_py4j_round_trips(spark, tmp_path):
     """A second-run run_incremental builds its casts, its delta join and
-    its rewrite projection as SQL text, one py4j call each: 139 round
-    trips. Built as Column trees they cost 884 here."""
+    its rewrite projection as SQL text, one py4j call each: 161 round
+    trips (139 while both schemas were inferred: passing a footer schema
+    to the reader and checking the session settings it depends on cost
+    about 11 per read). Built as Column trees they cost 884 here."""
     job, _ = _incremental_pair(spark, tmp_path)
     out, trips = _py4j_round_trips(
         spark, lambda: job().run_incremental(spark, ["id"]))
@@ -916,8 +953,9 @@ def test_run_incremental_py4j_round_trips(spark, tmp_path):
 
 def test_run_scd2_first_run_counts_on_the_write(spark, tmp_path):
     """A first run_scd2 counts the history it initializes on the write
-    pass (an Observation), not with a count job before it: the source's
-    schema inference and the write are its only Spark jobs."""
+    pass (an Observation), not with a count job before it: the write is
+    its only Spark job, since the source's schema comes from a footer
+    (2 jobs / 2 tasks while it was inferred)."""
     src = str(tmp_path / "scd_src")
     spark.createDataFrame([(i, f"v{i}") for i in range(50)],
                           "k long, v string").coalesce(1).write.parquet(src)
@@ -928,7 +966,7 @@ def test_run_scd2_first_run_counts_on_the_write(spark, tmp_path):
         spark, lambda: job.run_scd2(spark, ["k"], batch_date="2024-01-01"))
     assert out["first_run"] is True
     assert out["history_rows"] == out["versions_opened"] == 50
-    assert (jobs, tasks) == (2, 2)
+    assert (jobs, tasks) == (1, 1)
 
 
 def _write_sync_source(path, changed):
@@ -987,14 +1025,15 @@ def test_run_scd2_spark_job_counts(spark, tmp_path):
     current one, no count job and no second fold; the checkpoint is
     released after the write. The versions closed before the batch skip
     the join's shuffle: their scan is the checkpoint stage's second
-    input, 8 of its tasks here. It was 9 jobs / 26 tasks while the fold
+    input, 8 of its tasks here. The source's and the history's schemas
+    come from Parquet footers. It was 9 jobs / 26 tasks while the fold
     joined the source to the current versions and that result to the
-    whole history."""
+    whole history, and 8 / 25 while both schemas were inferred."""
     out, jobs, tasks = _sync_cost(spark, tmp_path, "scd2", "changed")
     assert (out["versions_opened"], out["versions_closed"],
             out["history_rows"]) == (50, 50, 1050)
     assert spark.read.parquet(str(tmp_path / "dst")).count() == 1050
-    assert (jobs, tasks) == (8, 25)
+    assert (jobs, tasks) == (6, 23)
 
 
 @pytest.mark.parametrize("runner, before, fail, extra", [

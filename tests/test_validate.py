@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from data_warehouse_migrate_spark.operators.validate import (
     column_profile,
     group_checksum,
+    paired_checksums,
 )
 
 
@@ -47,6 +48,30 @@ def test_checksum_whole_table_and_validation(spark, tbl):
     assert row.n_rows == 4
     with pytest.raises(ValueError, match="value_cols"):
         group_checksum(tbl, ["grp"], [])
+
+
+def test_paired_checksums_equal_group_checksum(spark, tbl):
+    """One aggregate over both sides gives what group_checksum gives for
+    each: equal and unequal sides, an empty side (0 rows, checksum
+    None), columns of types that a union would widen, and no columns
+    (counts only)."""
+    def whole(df, cols):
+        return group_checksum(df, [], cols).first().asDict()
+
+    cols = ["id", "payload"]
+    mutated = tbl.withColumn("payload", F.upper("payload"))
+    empty = tbl.filter("false")
+    for a, b in ((tbl, tbl.orderBy(F.desc("id"))), (tbl, mutated),
+                 (tbl, empty), (empty, empty)):
+        assert paired_checksums(a, b, cols) == (whole(a, cols),
+                                                whole(b, cols))
+    assert paired_checksums(tbl, empty, cols)[1] == {"n_rows": 0,
+                                                     "checksum": None}
+    narrow = tbl.selectExpr("CAST(id AS INT) AS id", "payload")
+    assert paired_checksums(narrow, tbl, cols) == (whole(narrow, cols),
+                                                   whole(tbl, cols))
+    assert paired_checksums(tbl, empty, []) == (
+        {"n_rows": 4, "checksum": None}, {"n_rows": 0, "checksum": None})
 
 
 def test_column_profile(spark, tbl):
