@@ -53,17 +53,21 @@ def _materialize(df: DataFrame) -> DataFrame:
     cache separately. MEMORY_AND_DISK spills under pressure and recomputes
     on executor loss, so it is safe at cluster scale.
 
-    Lifecycle (r15 review): the cached plan lives until the SESSION drops
-    it — Spark's CacheManager holds DataFrame caches strongly, so unlike
-    raw RDDs they are NOT freed when the Python handle is GC'd (the
+    Lifecycle: the cached plan lives until someone unpersists it —
+    Spark's CacheManager holds DataFrame caches strongly, so unlike raw
+    RDDs they are NOT freed when the Python handle is GC'd (the
     ContextCleaner only reaps weakly-reachable RDDs/broadcasts/shuffles).
     Unpersisting here is impossible by construction: the persisted subtree
-    IS part of the returned (still-lazy) plan. The design center — one
-    batch job per corpus pass, session exits at the end — never notices;
-    a long-lived session invoking these operators repeatedly should call
-    ``spark.catalog.clearCache()`` between corpus passes (worst case
-    before that is disk-spilled blocks, not OOM). The iterative operator
-    where the entry is both large and short-lived exposes an explicit
+    IS part of the returned (still-lazy) plan. So the consumer releases
+    it once it no longer reads the plan: ``minhash_lsh_pairs`` hands the
+    frames it persisted (signatures, and with ``diag`` the candidates)
+    to ``near_dup_removal`` on its pairs frame, and ``near_dup_removal``
+    unpersists them as soon as it holds the edges, so the corpus chain
+    leaves the session's cache as it found it. Pairs consumed otherwise
+    (or transformed first, which drops the hand-over) stay cached until
+    ``spark.catalog.clearCache()``; worst case before that is
+    disk-spilled blocks, not OOM. The iterative operator where the entry
+    is both large and short-lived exposes an explicit
     ``diag['unpersist']`` callable instead (``operators/entity.py``)."""
     from pyspark import StorageLevel
 
@@ -776,6 +780,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+    # released by near_dup_removal once it holds the edges (see
+    # _materialize's lifecycle)
+    out._persisted = [sigs] + ([candidates] if diag is not None else [])
     return out
 
 
@@ -1056,7 +1063,7 @@ def cross_corpus_dedup(new_df: DataFrame, ref_df: DataFrame,
     job cost.
     """
     def _tag(df, offset):
-        base = F.col(id_col).cast("bigint")
+        base = F.col(ident(id_col)).cast("bigint")
         guarded = F.when(
             (base < 0) | (base >= F.lit(1 << 62)),
             F.raise_error(F.concat(
@@ -1064,7 +1071,7 @@ def cross_corpus_dedup(new_df: DataFrame, ref_df: DataFrame,
                       "(got "), base.cast("string"), F.lit(")")))
             .cast("bigint")
         ).otherwise(base * 2 + offset)
-        return df.select(guarded.alias(id_col), F.col(text_col))
+        return df.select(guarded.alias(id_col), F.col(ident(text_col)))
 
     ref = _tag(ref_df, 0)
     new = _tag(new_df, 1)
@@ -1080,6 +1087,15 @@ def cross_corpus_dedup(new_df: DataFrame, ref_df: DataFrame,
         .select(F.shiftright(F.col("__tagged"), 1).alias(id_col))
         .distinct())
     return new_df.join(drops, id_col, "left_anti")
+
+
+def _release(pairs: DataFrame) -> None:
+    """Unpersist what the pair generator persisted for ``pairs`` (see
+    :func:`_materialize`): nothing reads it once the edges are held.
+    Read from the instance dict: a DataFrame attribute lookup that misses
+    asks the JVM for the schema."""
+    for cached in vars(pairs).get("_persisted", ()):
+        cached.unpersist()
 
 
 def near_dup_removal(df: DataFrame, pairs: DataFrame, id_col: str,
@@ -1111,11 +1127,12 @@ def near_dup_removal(df: DataFrame, pairs: DataFrame, id_col: str,
     re-derives the distinct under its own persist (one extra pass on
     the degenerate-scale path buys one fewer on the common one).
     """
-    und = pairs.select(F.least(F.col(src_col), F.col(dst_col)).alias("s"),
-                       F.greatest(F.col(src_col), F.col(dst_col)).alias("d")
-                       ).distinct()
+    src, dst = F.col(ident(src_col)), F.col(ident(dst_col))
+    und = pairs.select(F.least(src, dst).alias("s"),
+                       F.greatest(src, dst).alias("d")).distinct()
     pdf = _edges_pdf_or_none(und, _CC_LOCAL_MAX_EDGES)
     if pdf is not None:
+        _release(pairs)
         moved = _cc_local_moved(pdf)
         if moved is None or not len(moved):
             return df
@@ -1128,6 +1145,7 @@ def near_dup_removal(df: DataFrame, pairs: DataFrame, id_col: str,
     # fallback regime: members + the CC iteration both re-read the edge
     # set — persist it here (degenerate-scale path only)
     und = _materialize(und)
+    _release(pairs)
     members = (und.select(F.col("s").alias(id_col))
                .unionByName(und.select(F.col("d").alias(id_col)))
                .distinct())
@@ -1377,8 +1395,8 @@ def semantic_dedup(df: DataFrame, vec_col: str, id_col: str,
     if centroids == "kmeans":
         cents = kmeans_centroids(df, vec_col, id_col, k=n_cells)
     elif centroids == "lowid":
-        rows = (df.select(F.col(id_col).alias("i"),
-                          F.col(vec_col).alias("v"))
+        rows = (df.select(F.col(ident(id_col)).alias("i"),
+                          F.col(ident(vec_col)).alias("v"))
                 .orderBy("i").limit(n_cells).collect())
         cents = []
         for r in rows:
@@ -1433,8 +1451,8 @@ def semantic_dedup(df: DataFrame, vec_col: str, id_col: str,
     # held two caches — one pass and one cache carry the same
     # information at every scale
     quant = assigned.select(
-        F.col(id_col).alias("id"), F.col("cell"),
-        normalize(F.col(vec_col)).alias("__nv")).persist(
+        F.col(ident(id_col)).alias("id"), F.col("cell"),
+        normalize(F.col(ident(vec_col))).alias("__nv")).persist(
         StorageLevel.MEMORY_AND_DISK)
     band_rows = quant.select("id", F.lit(0).alias("band"),
                              F.col("cell").alias("band_key"))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.functions.text import token_count
+from data_warehouse_migrate_spark.sqltext import ident
 
 # seq_id packs (pack_group, chunk-within-group) into one long as
 # group * _MAX_CHUNKS_PER_GROUP + chunk. A group may therefore hold at
@@ -64,11 +65,11 @@ def pack_sequences(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(
             f"budget and n_groups must be >= 1 (got {budget}, {n_groups})")
     if group_expr is None:
-        group_expr = F.pmod(F.hash(F.col(id_col)), F.lit(n_groups))
+        group_expr = F.pmod(F.hash(F.col(ident(id_col))), F.lit(n_groups))
     w = (Window.partitionBy("pack_group").orderBy("id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col(ident(id_col)).alias("id"),
         F.coalesce(token_count(text_col), F.lit(0))
         .cast("long").alias("n_tokens"),
         group_expr.cast("long").alias("pack_group"))
@@ -161,9 +162,10 @@ def chunk_documents(df: DataFrame, text_col: str, id_col: str,
                 F.slice(t, s + 1, chunk_tokens).alias("toks")))
 
     chunks = F.transform(
-        F.array(F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_REGEX), 0)),
+        F.array(F.regexp_extract_all(F.col(ident(text_col)),
+                                     F.lit(TOKEN_REGEX), 0)),
         per_doc)[0]
-    return (df.select(F.col(id_col).alias("id"),
+    return (df.select(F.col(ident(id_col)).alias("id"),
                       F.explode(chunks).alias("c"))
             .select("id", "c.chunk_id", "c.start_token",
                     F.size("c.toks").cast("bigint").alias("n_tokens"),

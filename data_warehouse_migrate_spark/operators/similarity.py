@@ -71,14 +71,16 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame,
     # norms are precomputed per ROW (N + Q evaluations) instead of per
     # PAIR inside cosine() (2·P interpreted array folds — see
     # vectors.cosine_from_norms); results are bit-identical
-    q = F.broadcast(queries.select(F.col(query_id).alias("query_id"),
-                                   F.col(query_vec).alias("__qv"),
-                                   norm(F.col(query_vec)).alias("__qn")))
+    q = F.broadcast(queries.select(F.col(ident(query_id)).alias("query_id"),
+                                   F.col(ident(query_vec)).alias("__qv"),
+                                   norm(F.col(ident(query_vec)))
+                                   .alias("__qn")))
     # spread the stream side: a single-partition corpus scan would score
     # every (query, corpus) pair on one core (no-op at scale)
     c = spread_input(corpus).select(
-        F.col(corpus_id).alias("corpus_id"), F.col(corpus_vec).alias("__cv"),
-        norm(F.col(corpus_vec)).alias("__cn"))
+        F.col(ident(corpus_id)).alias("corpus_id"),
+        F.col(ident(corpus_vec)).alias("__cv"),
+        norm(F.col(ident(corpus_vec))).alias("__cn"))
     scored = q.crossJoin(c)
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("corpus_id"))
@@ -121,15 +123,15 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame,
     re-rank; the label filter composes unchanged.
     """
     # per-row norm precompute, same rationale as brute_force_topk
-    q = F.broadcast(queries.select(F.col(query_id).alias("query_id"),
-                                   F.col(query_vec).alias("__qv"),
-                                   norm(F.col(query_vec)).alias("__qn"),
-                                   F.col(query_label).alias("__ql")))
+    q = F.broadcast(queries.select(F.col(ident(query_id)).alias("query_id"),
+                                   F.col(ident(query_vec)).alias("__qv"),
+                                   norm(F.col(ident(query_vec))).alias("__qn"),
+                                   F.col(ident(query_label)).alias("__ql")))
     c = spread_input(corpus).select(
-        F.col(corpus_id).alias("corpus_id"),
-        F.col(corpus_vec).alias("__cv"),
-        norm(F.col(corpus_vec)).alias("__cn"),
-        F.col(corpus_label).alias("corpus_label"))
+        F.col(ident(corpus_id)).alias("corpus_id"),
+        F.col(ident(corpus_vec)).alias("__cv"),
+        norm(F.col(ident(corpus_vec))).alias("__cn"),
+        F.col(ident(corpus_label)).alias("corpus_label"))
     scored = (q.crossJoin(c)
               # null-safe mismatch: an unlabeled corpus row is not a
               # provable negative — excluded rather than assumed
@@ -191,13 +193,13 @@ def kmeans_centroids(corpus: DataFrame, vec_col: str, id_col: str,
     # them up front, disclosed here. Ragged vectors (size != dim) are
     # dropped after the seed probe below, once dim is known.
     corpus = corpus.filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
-        & ~F.exists(F.col(vec_col), lambda x: x.isNull()))
+        F.col(ident(vec_col)).isNotNull() & (F.size(F.col(ident(vec_col))) > 0)
+        & ~F.exists(F.col(ident(vec_col)), lambda x: x.isNull()))
     # spread before the persist: all n_iter+1 passes (k dot products per
     # row each) otherwise run on a single-partition scan's one core
     unit = (spread_input(corpus)
-            .select(F.col(id_col).alias("__id"),
-                    normalize(F.col(vec_col)).alias("__nv"))
+            .select(F.col(ident(id_col)).alias("__id"),
+                    normalize(F.col(ident(vec_col))).alias("__nv"))
             .persist())
     try:
         # seeds double as the dimensionality probe — one action, not two
@@ -440,17 +442,17 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame,
         cents = kmeans_centroids(corpus, corpus_vec, corpus_id,
                                  k=n_cells, n_iter=kmeans_iter)
     elif centroids == "lowid":
-        rows = (corpus.select(F.col(corpus_id).alias("i"),
-                              F.col(corpus_vec).alias("v"))
+        rows = (corpus.select(F.col(ident(corpus_id)).alias("i"),
+                              F.col(ident(corpus_vec)).alias("v"))
                 .orderBy("i").limit(n_cells).collect())
         cents = [_unit(list(r["v"])) for r in rows]
     else:
         cents = centroids
 
     c = spread_input(corpus).select(
-        F.col(corpus_id).alias("corpus_id"),
-        F.col(corpus_vec).alias("__cv"),
-        norm(F.col(corpus_vec)).alias("__cn"),
+        F.col(ident(corpus_id)).alias("corpus_id"),
+        F.col(ident(corpus_vec)).alias("__cv"),
+        norm(F.col(ident(corpus_vec))).alias("__cn"),
         _argmax_cell(corpus_vec, cents).alias("cell"))
     # same probe shape as lsh_topk: the (small-by-contract) query batch is
     # broadcast so the cell-assigned corpus never exchanges, and the
@@ -458,9 +460,9 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame,
     # probes are distinct cells per query, so collect_SET semantics are
     # merely defensive here (no multi-probe repeats to dedup).
     q = F.broadcast(
-        queries.select(F.col(query_id).alias("query_id"),
-                       F.col(query_vec).alias("__qv"),
-                       norm(F.col(query_vec)).alias("__qn"),
+        queries.select(F.col(ident(query_id)).alias("query_id"),
+                       F.col(ident(query_vec)).alias("__qv"),
+                       norm(F.col(ident(query_vec))).alias("__qn"),
                        F.explode(_top_cells(query_vec, cents, nprobe))
                        .alias("cell")))
     scored = q.join(c, "cell")
@@ -529,8 +531,9 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame,
         # generator) — per-pair cosine then costs one fold, not three
         keys = band_keys(vec_name, n_planes, bands, r)
         return df.select(
-            F.col(id_name).alias(out_id), F.col(vec_name).alias(out_vec),
-            norm(F.col(vec_name)).alias(out_norm),
+            F.col(ident(id_name)).alias(out_id),
+            F.col(ident(vec_name)).alias(out_vec),
+            norm(F.col(ident(vec_name))).alias(out_norm),
             F.posexplode(keys).alias("band", "band_key"))
 
     c = _indexed(spread_input(corpus), corpus_id, corpus_vec,
@@ -585,8 +588,8 @@ def build_lsh_index(corpus: DataFrame, table: str,
     n_planes, r = _resolve_planes(corpus, n_planes, bands)
     keys = band_keys(corpus_vec, n_planes, bands, r)
     rows = spread_input(corpus).select(
-        F.col(corpus_id).alias("corpus_id"),
-        F.col(corpus_vec).alias("corpus_vec"),
+        F.col(ident(corpus_id)).alias("corpus_id"),
+        F.col(ident(corpus_vec)).alias("corpus_vec"),
         F.posexplode(keys).alias("band", "band_key"))
     write_bucketed(rows, table, ["band", "band_key"], n_buckets=n_buckets,
                    sort_cols=["band", "band_key"])
@@ -657,9 +660,9 @@ def lsh_topk_indexed(queries: DataFrame, index_table: str,
                or int(props.get("dwms.lsh.max_bucket", 0)) <= max_bucket_size)
 
     keys = band_keys(query_vec, n_planes, bands, r)
-    probes = (queries.select(F.col(query_id).alias("query_id"),
-                             F.col(query_vec).alias("__qv"),
-                             norm(F.col(query_vec)).alias("__qn"),
+    probes = (queries.select(F.col(ident(query_id)).alias("query_id"),
+                             F.col(ident(query_vec)).alias("__qv"),
+                             norm(F.col(ident(query_vec))).alias("__qn"),
                              F.posexplode(keys).alias("band", "band_key"))
               .select("query_id", "__qv", "__qn", "band",
                       F.explode(_probe_keys(F.col("band_key"), r,
@@ -763,7 +766,7 @@ def label_principal_direction(df: DataFrame, vec_col: str = "embedding",
 
     label_type = df.schema[label_col].dataType
     label_vals = [r[0] for r in
-                  df.select(F.col(label_col).alias("__lab")).distinct()
+                  df.select(F.col(ident(label_col)).alias("__lab")).distinct()
                   .collect()]
     label_vals.sort(key=lambda v: (v is None, str(v)))
     lab_map = spark.createDataFrame(
@@ -774,9 +777,9 @@ def label_principal_direction(df: DataFrame, vec_col: str = "embedding",
     # 6dp rounding absorbs the sub-ulp layout sensitivity — see above)
     src = (spread_input(df)
            .join(F.broadcast(lab_map),
-                 F.col(label_col).eqNullSafe(F.col("__lab")))
+                 F.col(ident(label_col)).eqNullSafe(F.col("__lab")))
            .select(F.col("__idx").alias("label"),
-                   F.col(vec_col).cast("array<double>").alias("__v")))
+                   F.col(ident(vec_col)).cast("array<double>").alias("__v")))
 
     def moment_partials(batches):
         acc: dict = {}  # label -> [n, sum_vec, moment_matrix]

@@ -37,6 +37,7 @@ import re
 from decimal import Decimal
 from urllib.parse import unquote, urlparse
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -75,7 +76,12 @@ def read_table(spark: SparkSession, path_or_table: str,
         schema = footer_schema(spark, path_or_table)
     reader = spark.read
     if schema is not None:
-        reader = reader.schema(schema)
+        # the JVM reader's own setter (a DDL string or a parsed type):
+        # PySpark's ``schema()`` first looks up the active session, ~6
+        # round trips
+        reader._jreader = reader._jreader.schema(
+            schema if isinstance(schema, str)
+            else spark._jsparkSession.parseDataType(schema.json()))
     if fmt == "csv":
         options.setdefault("header", "true")
     return reader.options(**options).format(fmt).load(path_or_table)
@@ -179,10 +185,25 @@ def list_parquet_files(path: str
     return data, summaries, [_unescape(k) for k in layouts.pop()]
 
 
-def _local_path(spark: SparkSession, path: str) -> str | None:
+def _read_settings(spark: SparkSession, keys) -> dict[str, str]:
+    """{key: value} for those of ``keys`` set in the Hadoop configuration
+    a read in ``spark`` uses (the context's, overlaid with the session's
+    SQL settings), in four py4j round trips for any number of keys."""
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    text = conf.getValByRegex(
+        "^(" + "|".join(re.escape(k) for k in keys) + ")$").toString()
+    # java.util.Map's "{k=v, k=v}": these keys hold no '=', and their
+    # values (booleans, a file-system URI) no ", "
+    return dict(kv.split("=", 1) for kv in text[1:-1].split(", ") if kv)
+
+
+def _local_path(spark: SparkSession, path: str,
+                settings: dict[str, str] | None = None) -> str | None:
     """The local file-system path Spark reads for ``path``: a ``file:``
-    URI, or an absolute path while the default file system is local.
-    None for another scheme, a relative path or a glob pattern."""
+    URI, or an absolute path while the default file system is local
+    (``fs.defaultFS`` in ``settings``, read from ``spark`` when not
+    given). None for another scheme, a relative path or a glob
+    pattern."""
     if any(ch in path for ch in "*?[]{}\\"):
         return None
     url = urlparse(path)
@@ -190,8 +211,10 @@ def _local_path(spark: SparkSession, path: str) -> str | None:
         return url.path
     if url.scheme or not path.startswith("/"):
         return None
-    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS")
-    return path if str(default_fs).startswith("file:") else None
+    if settings is None:
+        settings = _read_settings(spark, ["fs.defaultFS"])
+    return (path if settings.get("fs.defaultFS", "").startswith("file:")
+            else None)
 
 
 def _footer_rows(files) -> int | None:
@@ -297,10 +320,10 @@ def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     footer that does not parse or holds a type Spark reads otherwise,
     no columns, duplicate names, or a data column named like a
     partition column."""
-    local = _local_path(spark, path)
-    if local is None or any(
-            str(spark.conf.get(k, v)).lower() != v
-            for k, v in _FOOTER_SETTINGS.items()):
+    settings = _read_settings(spark, ["fs.defaultFS", *_FOOTER_SETTINGS])
+    local = _local_path(spark, path, settings)
+    if local is None or any(settings.get(k, v).lower() != v
+                            for k, v in _FOOTER_SETTINGS.items()):
         return None
     listed = list_parquet_files(local)
     if listed is None:
@@ -372,8 +395,14 @@ def _partition_listing(df: DataFrame, cols: list[str]
                            if isinstance(dtype, ts)), None)
         if parsers[c] is None:
             return None
+    # the file list as one string: ``inputFiles()`` hands back a py4j
+    # array that Python reads one element per round trip. A URI escapes
+    # every newline, so none splits an entry
+    joiner = JavaClass("org.apache.hadoop.util.StringUtils",
+                       df.sparkSession.sparkContext._gateway._gateway_client)
+    files = joiner.join("\n", df._jdf.inputFiles())
     listing = []
-    for uri in df.inputFiles():
+    for uri in filter(None, files.split("\n")):
         # the URI escapes what Spark already escaped in the directory
         # name: undo the URI layer here, Spark's own %XX layer below
         url = urlparse(uri)

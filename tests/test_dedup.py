@@ -706,7 +706,6 @@ def _corpus_chain(spark, path, dest, text_col="text", id_col="doc_id"):
     pairs = minhash_lsh_pairs(clean, text_col, id_col, threshold=0.5)
     kept = near_dup_removal(clean, pairs, id_col)
     sinks.write_table(kept, dest, mode="overwrite")
-    spark.catalog.clearCache()
 
 
 @pytest.mark.parametrize("name", ["doc text", "doc.text", "doc`text"])
@@ -734,7 +733,10 @@ def test_corpus_chain_work_is_pinned(spark, tmp_path):
     submits 15 Spark jobs: minhash_lsh_pairs' fused sizing and
     hot-bucket collect, near_dup_removal's edge collect and the write,
     each with the AQE shuffle stages in front of it. The read takes its
-    schema from a Parquet footer (16 jobs while it was inferred)."""
+    schema from a Parquet footer (16 jobs while it was inferred). The
+    chain leaves the session's cache as it found it: near_dup_removal
+    releases the signatures minhash_lsh_pairs persisted once it holds
+    the edges (they stayed cached, one RDD per pass, until it did)."""
     from test_migrate import _py4j_round_trips, _spark_jobs
 
     from data_warehouse_migrate_spark.operators.pipeline import clean_corpus
@@ -744,8 +746,93 @@ def test_corpus_chain_work_is_pinned(spark, tmp_path):
     docs = spark.read.parquet(path)
     clean_corpus(docs)  # warm: first-use lookups are not the rules' cost
     _, trips = _py4j_round_trips(spark, lambda: clean_corpus(docs))
+    cached = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     _, jobs, _ = _spark_jobs(
         spark, lambda: _corpus_chain(spark, path, dest))
     kept = {r.doc_id for r in spark.read.parquet(dest).collect()}
     assert kept == base
     assert trips <= 110 and jobs == 15, (trips, jobs)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == cached
+
+
+@pytest.mark.parametrize("name", ["v.e", "v e", "v`e"])
+def test_vector_operators_take_any_column_name(spark, sf_dir, name):
+    """Vector and id columns named with a dot (not a struct field), a
+    space or a backtick give what the plain names give: semantic_dedup,
+    kmeans_centroids, lsh_topk, ivf_topk and build_lsh_index."""
+    from data_warehouse_migrate_spark.operators.dedup import semantic_dedup
+    from data_warehouse_migrate_spark.operators.similarity import (
+        build_lsh_index,
+        ivf_topk,
+        kmeans_centroids,
+        lsh_topk,
+        lsh_topk_indexed,
+    )
+    from data_warehouse_migrate_spark.sqltext import ident
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding")
+    vec, vid = name, name + " id"
+    odd = emb.toDF(vid, vec)
+
+    def ids(out, col):
+        return sorted(r[0] for r in out.select(F.col(ident(col))).collect())
+
+    assert ids(semantic_dedup(odd, vec, vid, n_cells=2, threshold=0.9),
+               vid) == ids(semantic_dedup(emb, "embedding", "vec_id",
+                                          n_cells=2, threshold=0.9), "vec_id")
+    assert (kmeans_centroids(odd, vec, vid, k=2, n_iter=2)
+            == kmeans_centroids(emb, "embedding", "vec_id", k=2, n_iter=2))
+
+    def top(out):
+        return {(r.query_id, r.rank): r.corpus_id for r in out.collect()}
+
+    q, plain_q = odd.filter(F.col(ident(vid)) < 5), emb.filter("vec_id < 5")
+    names = dict(query_id=vid, query_vec=vec, corpus_id=vid, corpus_vec=vec)
+    plain = dict(query_id="vec_id", query_vec="embedding",
+                 corpus_id="vec_id", corpus_vec="embedding")
+    lsh = dict(k=3, n_planes=24, bands=4)
+    want = top(lsh_topk(plain_q, emb, **lsh, **plain))
+    assert want and top(lsh_topk(q, odd, **lsh, **names)) == want
+    ivf = dict(k=3, n_cells=4, centroids="lowid")
+    assert (top(ivf_topk(q, odd, **ivf, **names))
+            == top(ivf_topk(plain_q, emb, **ivf, **plain)))
+    build_lsh_index(odd, "lsh_idx_any_name", n_planes=24, bands=4,
+                    corpus_id=vid, corpus_vec=vec, n_buckets=4)
+    try:
+        assert top(lsh_topk_indexed(q, "lsh_idx_any_name", k=3,
+                                    query_id=vid, query_vec=vec)) == want
+    finally:
+        spark.sql("DROP TABLE IF EXISTS lsh_idx_any_name")
+
+
+@pytest.mark.parametrize("name", ["doc.text", "doc text", "doc`text"])
+def test_text_operators_take_any_column_name(spark, name):
+    """Text and id columns named with a dot, a space or a backtick give
+    what the plain names give: cross_corpus_dedup, pack_sequences and
+    near_dup_removal's pair columns."""
+    from data_warehouse_migrate_spark.operators.dedup import (
+        cross_corpus_dedup,
+    )
+    from data_warehouse_migrate_spark.operators.packing import pack_sequences
+
+    rows = [(0, "the quick brown fox jumps over the lazy dog"),
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (3, "a completely novel document about nothing"),
+            (5, "spark engines process distributed data sets")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    odd = docs.toDF(name + " id", name)
+    ref, new = (docs.filter("doc_id = 0"), docs.filter("doc_id > 0"))
+    odd_ref, odd_new = ref.toDF(*odd.columns), new.toDF(*odd.columns)
+    assert ([tuple(r) for r in cross_corpus_dedup(
+        odd_new, odd_ref, name, name + " id", threshold=0.6).collect()]
+            == [tuple(r) for r in cross_corpus_dedup(
+                new, ref, "text", "doc_id", threshold=0.6).collect()])
+    assert (sorted(map(tuple, pack_sequences(
+        odd, name, name + " id", budget=8, n_groups=2).collect()))
+            == sorted(map(tuple, pack_sequences(
+                docs, "text", "doc_id", budget=8, n_groups=2).collect())))
+    pairs = spark.createDataFrame([(1, 0)], "a long, b long")
+    kept = near_dup_removal(odd, pairs.toDF(name + " a", name + " b"),
+                            name + " id", name + " a", name + " b")
+    assert sorted(r[0] for r in kept.collect()) == [0, 3, 5]

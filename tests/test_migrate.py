@@ -692,10 +692,12 @@ def test_run_and_verify_py4j_round_trips(spark, tmp_path):
     aggregate, the checksum) is built as SQL text in one py4j call, so
     the round trips of a run() and a verify() on :func:`_daily_job`'s
     shape stay near the fixed cost of reading, probing and writing
-    (248 and 48; 276 and 55 before footers replaced the inference, the
-    probe, the read-back count and one checksum aggregate). Built as
-    Column trees, one round trip per node, the stages cost 888 and 831
-    here."""
+    (165 and 43; 248 and 48 while the partition listing read the file
+    list one element per round trip and a footer schema went through
+    PySpark's session lookup; 276 and 55 before footers replaced the
+    inference, the probe, the read-back count and one checksum
+    aggregate). Built as Column trees, one round trip per node, the
+    stages cost 888 and 831 here."""
     job = _daily_job(tmp_path)
     job.run(spark)  # warm: first-use lookups are not the stages' cost
     job.verify(spark)
@@ -703,7 +705,7 @@ def test_run_and_verify_py4j_round_trips(spark, tmp_path):
     assert out["rows_written"] == 20
     rep, verify_trips = _py4j_round_trips(spark, lambda: job.verify(spark))
     assert rep["verified"] is True
-    assert run_trips <= 320 and verify_trips <= 80, (run_trips,
+    assert run_trips <= 180 and verify_trips <= 50, (run_trips,
                                                      verify_trips)
 
 
@@ -939,16 +941,17 @@ def test_run_incremental_spark_job_counts(spark, tmp_path):
 
 def test_run_incremental_py4j_round_trips(spark, tmp_path):
     """A second-run run_incremental builds its casts, its delta join and
-    its rewrite projection as SQL text, one py4j call each: 161 round
-    trips (139 while both schemas were inferred: passing a footer schema
-    to the reader and checking the session settings it depends on cost
-    about 11 per read). Built as Column trees they cost 884 here."""
+    its rewrite projection as SQL text, one py4j call each: 151 round
+    trips (139 while both schemas were inferred; 161 while each footer
+    schema went through PySpark's session lookup and read its four
+    settings one by one, about 11 round trips per read, now 6). Built
+    as Column trees they cost 884 here."""
     job, _ = _incremental_pair(spark, tmp_path)
     out, trips = _py4j_round_trips(
         spark, lambda: job().run_incremental(spark, ["id"]))
     assert out["delta_counts"] == {"unchanged": 190, "update": 5,
                                    "delete": 5, "insert": 5}
-    assert trips <= 170, trips
+    assert trips <= 160, trips
 
 
 def test_run_scd2_first_run_counts_on_the_write(spark, tmp_path):
