@@ -13,8 +13,7 @@ that costs a py4j round trip per node.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from data_warehouse_migrate_spark.sqltext import ident
@@ -50,16 +49,6 @@ def _row_bytes_sql(schema: T.StructType) -> tuple[float, str | None]:
         else:  # long/double/timestamp/decimal and anything exotic
             fixed += 8.0
     return fixed, " + ".join(var_terms) or None
-
-
-def row_bytes_expr(schema: T.StructType) -> tuple[float, Column | None]:
-    """(fixed bytes/row, Column summing variable-width bytes or None).
-
-    Fixed-width columns are priced from the schema alone; each
-    string/binary/array column contributes a measured per-row term.
-    """
-    fixed, var = _row_bytes_sql(schema)
-    return fixed, None if var is None else F.expr(var)
 
 
 def count_and_row_bytes(df: DataFrame) -> tuple[int, float]:

@@ -24,6 +24,7 @@ write alike; both streaming runners share ``_drive_stream``.
 from __future__ import annotations
 
 import logging
+import os
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -45,6 +46,7 @@ from data_warehouse_migrate_spark.operators.mapping import (
 from data_warehouse_migrate_spark.plans.dryrun import explain_plan
 from data_warehouse_migrate_spark.schema import ColumnSpec, dedup_columns, specs_from_dataframe
 from data_warehouse_migrate_spark.sources.readers import (
+    _local_path,
     latest_partition_filter,
     open_file_stream,
     parquet_rows,
@@ -273,7 +275,10 @@ class MigrationJob:
         checked by the read itself — a JDBC ``load()`` resolves the
         schema with a zero-row query and raises on a missing table — its
         error classified by :func:`_jdbc_table_missing`; file and catalog
-        destinations by ``AnalysisException`` or an empty schema."""
+        destinations by ``AnalysisException`` or an empty schema. A file
+        destination on the local file system that does not exist is
+        absent without a Spark read (which logs a ``PATH_NOT_FOUND``
+        stack trace through its listener bus)."""
         from pyspark.errors import AnalysisException
 
         if self.destination_format == "jdbc":
@@ -286,9 +291,13 @@ class MigrationJob:
                                            self.destination_path):
                     raise
                 return None
+        path = self.destination_path
+        if self.destination_format != "table" and not os.path.exists(path):
+            local = _local_path(spark, path)
+            if local is not None and not os.path.exists(local):
+                return None
         try:
-            dest = read_table(spark, self.destination_path,
-                              fmt=self.destination_format)
+            dest = read_table(spark, path, fmt=self.destination_format)
         except AnalysisException:
             return None
         return dest if dest.columns else None

@@ -162,13 +162,22 @@ def test_dedup_plans_have_no_cartesian(spark, sf_dir):
         assert "CartesianProduct" not in plan
 
 
-def test_bucket_pairs_spills_big_buckets(spark):
-    from data_warehouse_migrate_spark.operators.dedup import _bucket_pairs
+def _probed_pairs(df, max_bucket_size):
+    """_bucket_pairs over ``df`` with the hot keys of its probe."""
+    from data_warehouse_migrate_spark.operators.dedup import (
+        _bucket_pairs,
+        _bucket_probe,
+    )
 
+    hot = _bucket_probe(df, max_bucket_size=max_bucket_size).hot
+    return _bucket_pairs(df, ["id"], hot, max_bucket_size=max_bucket_size)
+
+
+def test_bucket_pairs_spills_big_buckets(spark):
     rows = ([(0, 7, i) for i in range(100)]          # big bucket: join path
             + [(1, 3, i) for i in range(1000, 1003)])  # small: array path
     df = spark.createDataFrame(rows, "band int, band_key long, id int")
-    out = _bucket_pairs(df, ["id"], max_bucket_size=10)
+    out = _probed_pairs(df, max_bucket_size=10)
     got = {frozenset((r.a.id, r.b.id)) for r in out.collect()}
     assert len(got) == 100 * 99 // 2 + 3
     assert out.count() == 100 * 99 // 2 + 3
@@ -179,16 +188,15 @@ def test_bucket_pairs_driver_cap_fallback_same_pairs(spark, monkeypatch):
     hand over to the lazy broadcast-join shape with identical output —
     forced here by dropping the cap to 0 so ANY hot bucket overflows."""
     import data_warehouse_migrate_spark.operators.dedup as dedup_mod
-    from data_warehouse_migrate_spark.operators.dedup import _bucket_pairs
 
     rows = ([(0, 7, i) for i in range(100)]
             + [(1, 3, i) for i in range(1000, 1003)])
     df = spark.createDataFrame(rows, "band int, band_key long, id int")
     eager = {frozenset((r.a.id, r.b.id))
-             for r in _bucket_pairs(df, ["id"], max_bucket_size=10).collect()}
+             for r in _probed_pairs(df, max_bucket_size=10).collect()}
     monkeypatch.setattr(dedup_mod, "_HOT_KEYS_DRIVER_MAX", 0)
     lazy = {frozenset((r.a.id, r.b.id))
-            for r in _bucket_pairs(df, ["id"], max_bucket_size=10).collect()}
+            for r in _probed_pairs(df, max_bucket_size=10).collect()}
     assert eager == lazy
     assert len(eager) == 100 * 99 // 2 + 3
 
@@ -314,12 +322,10 @@ def test_drop_exact_dups_null_text_keeps_one(spark):
 def test_bucket_pairs_null_band_key_no_blowup(spark):
     """NULL band keys bypass the hot-bucket guard's equi-joins — they
     must be dropped, not expanded quadratically."""
-    from data_warehouse_migrate_spark.operators.dedup import _bucket_pairs
-
     rows = ([(0, None, i) for i in range(5000)]      # huge NULL bucket
             + [(0, 7, 1), (0, 7, 2)])
     df = spark.createDataFrame(rows, "band int, band_key long, id int")
-    out = _bucket_pairs(df, ["id"], max_bucket_size=10)
+    out = _probed_pairs(df, max_bucket_size=10)
     got = {frozenset((r.a.id, r.b.id)) for r in out.collect()}
     assert got == {frozenset((1, 2))}   # only the real bucket pairs
 
@@ -642,23 +648,21 @@ def test_first_band_multi_probe_adversarial(spark):
             assert exact.get((r.id_a, r.id_b)) == r.cosine
 
 
-def test_pair_sum_branch_exact_counts(spark):
-    """r18 (r17 verdict item 6): the fused pair-count branch that sizes
-    semantic_dedup's candidate-pair exchange must return EXACTLY
-    sum-over-buckets of B*(B-1)/2, drop NULL band keys (matching
-    _bucket_pairs' routing), and read 0 on an empty/all-NULL frame."""
-    from data_warehouse_migrate_spark.operators.dedup import _pair_sum_branch
+def test_bucket_probe_pair_count_exact(spark):
+    """The probe's pair count, which sizes semantic_dedup's
+    candidate-pair exchange, must be EXACTLY sum-over-buckets of
+    B*(B-1)/2, drop NULL band keys (matching _bucket_pairs' routing),
+    and read 0 on an empty/all-NULL frame."""
+    from data_warehouse_migrate_spark.operators.dedup import _bucket_probe
 
     rows = ([(i, 0, 7) for i in range(5)]        # bucket of 5 -> 10 pairs
             + [(i, 0, 8) for i in range(3)]      # bucket of 3 -> 3
             + [(100, 1, 7), (101, 1, None)])     # singleton + NULL key
     df = spark.createDataFrame(rows, "id long, band int, band_key int")
-    row = _pair_sum_branch(df).collect()[0]
-    assert row["tag"] == 2 and int(row["c1"]) == 13
+    assert _bucket_probe(df, pair_count=True).pairs == 13
 
     empty = df.filter(F.col("band_key").isNull())
-    row = _pair_sum_branch(empty).collect()[0]
-    assert int(row["c1"]) == 0
+    assert _bucket_probe(empty, pair_count=True).pairs == 0
 
 
 def _write_corpus(tmp_path, text_col="text", id_col="doc_id"):
@@ -698,14 +702,19 @@ def _write_corpus(tmp_path, text_col="text", id_col="doc_id"):
     return str(path), set(range(1, 31))
 
 
-def _corpus_chain(spark, path, dest, text_col="text", id_col="doc_id"):
+def _corpus_chain(spark, path, dest, text_col="text", id_col="doc_id",
+                  step=lambda fn: fn()):
+    """read → clean_corpus → minhash_lsh_pairs → near_dup_removal →
+    write, each of the four steps run through ``step``."""
     from data_warehouse_migrate_spark.operators.pipeline import clean_corpus
     from data_warehouse_migrate_spark.sources import readers, sinks
 
-    clean = clean_corpus(readers.read_table(spark, path), text_col, id_col)
-    pairs = minhash_lsh_pairs(clean, text_col, id_col, threshold=0.5)
-    kept = near_dup_removal(clean, pairs, id_col)
-    sinks.write_table(kept, dest, mode="overwrite")
+    clean = step(lambda: clean_corpus(readers.read_table(spark, path),
+                                      text_col, id_col))
+    pairs = step(lambda: minhash_lsh_pairs(clean, text_col, id_col,
+                                           threshold=0.5))
+    kept = step(lambda: near_dup_removal(clean, pairs, id_col))
+    step(lambda: sinks.write_table(kept, dest, mode="overwrite"))
 
 
 @pytest.mark.parametrize("name", ["doc text", "doc.text", "doc`text"])
@@ -731,12 +740,15 @@ def test_corpus_chain_work_is_pinned(spark, tmp_path):
     round trip per node, the same plan cost 1,619).
     read → clean_corpus → minhash_lsh_pairs → near_dup_removal → write
     submits 15 Spark jobs: minhash_lsh_pairs' fused sizing and
-    hot-bucket collect, near_dup_removal's edge collect and the write,
-    each with the AQE shuffle stages in front of it. The read takes its
-    schema from a Parquet footer (16 jobs while it was inferred). The
-    chain leaves the session's cache as it found it: near_dup_removal
-    releases the signatures minhash_lsh_pairs persisted once it holds
-    the edges (they stayed cached, one RDD per pass, until it did)."""
+    hot-bucket collect (7 jobs / 20 tasks), near_dup_removal's edge
+    collect (5 / 14) and the write, each with the AQE shuffle stages in
+    front of it. The read takes its schema from a Parquet footer (16 jobs
+    while it was inferred). Building the pair plans as SQL text took
+    minhash_lsh_pairs from 1,312 round trips to 549 and near_dup_removal
+    from 145 to 79. The chain leaves the session's cache as it found it:
+    near_dup_removal releases the signatures minhash_lsh_pairs persisted
+    once it holds the edges (they stayed cached, one RDD per pass, until
+    it did)."""
     from test_migrate import _py4j_round_trips, _spark_jobs
 
     from data_warehouse_migrate_spark.operators.pipeline import clean_corpus
@@ -747,12 +759,75 @@ def test_corpus_chain_work_is_pinned(spark, tmp_path):
     clean_corpus(docs)  # warm: first-use lookups are not the rules' cost
     _, trips = _py4j_round_trips(spark, lambda: clean_corpus(docs))
     cached = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    _, jobs, _ = _spark_jobs(
-        spark, lambda: _corpus_chain(spark, path, dest))
+    work = []
+
+    def step(fn):
+        (out, n_trips), jobs, tasks = _spark_jobs(
+            spark, lambda: _py4j_round_trips(spark, fn))
+        work.append((jobs, tasks, n_trips))
+        return out
+
+    _corpus_chain(spark, path, dest, step=step)
     kept = {r.doc_id for r in spark.read.parquet(dest).collect()}
     assert kept == base
-    assert trips <= 110 and jobs == 15, (trips, jobs)
+    _, lsh, removal, _ = work
+    assert trips <= 110 and sum(w[0] for w in work) == 15, (trips, work)
+    assert lsh[:2] == (7, 20) and lsh[2] <= 560, lsh
+    assert removal[:2] == (5, 14) and removal[2] <= 85, removal
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == cached
+
+
+@pytest.mark.parametrize("generator", [
+    "ngram_jaccard_pairs", "simhash_near_pairs", "minhash_lsh_pairs",
+    "embedding_near_dups", "semantic_dedup"])
+def test_pair_generators_leave_the_cache_as_found(spark, tmp_path, sf_dir,
+                                                  generator):
+    """Each pair generator followed by near_dup_removal (semantic_dedup
+    runs its own) leaves the session's cache as it found it: the
+    generator lists what it persisted on its pairs and near_dup_removal
+    releases it once it holds the edges."""
+    from data_warehouse_migrate_spark.operators import dedup
+
+    path, _ = _write_corpus(tmp_path)
+    docs = spark.read.parquet(path)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding")
+    sc = spark.sparkContext
+    cached = set(sc._jsc.getPersistentRDDs().keys())
+    if generator == "semantic_dedup":
+        kept = dedup.semantic_dedup(emb, "embedding", "vec_id", n_cells=2,
+                                    threshold=0.9)
+    elif generator == "embedding_near_dups":
+        pairs = dedup.embedding_near_dups(emb, "embedding", "vec_id",
+                                          threshold=0.9, n_planes=24)
+        kept = near_dup_removal(emb, pairs, "vec_id")
+    else:
+        pairs = getattr(dedup, generator)(docs, "text", "doc_id")
+        kept = near_dup_removal(docs, pairs, "doc_id")
+    assert kept.count() > 0
+    assert set(sc._jsc.getPersistentRDDs().keys()) == cached
+
+
+def test_near_dup_removal_probes_the_edges_once(spark, monkeypatch):
+    """Past the driver bound near_dup_removal propagates labels itself:
+    the edges are probed once (connected_components' own probe pulled
+    them to the driver a second time) and the kept ids do not change."""
+    import data_warehouse_migrate_spark.operators.dedup as dedup_mod
+
+    docs = spark.range(1, 12).toDF("doc_id")
+    pairs = spark.createDataFrame([(2, 1), (2, 3), (3, 4), (6, 5), (9, 10)],
+                                  "id_a long, id_b long")
+    local = sorted(r.doc_id for r in
+                   near_dup_removal(docs, pairs, "doc_id").collect())
+    probes = []
+    probe = dedup_mod._edges_pdf_or_none
+    monkeypatch.setattr(dedup_mod, "_CC_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup_mod, "_edges_pdf_or_none",
+                        lambda und, n: probes.append(n) or probe(und, n))
+    kept = sorted(r.doc_id for r in
+                  near_dup_removal(docs, pairs, "doc_id").collect())
+    assert len(probes) == 1
+    assert kept == local == [1, 5, 7, 8, 9, 11]
 
 
 @pytest.mark.parametrize("name", ["v.e", "v e", "v`e"])

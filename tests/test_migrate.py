@@ -972,6 +972,35 @@ def test_run_scd2_first_run_counts_on_the_write(spark, tmp_path):
     assert (jobs, tasks) == (1, 1)
 
 
+@pytest.mark.parametrize("runner", ["run_incremental", "run_scd2"])
+def test_first_run_does_not_read_a_missing_destination(spark, tmp_path,
+                                                       monkeypatch, runner):
+    """A first run into a local directory that does not exist yet finds
+    it absent without asking Spark to read it: Spark's read of a missing
+    path logs a PATH_NOT_FOUND stack trace on every first run."""
+    import data_warehouse_migrate_spark.migrate as migrate
+
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "missing" / "dst")
+    spark.createDataFrame([(i, f"v{i}") for i in range(10)],
+                          "k long, v string").write.parquet(src)
+    read_table = migrate.read_table
+
+    def guarded(spark, path, *args, **kwargs):
+        assert path != dst, "the missing destination was read"
+        return read_table(spark, path, *args, **kwargs)
+
+    monkeypatch.setattr(migrate, "read_table", guarded)
+    job = MigrationJob(source_path=src, destination_path=dst,
+                       mode="overwrite")
+    if runner == "run_incremental":
+        assert job.run_incremental(spark, ["k"])["incremental"] is False
+    else:
+        out = job.run_scd2(spark, ["k"], batch_date="2024-01-01")
+        assert out["first_run"] is True
+    assert spark.read.parquet(dst).count() == 10
+
+
 def _write_sync_source(path, changed):
     """1,000 rows in eight parquet files; ``changed`` rewrites the
     payload of every 20th id (50 rows)."""

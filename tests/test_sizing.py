@@ -6,15 +6,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_warehouse_migrate_spark.functions.sizing import (
+    _row_bytes_sql,
     count_and_row_bytes,
-    row_bytes_expr,
 )
 from data_warehouse_migrate_spark.sources.sinks import write_sized
 
 
-def test_row_bytes_expr_fixed_only(spark):
+def test_row_bytes_sql_fixed_only(spark):
     df = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    fixed, var = row_bytes_expr(df.schema)
+    fixed, var = _row_bytes_sql(df.schema)
     assert var is None
     assert fixed == 8.0 + 8.0 + 8.0  # overhead + two longs
 
